@@ -2,6 +2,7 @@
 (FIXTURES.md §2.3), plus sparse-gap and LOCF semantics."""
 
 import numpy as np
+import pyarrow as pa
 import pytest
 from pyspark.sql import functions as F
 
@@ -10,6 +11,7 @@ from tsc_spark.operators.rollup import (
     explode_points,
     gapfill,
     gapfill_locf,
+    rollup_batch,
     rollup_points,
     series_stats,
     tiered_rollups,
@@ -61,6 +63,84 @@ class TestTierRollups:
             for r in tiered_rollups(tokens_df, with_gapfill=False)[2].collect()
         }
         assert composed == direct
+
+
+def _batch(docs, tokens=None):
+    """(doc_id, tokens) Arrow batch; ``docs`` maps doc_id → list or None."""
+    if tokens is None:
+        tokens = pa.array(list(docs.values()), type=pa.list_(pa.int32()))
+    return pa.RecordBatch.from_arrays(
+        [pa.array(list(docs), type=pa.string()), tokens], names=["doc_id", "tokens"]
+    )
+
+
+def _batch_windows(batch, stride, tier=1):
+    out = rollup_batch(batch, stride, tier)
+    assert out.schema == pa.schema(
+        [("doc_id", pa.string()), ("window_idx", pa.int64()), ("agg_count", pa.int64()),
+         ("agg_min", pa.int32()), ("agg_max", pa.int32()), ("agg_sum", pa.int64()),
+         ("tier", pa.int32())]
+    )
+    assert set(out.column("tier").to_pylist()) <= {tier}
+    return {
+        (r["doc_id"], r["window_idx"]): (r["agg_count"], r["agg_min"], r["agg_max"], r["agg_sum"])
+        for r in out.to_pylist()
+    }
+
+
+def _reference_windows(docs, stride):
+    return {
+        (d, w): aggs
+        for d, toks in docs.items()
+        if toks
+        for w, aggs in _oracle_rollup(toks, stride).items()
+    }
+
+
+class TestRollupBatch:
+    """``rollup_batch`` straight on Arrow batches, against the per-doc
+    numpy reference (no Spark)."""
+
+    @pytest.mark.parametrize("stride", [1, 8, 64])
+    def test_exact_multiples_and_remainders(self, stride):
+        rng = np.random.default_rng(stride)
+        docs = {f"d{n}": rng.integers(-50, 50, n).tolist()
+                for n in (1, 7, 8, 9, 63, 64, 65, 128, 130)}
+        assert _batch_windows(_batch(docs), stride) == _reference_windows(docs, stride)
+
+    def test_null_and_empty_arrays_have_no_windows(self):
+        docs = {"a": None, "b": [], "c": [3, 1, 2], "d": None, "e": []}
+        assert _batch_windows(_batch(docs), 2) == {("c", 0): (2, 1, 3, 4), ("c", 1): (1, 2, 2, 2)}
+        assert _batch_windows(_batch({"a": None, "b": []}), 8) == {}
+        assert _batch_windows(_batch({}), 8) == {}
+
+    def test_null_over_a_nonempty_segment_is_skipped(self):
+        # Arrow lets a NULL list slot span child values; they are not the doc's
+        tokens = pa.ListArray.from_arrays(
+            pa.array([0, 3, 6, 9], type=pa.int32()),
+            pa.array([1, 2, 3, 100, 200, 300, 4, 5, 6], type=pa.int32()),
+            mask=pa.array([False, True, False]),
+        )
+        docs = {"a": [1, 2, 3], "b": None, "c": [4, 5, 6]}
+        assert _batch_windows(_batch(docs, tokens), 2) == _reference_windows(docs, 2)
+
+    @pytest.mark.parametrize("stride", [1, 8])
+    def test_sliced_batch_with_nonzero_offset(self, stride):
+        rng = np.random.default_rng(7)
+        docs = {f"d{i}": rng.integers(0, 24, int(n)).tolist() if n else None
+                for i, n in enumerate(rng.integers(0, 30, 12))}
+        sliced = _batch(docs).slice(3, 6)
+        assert sliced.column(1).offset == 3
+        kept = dict(list(docs.items())[3:9])
+        assert _batch_windows(sliced, stride) == _reference_windows(kept, stride)
+
+    def test_int32_extremes_and_int64_sums(self):
+        lo, hi = np.iinfo(np.int32).min, np.iinfo(np.int32).max
+        docs = {"hi": [hi] * 70, "lo": [lo] * 70, "mixed": [lo, hi] * 40}
+        got = _batch_windows(_batch(docs), 64)
+        assert got == _reference_windows(docs, 64)
+        assert got[("hi", 0)] == (64, hi, hi, 64 * hi)
+        assert got[("lo", 0)] == (64, lo, lo, 64 * lo)
 
 
 class TestGapfill:

@@ -22,6 +22,8 @@ Design for 100 TB:
 
 from __future__ import annotations
 
+import numpy as np
+import pyarrow as pa
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
@@ -32,6 +34,7 @@ __all__ = [
     "rollup_points",
     "rollup_arrays",
     "rollup_arrays_np",
+    "rollup_batch",
     "rollup_from_lower_tier",
     "tiered_rollups",
     "gapfill",
@@ -136,85 +139,64 @@ def rollup_arrays(tokens_df: DataFrame, stride: int, tier: int) -> DataFrame:
     )
 
 
-def rollup_arrays_np(tokens_df: DataFrame, stride: int, tier: int) -> DataFrame:
-    """Arrow-vectorized tier rollup: one numpy ``reduceat`` pass per batch.
+_NP_SCHEMA = (
+    "doc_id string, window_idx long, agg_count long, "
+    "agg_min int, agg_max int, agg_sum long, tier int"
+)
 
-    Spark's higher-order functions (``transform``/``aggregate``) are
-    interpreted per element — measured ~3M windows/sec across 32 cores.
-    This path flattens each Arrow batch's token arrays into one int64
-    vector and reduces every window with ``np.add/minimum/maximum
-    .reduceat`` (vectorized C, no per-row Python — the boundary the
-    north rule allows).  Output rows are identical to ``rollup_arrays``
-    / ``rollup_points``: windows never span docs because each doc's
-    window starts are emitted per doc, so the segment after a doc's last
-    start ends exactly at the next doc's first start (= doc boundary).
-    """
-    import numpy as np
-    import pandas as pd
 
-    out_schema = (
-        "doc_id string, window_idx long, agg_count long, "
-        "agg_min int, agg_max int, agg_sum long, tier int"
+def rollup_batch(batch: pa.RecordBatch, stride: int, tier: int) -> pa.RecordBatch:
+    """Tier windows of one ``(doc_id, tokens)`` Arrow batch, in numpy.
+
+    Window bounds come straight from the list offsets: doc ``d`` spans
+    ``values[offsets[d]:offsets[d + 1]]`` and its window ``k`` is
+    ``[start + k*stride, min(start + (k+1)*stride, end))``.  One
+    ``reduceat`` per reducer runs over the interleaved ``[start, end)``
+    pairs and keeps every other result, so gaps between docs (NULL
+    arrays, sliced batches) are never summed into a window.  NULL and
+    empty arrays yield no windows, like ``rollup_arrays``' ``n_tok > 0``
+    filter."""
+    tokens = batch.column(1)
+    offsets = tokens.offsets.to_numpy().astype(np.int64)
+    valid = tokens.is_valid().to_numpy(zero_copy_only=False)
+    starts, ends = offsets[:-1], offsets[1:]
+    n_win = -(-np.where(valid, ends - starts, 0) // stride)
+    doc = np.repeat(np.arange(len(batch)), n_win)
+    win_idx = np.arange(doc.size) - np.repeat(np.cumsum(n_win) - n_win, n_win)
+    win_start = starts[doc] + win_idx * stride
+    win_end = np.minimum(win_start + stride, ends[doc])
+    bounds = np.empty(2 * doc.size, dtype=np.int64)
+    bounds[0::2], bounds[1::2] = win_start, win_end
+    # the last window ends where the values are cut, so its end index
+    # (which may equal len(values), out of reduceat's range) is dropped
+    values = tokens.values.to_numpy()[: win_end.max(initial=0)]
+    bounds = bounds[:-1]
+    return pa.RecordBatch.from_arrays(
+        [
+            batch.column(0).take(doc),
+            win_idx,
+            win_end - win_start,
+            np.minimum.reduceat(values, bounds)[0::2],
+            np.maximum.reduceat(values, bounds)[0::2],
+            np.add.reduceat(values, bounds, dtype=np.int64)[0::2],
+            np.full(doc.size, tier, dtype=np.int32),
+        ],
+        names=[f.split()[0] for f in _NP_SCHEMA.split(", ")],
     )
 
-    def run(batches):
-        for pdf in batches:
-            # NULL token arrays arrive as None through Arrow — skip them
-            # exactly like rollup_arrays' n_tok > 0 filter does
-            arrs = [
-                np.asarray(t, dtype=np.int64)
-                for t in pdf["tokens"]
-                if t is not None and len(t) > 0
-            ]
-            ids = [
-                d
-                for d, t in zip(pdf["doc_id"], pdf["tokens"])
-                if t is not None and len(t) > 0
-            ]
-            if not arrs:
-                yield pd.DataFrame(
-                    {
-                        "doc_id": pd.Series([], dtype="object"),
-                        "window_idx": pd.Series([], dtype="int64"),
-                        "agg_count": pd.Series([], dtype="int64"),
-                        "agg_min": pd.Series([], dtype="int32"),
-                        "agg_max": pd.Series([], dtype="int32"),
-                        "agg_sum": pd.Series([], dtype="int64"),
-                        "tier": pd.Series([], dtype="int32"),
-                    }
-                )
-                continue
-            lens = np.array([a.size for a in arrs], dtype=np.int64)
-            flat = np.concatenate(arrs)
-            n_win = -(-lens // stride)
-            doc_off = np.concatenate(([0], np.cumsum(lens)[:-1]))
-            starts = np.concatenate(
-                [off + np.arange(0, l, stride, dtype=np.int64)
-                 for off, l in zip(doc_off, lens)]
-            )
-            win_idx = np.concatenate(
-                [np.arange(0, w, dtype=np.int64) for w in n_win]
-            )
-            # per-window count: stride everywhere except a short last window
-            counts = np.full(starts.size, stride, dtype=np.int64)
-            last_pos = np.cumsum(n_win) - 1
-            counts[last_pos] = lens - (n_win - 1) * stride
-            sums = np.add.reduceat(flat, starts)
-            mins = np.minimum.reduceat(flat, starts)
-            maxs = np.maximum.reduceat(flat, starts)
-            yield pd.DataFrame(
-                {
-                    "doc_id": np.repeat(np.asarray(ids, dtype=object), n_win),
-                    "window_idx": win_idx,
-                    "agg_count": counts,
-                    "agg_min": mins.astype(np.int32),
-                    "agg_max": maxs.astype(np.int32),
-                    "agg_sum": sums,
-                    "tier": np.full(starts.size, tier, dtype=np.int32),
-                }
-            )
 
-    return tokens_df.select("doc_id", "tokens").mapInPandas(run, out_schema)
+def rollup_arrays_np(tokens_df: DataFrame, stride: int, tier: int) -> DataFrame:
+    """Arrow-vectorized tier rollup: ``rollup_batch`` over each batch.
+
+    Runs as ``mapInArrow``, so the token arrays reach Python as one
+    values buffer plus offsets, never as per-doc objects, and every
+    window is reduced by numpy ``reduceat`` (vectorized C, no per-row
+    Python).  Output rows are identical to ``rollup_arrays`` /
+    ``rollup_points``."""
+    return tokens_df.select("doc_id", "tokens").mapInArrow(
+        lambda batches: (rollup_batch(b, stride, tier) for b in batches),
+        _NP_SCHEMA,
+    )
 
 
 def rollup_from_lower_tier(lower: DataFrame, factor: int, tier: int) -> DataFrame:

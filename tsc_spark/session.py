@@ -8,12 +8,20 @@ local[N].  Knobs chosen so the same job scales by partition count only:
 * Arrow-batched Python boundary (the clustering kernel is the only
   non-JVM operator; everything Catalyst-visible stays native),
 * shuffle partitions default to cores in local mode, 2×cores estates
-  on clusters via spark.sql.adaptive.coalescePartitions.
+  on clusters via spark.sql.adaptive.coalescePartitions,
+* local masters start Python workers from ``tsc_spark.pydaemon``: each
+  task re-reads the directory of every archive on the worker path
+  (``pyspark.zip``, the py4j zip, the spark-core jar), which cost more
+  CPU than the rollup UDFs themselves; that daemon drops the archives
+  whose contents are installed.  It stays local-only because a cluster
+  executor may have no installed pyspark, and a ``--py-files`` zip need
+  not be importable before its first task.
 """
 
 from __future__ import annotations
 
 import os
+import re
 
 from pyspark.sql import SparkSession
 
@@ -40,20 +48,15 @@ def get_spark(
         )
 
     if master is None:
-        cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+        cpus = os.environ.get("SPARK_GRAFT_CPUS") or os.cpu_count()
         master = f"local[{cpus}]"
     if shuffle_partitions is None:
+        n = os.cpu_count()  # local[*], non-local and unparsed masters
         if "[" in master:
-            spec = master.split("[")[1].rstrip("]")
-            if spec == "*":
-                n = os.cpu_count() or 32  # local[*] = all cores
-            else:
-                try:
-                    n = int(spec)
-                except ValueError:
-                    n = 32
-        else:
-            n = 32
+            try:
+                n = int(master.split("[")[1].rstrip("]"))
+            except ValueError:
+                pass
         shuffle_partitions = max(n, 8)
 
     builder = (
@@ -76,6 +79,8 @@ def get_spark(
         .config("spark.ui.enabled", "false")
         .config("spark.sql.session.timeZone", "UTC")
     )
+    if re.fullmatch(r"local(\[.*\])?", master):
+        builder = builder.config("spark.python.daemon.module", "tsc_spark.pydaemon")
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
     return builder.getOrCreate()
