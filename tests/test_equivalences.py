@@ -33,8 +33,10 @@ def test_poly_singleton_equivalence_property(toks):
 
 
 class TestRollupPathEquivalence:
-    """The three tier-rollup implementations (HOF array path, numpy
-    reduceat path, explode+groupBy) emit identical rows."""
+    """The tier rollup (``rollup_arrays``: the Arrow ``reduceat`` path at
+    strides > 1), the explode+groupBy oracle and a per-doc Python
+    reference emit identical rows, edge docs (empty, singleton, constant)
+    included."""
 
     @pytest.fixture(scope="class")
     def toks(self, spark):
@@ -49,7 +51,6 @@ class TestRollupPathEquivalence:
         from tsc_spark.operators.rollup import (
             explode_points,
             rollup_arrays,
-            rollup_arrays_np,
             rollup_points,
         )
 
@@ -60,11 +61,18 @@ class TestRollupPathEquivalence:
                 tuple(r) for r in df.select(*cols).collect()
             )
 
-        hof = rows(rollup_arrays(toks, stride, tier))
-        npp = rows(rollup_arrays_np(toks, stride, tier))
+        arrow = rows(rollup_arrays(toks, stride, tier))
         grp = rows(rollup_points(explode_points(toks), stride, tier))
-        assert hof == npp == grp
-        assert len(hof) > 0
+        docs = toks.collect()
+        ref = sorted(
+            (r.doc_id, w // stride, len(c), min(c), max(c), sum(c), tier)
+            for r in docs
+            for w in range(0, len(r.tokens), stride)
+            for c in [r.tokens[w : w + stride]]
+        )
+        assert arrow == grp == ref
+        assert len(arrow) > 0
+        assert any(r.n_tok == 0 for r in docs)  # the edge docs ride along
 
 
 @settings(deadline=None, max_examples=40)

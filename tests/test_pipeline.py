@@ -5,6 +5,7 @@ import os
 
 import pytest
 
+from tsc_spark.config import TIER_STRIDES
 from tsc_spark.functions import decode_tokens_table
 from tsc_spark.plans.pipeline import (
     ingest,
@@ -156,6 +157,36 @@ def test_manifest_watermarks_match_written_files(spark, base_dir):
             assert m["watermarks"][f"tier{tier}_max_window_idx"] == int(actual), (
                 m["bucket"], tier
             )
+
+
+def test_manifest_stats_equal_direct_agg_over_bucket(spark, base_dir):
+    """The manifest's stats come from an Observation on the bucket scan;
+    they must equal a direct agg over the bucket directory, including the
+    n_tok == 0 edge doc that tier-0's filter drops downstream."""
+    import pyspark.sql.functions as F
+
+    bucketed = spark.read.parquet(os.path.join(base_dir, "tokens_bucketed"))
+    (bucket,) = [r.bucket for r in bucketed.filter("doc_id = 'edge_empty'").collect()]
+    (m,) = run_pipeline(spark, base_dir, buckets=[bucket], with_timeline=False)
+
+    scan = spark.read.parquet(os.path.join(base_dir, "tokens_bucketed", f"bucket={bucket}"))
+    assert scan.filter("n_tok = 0").count() > 0
+    d = scan.agg(
+        F.count("*").alias("docs"),
+        F.sum("n_tok").alias("points"),
+        F.min("doc_id").alias("doc_min"),
+        F.max("doc_id").alias("doc_max"),
+        *[
+            F.max(F.ceil(F.col("n_tok") / stride) - 1).alias(f"tier{tier}_max_window_idx")
+            for tier, stride in TIER_STRIDES.items()
+        ],
+    ).collect()[0]
+    assert (m["docs"], m["points"], m["doc_id_range"]) == (
+        d["docs"], d["points"], [d["doc_min"], d["doc_max"]]
+    )
+    assert m["watermarks"] == {
+        f"tier{t}_max_window_idx": d[f"tier{t}_max_window_idx"] for t in TIER_STRIDES
+    }
 
 
 def test_retention_rewrite_preserves_tier_column(spark, base_dir):

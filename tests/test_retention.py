@@ -107,6 +107,87 @@ class TestApplyRetention:
         assert first == second
 
 
+def _rows(df):
+    return sorted(
+        (r.doc_id, r.window_idx, r.agg_count, r.agg_min, r.agg_max, r.agg_sum)
+        for r in df.collect()
+    )
+
+
+@pytest.fixture()
+def swept_base(spark, tokens_df, tmp_path):
+    """Two-bucket pipeline layout with its tier rollups written."""
+    base = str(tmp_path / "edge")
+    ingest(spark, tokens_df, base, n_buckets=2)
+    run_pipeline(spark, base, with_timeline=False, with_encoded=False)
+    return base
+
+
+class TestApplyRetentionEdges:
+    def test_fully_expired_tier_stays_readable(self, spark, swept_base):
+        """keep 0 expires every survivor of tier 1: partitionBy writes no
+        directory for it, but the tier directory must remain a readable,
+        empty table with the unswept schema (tier column included)."""
+        cols = read_tier(spark, swept_base, 1).schema.fieldNames()
+        records = apply_retention(spark, swept_base, {0: 64, 1: 0, 2: 8})
+        assert all(r["tiers"]["1"]["rows_after"] == 0 for r in records)
+        assert all(r["tiers"]["1"]["rows_before"] > 0 for r in records)
+        for bucket in (0, 1):
+            path = os.path.join(swept_base, "rollup", "tier=1", f"bucket={bucket}")
+            assert spark.read.parquet(path).count() == 0
+        tier1 = read_tier(spark, swept_base, 1)
+        assert tier1.count() == 0
+        assert tier1.schema.fieldNames() == cols
+        # the other tiers of the same one-job sweep are unaffected
+        assert read_tier(spark, swept_base, 0).count() > 0
+        # and a second sweep over the empty tier is a no-op
+        again = apply_retention(spark, swept_base, {0: 64, 1: 0, 2: 8})
+        assert [r["tiers"]["1"] for r in again] == [{"rows_before": 0, "rows_after": 0}] * 2
+
+    def test_bucket_missing_a_tier_is_skipped(self, spark, swept_base):
+        import shutil
+
+        missing = os.path.join(swept_base, "rollup", "tier=2", "bucket=0")
+        shutil.rmtree(missing)
+        records = {r["bucket"]: r for r in apply_retention(spark, swept_base)}
+        assert sorted(records[0]["tiers"]) == ["0", "1"]
+        assert sorted(records[1]["tiers"]) == ["0", "1", "2"]
+        assert not os.path.exists(missing)
+
+    def test_leftover_tmp_dir_is_invisible_and_overwritten(self, spark, tokens_df, swept_base):
+        """A sweep interrupted after its write leaves its tmp dir behind:
+        read_tier must not see it, and the next sweep replaces it."""
+        tmp = os.path.join(swept_base, "rollup", "_retention_tmp_bucket=0")
+        stale = read_tier(spark, swept_base, 0).limit(5)
+        stale.withColumn("sweep_tier", F.lit(0)).write.partitionBy("sweep_tier").parquet(tmp)
+        assert _rows(read_tier(spark, swept_base, 0)) == _rows(
+            tiered_rollups(tokens_df, with_gapfill=True)[0]
+        )
+
+        apply_retention(spark, swept_base)
+        assert not os.path.exists(tmp)
+        for tier in (0, 1, 2):
+            expected = retention_sweep(
+                tiered_rollups(tokens_df, with_gapfill=True)[tier], DEFAULT_RETENTION_POLICY
+            )
+            assert _rows(read_tier(spark, swept_base, tier)) == _rows(expected)
+
+    def test_observed_counts_equal_per_tier_counts(self, spark, tokens_df, swept_base):
+        """The Observation-derived rows_before/rows_after summed over
+        buckets equal per-tier count()s of the sweep on the raw corpus."""
+        records = apply_retention(spark, swept_base)
+        tiers = tiered_rollups(tokens_df, with_gapfill=True)
+        for tier, tdf in tiers.items():
+            got = {
+                field: sum(r["tiers"][str(tier)][field] for r in records)
+                for field in ("rows_before", "rows_after")
+            }
+            assert got == {
+                "rows_before": tdf.count(),
+                "rows_after": retention_sweep(tdf, DEFAULT_RETENTION_POLICY).count(),
+            }
+
+
 class TestStreamingRetention:
     def test_stream_sweep_equals_batch_sweep(self, spark, tokens_df, tmp_path):
         """Two ingest waves through the streaming retention path end in
@@ -125,18 +206,40 @@ class TestStreamingRetention:
         rest.write.mode("append").parquet(src)
         run_rollup_stream_with_retention(spark, src, out, ckpt, tier=1, policy={1: 3})
 
-        got = sorted(
-            (r.doc_id, r.window_idx, r.agg_count, r.agg_min, r.agg_max, r.agg_sum)
-            for r in spark.read.parquet(out).collect()
-        )
-        expected = sorted(
-            (r.doc_id, r.window_idx, r.agg_count, r.agg_min, r.agg_max, r.agg_sum)
-            for r in retention_sweep(
-                tiered_rollups(tokens_df, with_gapfill=False)[1], {1: 3}
-            ).collect()
-        )
-        assert got == expected
+        got = _rows(spark.read.parquet(out))
+        expected = retention_sweep(tiered_rollups(tokens_df, with_gapfill=False)[1], {1: 3})
+        assert got == _rows(expected)
         assert len(got) > 0
+
+    def test_replay_after_failed_swap_is_exact(self, spark, tokens_df, tmp_path, monkeypatch):
+        """A micro-batch that dies before its swap leaves the sink
+        untouched, so the replay on restart ends in exactly the batch
+        sweep — no window appended twice."""
+        from pyspark.errors import StreamingQueryException
+
+        from tsc_spark.operators import retention
+        from tsc_spark.streaming.rollup_stream import run_rollup_stream_with_retention
+
+        src = str(tmp_path / "src")
+        out = str(tmp_path / "out")
+        ckpt = str(tmp_path / "ckpt")
+        tokens_df.repartition(2).write.parquet(src)
+
+        def crash(path, tmp):
+            raise RuntimeError("injected crash before the sink swap")
+
+        with monkeypatch.context() as m:
+            m.setattr(retention, "swap_in_dir", crash)
+            with pytest.raises(StreamingQueryException, match="injected crash"):
+                run_rollup_stream_with_retention(
+                    spark, src, out, ckpt, tier=1, policy={1: 3}, max_files=1
+                )
+        run_rollup_stream_with_retention(
+            spark, src, out, ckpt, tier=1, policy={1: 3}, max_files=1
+        )
+
+        expected = retention_sweep(tiered_rollups(tokens_df, with_gapfill=False)[1], {1: 3})
+        assert _rows(spark.read.parquet(out)) == _rows(expected)
 
 
 def test_swap_recovery_restores_interrupted_swap(tmp_path):

@@ -25,7 +25,7 @@ def _write_chunk(tokens_df, src_dir, lo, hi):
 
 
 def test_stream_rollup_matches_batch_and_resumes(spark, tokens_df, stream_dirs):
-    from tsc_spark.operators.rollup import rollup_arrays_np
+    from tsc_spark.operators.rollup import rollup_arrays
     from tsc_spark.streaming.rollup_stream import run_rollup_stream
 
     src, out, ckpt = stream_dirs
@@ -42,7 +42,7 @@ def test_stream_rollup_matches_batch_and_resumes(spark, tokens_df, stream_dirs):
     run_rollup_stream(spark, src, out, ckpt, tier=1)
 
     streamed = spark.read.parquet(out)
-    expected = rollup_arrays_np(docs, 8, 1)
+    expected = rollup_arrays(docs, 8, 1)
     assert streamed.count() == expected.count()  # no duplicates from resume
     missing = expected.exceptAll(streamed.select(*expected.columns))
     assert missing.count() == 0

@@ -1,34 +1,33 @@
 """Retention / TTL enforcement over the tiered rollup layout.
 
 The north rule's third leg (rollup + downsample + **retention**).
-Reference analogue: InfluxDB measurement reset / retention-policy drop
-(/root/reference/scripts/seed_influx.jl:152-177 — the seeding script
-drops and recreates measurements; the server relies on InfluxDB RP
-expiry).  Here retention is an explicit, scalable engine operator:
+Reference analogue: InfluxDB retention-policy expiry (the reference's
+``scripts/seed_influx.jl:152-177``).  Here retention is an explicit,
+scalable engine operator:
 
 * policy = per-tier ``keep_last`` horizon, in that tier's own windows,
-  measured from each series' newest window (the engine's time axis is
-  per-doc ``window_idx``; "keep the last K windows of every series" is
-  the reference's recency-window semantics applied to storage);
-* ``retention_sweep``    → surviving rows (the logical view);
-* ``retention_plan``     → per-(tier, doc, segment) action:
-  ``drop`` (every window expired — at scale a pure manifest delete,
-  no data rewrite), ``keep`` (nothing expired — untouched), or
-  ``rewrite`` (boundary segment, the only data actually rewritten);
-* ``apply_retention``    → executes the plan over the bucketed pipeline
-  layout (plans.pipeline) and records the sweep in each bucket manifest.
-
-Scale design: expiry is decided from per-doc watermarks (one window-max
-per doc — a narrow windowed agg, no corpus shuffle beyond the rollup's
-own doc partitioning), and the plan summarises entire segments so the
-executor only touches boundary segments.  With a date/bucket-partitioned
-physical layout, ``drop`` segments translate to partition drops
-(metadata-only), which is what keeps a 100 TB sweep cheap.
+  counted back from each series' newest window (per-doc ``window_idx``
+  is the engine's time axis);
+* ``retention_sweep`` → surviving rows (the logical view); expiry is a
+  per-(doc, tier) window max, so no shuffle beyond doc partitioning;
+* ``retention_plan``  → per-(tier, doc, segment) ``drop`` / ``keep`` /
+  ``rewrite`` action: with a date/bucket-partitioned layout, ``drop``
+  segments are metadata-only partition drops and only boundary
+  segments are rewritten, which is what keeps a 100 TB sweep cheap;
+* ``apply_retention`` → sweeps the bucketed pipeline layout
+  (plans.pipeline) in one Spark job per bucket — all of the bucket's
+  tiers in one uncached pass, row counts from ``Observation``s — and
+  records the sweep in each bucket manifest.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+import json
+import os
+import shutil
+from functools import reduce
+
+from pyspark.sql import DataFrame, Observation, Window
 from pyspark.sql import functions as F
 
 __all__ = [
@@ -47,9 +46,6 @@ def recover_swapped_dir(path: str) -> None:
     between its two renames, ``path`` is missing and the backup holds
     the data — restore it.  A stale backup alongside an intact ``path``
     means the swap completed; drop it."""
-    import os
-    import shutil
-
     old = path + ".swap_old"
     if os.path.isdir(old):
         if not os.path.isdir(path):
@@ -67,9 +63,6 @@ def swap_in_dir(path: str, tmp: str) -> None:
     backup — which ``recover_swapped_dir`` (called here on entry, and
     callable at startup) restores, so the failure mode is "sweep didn't
     happen", never data loss or a permanently wedged sink."""
-    import os
-    import shutil
-
     recover_swapped_dir(path)
     old = path + ".swap_old"
     if os.path.isdir(path):
@@ -147,17 +140,16 @@ def apply_retention(
     policy: dict[int, int] | None = None,
     buckets: list[int] | None = None,
 ) -> list[dict]:
-    """Execute the sweep over the bucketed pipeline layout.
+    """Execute the sweep over the bucketed pipeline layout, one Spark
+    job per bucket.
 
-    Per bucket and tier: read the rollup segment files, keep survivors,
-    atomically replace the tier directory, and append a ``retention``
-    record (policy, rows dropped, new watermarks) to the bucket
-    manifest.  Sandbox-scale executor for the same plan a cluster
-    deployment would push down to partition drops."""
-    import json
-    import os
-
-    from ..plans.pipeline import _manifest_path, read_tier  # layout owners
+    Per bucket: union the tier directories (tiers without one are
+    skipped), sweep them once, write the survivors ``partitionBy`` tier
+    into a hidden tmp dir, swap each tier directory in, and append a
+    ``retention`` record (policy, per-tier rows before/after, from two
+    ``Observation``s on that one write) to the bucket manifest.  Nothing
+    is cached, so AQE coalesces the output into one file per tier."""
+    from ..plans.pipeline import _commit_manifest, _manifest_path  # layout owner
 
     pol = DEFAULT_RETENTION_POLICY if policy is None else policy
     with open(os.path.join(base_dir, "_ingest.json")) as f:
@@ -170,31 +162,38 @@ def apply_retention(
         if not os.path.exists(mpath):
             continue
         record = {"bucket": bucket, "policy": {str(k): v for k, v in pol.items()}, "tiers": {}}
-        for tier in sorted(pol):
-            path = os.path.join(base_dir, "rollup", f"tier={tier}", f"bucket={bucket}")
-            if not os.path.isdir(path):
-                continue
-            df = spark.read.parquet(path).withColumn("tier", F.lit(tier))
-            before = df.count()
-            # keep the tier column: _process_bucket wrote it into every
-            # rollup file, and dropping it here would leave swept buckets
-            # with a different schema than unswept ones (read_tier merges
-            # both, surfacing NULL/missing tier nondeterministically)
-            survivors = retention_sweep(df, pol).cache()
-            after = survivors.count()
-            tmp = path + ".retention_tmp"
-            survivors.write.mode("overwrite").parquet(tmp)
-            survivors.unpersist()
-            # swap: readers see old or new, never a partial dir; crash
-            # recovery via recover_swapped_dir (see swap_in_dir)
-            swap_in_dir(path, tmp)
-            record["tiers"][str(tier)] = {"rows_before": before, "rows_after": after}
+        paths = {
+            t: os.path.join(base_dir, "rollup", f"tier={t}", f"bucket={bucket}")
+            for t in sorted(pol)
+        }
+        tiers = [t for t, path in paths.items() if os.path.isdir(path)]
+        if tiers:
+            counts = [F.count(F.when(F.col("tier") == t, 1)).alias(str(t)) for t in tiers]
+            before, after = Observation(), Observation()
+            # keep the tier column: swept buckets must keep the schema of
+            # unswept ones, or read_tier's merged schema is nondeterministic
+            rollup = reduce(
+                DataFrame.unionByName,
+                [spark.read.parquet(paths[t]).withColumn("tier", F.lit(t)) for t in tiers],
+            ).observe(before, *counts)
+            survivors = retention_sweep(rollup, pol).observe(after, *counts)
+            # "_"-prefixed and outside every tier dir: read_tier never sees it
+            tmp = os.path.join(base_dir, "rollup", f"_retention_tmp_bucket={bucket}")
+            survivors.withColumn("sweep_tier", F.col("tier")).write.partitionBy(
+                "sweep_tier"
+            ).mode("overwrite").parquet(tmp)
+            for t in tiers:
+                tier_tmp = os.path.join(tmp, f"sweep_tier={t}")
+                if not os.path.isdir(tier_tmp):  # all expired: no dir, but stay readable
+                    spark.createDataFrame([], survivors.schema).write.parquet(tier_tmp)
+                swap_in_dir(paths[t], tier_tmp)  # crash-recoverable, see swap_in_dir
+            shutil.rmtree(tmp)
+            record["tiers"] = {
+                k: {"rows_before": n, "rows_after": after.get[k]} for k, n in before.get.items()
+            }
         with open(mpath) as f:
             manifest = json.load(f)
         manifest.setdefault("retention", []).append(record)
-        tmp_m = mpath + ".tmp"
-        with open(tmp_m, "w") as f:
-            json.dump(manifest, f, indent=1)
-        os.replace(tmp_m, mpath)
+        _commit_manifest(mpath, manifest)
         results.append(record)
     return results

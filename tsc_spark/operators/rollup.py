@@ -3,14 +3,19 @@
 The genuinely new aggregation mandated by the north rule on top of the
 reference's clustering (the reference's analogue is the per-series point
 stream grouped by synthetic time, /root/reference/scripts/seed_influx.jl:
-575-598).  Everything here is native DataFrame API — Catalyst sees every
-operator, so AQE handles partial aggregation, shuffle sizing and skew.
+575-598).  Apart from the one Arrow crossing of the strided tiers,
+everything here is native DataFrame API — Catalyst sees every operator,
+so AQE handles partial aggregation, shuffle sizing and skew.
 
 Design for 100 TB:
-* every tier is a SHUFFLE-FREE per-row transform over the token arrays
-  (``rollup_arrays`` posexplode fast path for tier-0, Arrow/numpy
-  ``reduceat`` for tiers 1/2) — a doc's windows never cross rows, so no
-  tier pays a shuffle at all;
+* every tier is a SHUFFLE-FREE per-row transform over the token arrays,
+  and ``rollup_arrays`` is the one array implementation (posexplode for
+  tier-0, ``rollup_batch``'s numpy ``reduceat`` over ``mapInArrow`` for
+  tiers 1/2) — a doc's windows never cross rows, so no tier pays a
+  shuffle, and the batch pipeline and the streaming tier run the same
+  plan;
+* ``rollup_points(explode_points(...))`` is the explode+groupBy oracle
+  the array path is tested against;
 * ``rollup_from_lower_tier`` is the continuous-aggregate compaction
   path (8 tier-1 windows → 1 tier-2 window, exact because count/min/
   max/sum are decomposable) for incremental refresh over an already-
@@ -33,7 +38,6 @@ __all__ = [
     "explode_points",
     "rollup_points",
     "rollup_arrays",
-    "rollup_arrays_np",
     "rollup_batch",
     "rollup_from_lower_tier",
     "tiered_rollups",
@@ -77,69 +81,7 @@ def rollup_points(points: DataFrame, stride: int, tier: int) -> DataFrame:
     )
 
 
-def rollup_arrays(tokens_df: DataFrame, stride: int, tier: int) -> DataFrame:
-    """Shuffle-free tier rollup straight from the token arrays.
-
-    A doc's points live in ONE row, so tier windows never cross rows and
-    the whole rollup is a narrow per-row transform: slice the array into
-    stride-sized chunks and reduce each chunk with JVM higher-order
-    functions (``slice``/``aggregate``/``array_min``/``array_max``) —
-    no explode, no shuffle, stays inside whole-stage codegen.  Emits
-    rows identical to ``rollup_points(explode_points(df), stride, tier)``
-    (the point-stream path kept for sparse/deleted streams).
-    """
-    src = tokens_df.filter(F.col("n_tok") > 0)
-    if stride == 1:
-        # windows ARE the points: plain posexplode, no slicing at all
-        return src.select(
-            "doc_id", F.posexplode("tokens").alias("window_idx", "token")
-        ).select(
-            "doc_id",
-            F.col("window_idx").cast("long").alias("window_idx"),
-            F.lit(1).cast("long").alias("agg_count"),
-            F.col("token").alias("agg_min"),
-            F.col("token").alias("agg_max"),
-            F.col("token").cast("long").alias("agg_sum"),
-            F.lit(tier).alias("tier"),
-        )
-
-    n_win = F.ceil(F.col("n_tok") / F.lit(stride)).cast("int")
-    # two-level transform so each chunk's slice is evaluated ONCE and the
-    # four reducers read the bound lambda variable, not four re-slices
-    chunks = F.transform(
-        F.sequence(F.lit(0), n_win - 1),
-        lambda w: F.struct(
-            w.cast("long").alias("wi"),
-            F.slice(F.col("tokens"), w * stride + 1, stride).alias("c"),
-        ),
-    )
-    wins = F.transform(
-        chunks,
-        lambda s: F.struct(
-            s["wi"].alias("window_idx"),
-            F.size(s["c"]).cast("long").alias("agg_count"),
-            F.array_min(s["c"]).alias("agg_min"),
-            F.array_max(s["c"]).alias("agg_max"),
-            F.aggregate(
-                s["c"], F.lit(0).cast("long"), lambda acc, x: acc + x
-            ).alias("agg_sum"),
-        ),
-    )
-    return (
-        src.select("doc_id", F.explode(wins).alias("w"))
-        .select(
-            "doc_id",
-            "w.window_idx",
-            "w.agg_count",
-            "w.agg_min",
-            "w.agg_max",
-            "w.agg_sum",
-        )
-        .withColumn("tier", F.lit(tier))
-    )
-
-
-_NP_SCHEMA = (
+_WINDOW_SCHEMA = (
     "doc_id string, window_idx long, agg_count long, "
     "agg_min int, agg_max int, agg_sum long, tier int"
 )
@@ -154,8 +96,7 @@ def rollup_batch(batch: pa.RecordBatch, stride: int, tier: int) -> pa.RecordBatc
     ``reduceat`` per reducer runs over the interleaved ``[start, end)``
     pairs and keeps every other result, so gaps between docs (NULL
     arrays, sliced batches) are never summed into a window.  NULL and
-    empty arrays yield no windows, like ``rollup_arrays``' ``n_tok > 0``
-    filter."""
+    empty arrays yield no windows, like tier-0's ``n_tok > 0`` filter."""
     tokens = batch.column(1)
     offsets = tokens.offsets.to_numpy().astype(np.int64)
     valid = tokens.is_valid().to_numpy(zero_copy_only=False)
@@ -181,21 +122,40 @@ def rollup_batch(batch: pa.RecordBatch, stride: int, tier: int) -> pa.RecordBatc
             np.add.reduceat(values, bounds, dtype=np.int64)[0::2],
             np.full(doc.size, tier, dtype=np.int32),
         ],
-        names=[f.split()[0] for f in _NP_SCHEMA.split(", ")],
+        names=[f.split()[0] for f in _WINDOW_SCHEMA.split(", ")],
     )
 
 
-def rollup_arrays_np(tokens_df: DataFrame, stride: int, tier: int) -> DataFrame:
-    """Arrow-vectorized tier rollup: ``rollup_batch`` over each batch.
+def rollup_arrays(tokens_df: DataFrame, stride: int, tier: int) -> DataFrame:
+    """Shuffle-free tier rollup straight from the token arrays.
 
-    Runs as ``mapInArrow``, so the token arrays reach Python as one
-    values buffer plus offsets, never as per-doc objects, and every
-    window is reduced by numpy ``reduceat`` (vectorized C, no per-row
-    Python).  Output rows are identical to ``rollup_arrays`` /
-    ``rollup_points``."""
-    return tokens_df.select("doc_id", "tokens").mapInArrow(
-        lambda batches: (rollup_batch(b, stride, tier) for b in batches),
-        _NP_SCHEMA,
+    A doc's points live in ONE row, so tier windows never cross rows and
+    the whole rollup is a narrow per-row transform.  Stride 1 is a plain
+    ``posexplode`` (the windows ARE the points).  Larger strides run
+    ``rollup_batch`` as ``mapInArrow``: the token arrays reach Python as
+    one values buffer plus offsets, never as per-doc objects, and every
+    window is reduced by numpy ``reduceat``.  The plan is stateless, so
+    the same call serves batch tables and append-mode streams.  Emits
+    rows identical to ``rollup_points(explode_points(df), stride, tier)``
+    (the point-stream path kept for sparse/deleted streams).
+    """
+    if stride > 1:
+        return tokens_df.select("doc_id", "tokens").mapInArrow(
+            lambda batches: (rollup_batch(b, stride, tier) for b in batches),
+            _WINDOW_SCHEMA,
+        )
+    return (
+        tokens_df.filter(F.col("n_tok") > 0)
+        .select("doc_id", F.posexplode("tokens").alias("window_idx", "token"))
+        .select(
+            "doc_id",
+            F.col("window_idx").cast("long").alias("window_idx"),
+            F.lit(1).cast("long").alias("agg_count"),
+            F.col("token").alias("agg_min"),
+            F.col("token").alias("agg_max"),
+            F.col("token").cast("long").alias("agg_sum"),
+            F.lit(tier).alias("tier"),
+        )
     )
 
 
@@ -300,22 +260,16 @@ def tiered_rollups(tokens_df: DataFrame, with_gapfill: bool = True) -> dict[int,
     """Full tier-0/1/2 rollup set from a tokens table.
 
     tier-0 = stride 1 (raw points as windows), tier-1 = 8×, tier-2 = 64×.
-    All tiers are shuffle-free: tier-0 is the native posexplode fast
-    path (windows ARE the points); tiers 1/2 use the Arrow-vectorized
-    ``reduceat`` path, which beats the interpreted higher-order-function
-    plan ~1.4× and explode+groupBy ~2× (no shuffle, no per-row Python).
+    All tiers are shuffle-free ``rollup_arrays`` plans: tier-0 is the
+    native posexplode (windows ARE the points); tiers 1/2 use the
+    Arrow-vectorized ``reduceat`` path, which beat a JVM higher-order-
+    function plan ~1.4× and explode+groupBy ~2× (no shuffle, no per-row
+    Python).
     Dense arrays cannot have gaps, so gap-fill is the zero-cost dense
     variant.  Sparse point streams (deletes, retention-expired ranges)
     use ``rollup_points`` + ``gapfill`` instead.  Returns {tier:
     DataFrame}."""
-    out = {
-        tier: (
-            rollup_arrays(tokens_df, TIER_STRIDES[tier], tier)
-            if TIER_STRIDES[tier] == 1
-            else rollup_arrays_np(tokens_df, TIER_STRIDES[tier], tier)
-        )
-        for tier in (0, 1, 2)
-    }
+    out = {tier: rollup_arrays(tokens_df, TIER_STRIDES[tier], tier) for tier in (0, 1, 2)}
     if with_gapfill:
         out = {tier: _gapfill_dense(df) for tier, df in out.items()}
     return out

@@ -21,7 +21,7 @@ import json
 import os
 import time
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from ..config import DEFAULT_MERGE_THRESHOLD_RATIO, TIER_STRIDES
@@ -38,6 +38,14 @@ def _manifest_dir(base_dir: str) -> str:
 
 def _manifest_path(base_dir: str, bucket: int) -> str:
     return os.path.join(_manifest_dir(base_dir), f"bucket={bucket:05d}.json")
+
+
+def _commit_manifest(mpath: str, manifest: dict) -> None:
+    """Write ``manifest`` to ``mpath`` atomically (tmp file + rename)."""
+    tmp = mpath + ".tmp"
+    with open(tmp, "w") as f:
+        json.dump(manifest, f, indent=1)
+    os.replace(tmp, mpath)
 
 
 def ingest(
@@ -102,31 +110,34 @@ def _process_bucket(
             "points_per_sec": None,
             "completed_at_epoch": time.time(),
         }
-    df = spark.read.parquet(bucket_dir)
-
-    stats = df.agg(
+    # manifest stats ride on the bucket scan: the Observation sits below
+    # every operator's filters (tier-0 drops n_tok == 0 docs) and is
+    # filled by the first write, so no separate stats job re-reads it
+    stats_obs = Observation()
+    df = spark.read.parquet(bucket_dir).observe(
+        stats_obs,
         F.count("*").alias("docs"),
         F.sum("n_tok").alias("points"),
         F.min("doc_id").alias("doc_min"),
         F.max("doc_id").alias("doc_max"),
         F.max("n_tok").alias("max_n_tok"),
-    ).collect()[0]
+    )
+
+    # shuffle-free array-path rollup: windows never cross rows, so every
+    # tier is a narrow per-row transform (see operators.rollup.rollup_arrays)
+    for tier, tdf in tiered_rollups(df, with_gapfill=True).items():
+        path = os.path.join(base_dir, "rollup", f"tier={tier}", f"bucket={bucket}")
+        tdf.write.mode("overwrite").parquet(path)
+    stats = stats_obs.get
 
     # tiers are dense per doc (_gapfill_dense: windows 0..ceil(n_tok/s)-1),
     # so the per-tier watermark derives from max(n_tok) — no re-read of
     # the just-written parquet
     max_n_tok = int(stats["max_n_tok"] or 0)
-    watermarks: dict[str, int] = {}
-
-    # shuffle-free array-path rollup: windows never cross rows, so every
-    # tier is a narrow per-row transform (see operators.rollup.rollup_arrays)
-    tiers = tiered_rollups(df, with_gapfill=True)
-    for tier, tdf in tiers.items():
-        path = os.path.join(base_dir, "rollup", f"tier={tier}", f"bucket={bucket}")
-        tdf.write.mode("overwrite").parquet(path)
-        stride = TIER_STRIDES[tier]
-        wm = -(-max_n_tok // stride) - 1 if max_n_tok > 0 else -1
-        watermarks[f"tier{tier}_max_window_idx"] = wm
+    watermarks = {
+        f"tier{tier}_max_window_idx": -(-max_n_tok // stride) - 1 if max_n_tok > 0 else -1
+        for tier, stride in TIER_STRIDES.items()
+    }
 
     if with_timeline:
         tl = cluster_timeline(df, merge_threshold_ratio)
@@ -196,10 +207,7 @@ def run_pipeline(
         # outputs produced by an earlier run over the same bucket data
         # remain valid on disk — record the union
         manifest["outputs"] = sorted(set(manifest["outputs"]) | done)
-        tmp = mpath + ".tmp"
-        with open(tmp, "w") as f:
-            json.dump(manifest, f, indent=1)
-        os.replace(tmp, mpath)  # atomic commit: manifest == bucket done
+        _commit_manifest(mpath, manifest)  # manifest == bucket done
         written.append(manifest)
     return written
 

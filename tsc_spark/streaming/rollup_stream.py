@@ -1,11 +1,12 @@
 """Structured Streaming tier: incremental token ingest → rollup.
 
-The batch rollup path (operators.rollup.rollup_arrays*) is stateless and
-narrow — windows live inside one row — so the exact same transformation
-runs under ``readStream`` with no watermark and no stateful operator:
-each micro-batch's docs roll up independently and append to the tier
-sink.  Checkpointing gives exactly-once file-source progress, which is
-the streaming twin of the batch pipeline's per-bucket manifests
+The batch rollup operator (operators.rollup.rollup_arrays — posexplode
+for tier-0, the Arrow ``reduceat`` crossing for tiers 1/2) is stateless
+and narrow — windows live inside one row — so the exact same plan runs
+under ``readStream`` with no watermark and no stateful operator: each
+micro-batch's docs roll up independently and append to the tier sink.
+Checkpointing gives exactly-once file-source progress, which is the
+streaming twin of the batch pipeline's per-bucket manifests
 (plans.pipeline).
 
 For event-time data (the events table), ``windowed_event_counts`` shows
@@ -68,9 +69,9 @@ def stream_tokens(spark: SparkSession, src_dir: str, max_files: int = 64) -> Dat
 def stream_rollup(stream_df: DataFrame, tier: int) -> DataFrame:
     """Tier rollup of a token stream — the batch operator verbatim.
 
-    Stateless narrow plan → append mode, no watermark, no state store.
-    (The HOF variant is used rather than the Arrow/numpy one so the
-    whole streaming plan stays JVM-native; both emit identical rows.)"""
+    Stateless narrow plan (``mapInArrow`` over ``rollup_batch`` for
+    tiers 1/2) → append mode, no watermark, no state store; the rows
+    equal the batch rollup of the same docs."""
     return rollup_arrays(stream_df, TIER_STRIDES[tier], tier)
 
 
@@ -137,18 +138,23 @@ def run_rollup_stream_with_retention(
     """Streaming ingest → tier rollup → retention sweep per micro-batch.
 
     The north rule's retention leg in the streaming tier: each
-    micro-batch appends its tier windows to the sink, then the TTL sweep
-    (operators.retention.retention_sweep — per-doc keep-last horizon)
-    rewrites the sink to survivors with a crash-recoverable directory
-    swap (retention.swap_in_dir).  At cluster scale the sweep
-    degenerates to partition drops over a window-partitioned sink (see
-    retention_plan's drop/keep/rewrite split); the sandbox executor
-    rewrites the whole tier, which is the same logical result.
+    micro-batch rolls its docs up with the batch operator
+    (operators.rollup.rollup_arrays), sweeps ``sink ∪ batch windows``
+    with the TTL sweep (operators.retention.retention_sweep — per-doc
+    keep-last horizon) into a tmp dir, and swaps that in as the new sink
+    (retention.swap_in_dir, crash-recoverable): one write per
+    micro-batch, and the sink never holds an unswept batch.  At cluster
+    scale the sweep degenerates to partition drops over a
+    window-partitioned sink (see retention_plan's drop/keep/rewrite
+    split); the sandbox executor rewrites the whole tier, which is the
+    same logical result.
     foreachBatch is at-least-once on retries, so the handler is made
     idempotent with a committed-batch marker: a replayed batch_id that
-    already committed is skipped (the residual window — a crash after
-    the append but before the marker write — re-appends once; exactly-
-    once needs a transactional sink).
+    already committed is skipped, and a batch that fails before its swap
+    left the sink untouched, so its replay is exact.  The residual
+    window — a crash between the swap and the marker write — replays a
+    batch whose windows are already in the sink and duplicates them
+    once; exactly-once needs a transactional sink.
     """
     import os
 
@@ -161,6 +167,7 @@ def run_rollup_stream_with_retention(
 
     pol = DEFAULT_RETENTION_POLICY if policy is None else policy
     marker = out_dir + ".last_batch"
+    tmp = out_dir + ".sweep_tmp"
     recover_swapped_dir(out_dir)  # heal an interrupted swap from a crash
 
     def handle(batch_df: DataFrame, batch_id: int) -> None:
@@ -168,12 +175,10 @@ def run_rollup_stream_with_retention(
             with open(marker) as f:
                 if int(f.read().strip() or -1) >= batch_id:
                     return  # replayed batch that already committed
-        rollup_arrays(batch_df, TIER_STRIDES[tier], tier).write.mode("append").parquet(
-            out_dir
-        )
-        survivors = retention_sweep(spark.read.parquet(out_dir), pol)
-        tmp = out_dir + ".sweep_tmp"
-        survivors.write.mode("overwrite").parquet(tmp)
+        windows = rollup_arrays(batch_df, TIER_STRIDES[tier], tier)
+        if os.path.isdir(out_dir):
+            windows = spark.read.parquet(out_dir).unionByName(windows)
+        retention_sweep(windows, pol).write.mode("overwrite").parquet(tmp)
         swap_in_dir(out_dir, tmp)
         mtmp = marker + ".tmp"
         with open(mtmp, "w") as f:
