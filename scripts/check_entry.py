@@ -19,10 +19,7 @@ import duckdb
 import __spark_entry__ as entry_mod
 from tsc_spark.session import get_spark
 
-TABLES = [
-    "region", "nation", "customer", "supplier", "part", "orders",
-    "lineitem", "events", "documents", "embeddings",
-]
+TABLES = ["events", "documents", "embeddings"]
 
 
 def norm_val(v):

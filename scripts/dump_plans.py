@@ -27,8 +27,8 @@ DEFAULT_QUERIES = [
     "ann_topk_ivf",
     "asof_join",
     "window_matches",
-    "retention_sweep",
-    "repetition_stats",
+    "retention_plan",
+    "text_stats",
     "ngram_jaccard",
     "bucketed_rollup_join",
 ]
@@ -71,31 +71,25 @@ def main() -> None:
                 # the driver, so the default plan is just an ExistingRDD
                 # scan of the finished labels; force the distributed
                 # pointer-jump loop too — THAT plan is the 100 TB path
-                prior_thr = os.environ.get("TSC_CC_LOCAL_THRESHOLD")
-                os.environ["TSC_CC_LOCAL_THRESHOLD"] = "0"
-                try:
-                    ddf = qs[name](spark, sf_dir)
-                    buf = io.StringIO()
-                    with redirect_stdout(buf):
-                        ddf.explain("formatted")
-                    out.append(
-                        "## dedup_groups (distributed pointer-jump CC, "
-                        "`TSC_CC_LOCAL_THRESHOLD=0` — the at-scale path)"
-                        f"\n\n```\n{buf.getvalue().rstrip()}\n```\n"
-                    )
-                    written += 1
-                finally:
-                    if prior_thr is None:
-                        del os.environ["TSC_CC_LOCAL_THRESHOLD"]
-                    else:
-                        os.environ["TSC_CC_LOCAL_THRESHOLD"] = prior_thr
+                from tsc_spark.operators.dedup import _cc_round, dedup_components
+
+                ddf = dedup_components(
+                    qs["lsh_dedup_pairs"](spark, sf_dir), local_threshold=None
+                )
+                buf = io.StringIO()
+                with redirect_stdout(buf):
+                    ddf.explain("formatted")
+                out.append(
+                    "## dedup_groups (distributed pointer-jump CC, "
+                    "`local_threshold=None` — the at-scale path)"
+                    f"\n\n```\n{buf.getvalue().rstrip()}\n```\n"
+                )
+                written += 1
                 # both full-query plans above end at an ExistingRDD scan
                 # because every round materializes via localCheckpoint
                 # (lineage truncation IS the design); the at-scale
                 # evidence is the constant-size PER-ROUND job the loop
                 # repeats O(log diameter) times — dump it directly
-                from tsc_spark.operators.dedup import _cc_round
-
                 lab = spark.createDataFrame(
                     [("a", "a"), ("b", "b")], "doc_id string, comp string"
                 ).localCheckpoint()

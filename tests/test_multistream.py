@@ -1,12 +1,9 @@
-"""Multi-stream primitives: set distance, targets, strengths, mapping."""
+"""Multi-stream primitives: set distance and centered targets."""
 
 import pytest
 
 from tsc_spark.kernel.multistream import (
-    INACTIVE_STRENGTH_DECAY,
-    StreamStrengths,
     generate_centered_targets,
-    map_streams_to_candidates,
     set_distance01,
 )
 
@@ -58,49 +55,3 @@ class TestCenteredTargets:
         # spread 0.4 -> start=clamp(-0.1)=0.0, end=0.3; linspace(0, 0.3)
         got = generate_centered_targets(0.1, 0.4, n=4)
         assert got == pytest.approx([0.0, 0.1, 0.2, 0.3])
-
-
-class TestStreamStrengths:
-    def test_running_mean_and_clamp(self):
-        st = StreamStrengths()
-        st.update(1, 0.5)
-        st.update(1, 1.5)  # clamped to 1.0 on entry
-        assert st.strength(1) == pytest.approx(0.75)
-        assert st.strength(99) == 0.0
-
-    def test_inactive_decay(self):
-        st = StreamStrengths()
-        st.update(1, 1.0)
-        st.update(2, 1.0)
-        st.decay_inactive([2])
-        assert st.strength(1) == 1.0
-        assert st.strength(2) == pytest.approx(INACTIVE_STRENGTH_DECAY)
-        st.decay_inactive([2])
-        assert st.strength(2) == pytest.approx(INACTIVE_STRENGTH_DECAY ** 2)
-
-    def test_sorted_by_strength(self):
-        st = StreamStrengths()
-        st.update(1, 0.2)
-        st.update(2, 0.9)
-        st.update(3, 0.5)
-        assert st.sorted_by_strength() == [2, 3, 1]
-        assert st.sorted_by_strength(ascending=True) == [1, 3, 2]
-
-
-class TestMapping:
-    def test_prefers_low_cost_diagonal(self):
-        dist = [[0.0, 1.0], [1.0, 0.0]]
-        comp = [[0.0, 1.0], [1.0, 0.0]]
-        assert map_streams_to_candidates(dist, comp) == [0, 1]
-
-    def test_cross_assignment_when_cheaper(self):
-        dist = [[1.0, 0.0], [0.0, 1.0]]
-        comp = [[1.0, 0.0], [0.0, 1.0]]
-        assert map_streams_to_candidates(dist, comp) == [1, 0]
-
-    def test_deterministic_on_ties(self):
-        dist = [[0.5] * 3 for _ in range(3)]
-        comp = [[0.5] * 3 for _ in range(3)]
-        first = map_streams_to_candidates(dist, comp)
-        for _ in range(5):
-            assert map_streams_to_candidates(dist, comp) == first

@@ -75,27 +75,6 @@ def test_window_matches_plan_single_consumption(spark, parquet_tokens):
     assert plan_file_scans(out) <= 2, plan_nodes(out)
 
 
-def test_antijoin_variant_reads_checkpoint_and_matches_grouped(
-    spark, parquet_tokens
-):
-    from tsc_spark.operators.matching import (
-        exact_window_matches,
-        filter_contained_antijoin,
-        filter_contained_relational,
-    )
-
-    matches = exact_window_matches(parquet_tokens, window_sizes=(3, 4))
-    out = filter_contained_antijoin(matches)
-    got = sorted(tuple(r) for r in out.collect())
-    want = sorted(
-        tuple(r) for r in filter_contained_relational(matches).collect()
-    )
-    assert got == want
-    # final plan: both anti-join sides read the checkpointed match RDD
-    assert plan_file_scans(out) == 0, plan_nodes(out)
-    assert "RDDScanExec" in plan_nodes(out)
-
-
 def test_ngram_jaccard_plan_reads_checkpoint_not_parquet(spark, parquet_docs):
     from tsc_spark.operators.dedup import ngram_jaccard_pairs
 

@@ -7,7 +7,9 @@ import pytest
 from pyspark.sql import functions as F
 
 from tsc_spark.config import TIER_STRIDES
+from tsc_spark.kernel.scoring import combine_complexity_metric_scores, normalize_scores
 from tsc_spark.operators.rollup import (
+    combined_window_scores,
     explode_points,
     gapfill,
     gapfill_locf,
@@ -187,6 +189,46 @@ class TestSeriesStats:
         got = {r.doc_id: r.point_count for r in series_stats(tokens_df).collect()}
         for doc_id, toks, _src in tokens_rows:
             assert got[doc_id] == len(toks)
+
+
+def test_combined_window_scores_match_kernel_scoring(spark):
+    """combined_window_scores is the relational twin of kernel.scoring,
+    per doc: reliability is normalize_scores' weight over agg_sum,
+    norm_score × reliability its score, and combined_score is
+    combine_complexity_metric_scores over (sum, count, max, min)."""
+    # per doc, one (agg_count, agg_min, agg_max, agg_sum) per window
+    docs = {
+        # every metric single-valued: reliability 0, combined 0.0
+        "const": [(8, 2, 5, 30)] * 3,
+        # agg_sum takes exactly two values: reliability 0.2
+        "two": [(8, 1, 9, 10), (8, 0, 7, 20), (5, 3, 6, 10), (2, 4, 4, 20)],
+        "many": [(8, 0, 23, 97), (8, 1, 20, 60), (8, 3, 17, 75),
+                 (8, 0, 22, 88), (3, 5, 11, 24)],
+    }
+    df = spark.createDataFrame(
+        [(d, w, *v) for d, wins in docs.items() for w, v in enumerate(wins)],
+        "doc_id string, window_idx long, agg_count long, agg_min long, "
+        "agg_max long, agg_sum long",
+    )
+    got: dict = {}
+    for r in combined_window_scores(df).collect():
+        got.setdefault(r.doc_id, {})[r.window_idx] = r
+
+    for doc, wins in docs.items():
+        cnt, mn, mx, sm = ([float(x) for x in col] for col in zip(*wins))
+        scores, weight = normalize_scores(sm, True)
+        combined = combine_complexity_metric_scores(sm, cnt, mx, mn)
+        assert sorted(got[doc]) == list(range(len(wins)))
+        for w, r in got[doc].items():
+            assert r.reliability == weight
+            assert r.norm_score * r.reliability == pytest.approx(scores[w], abs=1e-6)
+            assert r.combined_score == round(combined[w], 6)
+
+    const = got["const"].values()
+    assert {(r.reliability, r.norm_score, r.combined_score) for r in const} == {
+        (0.0, 0.5, 0.0)
+    }
+    assert {r.reliability for r in got["two"].values()} == {0.2}
 
 
 def test_exact_window_matches_null_tokens_never_match(spark):

@@ -91,36 +91,6 @@ def test_lsh_multiprobe_fills_k(emb_df, query_vec):
     assert len(got) == 10
 
 
-def test_distributed_kmeans_matches_driver_fit(spark):
-    """Distributed Lloyd iterations (native argmax + per-dim groupBy
-    means) converge to the driver-side fit when both train on the full
-    corpus — same seeded init, same math, different executors."""
-    import numpy as np
-
-    from tsc_spark.operators.similarity import (
-        ivf_fit_centroids,
-        ivf_fit_centroids_distributed,
-        ivf_topk,
-    )
-
-    emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet").filter(
-        "vec_id != 0"
-    )
-    driver_cents = ivf_fit_centroids(emb, 64, n_centroids=8, n_iters=3)
-    dist_cents = ivf_fit_centroids_distributed(
-        emb, 64, n_centroids=8, n_iters=3, init_train=4096
-    )
-    assert np.allclose(driver_cents, dist_cents, atol=1e-9)
-
-    # the fitted centroids drive an identical IVF search
-    qv = [float(v) for v in
-          spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-          .filter("vec_id = 0").select("embedding").collect()[0][0]]
-    a = ivf_topk(emb, qv, dim=64, k=5, cents=driver_cents).collect()
-    b = ivf_topk(emb, qv, dim=64, k=5, cents=dist_cents).collect()
-    assert [(r.vec_id, r.cosine) for r in a] == [(r.vec_id, r.cosine) for r in b]
-
-
 def test_dedup_components_resolves_groups(spark):
     """Hand-built pair graph: a chain, a triangle, and an isolated pair
     resolve to min-doc components with one canonical per group."""

@@ -82,29 +82,3 @@ def test_query_matches_max_series_caps_the_scan(spark, tokens_df):
     docs = {r.doc_id for r in capped.select("doc_id").distinct().collect()}
     allowed = {r.doc_id for r in tokens_df.orderBy("doc_id").limit(5).collect()}
     assert docs <= allowed and len(allowed) == 5
-
-
-def test_stripe_by_cost_balances_partition_cost(spark):
-    """The opt-in cost-striping partitioner: every partition receives one
-    doc from each cost tier, so per-partition token sums concentrate
-    (unlike hash partitioning, which balances counts, not cost)."""
-    import pyspark.sql.functions as F
-
-    from tsc_spark.operators.clustering import stripe_by_cost
-
-    rows = [(f"d{i:03d}", list(range(i % 97 + 2))) for i in range(200)]
-    df = spark.createDataFrame(rows, "doc_id string, tokens array<int>")
-    striped = stripe_by_cost(df, 4)
-    per_part = (
-        striped.withColumn("p", F.spark_partition_id())
-        .groupBy("p")
-        .agg(F.count("*").alias("n"), F.sum(F.size("tokens")).alias("cost"))
-        .collect()
-    )
-    assert len(per_part) == 4
-    assert sum(r.n for r in per_part) == 200
-    costs = [r.cost for r in per_part]
-    # stripes interleave cost ranks, so the spread stays tight
-    assert max(costs) - min(costs) <= max(costs) * 0.1
-    # and no rows are lost or duplicated
-    assert striped.select("doc_id").distinct().count() == 200

@@ -1,5 +1,4 @@
-"""Multi-stream pool primitives: set distance, presence/strength
-lifecycle, stream↔candidate mapping.
+"""Multi-stream pool primitives: set distance and centered targets.
 
 Exact semantics of the reference multi-stream manager's scoring layer
 (/root/reference/src/polyphonic/multi_stream_manager.jl):
@@ -7,39 +6,22 @@ Exact semantics of the reference multi-stream manager's scoring layer
   width, blended 50/50 with the count penalty only when sizes differ)
 * presence/strength tracking + inactive decay ×0.98 — ...:294-303,
   578-626; decay constant /root/reference/src/config.jl:106
-* stream↔candidate cost mapping with the deterministic index tie
-  epsilon — ...:1145-1165, solved by kernel.dissonance.
-  hungarian_min_assignment (...:900-961)
 * generate_centered_targets — ...:637-658 (duplicate of
   controller:2408-2427): linspace [c−s/2, c+s/2] clamped to [0,1]
 
-The pool itself (fork/retire of full cluster managers) is generation-
-side driver state; these primitives are the numeric core every mapping
-step runs on.
-
-Role note: ``StreamStrengths`` and ``map_streams_to_candidates`` are
-the STANDALONE, unit-tested parity surface for the reference scoring
-semantics.  The production pool (kernel.streampool) embeds the same
-presence/strength math inside its channel objects because the reference
-interleaves it with channel lifecycle state (last-value fallback on
-zero-count, fork/revive carry-over) — delegating would couple bit-exact
-production state to this documentation layer for no behavioral gain.
-The two are kept in agreement by tests/test_multistream.py and the
-generate_poly fixtures.
+The pool itself (presence/strength tracking, stream↔candidate mapping,
+fork/retire of full cluster managers) lives in kernel.streampool; these
+primitives are the numeric core its mapping steps run on.
 """
 
 from __future__ import annotations
 
 import numpy as np
 
-from .dissonance import hungarian_min_assignment
-
 __all__ = [
     "INACTIVE_STRENGTH_DECAY",
     "set_distance01",
     "generate_centered_targets",
-    "StreamStrengths",
-    "map_streams_to_candidates",
 ]
 
 # /root/reference/src/config.jl:106
@@ -88,60 +70,3 @@ def generate_centered_targets(center: float, spread: float, *, n: int) -> list[f
     return [
         clamp01(start + (end - start) * (float(i) / float(n - 1))) for i in range(n)
     ]
-
-
-class StreamStrengths:
-    """Presence/strength bookkeeping for a stream pool
-    (reference ...:578-626): running mean of volume per stream, clamped
-    to [0,1]; inactive streams decay ×0.98 per step."""
-
-    def __init__(self):
-        self._sum: dict[int, float] = {}
-        self._count: dict[int, int] = {}
-        self._avg: dict[int, float] = {}
-
-    def update(self, stream_id: int, volume_value: float) -> None:
-        vv = min(max(float(volume_value), 0.0), 1.0)
-        self._sum[stream_id] = self._sum.get(stream_id, 0.0) + vv
-        self._count[stream_id] = self._count.get(stream_id, 0) + 1
-        self._avg[stream_id] = min(
-            max(self._sum[stream_id] / self._count[stream_id], 0.0), 1.0
-        )
-
-    def strength(self, stream_id: int) -> float:
-        return min(max(self._avg.get(stream_id, 0.0), 0.0), 1.0)
-
-    def decay_inactive(self, inactive_ids, factor: float = INACTIVE_STRENGTH_DECAY) -> None:
-        f = min(max(float(factor), 0.0), 1.0)
-        for sid in inactive_ids:
-            if sid in self._avg:
-                self._sum[sid] *= f
-                self._avg[sid] = min(max(self._avg[sid] * f, 0.0), 1.0)
-
-    def sorted_by_strength(self, ascending: bool = False) -> list[int]:
-        return sorted(
-            self._avg, key=lambda sid: self._avg[sid], reverse=not ascending
-        )
-
-
-def map_streams_to_candidates(
-    dist01: list[list[float]],
-    comp01: list[list[float]],
-    dist_weight: float = 0.5,
-    comp_weight: float = 0.5,
-) -> list[int]:
-    """Assign each stream a candidate minimizing weighted distance +
-    complexity cost, with the reference's deterministic index-based tie
-    epsilon (...:1145-1165), solved by the Hungarian potentials method.
-    Returns assignment[i] = candidate column for stream i."""
-    n = len(dist01)
-    cost = [
-        [
-            dist_weight * dist01[i][j]
-            + comp_weight * comp01[i][j]
-            + 1e-9 * (float(j) + float(i) * 1e-3)
-            for j in range(n)
-        ]
-        for i in range(n)
-    ]
-    return hungarian_min_assignment(cost)

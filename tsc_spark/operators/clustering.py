@@ -27,7 +27,7 @@ from __future__ import annotations
 from typing import Iterator
 
 import pandas as pd
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..config import (
@@ -42,7 +42,6 @@ __all__ = [
     "cluster_timeline",
     "cluster_timeline_poly",
     "cluster_tree",
-    "cluster_timeline_rows",
 ]
 
 TIMELINE_SCHEMA = (
@@ -71,28 +70,6 @@ def balance_for_kernel(
     return light.unionByName(heavy)
 
 
-def stripe_by_cost(df: DataFrame, parallelism: int) -> DataFrame:
-    """Cost-striped partitioning: rank docs by cost descending, assign
-    partition = rank mod P via repartitionByRange, so every partition
-    gets one doc from each cost tier.
-
-    NOT the default: the global row_number window forces the upstream
-    projection (including any derived columns like interpreted-HOF
-    token arrays) through a single task, which measured slower end-to-
-    end than plain hash partitioning + Catalyst deferring the projection
-    past the exchange.  Kept for callers whose input is already narrow
-    and materialized."""
-    n_tok = F.col("n_tok") if "n_tok" in df.columns else F.size("tokens")
-    w = Window.orderBy(F.desc("__cost"), "doc_id")
-    striped = (
-        df.withColumn("__cost", n_tok)
-        .withColumn("__stripe", (F.row_number().over(w) - 1) % parallelism)
-    )
-    return striped.repartitionByRange(parallelism, "__stripe").drop(
-        "__cost", "__stripe"
-    )
-
-
 def auto_balance(df: DataFrame) -> DataFrame:
     """Engage kernel balancing only when the scan is under-partitioned.
 
@@ -109,18 +86,6 @@ def auto_balance(df: DataFrame) -> DataFrame:
     if current >= target:
         return df
     return balance_for_kernel(df, target)
-
-
-def cluster_timeline_rows(
-    tokens: list[int],
-    merge_threshold_ratio: float,
-    contextual_min_width: float,
-):
-    """Run the kernel on one series → timeline tuples (driver-side helper)."""
-    from ..kernel.api import analyse_tokens
-
-    mgr = analyse_tokens(tokens, merge_threshold_ratio, contextual_min_width)
-    return mgr.timeline()
 
 
 def cluster_timeline(

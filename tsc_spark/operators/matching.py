@@ -34,7 +34,6 @@ __all__ = [
     "note_vol_query_matches",
     "octave_invariant_matches",
     "filter_contained_relational",
-    "filter_contained_antijoin",
     "stm_interference_events",
 ]
 
@@ -386,11 +385,7 @@ def filter_contained_relational(matches: DataFrame) -> DataFrame:
     predicate alone would let identical rows through.  Measured at
     sf0.1: 2.2 s vs 3.5 s for the materialized anti-join and ~5 s for
     the unmaterialized one, same values; plan scan-count asserted in
-    tests/test_plan_reuse.py.
-
-    ``filter_contained_antijoin`` keeps the join formulation (with its
-    input materialized) for callers whose match sets are NOT sparse per
-    doc."""
+    tests/test_plan_reuse.py."""
     ms = (
         matches.distinct()
         .groupBy("doc_id")
@@ -404,34 +399,3 @@ def filter_contained_relational(matches: DataFrame) -> DataFrame:
         ms.select("doc_id", F.explode(kept).alias("m"))
         .select("doc_id", "m.q_start", "m.db_start", "m.window_size")
     )
-
-
-def filter_contained_antijoin(matches: DataFrame) -> DataFrame:
-    """Containment anti-filter as a left-anti self-join — same values as
-    ``filter_contained_relational`` (asserted in tests), for match sets
-    too dense per doc for the in-array probe.
-
-    The deduped match set is MATERIALIZED (lazy localCheckpoint) before
-    the self-join: matches are the output of the full corpus-scan →
-    window-index → pair-expansion pipeline, and an unmaterialized
-    self-anti-join re-executes that whole subtree once per plan
-    reference (round-4 verdict measured 6 parquet scans, 0 reused
-    exchanges at sf0.1).  At 100 TB that is 6 corpus scans instead of
-    1 + a small materialized intermediate.  Both anti-join sides then
-    read the checkpointed RDD (plan shows RDDScanExec, zero file
-    scans; asserted in tests/test_plan_reuse.py)."""
-    matches = matches.distinct().localCheckpoint(eager=False)
-    m = matches.alias("m")
-    o = matches.alias("o")
-
-    class _Side:
-        def __init__(self, prefix: str):
-            self._p = prefix
-
-        def __getitem__(self, field: str) -> F.Column:
-            return F.col(f"{self._p}.{field}")
-
-    contains = (F.col("o.doc_id") == F.col("m.doc_id")) & _contains_struct(
-        _Side("o"), _Side("m")
-    )
-    return m.join(o, contains, "left_anti")

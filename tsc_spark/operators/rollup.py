@@ -44,7 +44,6 @@ __all__ = [
     "gapfill",
     "gapfill_locf",
     "contextual_width",
-    "normalize_window_scores",
     "combined_window_scores",
     "series_stats",
 ]
@@ -318,35 +317,6 @@ def contextual_width(tokens_df: DataFrame, min_width: float = 1.0) -> DataFrame:
     )
 
 
-def normalize_window_scores(rollup_df: DataFrame) -> DataFrame:
-    """Min-max normalize each doc's window sums with the reference's
-    reliability weight (normalize_scores, /root/reference/src/controllers/
-    time_series_controller.jl:2095-2117): weight 0.0 when all values are
-    equal, 0.2 when only two distinct values, 1.0 otherwise.
-
-    Expects dense windows (raw rollup or LOCF-filled): a NULL ``agg_sum``
-    from un-filled gap rows would propagate to a NULL score."""
-    w = Window.partitionBy("doc_id")
-    vmin = F.min("agg_sum").over(w)
-    vmax = F.max("agg_sum").over(w)
-    nuniq = F.size(F.collect_set("agg_sum").over(w))
-    # degenerate all-equal case fills 0.5, exactly like the reference
-    # (fill(0.5, ...), controller :2105-2109) — the 0-weight reliability
-    # is what nullifies it downstream, not the normalized value itself
-    norm = F.when(vmax > vmin, (F.col("agg_sum") - vmin) / (vmax - vmin)).otherwise(
-        F.lit(0.5)
-    )
-    reliability = (
-        F.when(nuniq <= 1, F.lit(0.0)).when(nuniq == 2, F.lit(0.2)).otherwise(F.lit(1.0))
-    )
-    return rollup_df.select(
-        "doc_id",
-        "window_idx",
-        F.round(norm, 6).alias("norm_score"),
-        reliability.alias("reliability"),
-    )
-
-
 def combined_window_scores(rollup_df: DataFrame) -> DataFrame:
     """normalize_scores + combine_complexity_metric_scores, relationally.
 
@@ -356,34 +326,47 @@ def combined_window_scores(rollup_df: DataFrame) -> DataFrame:
     min (smaller) — each weighted by the unique-count reliability
     (0 / 0.2 / 1), combined as the reliability-weighted mean with unit
     metric weights.  Mirrors kernel.scoring exactly; all-native window
-    functions (one shuffle on doc_id)."""
+    functions (one shuffle on doc_id).
+
+    Also emits the sum metric's own ``norm_score`` (the undirected
+    min-max value; the degenerate all-equal case fills 0.5, like the
+    reference's fill(0.5, ...), controller :2105-2109) and its
+    ``reliability`` weight.  Expects dense windows (raw rollup or
+    LOCF-filled): a NULL metric from un-filled gap rows would propagate
+    to a NULL score."""
     w = Window.partitionBy("doc_id")
 
-    def metric(col, larger: bool):
+    def metric(col):
         c = F.col(col).cast("double")
         vmin = F.min(c).over(w)
         vmax = F.max(c).over(w)
         nuniq = F.size(F.collect_set(c).over(w))
         norm = F.when(vmax > vmin, (c - vmin) / (vmax - vmin)).otherwise(F.lit(0.5))
-        directed = norm if larger else (F.lit(1.0) - norm)
         rel = (
             F.when(nuniq <= 1, F.lit(0.0))
             .when(nuniq == 2, F.lit(0.2))
             .otherwise(F.lit(1.0))
         )
-        return directed * rel, rel
+        return norm, rel
 
-    d_score, d_rel = metric("agg_sum", True)
-    q_score, q_rel = metric("agg_count", False)
-    c_score, c_rel = metric("agg_max", True)
-    u_score, u_rel = metric("agg_min", False)
+    d_norm, d_rel = metric("agg_sum")
+    q_norm, q_rel = metric("agg_count")
+    c_norm, c_rel = metric("agg_max")
+    u_norm, u_rel = metric("agg_min")
+    # count and min are complex when SMALLER: their direction flips
+    scores = (
+        d_norm * d_rel
+        + (F.lit(1.0) - q_norm) * q_rel
+        + c_norm * c_rel
+        + (F.lit(1.0) - u_norm) * u_rel
+    )
     denom = d_rel + q_rel + c_rel + u_rel
-    combined = F.when(
-        denom > 0.0, (d_score + q_score + c_score + u_score) / denom
-    ).otherwise(F.lit(0.0))
+    combined = F.when(denom > 0.0, scores / denom).otherwise(F.lit(0.0))
     return rollup_df.select(
         "doc_id",
         F.col("window_idx").cast("long").alias("window_idx"),
+        F.round(d_norm, 6).alias("norm_score"),
+        d_rel.alias("reliability"),
         F.round(combined, 6).alias("combined_score"),
     )
 

@@ -19,7 +19,6 @@ __all__ = [
     "hyperplane_buckets",
     "ann_topk_lsh",
     "ivf_fit_centroids",
-    "ivf_fit_centroids_distributed",
     "ivf_assign",
     "ivf_topk",
     "adaptive_n_planes",
@@ -267,80 +266,6 @@ def _kmeans_numpy(
             if members.shape[0]:
                 m = members.mean(axis=0)
                 cents[c] = m / max(float(np.sqrt(np.add.reduce(m * m))), 1e-12)
-    return cents
-
-
-def ivf_fit_centroids_distributed(
-    emb: DataFrame,
-    dim: int,
-    n_centroids: int = 16,
-    n_iters: int = 5,
-    init_train: int = 4096,
-    seed: int = 11,
-    id_col: str = "vec_id",
-) -> np.ndarray:
-    """Spherical k-means with DISTRIBUTED Lloyd iterations.
-
-    The scale path when even the training sample shouldn't sit on the
-    driver: initialization uses a small deterministic TopK sample
-    (``init_train`` rows), then each Lloyd iteration runs over the FULL
-    corpus as a DataFrame job — assignment is the native argmax over
-    centroid-dot-product literals (linear-size plan, whole-stage
-    codegen), per-cluster means are one groupBy with map-side partial
-    aggregation over the exploded dimensions.  Driver memory is
-    O(n_centroids·dim) regardless of corpus size."""
-    # deterministic seeded init from the bounded sample (no Lloyd yet)
-    df0 = (
-        emb.filter(F.col("embedding").isNotNull())
-        .select(id_col, "embedding")
-        .orderBy(id_col)
-        .limit(int(init_train))
-    )
-    x0 = np.array([list(r[1]) for r in df0.collect()], dtype=np.float64)
-    x0 = x0 / np.maximum(np.linalg.norm(x0, axis=1, keepdims=True), 1e-12)
-    rng = np.random.default_rng(seed)
-    cents = x0[rng.choice(x0.shape[0], size=min(n_centroids, x0.shape[0]), replace=False)]
-
-    # hoist the norm to a column: dividing by _norm() inside the
-    # transform lambda would re-evaluate the full fold per element
-    # (O(dim^2) interpreted work per row, per Lloyd iteration)
-    norm_emb = F.transform(
-        "embedding", lambda v: v.cast("double") / F.col("nrm")
-    )
-    normed = (
-        emb.filter(F.col("embedding").isNotNull())
-        .withColumn("nrm", F.greatest(_norm(F.col("embedding")), F.lit(1e-12)))
-        .select(norm_emb.alias("e"))
-    )
-    for _ in range(int(n_iters)):
-        assigned = normed.withColumn(
-            "c", _nearest_centroid_col(cents, col="e")
-        )
-        # per-cluster per-dimension mean: posexplode → groupBy(c, dim) —
-        # partial (map-side) aggregation keeps the shuffle tiny:
-        # n_centroids·dim rows total
-        sums = (
-            assigned.select("c", F.posexplode("e").alias("d", "v"))
-            .groupBy("c", "d")
-            .agg(F.sum("v").alias("s"), F.count("*").alias("n"))
-            .collect()
-        )
-        new_cents = cents.copy()
-        acc: dict[int, np.ndarray] = {}
-        for r in sums:
-            if r["d"] >= dim:
-                raise ValueError(
-                    f"embedding dimension {r['d']} exceeds dim={dim}"
-                )
-            # per-dimension mean s/n — robust to null-skipped sums
-            # (with full vectors every dimension shares the same n, so
-            # this equals the old sum/count; with nulls the old code
-            # divided by an arbitrary dimension's count)
-            if r["n"] > 0:
-                acc.setdefault(r["c"], np.zeros(dim))[r["d"]] = r["s"] / r["n"]
-        for c, m in acc.items():
-            new_cents[c] = m / max(np.linalg.norm(m), 1e-12)
-        cents = new_cents
     return cents
 
 

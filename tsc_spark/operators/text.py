@@ -1,8 +1,9 @@
 """Text-analysis operators for training-data pipelines over `documents`.
 
 All hot-path expressions are native pyspark.sql.functions (JVM side,
-whole-stage codegen); no Python UDFs.  Each operator has an exact ANSI
-SQL twin in __spark_entry__.oracle_sql for the DuckDB correctness gate.
+whole-stage codegen); no Python UDFs.  Each per-doc operator has an
+exact ANSI SQL twin in __spark_entry__; the text_stats query joins them
+on doc_id for the DuckDB correctness gate.
 """
 
 from __future__ import annotations

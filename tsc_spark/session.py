@@ -27,7 +27,7 @@ from pyspark.sql import SparkSession
 
 from .config import ARROW_MAX_RECORDS_PER_BATCH
 
-__all__ = ["get_spark", "stop_spark"]
+__all__ = ["get_spark"]
 
 
 def get_spark(
@@ -84,9 +84,3 @@ def get_spark(
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
     return builder.getOrCreate()
-
-
-def stop_spark() -> None:
-    active = SparkSession.getActiveSession()
-    if active is not None:
-        active.stop()
