@@ -75,14 +75,24 @@ class TestRollupPathEquivalence:
         assert any(r.n_tok == 0 for r in docs)  # the edge docs ride along
 
 
+# docs mix free tokens with constant runs: runs make every window of the
+# run identical, which is where the unpruned forest grows deepest
+doc_tokens = st.lists(
+    st.tuples(st.integers(min_value=0, max_value=23), st.integers(min_value=1, max_value=60)),
+    max_size=40,
+).map(lambda runs: [v for v, n in runs for _ in range(n)][:300])
+
+
 @settings(deadline=None, max_examples=40)
 @given(
-    st.lists(st.integers(min_value=0, max_value=23), min_size=0, max_size=40),
+    st.lists(st.integers(min_value=0, max_value=23), min_size=4, max_size=16),
+    doc_tokens,
 )
-def test_match_series_rollback_equals_fresh_copy(db_toks):
-    """The journal-rollback matcher must (a) produce identical matches to
-    a fresh seed copy and (b) leave the reusable seed bit-identical, so
-    the Spark worker can amortise one unpickle across a whole batch."""
+def test_match_series_rollback_equals_fresh_copy(query, db_toks):
+    """The journal-rollback matcher (pruned to the query's subtrees) must
+    (a) produce identical matches to the unpruned fresh-copy oracle and
+    (b) leave the reusable seed bit-identical, so the Spark worker can
+    amortise one unpickle across a whole batch."""
     import pickle
 
     from tsc_spark.kernel.matching import (
@@ -91,7 +101,7 @@ def test_match_series_rollback_equals_fresh_copy(db_toks):
         match_series_rollback,
     )
 
-    seed = build_query_seed([0, 1, 3, 2, 4, 5, 3, 1])
+    seed = build_query_seed(query)
     before = pickle.dumps(seed)
     tl_before = sorted((ws, cid, list(si)) for ws, cid, si in seed.timeline())
     n_before, width_before, ctr_before = seed.n, seed.value_width, seed.cluster_id_counter
@@ -109,6 +119,68 @@ def test_match_series_rollback_equals_fresh_copy(db_toks):
     assert seed.cluster_id_counter == ctr_before
     assert [(list(k), l) for k, l, _node in seed.tasks] == tasks_before
     assert sorted((ws, cid, list(si)) for ws, cid, si in seed.timeline()) == tl_before
+
+
+def test_match_series_rollback_builds_no_level_past_the_query(monkeypatch):
+    """On a repetitive doc the unpruned forest extends its subtrees level
+    after level toward the doc length; the pruned matcher never extends a
+    node to a window size above qlen + 1."""
+    from tsc_spark.kernel.manager import ClusterManager
+    from tsc_spark.kernel.matching import build_query_seed, match_series_rollback
+
+    query = [0, 1, 3, 2, 4, 5, 3, 1]
+    doc = [0, 1, 3, 2, 4, 5, 3, 1] * 37 + [0, 1, 3, 2]
+    assert len(doc) == 300
+    seed = build_query_seed(query)
+    lengths = []
+
+    def recording(method, pos):
+        def wrapper(self, *args):
+            lengths.append(args[pos])
+            return method(self, *args)
+
+        return wrapper
+
+    # new_length is the 5th / 6th positional argument after self
+    monkeypatch.setattr(
+        ClusterManager, "_process_existing", recording(ClusterManager._process_existing, 4)
+    )
+    monkeypatch.setattr(ClusterManager, "_process_new", recording(ClusterManager._process_new, 5))
+    kept, _score = match_series_rollback(seed, doc)
+    assert kept
+    assert max(lengths) <= len(query) + 1
+
+
+@settings(deadline=None, max_examples=200)
+@given(
+    st.integers(min_value=2, max_value=10).flatmap(
+        lambda qlen: st.lists(
+            st.integers(min_value=2, max_value=qlen).flatmap(
+                lambda ws: st.tuples(
+                    st.integers(min_value=0, max_value=qlen - ws),
+                    st.integers(min_value=0, max_value=12),
+                    st.just(ws),
+                )
+            ),
+            max_size=150,
+        )
+    ),
+    st.randoms(use_true_random=False),
+)
+def test_filter_contained_matches_equals_pairwise_predicate(matches, rnd):
+    """The grouped containment sweep keeps exactly what a double loop over
+    the reference predicate keeps, after dedup and the output sort."""
+    from tsc_spark.kernel.matching import _match_contains, filter_contained_matches
+
+    # duplicate a random share of the matches (0–300 in all) and shuffle
+    matches = matches + rnd.sample(matches, rnd.randint(0, len(matches)))
+    rnd.shuffle(matches)
+    deduped = set(matches)
+    expected = sorted(
+        (m for m in deduped if not any(_match_contains(o, m) for o in deduped if o != m)),
+        key=lambda m: (m[0], m[1], -m[2]),
+    )
+    assert filter_contained_matches(matches) == expected
 
 
 def test_match_series_rollback_reusable_across_docs():

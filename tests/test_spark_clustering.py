@@ -82,3 +82,38 @@ def test_query_matches_max_series_caps_the_scan(spark, tokens_df):
     docs = {r.doc_id for r in capped.select("doc_id").distinct().collect()}
     allowed = {r.doc_id for r in tokens_df.orderBy("doc_id").limit(5).collect()}
     assert docs <= allowed and len(allowed) == 5
+
+
+def test_null_tokens_row_emits_nothing(spark):
+    """A row whose series is NULL emits no rows from the per-doc kernel
+    operators (like the rollup); the doc beside it is unaffected."""
+    from tsc_spark.kernel.matching import build_query_seed, match_series
+    from tsc_spark.operators.clustering import cluster_timeline_poly
+    from tsc_spark.operators.matching import query_matches
+
+    toks = [0, 1, 3, 2, 4, 5, 3, 1, 0, 1, 3, 2, 4]
+    df = spark.createDataFrame(
+        [("null", None), ("ok", toks)], "doc_id string, tokens array<int>"
+    )
+    mgr = analyse_tokens(toks)
+
+    timeline = _collect_timeline(cluster_timeline(df))
+    assert timeline == {"ok": [(ws, cid, list(i)) for ws, cid, i in mgr.timeline()]}
+
+    tree = cluster_tree(df).collect()
+    assert {r.doc_id for r in tree} == {"ok"} and len(tree) == len(mgr.tree())
+
+    query = [0, 1, 3, 2, 4, 5, 3, 1]
+    got = [
+        (r.doc_id, r.q_start, r.db_start, r.window_size)
+        for r in query_matches(spark, df, query).collect()
+    ]
+    want = match_series(build_query_seed(query), toks)[0]
+    assert sorted(got) == [("ok", *m) for m in want] and want
+
+    chords = spark.createDataFrame(
+        [("null", None), ("ok", [[float(t)] for t in toks])],
+        "doc_id string, chords array<array<double>>",
+    )
+    poly = cluster_timeline_poly(chords).collect()
+    assert {r.doc_id for r in poly} == {"ok"}

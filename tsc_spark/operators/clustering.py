@@ -115,12 +115,18 @@ def cluster_timeline(
         for pdf in batches:
             out_doc, out_ws, out_cid, out_idx = [], [], [], []
             for doc_id, toks in zip(pdf["doc_id"], pdf["tokens"]):
+                if toks is None:
+                    continue
                 mgr = analyse_tokens(toks, mtr, cmw)
                 for ws, cid, inds in mgr.timeline():
                     out_doc.append(doc_id)
                     out_ws.append(ws)
                     out_cid.append(cid)
                     out_idx.append(inds)
+            if not out_doc:
+                # an all-NULL batch: an empty object column has no arrow
+                # list type to convert from
+                continue
             yield pd.DataFrame(
                 {
                     "doc_id": out_doc,
@@ -164,7 +170,7 @@ def cluster_timeline_poly(
         for pdf in batches:
             out_doc, out_ws, out_cid, out_idx = [], [], [], []
             for doc_id, chords in zip(pdf["doc_id"], pdf["chords"]):
-                if len(chords) == 0:
+                if chords is None or len(chords) == 0:
                     continue
                 mgr = PolyClusterManager(
                     [list(c) for c in chords],
@@ -183,6 +189,8 @@ def cluster_timeline_poly(
                     out_ws.append(ws)
                     out_cid.append(cid)
                     out_idx.append(inds)
+            if not out_doc:
+                continue
             yield pd.DataFrame(
                 {
                     "doc_id": out_doc,
@@ -221,12 +229,15 @@ def cluster_tree(
         for pdf in batches:
             out = {"doc_id": [], "path": [], "si": [], "rep": []}
             for doc_id, toks in zip(pdf["doc_id"], pdf["tokens"]):
+                if toks is None:
+                    continue
                 mgr = analyse_tokens(toks, mtr, cmw)
                 for path, si, rep in mgr.tree():
                     out["doc_id"].append(doc_id)
                     out["path"].append(path)
                     out["si"].append(si)
                     out["rep"].append(rep)
-            yield pd.DataFrame(out)
+            if out["doc_id"]:
+                yield pd.DataFrame(out)
 
     return src.mapInPandas(run, TREE_SCHEMA)

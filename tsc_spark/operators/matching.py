@@ -9,6 +9,14 @@ a shuffle-free mapInPandas, then score/sort natively:
   broadcast(seed) → mapInPandas(match per doc) → matches rows
   → groupBy(doc).score vector → orderBy(score desc)  [one small shuffle
     over matched docs only — matches are sparse relative to the corpus]
+
+Each worker unpickles the seed once and matches every doc of its batches
+with ``kernel.matching.match_series_rollback``: the doc is appended
+inside a journal transaction that is rolled back afterwards, the cluster
+forest grows only in subtrees that can still hold a window of the query
+(exact pruning, documented there), and contained matches are dropped by
+a grouped sweep over the distinct outer (q_start, ws) groups.  Docs with
+NULL tokens emit no rows.
 """
 
 from __future__ import annotations
@@ -79,7 +87,7 @@ def query_matches(
         for pdf in batches:
             out = {"doc_id": [], "q_start": [], "db_start": [], "window_size": []}
             for doc_id, toks in zip(pdf["doc_id"], pdf["tokens"]):
-                if len(toks) == 0:
+                if toks is None or len(toks) == 0:
                     continue
                 kept, _score = match_series_rollback(local_seed, toks, mmw)
                 if kept:
