@@ -89,25 +89,6 @@ def _stream_src(sf_dir: str, variant: str, build) -> str:
     return src
 
 
-def _tokens4_src(spark, sf_dir: str) -> str:
-    """Shared 4-file token stream source (q_rollup_tier1_streamed and
-    q_retention_streamed drain the same at-rest table) — one builder so
-    the 'tokens4' cache key can never map to divergent layouts."""
-    return _stream_src(
-        sf_dir,
-        "tokens4",
-        lambda p: _tokens(spark, sf_dir)
-        .select(
-            "doc_id",
-            F.col("tokens").cast("array<int>").alias("tokens"),
-            F.col("n_tok").cast("int").alias("n_tok"),
-            "source",
-        )
-        .repartition(4)
-        .write.parquet(p),
-    )
-
-
 # ----------------------------------------------------------------------
 # shared SQL fragments (DuckDB)
 # ----------------------------------------------------------------------
@@ -178,70 +159,65 @@ def q_rollup_tier2(spark, sf_dir):
 def q_rollup_tier1_streamed(spark, sf_dir):
     """§2.9 streaming evidence: the SAME tier-1 rollup executed through
     Structured Streaming end-to-end.  The tokenized corpus is written as
-    several parquet files, drained as a checkpointed file-source stream
-    in multiple micro-batches (maxFilesPerTrigger=2, availableNow), and
-    the materialized sink is returned — compared against the identical
-    *batch* DuckDB oracle, proving batch/stream equivalence.  Two
-    micro-batches (4 files at 2/trigger) are the minimum that exercises
-    cross-batch incremental append; more adds only trigger overhead.
+    several parquet files, drained by the one streaming runner
+    (streaming/rollup_stream.run_rollup_stream_with_retention) with
+    ``policy={}`` — no retention cut, the plain tier stream — as a
+    checkpointed file-source stream in multiple micro-batches
+    (maxFilesPerTrigger=2, availableNow) appending to a parquet sink,
+    and the materialized sink is returned — compared against the
+    identical *batch* DuckDB oracle, proving batch/stream equivalence.
+    Two micro-batches (4 files at 2/trigger) are the minimum that
+    exercises cross-batch incremental append; more adds only trigger
+    overhead.
     Reference analogue: the incremental per-point ingest loop
     (/root/reference/src/polyphonic/polyphonic_cluster_manager.jl:504-517)."""
-    import atexit
-    import shutil
-    import tempfile
-
-    from tsc_spark.streaming.rollup_stream import stream_rollup, stream_tokens
-
-    root = tempfile.mkdtemp(prefix="tsc_stream_q_")
-    atexit.register(shutil.rmtree, root, ignore_errors=True)
-    out, ckpt = f"{root}/out", f"{root}/ckpt"
-
-    src = _tokens4_src(spark, sf_dir)
-
-    q = (
-        stream_rollup(stream_tokens(spark, src, max_files=2), 1)
-        .writeStream.format("parquet")
-        .option("path", out)
-        .option("checkpointLocation", ckpt)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-
-    return _rollup_cols(spark.read.parquet(out))
+    return _streamed_tier1(spark, sf_dir, "tsc_stream_q_", {})
 
 
 def q_retention_streamed(spark, sf_dir):
-    """§2.9 retention-per-micro-batch evidence: the foreachBatch ingest →
-    tier-1 rollup → TTL sweep loop (streaming/rollup_stream.
-    run_rollup_stream_with_retention) driven end-to-end, compared to the
-    BATCH sweep oracle (SQL_RETENTION_SWEEP).  Every doc's token row —
-    and hence all its rollup windows — lands in exactly one micro-batch,
-    and the keep-last-N sweep is per-doc, so re-sweeping on later
-    batches never changes already-swept docs: the final sink must equal
-    the batch-global sweep exactly.  ``max_files=2`` over 4 source files
-    forces TWO genuine micro-batches so the cross-batch re-sweep path —
-    batch 2's sweep re-reading batch 1's survivors — is actually
-    exercised (a single availableNow batch would reduce this gate to
-    a batch retention_sweep check)."""
+    """§2.9 retention-per-micro-batch evidence: the streaming ingest →
+    tier-1 rollup with the keep-last cut inside it → parquet append
+    loop (streaming/rollup_stream.run_rollup_stream_with_retention)
+    driven end-to-end, compared to the BATCH sweep oracle
+    (SQL_RETENTION_SWEEP).  Every doc's token row — and hence all its
+    rollup windows — lands in exactly one micro-batch, and the
+    keep-last-N sweep is per doc, so cutting each batch's docs on
+    arrival equals the batch-global sweep exactly.  ``max_files=2``
+    over 4 source files forces TWO genuine micro-batches, so append
+    across batches through the sink's ``_spark_metadata`` log is
+    actually exercised (a single availableNow batch would reduce this
+    gate to a batch retention_sweep check)."""
+    return _streamed_tier1(spark, sf_dir, "tsc_retstream_q_", {1: 4})
+
+
+def _streamed_tier1(spark, sf_dir, prefix: str, policy: dict[int, int]) -> DataFrame:
+    """Drain the shared 4-file token source (cache key 'tokens4') through
+    the tier-1 stream under ``policy`` into a fresh sink; its rows."""
     import atexit
     import shutil
     import tempfile
 
     from tsc_spark.streaming.rollup_stream import run_rollup_stream_with_retention
 
-    root = tempfile.mkdtemp(prefix="tsc_retstream_q_")
+    src = _stream_src(
+        sf_dir,
+        "tokens4",
+        lambda p: _tokens(spark, sf_dir)
+        .select(
+            "doc_id",
+            F.col("tokens").cast("array<int>").alias("tokens"),
+            F.col("n_tok").cast("int").alias("n_tok"),
+            "source",
+        )
+        .repartition(4)
+        .write.parquet(p),
+    )
+    root = tempfile.mkdtemp(prefix=prefix)
     atexit.register(shutil.rmtree, root, ignore_errors=True)
     out, ckpt = f"{root}/out", f"{root}/ckpt"
-
-    # same 4-file token source as q_rollup_tier1_streamed (shared builder)
-    src = _tokens4_src(spark, sf_dir)
-
     run_rollup_stream_with_retention(
-        spark, src, out, ckpt, tier=1, policy={1: 4}, max_files=2
+        spark, src, out, ckpt, tier=1, policy=policy, max_files=2
     )
-
     return _rollup_cols(spark.read.parquet(out))
 
 
@@ -1893,7 +1869,7 @@ def _static_oracle_sql() -> dict[str, str]:
         # window aggregation — same oracle text proves it end-to-end
         "events_hourly_streamed": SQL_EVENTS_HOURLY,
         "recency_weights": SQL_RECENCY,
-        # per-micro-batch sweep must converge to the batch-global sweep
+        # the per-arrival keep-last cut must equal the batch-global sweep
         "retention_streamed": SQL_RETENTION_SWEEP,
         "retention_plan": SQL_RETENTION_PLAN,
         "window_matches": SQL_WINDOW_MATCHES,

@@ -192,54 +192,106 @@ class TestStreamingRetention:
     def test_stream_sweep_equals_batch_sweep(self, spark, tokens_df, tmp_path):
         """Two ingest waves through the streaming retention path end in
         exactly the batch sweep of the full corpus (docs are disjoint
-        across waves, so per-doc keep-last is wave-independent)."""
+        across waves, so per-doc keep-last is wave-independent) — on
+        every tier, so tier-0's posexplode cut runs as well as the
+        Arrow cut of tiers 1/2."""
         from tsc_spark.streaming.rollup_stream import run_rollup_stream_with_retention
 
-        src = str(tmp_path / "src")
-        out = str(tmp_path / "out")
-        ckpt = str(tmp_path / "ckpt")
-        half = tokens_df.limit(20)
-        rest = tokens_df.subtract(half)
+        half = tokens_df.limit(20).cache()
+        rest = tokens_df.subtract(half).cache()
+        tiers = tiered_rollups(tokens_df, with_gapfill=False)
+        for tier in (0, 1, 2):
+            src, out, ckpt = (str(tmp_path / f"{d}{tier}") for d in ("src", "out", "ckpt"))
+            half.write.parquet(src)
+            run_rollup_stream_with_retention(spark, src, out, ckpt, tier=tier, policy={tier: 3})
+            rest.write.mode("append").parquet(src)
+            run_rollup_stream_with_retention(spark, src, out, ckpt, tier=tier, policy={tier: 3})
 
-        half.write.mode("append").parquet(src)
-        run_rollup_stream_with_retention(spark, src, out, ckpt, tier=1, policy={1: 3})
-        rest.write.mode("append").parquet(src)
-        run_rollup_stream_with_retention(spark, src, out, ckpt, tier=1, policy={1: 3})
+            got = _rows(spark.read.parquet(out))
+            assert got == _rows(retention_sweep(tiers[tier], {tier: 3}))
+            assert len(got) > 0
 
-        got = _rows(spark.read.parquet(out))
-        expected = retention_sweep(tiered_rollups(tokens_df, with_gapfill=False)[1], {1: 3})
-        assert got == _rows(expected)
-        assert len(got) > 0
-
-    def test_replay_after_failed_swap_is_exact(self, spark, tokens_df, tmp_path, monkeypatch):
-        """A micro-batch that dies before its swap leaves the sink
-        untouched, so the replay on restart ends in exactly the batch
-        sweep — no window appended twice."""
+    def test_restart_after_failed_batch_is_exact(self, spark, tokens_df, tmp_path):
+        """A micro-batch that fails is replayed on restart, and a batch
+        whose sink commit landed but whose checkpoint commit did not is
+        skipped by the sink's log: the sink ends in exactly the batch
+        sweep, with no batch appended twice."""
         from pyspark.errors import StreamingQueryException
 
-        from tsc_spark.operators import retention
         from tsc_spark.streaming.rollup_stream import run_rollup_stream_with_retention
 
         src = str(tmp_path / "src")
         out = str(tmp_path / "out")
         ckpt = str(tmp_path / "ckpt")
         tokens_df.repartition(2).write.parquet(src)
+        files = sorted(f for f in os.listdir(src) if f.endswith(".parquet"))
+        assert len(files) == 2
+        first, second = (os.path.join(src, f) for f in files)
+        os.utime(first, (1_000_000, 1_000_000))  # file order = batch order
+        os.utime(second, (2_000_000, 2_000_000))
 
-        def crash(path, tmp):
-            raise RuntimeError("injected crash before the sink swap")
+        def run():
+            run_rollup_stream_with_retention(
+                spark, src, out, ckpt, tier=1, policy={1: 3}, max_files=1
+            )
 
-        with monkeypatch.context() as m:
-            m.setattr(retention, "swap_in_dir", crash)
-            with pytest.raises(StreamingQueryException, match="injected crash"):
-                run_rollup_stream_with_retention(
-                    spark, src, out, ckpt, tier=1, policy={1: 3}, max_files=1
-                )
-        run_rollup_stream_with_retention(
-            spark, src, out, ckpt, tier=1, policy={1: 3}, max_files=1
-        )
+        data = open(second, "rb").read()
+        with open(second, "wb") as f:
+            f.write(data[: len(data) // 2])
+        with pytest.raises(StreamingQueryException):
+            run()  # batch 0 commits, batch 1 cannot read its file
+        with open(second, "wb") as f:
+            f.write(data)
+        run()
+
+        commits = os.path.join(ckpt, "commits")
+        last = max(int(n) for n in os.listdir(commits) if n.isdigit())
+        assert last == 1
+        os.remove(os.path.join(commits, str(last)))
+        os.remove(os.path.join(commits, f".{last}.crc"))
+
+        def sink_log():
+            meta = os.path.join(out, "_spark_metadata")
+            return sorted(n for n in os.listdir(meta) if not n.startswith("."))
+
+        logged = sink_log()
+        run()  # batch 1 replays; the sink already holds it
+        assert sink_log() == logged
 
         expected = retention_sweep(tiered_rollups(tokens_df, with_gapfill=False)[1], {1: 3})
         assert _rows(spark.read.parquet(out)) == _rows(expected)
+
+    def test_doc_arriving_twice_keeps_each_arrivals_windows(self, spark, tmp_path):
+        """The keep-last cut is per arrival: a doc_id that arrives in two
+        micro-batches leaves each arrival's last windows in the sink,
+        once per arrival — the sink is never re-swept across batches."""
+        from tsc_spark.streaming.rollup_stream import (
+            TOKENS_SCHEMA,
+            run_rollup_stream_with_retention,
+        )
+
+        src = str(tmp_path / "src")
+        out = str(tmp_path / "out")
+        ckpt = str(tmp_path / "ckpt")
+        arrivals = [list(range(40)), list(range(100, 120))]  # 5 windows, then 3
+        for toks in arrivals:
+            spark.createDataFrame([("d", toks, len(toks), "web")], TOKENS_SCHEMA).coalesce(
+                1
+            ).write.mode("append").parquet(src)
+            run_rollup_stream_with_retention(
+                spark, src, out, ckpt, tier=1, policy={1: 2}, max_files=1
+            )
+
+        def last_two_windows(toks):
+            wins = [toks[i : i + 8] for i in range(0, len(toks), 8)]
+            return [
+                ("d", w, len(seg), min(seg), max(seg), sum(seg))
+                for w, seg in enumerate(wins)
+                if w >= len(wins) - 2
+            ]
+
+        expected = sorted(last_two_windows(arrivals[0]) + last_two_windows(arrivals[1]))
+        assert _rows(spark.read.parquet(out)) == expected
 
 
 def test_swap_recovery_restores_interrupted_swap(tmp_path):

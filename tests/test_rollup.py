@@ -76,8 +76,8 @@ def _batch(docs, tokens=None):
     )
 
 
-def _batch_windows(batch, stride, tier=1):
-    out = rollup_batch(batch, stride, tier)
+def _batch_windows(batch, stride, keep=None, tier=1):
+    out = rollup_batch(batch, stride, tier, keep)
     assert out.schema == pa.schema(
         [("doc_id", pa.string()), ("window_idx", pa.int64()), ("agg_count", pa.int64()),
          ("agg_min", pa.int32()), ("agg_max", pa.int32()), ("agg_sum", pa.int64()),
@@ -90,31 +90,42 @@ def _batch_windows(batch, stride, tier=1):
     }
 
 
-def _reference_windows(docs, stride):
-    return {
-        (d, w): aggs
-        for d, toks in docs.items()
-        if toks
-        for w, aggs in _oracle_rollup(toks, stride).items()
-    }
+def _reference_windows(docs, stride, keep=None):
+    """Per-doc oracle windows, cut to each doc's last ``keep`` windows."""
+    out = {}
+    for d, toks in docs.items():
+        wins = _oracle_rollup(toks, stride) if toks else {}
+        out.update(((d, w), aggs) for w, aggs in wins.items()
+                   if keep is None or w >= len(wins) - keep)
+    return out
+
+
+# ``keep`` values every batch test runs: no cut, cut everything, and
+# keep-last horizons shorter and longer than some docs
+KEEPS = (None, 0, 1, 3)
 
 
 class TestRollupBatch:
     """``rollup_batch`` straight on Arrow batches, against the per-doc
-    numpy reference (no Spark)."""
+    numpy reference (no Spark), with and without the keep-last cut."""
 
     @pytest.mark.parametrize("stride", [1, 8, 64])
     def test_exact_multiples_and_remainders(self, stride):
         rng = np.random.default_rng(stride)
         docs = {f"d{n}": rng.integers(-50, 50, n).tolist()
                 for n in (1, 7, 8, 9, 63, 64, 65, 128, 130)}
-        assert _batch_windows(_batch(docs), stride) == _reference_windows(docs, stride)
+        for keep in KEEPS:
+            assert _batch_windows(_batch(docs), stride, keep) == _reference_windows(
+                docs, stride, keep
+            )
 
     def test_null_and_empty_arrays_have_no_windows(self):
         docs = {"a": None, "b": [], "c": [3, 1, 2], "d": None, "e": []}
         assert _batch_windows(_batch(docs), 2) == {("c", 0): (2, 1, 3, 4), ("c", 1): (1, 2, 2, 2)}
-        assert _batch_windows(_batch({"a": None, "b": []}), 8) == {}
-        assert _batch_windows(_batch({}), 8) == {}
+        assert _batch_windows(_batch(docs), 2, keep=1) == {("c", 1): (1, 2, 2, 2)}
+        for keep in KEEPS:
+            assert _batch_windows(_batch({"a": None, "b": []}), 8, keep) == {}
+            assert _batch_windows(_batch({}), 8, keep) == {}
 
     def test_null_over_a_nonempty_segment_is_skipped(self):
         # Arrow lets a NULL list slot span child values; they are not the doc's
@@ -124,7 +135,10 @@ class TestRollupBatch:
             mask=pa.array([False, True, False]),
         )
         docs = {"a": [1, 2, 3], "b": None, "c": [4, 5, 6]}
-        assert _batch_windows(_batch(docs, tokens), 2) == _reference_windows(docs, 2)
+        for keep in KEEPS:
+            assert _batch_windows(_batch(docs, tokens), 2, keep) == _reference_windows(
+                docs, 2, keep
+            )
 
     @pytest.mark.parametrize("stride", [1, 8])
     def test_sliced_batch_with_nonzero_offset(self, stride):
@@ -134,13 +148,15 @@ class TestRollupBatch:
         sliced = _batch(docs).slice(3, 6)
         assert sliced.column(1).offset == 3
         kept = dict(list(docs.items())[3:9])
-        assert _batch_windows(sliced, stride) == _reference_windows(kept, stride)
+        for keep in KEEPS:
+            assert _batch_windows(sliced, stride, keep) == _reference_windows(kept, stride, keep)
 
     def test_int32_extremes_and_int64_sums(self):
         lo, hi = np.iinfo(np.int32).min, np.iinfo(np.int32).max
         docs = {"hi": [hi] * 70, "lo": [lo] * 70, "mixed": [lo, hi] * 40}
+        for keep in KEEPS:
+            assert _batch_windows(_batch(docs), 64, keep) == _reference_windows(docs, 64, keep)
         got = _batch_windows(_batch(docs), 64)
-        assert got == _reference_windows(docs, 64)
         assert got[("hi", 0)] == (64, hi, hi, 64 * hi)
         assert got[("lo", 0)] == (64, lo, lo, 64 * lo)
 

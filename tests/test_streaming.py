@@ -26,20 +26,20 @@ def _write_chunk(tokens_df, src_dir, lo, hi):
 
 def test_stream_rollup_matches_batch_and_resumes(spark, tokens_df, stream_dirs):
     from tsc_spark.operators.rollup import rollup_arrays
-    from tsc_spark.streaming.rollup_stream import run_rollup_stream
+    from tsc_spark.streaming.rollup_stream import run_rollup_stream_with_retention
 
     src, out, ckpt = stream_dirs
     docs = tokens_df.filter(F.col("doc_id").startswith("doc"))
 
     # chunk 1 arrives, stream drains it
     _write_chunk(docs, src, 0, 24)
-    run_rollup_stream(spark, src, out, ckpt, tier=1)
+    run_rollup_stream_with_retention(spark, src, out, ckpt, tier=1, policy={})
     n_after_first = spark.read.parquet(out).count()
     assert n_after_first > 0
 
     # chunk 2 arrives; resumed stream must process ONLY the new files
     _write_chunk(docs, src, 24, 48)
-    run_rollup_stream(spark, src, out, ckpt, tier=1)
+    run_rollup_stream_with_retention(spark, src, out, ckpt, tier=1, policy={})
 
     streamed = spark.read.parquet(out)
     expected = rollup_arrays(docs, 8, 1)

@@ -86,7 +86,9 @@ _WINDOW_SCHEMA = (
 )
 
 
-def rollup_batch(batch: pa.RecordBatch, stride: int, tier: int) -> pa.RecordBatch:
+def rollup_batch(
+    batch: pa.RecordBatch, stride: int, tier: int, keep: int | None = None
+) -> pa.RecordBatch:
     """Tier windows of one ``(doc_id, tokens)`` Arrow batch, in numpy.
 
     Window bounds come straight from the list offsets: doc ``d`` spans
@@ -95,7 +97,10 @@ def rollup_batch(batch: pa.RecordBatch, stride: int, tier: int) -> pa.RecordBatc
     ``reduceat`` per reducer runs over the interleaved ``[start, end)``
     pairs and keeps every other result, so gaps between docs (NULL
     arrays, sliced batches) are never summed into a window.  NULL and
-    empty arrays yield no windows, like tier-0's ``n_tok > 0`` filter."""
+    empty arrays yield no windows, like tier-0's ``n_tok > 0`` filter.
+    ``keep`` cuts each doc to its last ``keep`` windows (the retention
+    keep-last horizon, operators.retention.retention_sweep) before any
+    reduction runs; ``None`` keeps every window."""
     tokens = batch.column(1)
     offsets = tokens.offsets.to_numpy().astype(np.int64)
     valid = tokens.is_valid().to_numpy(zero_copy_only=False)
@@ -103,6 +108,9 @@ def rollup_batch(batch: pa.RecordBatch, stride: int, tier: int) -> pa.RecordBatc
     n_win = -(-np.where(valid, ends - starts, 0) // stride)
     doc = np.repeat(np.arange(len(batch)), n_win)
     win_idx = np.arange(doc.size) - np.repeat(np.cumsum(n_win) - n_win, n_win)
+    if keep is not None:
+        cut = win_idx >= n_win[doc] - keep
+        doc, win_idx = doc[cut], win_idx[cut]
     win_start = starts[doc] + win_idx * stride
     win_end = np.minimum(win_start + stride, ends[doc])
     bounds = np.empty(2 * doc.size, dtype=np.int64)
@@ -125,7 +133,9 @@ def rollup_batch(batch: pa.RecordBatch, stride: int, tier: int) -> pa.RecordBatc
     )
 
 
-def rollup_arrays(tokens_df: DataFrame, stride: int, tier: int) -> DataFrame:
+def rollup_arrays(
+    tokens_df: DataFrame, stride: int, tier: int, keep: int | None = None
+) -> DataFrame:
     """Shuffle-free tier rollup straight from the token arrays.
 
     A doc's points live in ONE row, so tier windows never cross rows and
@@ -136,25 +146,28 @@ def rollup_arrays(tokens_df: DataFrame, stride: int, tier: int) -> DataFrame:
     window is reduced by numpy ``reduceat``.  The plan is stateless, so
     the same call serves batch tables and append-mode streams.  Emits
     rows identical to ``rollup_points(explode_points(df), stride, tier)``
-    (the point-stream path kept for sparse/deleted streams).
+    (the point-stream path kept for sparse/deleted streams).  ``keep``
+    emits only each doc's last ``keep`` windows, i.e. the rows
+    ``retention_sweep`` keeps from them under ``{tier: keep}``.
     """
     if stride > 1:
         return tokens_df.select("doc_id", "tokens").mapInArrow(
-            lambda batches: (rollup_batch(b, stride, tier) for b in batches),
+            lambda batches: (rollup_batch(b, stride, tier, keep) for b in batches),
             _WINDOW_SCHEMA,
         )
-    return (
-        tokens_df.filter(F.col("n_tok") > 0)
-        .select("doc_id", F.posexplode("tokens").alias("window_idx", "token"))
-        .select(
-            "doc_id",
-            F.col("window_idx").cast("long").alias("window_idx"),
-            F.lit(1).cast("long").alias("agg_count"),
-            F.col("token").alias("agg_min"),
-            F.col("token").alias("agg_max"),
-            F.col("token").cast("long").alias("agg_sum"),
-            F.lit(tier).alias("tier"),
-        )
+    points = tokens_df.filter(F.col("n_tok") > 0).select(
+        "doc_id", "n_tok", F.posexplode("tokens").alias("window_idx", "token")
+    )
+    if keep is not None:
+        points = points.filter(F.col("window_idx") >= F.col("n_tok") - keep)
+    return points.select(
+        "doc_id",
+        F.col("window_idx").cast("long").alias("window_idx"),
+        F.lit(1).cast("long").alias("agg_count"),
+        F.col("token").alias("agg_min"),
+        F.col("token").alias("agg_max"),
+        F.col("token").cast("long").alias("agg_sum"),
+        F.lit(tier).alias("tier"),
     )
 
 

@@ -269,35 +269,14 @@ def _kmeans_numpy(
     return cents
 
 
-def _nearest_centroid_col(cents: np.ndarray, col: str = "embedding") -> F.Column:
-    """argmax_c <embedding, centroid_c> as a native expression.
-
-    Each dot product appears exactly once in an array literal; the
-    argmax is array_position(sims, array_max(sims)) — a linear-size
-    tree.  (A when-chain that threads best_sim/best_id through each
-    step duplicates the whole subtree per centroid → exponential plan.)"""
-    sims = F.array(
-        *[
-            _dot(F.col(col), F.array(*[F.lit(float(v)) for v in cents[c]]))
-            for c in range(cents.shape[0])
-        ]
-    )
-    return (F.array_position(sims, F.array_max(sims)) - 1).cast("int")
-
-
-def ivf_assign(emb: DataFrame, cents: np.ndarray, impl: str = "pandas") -> DataFrame:
+def ivf_assign(emb: DataFrame, cents: np.ndarray) -> DataFrame:
     """Attach the IVF list id (nearest centroid) to every vector.
 
-    Default path is the Arrow-batched matmul-argmax (full-corpus hot
-    path); ``impl="native"`` keeps the JVM-only array-expression plan
-    (useful where Python workers are unavailable).  ``np.argmax`` and
-    ``array_position(max)`` share the first-occurrence tie rule, so the
-    two paths assign identically.  At corpus scale the result is
-    written partitioned by ``ivf_list`` so a probe scans only
+    One Arrow-batched matmul-argmax per batch (``np.argmax`` keeps the
+    first-occurrence tie rule).  At corpus scale the result is written
+    partitioned by ``ivf_list`` so a probe scans only
     nprobe/n_centroids of the data (partition pruning), the IVF payoff."""
     emb = emb.filter(F.col("embedding").isNotNull())
-    if impl == "native":
-        return emb.withColumn("ivf_list", _nearest_centroid_col(cents))
     assign_udf = _batch_matmul_int_udf(
         np.asarray(cents, dtype=np.float64), lambda sims: sims.argmax(axis=1)
     )

@@ -1,13 +1,15 @@
-"""Structured Streaming tier: incremental token ingest → rollup.
+"""Structured Streaming tier: incremental token ingest → rollup → sink.
 
 The batch rollup operator (operators.rollup.rollup_arrays — posexplode
 for tier-0, the Arrow ``reduceat`` crossing for tiers 1/2) is stateless
 and narrow — windows live inside one row — so the exact same plan runs
-under ``readStream`` with no watermark and no stateful operator: each
-micro-batch's docs roll up independently and append to the tier sink.
-Checkpointing gives exactly-once file-source progress, which is the
-streaming twin of the batch pipeline's per-bucket manifests
-(plans.pipeline).
+under ``readStream`` with no watermark and no stateful operator.  The
+retention keep-last cut is applied inside that rollup (``keep``), so
+each micro-batch's docs are rolled up, cut to their tier horizon and
+appended to a parquet sink once: no re-read of the sink, no shuffle.
+The checkpoint plus the sink's ``_spark_metadata`` log make the append
+exactly-once — the streaming twin of the batch pipeline's per-bucket
+manifests (plans.pipeline).
 
 For event-time data (the events table), ``windowed_event_counts`` shows
 the watermarked tumbling-window aggregation shape: late rows beyond the
@@ -32,13 +34,12 @@ from pyspark.sql.types import (
 )
 
 from ..config import TIER_STRIDES
+from ..operators.retention import DEFAULT_RETENTION_POLICY
 from ..operators.rollup import rollup_arrays
 
 __all__ = [
     "TOKENS_SCHEMA",
     "stream_tokens",
-    "stream_rollup",
-    "run_rollup_stream",
     "run_rollup_stream_with_retention",
     "windowed_event_counts",
 ]
@@ -64,40 +65,6 @@ def stream_tokens(spark: SparkSession, src_dir: str, max_files: int = 64) -> Dat
         .option("maxFilesPerTrigger", max_files)
         .parquet(src_dir)
     )
-
-
-def stream_rollup(stream_df: DataFrame, tier: int) -> DataFrame:
-    """Tier rollup of a token stream — the batch operator verbatim.
-
-    Stateless narrow plan (``mapInArrow`` over ``rollup_batch`` for
-    tiers 1/2) → append mode, no watermark, no state store; the rows
-    equal the batch rollup of the same docs."""
-    return rollup_arrays(stream_df, TIER_STRIDES[tier], tier)
-
-
-def run_rollup_stream(
-    spark: SparkSession,
-    src_dir: str,
-    out_dir: str,
-    checkpoint_dir: str,
-    tier: int = 1,
-) -> None:
-    """Drain all currently-available files into the tier sink, exactly
-    once across restarts (checkpointed file-source offsets), then stop.
-
-    ``availableNow`` = incremental batch: repeated invocations process
-    only files added since the last run — the streaming counterpart of
-    the batch pipeline's resume-from-manifest."""
-    q = (
-        stream_rollup(stream_tokens(spark, src_dir), tier)
-        .writeStream.format("parquet")
-        .option("path", out_dir)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
 
 
 def windowed_event_counts(
@@ -135,60 +102,38 @@ def run_rollup_stream_with_retention(
     policy: dict[int, int] | None = None,
     max_files: int = 64,
 ) -> None:
-    """Streaming ingest → tier rollup → retention sweep per micro-batch.
+    """Drain every available source file into the tier sink, then stop.
 
-    The north rule's retention leg in the streaming tier: each
-    micro-batch rolls its docs up with the batch operator
-    (operators.rollup.rollup_arrays), sweeps ``sink ∪ batch windows``
-    with the TTL sweep (operators.retention.retention_sweep — per-doc
-    keep-last horizon) into a tmp dir, and swaps that in as the new sink
-    (retention.swap_in_dir, crash-recoverable): one write per
-    micro-batch, and the sink never holds an unswept batch.  At cluster
-    scale the sweep degenerates to partition drops over a
-    window-partitioned sink (see retention_plan's drop/keep/rewrite
-    split); the sandbox executor rewrites the whole tier, which is the
-    same logical result.
-    foreachBatch is at-least-once on retries, so the handler is made
-    idempotent with a committed-batch marker: a replayed batch_id that
-    already committed is skipped, and a batch that fails before its swap
-    left the sink untouched, so its replay is exact.  The residual
-    window — a crash between the swap and the marker write — replays a
-    batch whose windows are already in the sink and duplicates them
-    once; exactly-once needs a transactional sink.
+    Each micro-batch runs the batch rollup with the tier's keep-last cut
+    (``rollup_arrays(..., keep=policy[tier])``) and appends the result
+    to a parquet sink; a tier absent from ``policy`` is kept whole
+    (as in retention.with_expiry_flags), so ``policy={}`` is the plain
+    tier stream.  ``availableNow`` makes this an incremental batch:
+    repeated invocations process only files added since the last run.
+
+    Exactly-once: the checkpoint replays an uncommitted batch, and the
+    file sink skips any batch id its ``_spark_metadata`` log already
+    holds; reads list only committed files.
+
+    Contract: the cut is per arrival.  A doc's windows are cut within
+    the micro-batch that carries its token row, and the sink is never
+    re-swept, so the sink equals ``retention_sweep`` of the batch tier
+    when each doc_id arrives once.  A doc_id that arrives again in a
+    later micro-batch is a new arrival: the sink holds each arrival's
+    keep-last windows, once per arrival.
     """
-    import os
-
-    from ..operators.retention import (
-        DEFAULT_RETENTION_POLICY,
-        recover_swapped_dir,
-        retention_sweep,
-        swap_in_dir,
-    )
-
     pol = DEFAULT_RETENTION_POLICY if policy is None else policy
-    marker = out_dir + ".last_batch"
-    tmp = out_dir + ".sweep_tmp"
-    recover_swapped_dir(out_dir)  # heal an interrupted swap from a crash
-
-    def handle(batch_df: DataFrame, batch_id: int) -> None:
-        if os.path.exists(marker):
-            with open(marker) as f:
-                if int(f.read().strip() or -1) >= batch_id:
-                    return  # replayed batch that already committed
-        windows = rollup_arrays(batch_df, TIER_STRIDES[tier], tier)
-        if os.path.isdir(out_dir):
-            windows = spark.read.parquet(out_dir).unionByName(windows)
-        retention_sweep(windows, pol).write.mode("overwrite").parquet(tmp)
-        swap_in_dir(out_dir, tmp)
-        mtmp = marker + ".tmp"
-        with open(mtmp, "w") as f:
-            f.write(str(batch_id))
-        os.replace(mtmp, marker)
-
     q = (
-        stream_tokens(spark, src_dir, max_files=max_files)
-        .writeStream.foreachBatch(handle)
+        rollup_arrays(
+            stream_tokens(spark, src_dir, max_files=max_files),
+            TIER_STRIDES[tier],
+            tier,
+            pol.get(tier),
+        )
+        .writeStream.format("parquet")
+        .option("path", out_dir)
         .option("checkpointLocation", checkpoint_dir)
+        .outputMode("append")
         .trigger(availableNow=True)
         .start()
     )
