@@ -246,7 +246,7 @@ def run_skew_bench(
     directly, not inferred from wall clock."""
     from pyspark.sql import functions as F
 
-    from tsc_spark.operators.clustering import balance_for_kernel
+    from tsc_spark.operators._util import balance_for_kernel
     from tsc_spark.sources.synth import synth_tokens_skewed
 
     parallelism = spark.sparkContext.defaultParallelism
@@ -290,7 +290,10 @@ def run_skew_bench(
             "skew_heavy_len": heavy_len,
         }
         for label, part in (
-            ("balanced", lambda d: balance_for_kernel(d, parallelism)),
+            (
+                "balanced",
+                lambda d: balance_for_kernel(d, parallelism, F.size("tokens")),
+            ),
             ("hash_only", lambda d: d.repartition(parallelism, "doc_id")),
         ):
             t0 = time.perf_counter()

@@ -2,8 +2,10 @@
 (FIXTURES.md §2.1-2.2) and parallelism invariance."""
 
 import pytest
+from pyspark.sql import functions as F
 
 from tsc_spark.kernel.api import analyse_tokens
+from tsc_spark.operators._util import balance_for_kernel
 from tsc_spark.operators.clustering import cluster_timeline, cluster_tree
 
 
@@ -49,7 +51,7 @@ class TestTimelineExactEquality:
 
     def test_balanced_partitioning_same_result(self, spark, tokens_df, golden):
         balanced = _collect_timeline(
-            cluster_timeline(tokens_df, balance_parallelism=4)
+            cluster_timeline(balance_for_kernel(tokens_df, 4, F.size("tokens")))
         )
         plain = _collect_timeline(cluster_timeline(tokens_df))
         assert balanced == plain
@@ -73,23 +75,16 @@ class TestTreeBitEquality:
             assert got[doc_id] == want, doc_id  # == on floats → bit-exact up to -0.0
 
 
-def test_query_matches_max_series_caps_the_scan(spark, tokens_df):
-    from pyspark.sql import functions as F
-
-    from tsc_spark.operators.matching import query_matches
-
-    capped = query_matches(spark, tokens_df, [0, 1, 3, 2, 4, 5, 3, 1], max_series=5)
-    docs = {r.doc_id for r in capped.select("doc_id").distinct().collect()}
-    allowed = {r.doc_id for r in tokens_df.orderBy("doc_id").limit(5).collect()}
-    assert docs <= allowed and len(allowed) == 5
-
-
 def test_null_tokens_row_emits_nothing(spark):
     """A row whose series is NULL emits no rows from the per-doc kernel
     operators (like the rollup); the doc beside it is unaffected."""
     from tsc_spark.kernel.matching import build_query_seed, match_series
     from tsc_spark.operators.clustering import cluster_timeline_poly
-    from tsc_spark.operators.matching import query_matches
+    from tsc_spark.operators.matching import (
+        note_vol_query_matches,
+        query_matches,
+        stm_interference_events,
+    )
 
     toks = [0, 1, 3, 2, 4, 5, 3, 1, 0, 1, 3, 2, 4]
     df = spark.createDataFrame(
@@ -117,3 +112,47 @@ def test_null_tokens_row_emits_nothing(spark):
     )
     poly = cluster_timeline_poly(chords).collect()
     assert {r.doc_id for r in poly} == {"ok"}
+
+    notevol = spark.createDataFrame(
+        [("null", None, None), ("ok", [float(t) for t in toks], [0.5] * len(toks))],
+        "doc_id string, notes array<double>, vols array<double>",
+    )
+    nv_query = [[float(t) + 12.0, 0.5] for t in toks[:3]]
+    nv = note_vol_query_matches(spark, notevol, nv_query).collect()
+    assert {r.doc_id for r in nv} == {"ok"}
+
+    stm = stm_interference_events(df).collect()
+    assert {r.doc_id for r in stm} == {"ok"} and len(stm) == 4
+
+
+def test_under_partitioned_input_without_tokens_column(spark):
+    """A 1-partition input is spread by the shell on its own series
+    column: frames with no ``tokens`` column (chords, notes/vols) run."""
+    from tsc_spark.kernel.notevol import find_octave_invariant_matches
+    from tsc_spark.operators.clustering import cluster_timeline_poly
+    from tsc_spark.operators.matching import note_vol_query_matches
+
+    toks = [0, 1, 3, 2, 4, 5, 3, 1, 0, 1, 3, 2, 4]
+    chords = spark.createDataFrame(
+        [(f"d{i}", [[float(t + i)] for t in toks]) for i in range(3)],
+        "doc_id string, chords array<array<double>>",
+    ).coalesce(1)
+    assert chords.rdd.getNumPartitions() == 1
+    poly = sorted(map(tuple, cluster_timeline_poly(chords).collect()))
+    spread = sorted(map(tuple, cluster_timeline_poly(chords.repartition(4)).collect()))
+    assert poly == spread and {r[0] for r in poly} == {"d0", "d1", "d2"}
+
+    docs = {f"d{i}": [[float(t + i), 0.5] for t in toks] for i in range(3)}
+    notevol = spark.createDataFrame(
+        [(d, [n for n, _ in pts], [v for _, v in pts]) for d, pts in docs.items()],
+        "doc_id string, notes array<double>, vols array<double>",
+    ).coalesce(1)
+    assert notevol.rdd.getNumPartitions() == 1
+    query = [[float(t) + 12.0, 0.5] for t in toks[:3]]
+    got = sorted(map(tuple, note_vol_query_matches(spark, notevol, query).collect()))
+    want = sorted(
+        (d, *m)
+        for d, pts in docs.items()
+        for m in find_octave_invariant_matches(query, pts, 0.0, 3)
+    )
+    assert got == want and want

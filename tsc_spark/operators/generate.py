@@ -4,21 +4,21 @@ The reference serves one generation request at a time over HTTP
 (/root/reference/src/controllers/time_series_controller.jl:2251-2331
 scalar, :2761-4600 polyphonic); each request is inherently serial
 step-to-step but requests are independent, so the Spark shape is a
-requests DataFrame → ``mapInPandas(generate)``: 10k generation
-requests fan out across executors with no shuffle and no driver-side
-loop.  Polyphonic payloads travel as JSON strings (one column) so the
+requests DataFrame → the per-row shell ``_util.map_rows`` (one
+``mapInPandas``): 10k generation requests fan out across executors with
+no driver-side loop; an under-partitioned requests table is spread
+round-robin.  Shell NULL rule: a request with a NULL field emits
+nothing.  Polyphonic payloads travel as JSON strings (one column) so the
 arbitrarily-nested request surface needs no Spark schema.
 """
 
 from __future__ import annotations
 
 import json
-from typing import Iterator
 
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 
-from ._util import ensure_min_partitions
+from ._util import map_rows
 
 __all__ = [
     "requests_df",
@@ -83,39 +83,38 @@ def generate_tokens_distributed(spark_or_df, requests=None) -> DataFrame:
     """Run every generation request in parallel on executors.
 
     Accepts either (spark, request_tuples) or a prebuilt requests
-    DataFrame.  One request per output row; per-request work runs in an
-    Arrow-batched mapInPandas with zero shuffles.
+    DataFrame.  One request per output row; per-request work runs in the
+    per-row shell.
     """
     if requests is not None:
         df = requests_df(spark_or_df, requests)
     else:
         df = spark_or_df
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def make():
         from ..kernel.api import generate_tokens
 
-        for pdf in batches:
-            names, series = [], []
-            for name, first, targets, mtr, lo, hi in zip(
-                pdf["request"],
-                pdf["first_elements"],
-                pdf["complexity_targets"],
-                pdf["merge_threshold_ratio"],
-                pdf["range_min"],
-                pdf["range_max"],
-            ):
-                result, _mgr = generate_tokens(
-                    [int(v) for v in first],
-                    [float(t) for t in targets],
-                    float(mtr),
-                    int(lo),
-                    int(hi),
-                )
-                names.append(name)
-                series.append([int(v) for v in result])
-            yield pd.DataFrame({"request": names, "series": series})
+        def fn(name, first, targets, mtr, lo, hi):
+            result, _mgr = generate_tokens(
+                [int(v) for v in first],
+                [float(t) for t in targets],
+                float(mtr),
+                int(lo),
+                int(hi),
+            )
+            yield name, [int(v) for v in result]
 
-    return ensure_min_partitions(df).mapInPandas(run, RESULT_SCHEMA)
+        return fn
+
+    cols = (
+        "request",
+        "first_elements",
+        "complexity_targets",
+        "merge_threshold_ratio",
+        "range_min",
+        "range_max",
+    )
+    return map_rows(df, cols, make, RESULT_SCHEMA)
 
 
 POLY_RESULT_SCHEMA = (
@@ -136,21 +135,13 @@ def generate_polyphonic_distributed(spark: SparkSession, requests) -> DataFrame:
     rows = [(str(name), json.dumps(payload)) for name, payload in requests]
     df = spark.createDataFrame(rows, "request string, payload string")
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def make():
         from ..kernel.polygen import generate_polyphonic
 
-        cols = POLY_RECORD_COLS
-        for pdf in batches:
-            out = {c: [] for c in cols}
-            for name, payload in zip(pdf["request"], pdf["payload"]):
-                res = generate_polyphonic(json.loads(payload))
-                for rec in flatten_poly_result(name, res):
-                    for c, v in zip(cols, rec):
-                        out[c].append(v)
-            pdf_out = pd.DataFrame(out)
-            pdf_out["step"] = pdf_out["step"].astype("int32")
-            pdf_out["stream"] = pdf_out["stream"].astype("int32")
-            pdf_out["chord_range"] = pdf_out["chord_range"].astype("int32")
-            yield pdf_out
+        def fn(name, payload):
+            res = generate_polyphonic(json.loads(payload))
+            yield from flatten_poly_result(name, res)
 
-    return ensure_min_partitions(df).mapInPandas(run, POLY_RESULT_SCHEMA)
+        return fn
+
+    return map_rows(df, ("request", "payload"), make, POLY_RESULT_SCHEMA)

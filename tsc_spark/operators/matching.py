@@ -4,9 +4,10 @@ The reference scans series sequentially over HTTP chunks
 (/root/reference/src/controllers/time_series_controller.jl:118-201); the
 Spark shape is: cluster the (small) query once on the driver, broadcast
 the pickled seed state to executors, run the per-doc matching kernel in
-a shuffle-free mapInPandas, then score/sort natively:
+the per-row shell ``_util.map_rows`` (one shuffle-free mapInPandas),
+then score/sort natively:
 
-  broadcast(seed) → mapInPandas(match per doc) → matches rows
+  broadcast(seed) → map_rows(match per doc) → matches rows
   → groupBy(doc).score vector → orderBy(score desc)  [one small shuffle
     over matched docs only — matches are sparse relative to the corpus]
 
@@ -15,17 +16,18 @@ with ``kernel.matching.match_series_rollback``: the doc is appended
 inside a journal transaction that is rolled back afterwards, the cluster
 forest grows only in subtrees that can still hold a window of the query
 (exact pruning, documented there), and contained matches are dropped by
-a grouped sweep over the distinct outer (q_start, ws) groups.  Docs with
-NULL tokens emit no rows.
+a grouped sweep over the distinct outer (q_start, ws) groups.  The
+shell's NULL rule covers every per-doc operator here: a row with a NULL
+series emits no rows.
 """
 
 from __future__ import annotations
 
 import pickle
-from typing import Iterator
+from functools import reduce
+from typing import Callable
 
-import pandas as pd
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..config import (
@@ -34,6 +36,7 @@ from ..config import (
     DEFAULT_RANGE_MAX,
     DEFAULT_RANGE_MIN,
 )
+from ._util import map_rows
 
 __all__ = [
     "query_matches",
@@ -60,52 +63,30 @@ def query_matches(
     min_match_window: int = DEFAULT_QUERY_MIN_MATCH_WINDOW,
     range_min: int = DEFAULT_RANGE_MIN,
     range_max: int = DEFAULT_RANGE_MAX,
-    max_series: int | None = None,
 ) -> DataFrame:
     """All (doc_id, q_start, db_start, window_size) matches of the query
     against every corpus series (containment-filtered, per reference
-    semantics ...:2005-2040).  ``max_series`` caps how many series are
-    scanned (deterministically, the doc_id-ordered prefix) — the
-    reference's query_db scan budget (warmup uses max_series=1,
-    config/warmup_actions.json:43)."""
+    semantics ...:2005-2040)."""
     from ..kernel.matching import build_query_seed, match_series_rollback
-
-    from .clustering import auto_balance
 
     seed = build_query_seed(query_tokens, merge_threshold, range_min, range_max)
     bc = spark.sparkContext.broadcast(pickle.dumps(seed))
     mmw = int(min_match_window)
 
-    if max_series is not None:
-        tokens_df = tokens_df.orderBy("doc_id").limit(int(max_series))
-    src = auto_balance(tokens_df).select("doc_id", "tokens")
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        # ONE unpickle per worker; per-doc state reset is the journal
+    def make():
+        # ONE unpickle per task; per-doc state reset is the journal
         # rollback (bit-identical to a fresh copy, no per-doc deserialise)
         local_seed = pickle.loads(bc.value)
-        for pdf in batches:
-            out = {"doc_id": [], "q_start": [], "db_start": [], "window_size": []}
-            for doc_id, toks in zip(pdf["doc_id"], pdf["tokens"]):
-                if toks is None or len(toks) == 0:
-                    continue
-                kept, _score = match_series_rollback(local_seed, toks, mmw)
-                if kept:
-                    qs, ds, ws = zip(*kept)
-                    out["doc_id"].extend([doc_id] * len(kept))
-                    out["q_start"].extend(qs)
-                    out["db_start"].extend(ds)
-                    out["window_size"].extend(ws)
-            yield pd.DataFrame(
-                {
-                    "doc_id": out["doc_id"],
-                    "q_start": pd.Series(out["q_start"], dtype="int32"),
-                    "db_start": pd.Series(out["db_start"], dtype="int32"),
-                    "window_size": pd.Series(out["window_size"], dtype="int32"),
-                }
-            )
 
-    return src.mapInPandas(run, MATCH_SCHEMA)
+        def fn(doc_id, toks):
+            for qs, ds, ws in match_series_rollback(local_seed, toks, mmw)[0]:
+                yield doc_id, qs, ds, ws
+
+        return fn
+
+    return map_rows(
+        tokens_df, ("doc_id", "tokens"), make, MATCH_SCHEMA, F.size("tokens")
+    )
 
 
 def match_scores(matches: DataFrame) -> DataFrame:
@@ -151,38 +132,45 @@ def exact_window_matches(
     blow up the stage.  Default None = exact."""
     if not window_sizes:
         raise ValueError("window_sizes must be non-empty")
-    outs = []
-    # null-sensitive keys at O(n) extra cost: tokens are stringified ONCE
-    # per doc with NULL mapped to a sentinel no int rendering can contain
-    # (tokens cast to string are digits/'-' only).  A window containing a
-    # NULL then keys to a sentinel-bearing string, dropped after the
-    # explode — matching the DuckDB oracle, whose || concatenation yields
-    # NULL keys that never join.  concat_ws alone would silently SKIP the
-    # null element, colliding e.g. [1,NULL,2] with [1,2,NULL]; the r3 fix
-    # re-probed every window with exists(slice(...)) — a second O(ws)
-    # slice per window — where this sentinel pass is one O(n) transform.
-    toks_s = F.transform(
+    outs = [
+        _expand_position_pairs(
+            _window_keys(tokens_df, lambda x: x, ws), ws, max_positions_per_key
+        )
+        for ws in window_sizes
+    ]
+    return reduce(DataFrame.unionByName, outs)
+
+
+def _window_keys(
+    tokens_df: DataFrame, key: Callable[[Column], Column], ws: int
+) -> DataFrame:
+    """(doc_id, pos, win) rows: every ws-window of a doc whose elements
+    all have a ``key``, keyed by the '_'-joined key strings.
+
+    Null-sensitive keys at O(n) extra cost: each doc's keys are
+    stringified ONCE with NULL mapped to a sentinel no int rendering can
+    contain (ints cast to string are digits/'-' only).  A window holding
+    a NULL then keys to a sentinel-bearing string, dropped after the
+    explode — matching the DuckDB oracle, whose || concatenation yields
+    NULL keys that never join.  concat_ws alone would silently SKIP the
+    null element, colliding e.g. [1,NULL,2] with [1,2,NULL]."""
+    words = F.transform(
         F.col("tokens"),
-        lambda x: F.coalesce(x.cast("string"), F.lit(_NULL_SENTINEL)),
+        lambda x: F.coalesce(key(x).cast("string"), F.lit(_NULL_SENTINEL)),
     )
-    base = tokens_df.select("doc_id", toks_s.alias("toks_s"))
-    for ws in window_sizes:
-        words = F.col("toks_s")
-        win = F.when(
-            F.size(words) >= ws,
-            F.transform(
-                F.sequence(F.lit(0), F.size(words) - ws),
-                lambda i: F.concat_ws("_", F.slice(words, i + 1, ws)),
-            ),
-        ).otherwise(F.array().cast("array<string>"))
-        sh = base.select(
-            "doc_id", F.posexplode(win).alias("pos", "win")
-        ).filter(~F.col("win").contains(_NULL_SENTINEL))
-        outs.append(_expand_position_pairs(sh, ws, max_positions_per_key))
-    out = outs[0]
-    for o in outs[1:]:
-        out = out.unionByName(o)
-    return out
+    w = F.col("words")
+    win = F.when(
+        F.size(w) >= ws,
+        F.transform(
+            F.sequence(F.lit(0), F.size(w) - ws),
+            lambda i: F.concat_ws("_", F.slice(w, i + 1, ws)),
+        ),
+    ).otherwise(F.array().cast("array<string>"))
+    return (
+        tokens_df.select("doc_id", words.alias("words"))
+        .select("doc_id", F.posexplode(win).alias("pos", "win"))
+        .filter(~F.col("win").contains(_NULL_SENTINEL))
+    )
 
 
 def _expand_position_pairs(
@@ -232,37 +220,26 @@ def note_vol_query_matches(
     (doc_id, notes array<double>, vols array<double>) rows — the Spark
     shape of the reference's query_db midi_note_vol mode (controller
     :485-560 + :399-427): broadcast the (tiny) query point list, run the
-    exact brute-force matcher per doc in a shuffle-free mapInPandas."""
-    from ..kernel.notevol import find_octave_invariant_matches
-    from .clustering import auto_balance
-
+    exact brute-force matcher per doc in the shuffle-free shell."""
     bc = spark.sparkContext.broadcast([[float(a), float(b)] for a, b in query_points])
     mmw = int(min_match_window)
     thr = float(merge_threshold)
 
-    src = auto_balance(notevol_df).select("doc_id", "notes", "vols")
+    def make():
+        from ..kernel.notevol import find_octave_invariant_matches
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         q = bc.value
-        for pdf in batches:
-            out = {"doc_id": [], "q_start": [], "db_start": [], "window_size": []}
-            for doc_id, notes, vols in zip(pdf["doc_id"], pdf["notes"], pdf["vols"]):
-                pts = [[float(n), float(v)] for n, v in zip(notes, vols)]
-                for qs, ds, ws in find_octave_invariant_matches(q, pts, thr, mmw):
-                    out["doc_id"].append(doc_id)
-                    out["q_start"].append(qs)
-                    out["db_start"].append(ds)
-                    out["window_size"].append(ws)
-            yield pd.DataFrame(
-                {
-                    "doc_id": out["doc_id"],
-                    "q_start": pd.Series(out["q_start"], dtype="int32"),
-                    "db_start": pd.Series(out["db_start"], dtype="int32"),
-                    "window_size": pd.Series(out["window_size"], dtype="int32"),
-                }
-            )
 
-    return src.mapInPandas(run, MATCH_SCHEMA)
+        def fn(doc_id, notes, vols):
+            pts = [[float(n), float(v)] for n, v in zip(notes, vols)]
+            for qs, ds, ws in find_octave_invariant_matches(q, pts, thr, mmw):
+                yield doc_id, qs, ds, ws
+
+        return fn
+
+    return map_rows(
+        notevol_df, ("doc_id", "notes", "vols"), make, MATCH_SCHEMA, F.size("notes")
+    )
 
 
 def octave_invariant_matches(
@@ -279,28 +256,10 @@ def octave_invariant_matches(
     inverted-index shape as ``exact_window_matches`` (one shuffle,
     in-array pair expansion, optional skew cap) with the mod-12 key —
     never the reference's positional triple loop, and never a self-join."""
-    # normalize + stringify ONCE per doc (null → sentinel, cf.
-    # exact_window_matches) instead of re-modding each window's slice
-    toks_m = F.transform(
-        F.col("tokens"),
-        lambda x: F.coalesce(
-            F.pmod(x, F.lit(12)).cast("int").cast("string"),
-            F.lit(_NULL_SENTINEL),
-        ),
+    keys = _window_keys(
+        tokens_df, lambda x: F.pmod(x, F.lit(12)).cast("int"), window_size
     )
-    base = tokens_df.select("doc_id", toks_m.alias("toks_m"))
-    words = F.col("toks_m")
-    win = F.when(
-        F.size(words) >= window_size,
-        F.transform(
-            F.sequence(F.lit(0), F.size(words) - window_size),
-            lambda i: F.concat_ws("_", F.slice(words, i + 1, window_size)),
-        ),
-    ).otherwise(F.array().cast("array<string>"))
-    sh = base.select("doc_id", F.posexplode(win).alias("pos", "win")).filter(
-        ~F.col("win").contains(_NULL_SENTINEL)
-    )
-    return _expand_position_pairs(sh, window_size, max_positions_per_key)
+    return _expand_position_pairs(keys, window_size, max_positions_per_key)
 
 
 def stm_interference_events(
@@ -315,46 +274,30 @@ def stm_interference_events(
     k = the dyad (tokens[2k], tokens[2k+1]) lifted to MIDI at onset
     k·step_seconds — and replays it through the STM manager (reference
     dissonance_stm_manager.jl:51-64: evaluate = current + exponentially
-    decayed interference, then commit).  Shuffle-free mapInPandas; per
+    decayed interference, then commit).  Shuffle-free shell; per
     doc the cost is max_events² dissonance evaluations."""
-    from ..kernel.dissonance import StmManager
-
-    from .clustering import auto_balance
-
     me = int(max_events)
     step = float(step_seconds)
     off = int(midi_offset)
 
-    src = auto_balance(tokens_df).select("doc_id", "tokens")
+    def make():
+        from ..kernel.dissonance import StmManager
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = {"doc_id": [], "step": [], "d_current": [], "interference": []}
-            for doc_id, toks in zip(pdf["doc_id"], pdf["tokens"]):
-                n_events = min(len(toks) // 2, me)
-                if n_events == 0:
-                    continue
-                stm = StmManager()
-                for k in range(n_events):
-                    notes = [int(toks[2 * k]) + off, int(toks[2 * k + 1]) + off]
-                    amps = [0.5, 0.5]
-                    onset = k * step
-                    d_cur, interf = stm.commit_with_parts(notes, amps, onset)
-                    out["doc_id"].append(doc_id)
-                    out["step"].append(k)
-                    out["d_current"].append(round(d_cur, 6))
-                    out["interference"].append(round(interf, 6))
-            yield pd.DataFrame(
-                {
-                    "doc_id": out["doc_id"],
-                    "step": pd.Series(out["step"], dtype="int32"),
-                    "d_current": pd.Series(out["d_current"], dtype="float64"),
-                    "interference": pd.Series(out["interference"], dtype="float64"),
-                }
-            )
+        def fn(doc_id, toks):
+            stm = StmManager()
+            for k in range(min(len(toks) // 2, me)):
+                notes = [int(toks[2 * k]) + off, int(toks[2 * k + 1]) + off]
+                d_cur, interf = stm.commit_with_parts(notes, [0.5, 0.5], k * step)
+                yield doc_id, k, round(d_cur, 6), round(interf, 6)
 
-    return src.mapInPandas(
-        run, "doc_id string, step int, d_current double, interference double"
+        return fn
+
+    return map_rows(
+        tokens_df,
+        ("doc_id", "tokens"),
+        make,
+        "doc_id string, step int, d_current double, interference double",
+        F.size("tokens"),
     )
 
 

@@ -1,12 +1,13 @@
 """Multimodal columns: image/audio/video as opaque binary + typed metadata.
 
 A training-data pipeline at 100 TB carries media as ``binary`` columns
-with a typed metadata struct, processed by Arrow-batched ``mapInPandas``
-stages.  The Spark-side plumbing here — schemas, batch iteration,
-partition sizing, deterministic per-doc outputs — is real and tested;
-the actual media decode is stubbed (no image/audio libs in this
-container) behind ``decode_fn`` hooks: pass a real decoder (PIL/ffmpeg)
-in production, or use the deterministic fake for tests.
+with a typed metadata struct, processed by the per-row shell
+``_util.map_rows`` (one Arrow-batched ``mapInPandas``; a row with a NULL
+input field emits nothing).  The Spark-side plumbing here — schemas,
+batch iteration, partition sizing, deterministic per-doc outputs — is
+real and tested; the actual media decode is stubbed (the engine ships
+no image/audio libs) behind ``decode_fn`` hooks: pass a real decoder
+(PIL/ffmpeg) in production, or use the deterministic fake for tests.
 
 Media rows co-locate with their documents by sharing doc_id hashing, so
 a media join to the documents table is a co-partitioned equi-join.
@@ -15,14 +16,13 @@ a media join to the documents table is a co-partitioned equi-join.
 from __future__ import annotations
 
 import hashlib
-from typing import Callable, Iterator
+from typing import Callable
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ._util import ensure_min_partitions
+from ._util import map_rows
 
 __all__ = [
     "MEDIA_SCHEMA",
@@ -141,35 +141,28 @@ def extract_image_features(
     media: DataFrame,
     decode_fn: Callable[[bytes, int, int], np.ndarray] | None = None,
 ) -> DataFrame:
-    """image rows → fixed-dim feature vectors via Arrow-batched mapInPandas.
+    """image rows → fixed-dim feature vectors via the per-row shell.
 
     The per-batch loop is vectorized numpy over the decoded array; with
     ``decode_fn=None`` the decode step raises NotImplementedError —
     callers must opt into the deterministic fake or supply a real
     decoder, making the stub boundary explicit."""
-    out_schema = f"doc_id string, media_id string, features array<double>"
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            docs, mids, feats = [], [], []
-            for doc_id, mid, w, h, payload in zip(
-                pdf["doc_id"], pdf["media_id"], pdf["width"], pdf["height"], pdf["payload"]
-            ):
-                if decode_fn is None:
-                    raise NotImplementedError(
-                        "no media decoder in this environment; pass "
-                        "decode_fn=fake_image_decode or a real decoder"
-                    )
-                img = decode_fn(bytes(payload), int(w), int(h))
-                feats.append(image_feature_vector(img))
-                docs.append(doc_id)
-                mids.append(mid)
-            yield pd.DataFrame({"doc_id": docs, "media_id": mids, "features": feats})
+    def fn(doc_id, mid, w, h, payload):
+        if decode_fn is None:
+            raise NotImplementedError(
+                "no media decoder in this environment; pass "
+                "decode_fn=fake_image_decode or a real decoder"
+            )
+        img = decode_fn(bytes(payload), int(w), int(h))
+        yield doc_id, mid, image_feature_vector(img)
 
-    src = ensure_min_partitions(media.filter(F.col("kind") == "image")).select(
-        "doc_id", "media_id", "width", "height", "payload"
+    return map_rows(
+        media.filter(F.col("kind") == "image"),
+        ("doc_id", "media_id", "width", "height", "payload"),
+        lambda: fn,
+        "doc_id string, media_id string, features array<double>",
     )
-    return src.mapInPandas(run, out_schema)
 
 
 def sample_video_frames(
