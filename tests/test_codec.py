@@ -1,12 +1,12 @@
 """Codec round-trip properties (FIXTURES.md §2.4): decode(encode(x)) == x
 exactly, across adversarial patterns."""
 
-import numpy as np
+import pyarrow as pa
 import pytest
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
-from tsc_spark.codecs import decode_dod, decode_gorilla, encode_dod, encode_gorilla
+from tsc_spark.codecs import decode, decode_dod, encode, encode_dod
 from tsc_spark.sources import synth_tokens
 
 ADVERSARIAL_INT = [
@@ -46,45 +46,60 @@ def test_dod_roundtrip_property(xs):
     assert decode_dod(encode_dod(xs)).tolist() == xs
 
 
-ADVERSARIAL_FLOAT = [
-    [],
-    [0.0],
-    [1.5],
-    [3.0] * 16,
-    [0.1, 0.2, 0.3, 0.4],
-    [1e-300, 1e300, -1e-300, -0.0, 0.0],
-    list(np.linspace(0, 1, 77)),
-    [float("inf"), float("-inf"), 1.0],
-]
+def _spec_varint(u):
+    out = bytearray()
+    while u >= 0x80:
+        out.append((u & 0x7F) | 0x80)
+        u >>= 7
+    return bytes(out + bytes([u]))
 
 
-@pytest.mark.parametrize("case", ADVERSARIAL_FLOAT, ids=range(len(ADVERSARIAL_FLOAT)))
-def test_gorilla_roundtrip_adversarial(case):
-    out = decode_gorilla(encode_gorilla(case))
-    np.testing.assert_array_equal(out, np.asarray(case, dtype=np.float64))
+def _spec_encode(doc):
+    """Reference encoder: varint n, then zigzag varints of v0, d0, dod..."""
+    if doc is None:
+        return None
+    deltas = [b - a for a, b in zip(doc, doc[1:])]
+    stream = doc[:1] + deltas[:1] + [b - a for a, b in zip(deltas, deltas[1:])]
+    zigzag = [2 * x if x >= 0 else -2 * x - 1 for x in stream]
+    return _spec_varint(len(doc)) + b"".join(map(_spec_varint, zigzag))
 
 
-def test_gorilla_nan_bits_preserved():
-    x = np.array([np.nan, 1.0, np.nan])
-    out = decode_gorilla(encode_gorilla(x))
-    assert np.array_equal(x.view(np.uint64), out.view(np.uint64))
+INT32 = st.integers(-(2**31), 2**31 - 1)
+DOC = st.one_of(st.none(), st.lists(INT32, max_size=3), st.lists(INT32, max_size=60))
 
 
-@given(
-    st.lists(
-        st.floats(allow_nan=False, width=64),
-        max_size=200,
+@given(st.lists(DOC, max_size=30), st.integers(0, 5))
+@settings(max_examples=300, deadline=None)
+def test_batch_codec_matches_spec_encoder(docs, cut):
+    """The batch encoder writes the spec's bytes for every doc of a sliced
+    list array (offset != 0), NULL, empty, 1-/2-token and int32-extreme
+    docs included, and decode (of a sliced binary array too) inverts it."""
+    docs = [None, [], [7], [-(2**31), 2**31 - 1]] + docs
+    arr = pa.array([[1, 2]] * cut + docs, pa.list_(pa.int32()))[cut:]
+    enc = encode(arr)
+    assert enc.to_pylist() == [_spec_encode(d) for d in docs]
+    assert decode(enc).to_pylist() == docs
+    assert decode(enc[1:]).to_pylist() == docs[1:]
+
+
+def test_codec_rejects_malformed_input():
+    with pytest.raises(ValueError, match="NULL element"):
+        encode(pa.array([[1, None]], pa.list_(pa.int32())))
+    with pytest.raises(ValueError, match="corrupt"):
+        decode(pa.array([b"\x05\x00"], pa.binary()))  # n=5, one value
+
+
+def test_null_tokens_row_roundtrips_to_null(spark):
+    from tsc_spark.functions.codec_udfs import decode_tokens_table, encode_tokens_table
+
+    df = spark.createDataFrame(
+        [("d1", [1, 2, 3], 3, "s"), ("d2", None, 0, "s"), ("d3", [], 0, "s")],
+        "doc_id string, tokens array<int>, n_tok int, source string",
     )
-)
-@settings(max_examples=200, deadline=None)
-def test_gorilla_roundtrip_property(xs):
-    out = decode_gorilla(encode_gorilla(xs))
-    np.testing.assert_array_equal(out, np.asarray(xs, dtype=np.float64))
-
-
-def test_gorilla_compresses_constant():
-    enc = encode_gorilla([42.0] * 1000)
-    assert len(enc) < 4 + 8 + 1000 + 10  # control bytes only, no payload
+    enc = encode_tokens_table(df)
+    assert "ArrowEvalPython" in enc._jdf.queryExecution().executedPlan().toString()
+    got = {r.doc_id: r.tokens for r in decode_tokens_table(enc).collect()}
+    assert got == {"d1": [1, 2, 3], "d2": None, "d3": []}
 
 
 def test_decode_rejects_unknown_codec_version(spark):
@@ -116,20 +131,3 @@ def test_decode_rejects_unknown_codec_version(spark):
         except Exception:
             if attempt == 2:
                 raise
-
-
-def test_gorilla_format_is_endian_pinned():
-    """Header little-endian, payload MSB-first — byte-identical to the
-    previous native encoding on little-endian hosts, and decodable
-    regardless of host byte order."""
-    import numpy as np
-
-    from tsc_spark.codecs.gorilla import decode_gorilla, encode_gorilla
-
-    vals = [1.5, -2.25, 1.5, 0.0, 3.141592653589793]
-    blob = encode_gorilla(vals)
-    assert np.frombuffer(blob[:4], dtype="<u4")[0] == 5
-    assert np.frombuffer(blob[4:12], dtype="<u8")[0] == np.array(
-        [1.5], dtype=np.float64
-    ).view("<u8")[0]
-    assert decode_gorilla(blob).tolist() == vals

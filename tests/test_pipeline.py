@@ -201,21 +201,3 @@ def test_retention_rewrite_preserves_tier_column(spark, base_dir):
     assert cols_after == cols_before
     # every row still carries a concrete tier value
     assert read_tier(spark, base_dir, 0).filter("tier IS NULL").count() == 0
-
-
-def test_rollup_from_lower_tier_equals_direct(spark, tokens_df):
-    """Continuous-aggregate compaction: composing tier-2 from tier-1
-    (8 windows -> 1) is exact — identical to computing tier-2 directly
-    from the token arrays."""
-    from tsc_spark.operators.rollup import rollup_from_lower_tier, tiered_rollups
-
-    tiers = tiered_rollups(tokens_df, with_gapfill=False)
-    direct = {
-        (r.doc_id, r.window_idx): (r.agg_count, r.agg_min, r.agg_max, r.agg_sum)
-        for r in tiers[2].collect()
-    }
-    composed = {
-        (r.doc_id, r.window_idx): (r.agg_count, r.agg_min, r.agg_max, r.agg_sum)
-        for r in rollup_from_lower_tier(tiers[1], 8, 2).collect()
-    }
-    assert composed == direct

@@ -1,4 +1,3 @@
-from .deltadelta import decode_dod, encode_dod
-from .gorilla import decode_gorilla, encode_gorilla
+from .deltadelta import decode, decode_dod, encode, encode_dod
 
-__all__ = ["encode_dod", "decode_dod", "encode_gorilla", "decode_gorilla"]
+__all__ = ["encode", "decode", "encode_dod", "decode_dod"]

@@ -1,4 +1,4 @@
-"""Delta-of-delta + zigzag varint codec for int32 token arrays.
+"""Delta-of-delta + zigzag varint codec for int token arrays.
 
 The reference stores one row per point in a TSDB (timestamps are
 synthetic counters, /root/reference/scripts/seed_influx.jl:615,646); our
@@ -7,116 +7,141 @@ TSDB delta-of-delta scheme (Gorilla §4.1 timestamp encoding, adapted to
 token values): v[0], d[0]=v[1]-v[0], then dod[i]=d[i]-d[i-1], each
 zigzag-mapped and LEB128-varint packed.
 
-Both encode and decode are fully vectorized numpy (no per-value Python
-loops) so they run inside Arrow-batched pandas UDFs at scan speed, per
-the engine's no-per-row-Python rule.
+Layout per doc: [varint n] [zigzag-varint stream of n values: v0, d0, dod...].
 
-Layout: [varint n] [zigzag-varint stream of n values: v0, d0, dod...].
+``encode``/``decode`` work on a whole Arrow batch at once: one delta,
+zigzag and LEB128 pass over the batch's concatenated values (each doc's
+first two positions patched, its ``n`` header interleaved), and decode
+rebuilds the values with two segmented cumulative sums. A NULL doc maps
+to a NULL output. ``encode_dod``/``decode_dod`` are the one-doc calls.
 """
 
 from __future__ import annotations
 
 import numpy as np
+import pyarrow as pa
+import pyarrow.compute as pc
 
-__all__ = ["encode_dod", "decode_dod"]
+__all__ = ["encode", "decode", "encode_dod", "decode_dod"]
 
 CODEC_VERSION = 1
 
+# a value takes k+1 LEB128 bytes iff it is >= _VARINT_STEPS[k-1]
+_VARINT_STEPS = np.array([1 << (7 * k) for k in range(1, 10)], dtype=np.uint64)
+
 
 def _zigzag(x: np.ndarray) -> np.ndarray:
-    x = x.astype(np.int64)
     return ((x << 1) ^ (x >> 63)).astype(np.uint64)
 
 
 def _unzigzag(u: np.ndarray) -> np.ndarray:
-    u = u.astype(np.uint64)
-    return ((u >> np.uint64(1)) ^ (-(u & np.uint64(1))).astype(np.uint64)).astype(np.int64)
+    return ((u >> np.uint64(1)) ^ (-(u & np.uint64(1)))).astype(np.int64)
 
 
-def _varint_encode(values: np.ndarray) -> np.ndarray:
-    """Vectorized LEB128: uint64 array -> uint8 byte stream."""
-    n = values.shape[0]
-    if n == 0:
-        return np.empty(0, dtype=np.uint8)
-    v = values.astype(np.uint64)
-    # byte length per value: ceil(bitlen/7), min 1  (bitlen via log2-free trick)
-    nbits = np.zeros(n, dtype=np.int64)
-    tmp = v.copy()
-    for shift in (32, 16, 8, 4, 2, 1):
-        mask = tmp >= (np.uint64(1) << np.uint64(shift))
-        nbits[mask] += shift
-        tmp[mask] >>= np.uint64(shift)
-    nbits += 1  # bitlen of 0 -> 1
-    nbytes = (nbits + 6) // 7
-    total = int(nbytes.sum())
-    out = np.zeros(total, dtype=np.uint8)
-    starts = np.concatenate(([0], np.cumsum(nbytes)[:-1]))
-    # position of each output byte within its varint
-    pos = np.arange(total, dtype=np.int64) - np.repeat(starts, nbytes)
-    val_rep = np.repeat(v, nbytes)
-    chunks = (val_rep >> (np.uint64(7) * pos.astype(np.uint64))) & np.uint64(0x7F)
-    out[:] = chunks.astype(np.uint8)
-    # continuation bit on all but the last byte of each varint
-    ends = starts + nbytes - 1
-    cont = np.ones(total, dtype=bool)
-    cont[ends] = False
-    out[cont] |= 0x80
-    return out
+def _varint_encode(v: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
+    """LEB128 over a uint64 array: (byte stream, byte offset of each value
+    with the total appended)."""
+    nbytes = np.searchsorted(_VARINT_STEPS, v, side="right") + 1
+    offsets = np.zeros(v.shape[0] + 1, dtype=np.int64)
+    np.cumsum(nbytes, out=offsets[1:])
+    pos = np.arange(offsets[-1], dtype=np.int64) - np.repeat(offsets[:-1], nbytes)
+    shift = np.uint64(7) * pos.astype(np.uint64)
+    out = ((np.repeat(v, nbytes) >> shift) & np.uint64(0x7F)).astype(np.uint8)
+    out[pos < np.repeat(nbytes - 1, nbytes)] |= 0x80  # continuation bit
+    return out, offsets
 
 
-def _varint_decode(buf: np.ndarray) -> np.ndarray:
-    """Vectorized LEB128 decode: uint8 stream -> uint64 array."""
-    if buf.shape[0] == 0:
-        return np.empty(0, dtype=np.uint64)
-    b = buf.astype(np.uint64)
+def _varint_decode(buf: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
+    """LEB128 byte stream -> (uint64 values, index of the value each byte
+    belongs to, with the value count appended)."""
     term = (buf & 0x80) == 0
-    # group id of each byte = count of terminators before it
-    gid = np.concatenate(([0], np.cumsum(term)[:-1])).astype(np.int64)
-    starts = np.concatenate(([0], np.nonzero(term)[0][:-1] + 1))
-    pos = np.arange(buf.shape[0], dtype=np.int64) - starts[gid]
-    shifted = (b & np.uint64(0x7F)) << (np.uint64(7) * pos.astype(np.uint64))
-    out = np.zeros(int(term.sum()), dtype=np.uint64)
-    np.add.at(out, gid, shifted)
-    return out
+    vidx = np.zeros(buf.shape[0] + 1, dtype=np.int64)
+    np.cumsum(term, out=vidx[1:])
+    if buf.shape[0] == 0:
+        return np.empty(0, dtype=np.uint64), vidx
+    starts = np.flatnonzero(np.concatenate(([True], term[:-1])))
+    pos = np.arange(buf.shape[0], dtype=np.int64) - starts[vidx[:-1]]
+    parts = (buf & 0x7F).astype(np.uint64) << (np.uint64(7) * pos.astype(np.uint64))
+    return np.bitwise_or.reduceat(parts, starts), vidx
+
+
+def _segmented_cumsum(x: np.ndarray, offsets: np.ndarray) -> np.ndarray:
+    """Cumulative sum of ``x`` restarted at every segment boundary; int64
+    wrap-around cancels in the subtraction, so the result is exact."""
+    c = np.zeros(x.shape[0] + 1, dtype=np.int64)
+    np.cumsum(x, out=c[1:])
+    return c[1:] - np.repeat(c[offsets[:-1]], np.diff(offsets))
+
+
+def encode(tokens: pa.Array) -> pa.Array:
+    """list<int> array -> binary array of DoD blobs, one per doc."""
+    valid = tokens.is_valid().to_numpy(zero_copy_only=False)
+    flat = tokens.flatten()
+    if flat.null_count:
+        raise ValueError("a token array holds a NULL element")
+    v = flat.to_numpy(zero_copy_only=False).astype(np.int64)
+    lens = pc.list_value_length(tokens).fill_null(0).to_numpy(zero_copy_only=False)
+    starts = np.zeros(len(tokens) + 1, dtype=np.int64)
+    np.cumsum(lens, out=starts[1:])
+    # dod over the concatenated values; each doc's first two slots hold v0, d0
+    d = np.diff(v, prepend=np.int64(0))
+    s = np.diff(d, prepend=np.int64(0))
+    first, second = starts[:-1][lens > 0], starts[:-1][lens > 1] + 1
+    s[first], s[second] = v[first], d[second]
+    # stream with an n header ahead of each non-NULL doc's values
+    heads = np.zeros(len(tokens) + 1, dtype=np.int64)
+    np.cumsum(valid, out=heads[1:])
+    stream = np.empty(starts[-1] + heads[-1], dtype=np.uint64)
+    body = np.ones(stream.shape[0], dtype=bool)
+    hpos = (starts[:-1] + heads[:-1])[valid]
+    body[hpos] = False
+    stream[hpos] = lens[valid]
+    stream[body] = _zigzag(s)
+    data, val_offsets = _varint_encode(stream)
+    doc_offsets = val_offsets[starts + heads].astype(np.int32)
+    mask = None if valid.all() else pa.array(valid).buffers()[1]
+    return pa.Array.from_buffers(
+        pa.binary(), len(tokens), [mask, pa.py_buffer(doc_offsets), pa.py_buffer(data)]
+    )
+
+
+def decode(blobs: pa.Array) -> pa.Array:
+    """binary array of DoD blobs -> list<int64> array (exact round-trip)."""
+    valid = blobs.is_valid().to_numpy(zero_copy_only=False)
+    _, offs_buf, data_buf = blobs.buffers()
+    offs = np.zeros(1, dtype=np.int32)
+    if len(blobs):  # IPC may ship a zero-length array without offsets
+        offs = np.frombuffer(offs_buf, np.int32)[blobs.offset :][: len(blobs) + 1]
+    data = np.frombuffer(data_buf or b"", np.uint8)
+    vals, vidx = _varint_decode(data[offs[0] : offs[-1]])
+    hidx = vidx[offs[:-1] - offs[0]][valid]
+    lens = np.zeros(len(blobs), dtype=np.int64)
+    lens[valid] = vals[hidx]
+    body = np.ones(vals.shape[0], dtype=bool)
+    body[hidx] = False
+    s = _unzigzag(vals[body])
+    starts = np.zeros(len(blobs) + 1, dtype=np.int64)
+    np.cumsum(lens, out=starts[1:])
+    if starts[-1] != s.shape[0]:
+        raise ValueError("corrupt DoD stream: headers and value count disagree")
+    # deltas = running sum of dod after each doc's v0; values = running sum
+    # of [v0, deltas...]
+    first = starts[:-1][lens > 0]
+    d = s.copy()
+    d[first] = 0
+    d = _segmented_cumsum(d, starts)
+    d[first] = s[first]
+    mask = None if valid.all() else pa.array(~valid)
+    values = pa.array(_segmented_cumsum(d, starts))
+    return pa.ListArray.from_arrays(pa.array(starts.astype(np.int32)), values, mask=mask)
 
 
 def encode_dod(tokens) -> bytes:
     """int array -> delta-of-delta zigzag-varint bytes."""
     arr = np.asarray(tokens, dtype=np.int64)
-    n = arr.shape[0]
-    header = _varint_encode(np.array([n], dtype=np.uint64))
-    if n == 0:
-        return header.tobytes()
-    if n == 1:
-        body = _varint_encode(_zigzag(arr))
-        return header.tobytes() + body.tobytes()
-    deltas = np.diff(arr)
-    stream = np.empty(n, dtype=np.int64)
-    stream[0] = arr[0]
-    stream[1] = deltas[0]
-    stream[2:] = np.diff(deltas)
-    body = _varint_encode(_zigzag(stream))
-    return header.tobytes() + body.tobytes()
+    return encode(pa.array([arr], type=pa.list_(pa.int64())))[0].as_py()
 
 
 def decode_dod(data: bytes) -> np.ndarray:
     """delta-of-delta bytes -> int64 array (exact round-trip)."""
-    buf = np.frombuffer(data, dtype=np.uint8)
-    values = _varint_decode(buf)
-    if values.shape[0] == 0:
-        return np.empty(0, dtype=np.int64)
-    n = int(values[0])
-    if n == 0:
-        return np.empty(0, dtype=np.int64)
-    stream = _unzigzag(values[1 : 1 + n])
-    if n == 1:
-        return stream
-    out = np.empty(n, dtype=np.int64)
-    out[0] = stream[0]
-    deltas = np.empty(n - 1, dtype=np.int64)
-    deltas[0] = stream[1]
-    if n > 2:
-        np.cumsum(stream[2:], out=deltas[1:])
-        deltas[1:] += stream[1]
-    out[1:] = out[0] + np.cumsum(deltas)
-    return out
+    return decode(pa.array([data], type=pa.binary())).values.to_numpy()

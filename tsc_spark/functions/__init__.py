@@ -1,8 +1,6 @@
 from .codec_udfs import (
-    decode_floats_udf,
     decode_tokens_table,
     decode_tokens_udf,
-    encode_floats_udf,
     encode_tokens_table,
     encode_tokens_udf,
 )
@@ -10,8 +8,6 @@ from .codec_udfs import (
 __all__ = [
     "encode_tokens_udf",
     "decode_tokens_udf",
-    "encode_floats_udf",
-    "decode_floats_udf",
     "encode_tokens_table",
     "decode_tokens_table",
 ]

@@ -1,49 +1,37 @@
-"""Arrow-batched codec UDFs (array<int> ↔ binary, array<double> ↔ binary).
+"""Arrow codec UDFs (array<int> ↔ binary) over the batch DoD codec.
 
-Per the engine's data-plane rule (BASELINE.json input_hint) these are
-pandas UDFs — values cross the JVM↔Python boundary as Arrow batches and
-the per-array work is vectorized numpy (tsc_spark.codecs); there is no
-per-element Python."""
+Each is a scalar ``arrow_udf``: a column crosses the JVM↔Python boundary
+as one Arrow array per batch (an ``ArrowEvalPython`` plan node) and
+``tsc_spark.codecs.encode``/``decode`` transform the whole array in one
+vectorized pass — no per-doc Python, no pandas. A NULL doc stays NULL."""
 
 from __future__ import annotations
 
-import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.functions import pandas_udf
-from pyspark.sql.types import ArrayType, BinaryType, DoubleType, IntegerType
+from pyspark.sql.functions import arrow_udf
+from pyspark.sql.types import ArrayType, BinaryType, IntegerType
 
-from ..codecs import decode_dod, decode_gorilla, encode_dod, encode_gorilla
+from ..codecs import decode, encode
 from ..codecs.deltadelta import CODEC_VERSION
 
 __all__ = [
     "encode_tokens_udf",
     "decode_tokens_udf",
-    "encode_floats_udf",
-    "decode_floats_udf",
     "encode_tokens_table",
     "decode_tokens_table",
 ]
 
 
-@pandas_udf(BinaryType())
-def encode_tokens_udf(tokens: pd.Series) -> pd.Series:
-    return tokens.map(encode_dod)
+@arrow_udf(BinaryType())
+def encode_tokens_udf(tokens: pa.Array) -> pa.Array:
+    return encode(tokens)
 
 
-@pandas_udf(ArrayType(IntegerType()))
-def decode_tokens_udf(blob: pd.Series) -> pd.Series:
-    return blob.map(lambda b: decode_dod(b).astype("int32"))
-
-
-@pandas_udf(BinaryType())
-def encode_floats_udf(values: pd.Series) -> pd.Series:
-    return values.map(encode_gorilla)
-
-
-@pandas_udf(ArrayType(DoubleType()))
-def decode_floats_udf(blob: pd.Series) -> pd.Series:
-    return blob.map(decode_gorilla)
+@arrow_udf(ArrayType(IntegerType()))
+def decode_tokens_udf(blob: pa.Array) -> pa.Array:
+    return decode(blob).cast(pa.list_(pa.int32()))
 
 
 def encode_tokens_table(tokens_df: DataFrame) -> DataFrame:

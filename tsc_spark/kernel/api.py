@@ -38,27 +38,6 @@ def analyse_tokens(
     return mgr
 
 
-def _initial_calc_values(mgr: ClusterManager) -> None:
-    """Seed all caches from the current forest (reference ...:2174-2206)."""
-    clusters_each = mgr.collect_clusters_each()
-    for ws in sorted(clusters_each):
-        same_ws = clusters_each[ws]
-        all_ids = sorted(same_ws)
-        cache = mgr.dist_cache.setdefault(ws, {})
-        for i, c1 in enumerate(all_ids):
-            for c2 in all_ids[i + 1 :]:
-                key = (c1, c2) if c1 < c2 else (c2, c1)
-                cache[key] = mgr.euclidean_distance_pair(same_ws[c1], same_ws[c2])
-        q_cache = mgr.qty_cache.setdefault(ws, {})
-        c_cache = mgr.comp_cache.setdefault(ws, {})
-        for cid in all_ids:
-            node = same_ws[cid]
-            if len(node.si) <= 1:
-                continue
-            q_cache[cid] = float(len(node.si) * ws)
-            c_cache[cid] = mgr.cluster_complexity(node.rep)
-
-
 def generate_tokens(
     first_elements,
     complexity_targets,
@@ -85,8 +64,7 @@ def generate_tokens(
         recency=0.0,
     )
     mgr.process_data()
-    _initial_calc_values(mgr)
-    mgr.updated_dist.clear()  # reference ...:2287
+    mgr.update_caches_permanently()  # initial_calc_values! (...:2174-2206, 2287)
 
     results = [int(v) for v in first_elements]
     candidates = list(range(int(range_min), int(range_max) + 1))

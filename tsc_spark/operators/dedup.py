@@ -338,7 +338,6 @@ def _cc_round(edges2: DataFrame, labels: DataFrame) -> DataFrame:
 def dedup_components(
     pairs: DataFrame,
     max_iters: int = 20,
-    probe_every: int = 1,
     stats: dict | None = None,
     local_threshold: int | None = 2_000_000,
 ) -> DataFrame:
@@ -375,8 +374,7 @@ def dedup_components(
     (checkpoint = lineage truncation; the plain-cache alternative
     re-executed the whole lineage per round under AQE, measured 2-3x
     slower), and the loop stops at the earliest possible round.
-    ``probe_every`` is kept for API compatibility; the probe being
-    free, it runs every round.  Deterministic: labels are lexicographic
+    Deterministic: labels are lexicographic
     doc_id minima.  Warns on stderr if the loop exits without
     converging (labels may then disagree with exact transitive
     closure); pass a ``stats`` dict to receive
@@ -394,7 +392,6 @@ def dedup_components(
     below remains the path for graphs past the bound.  The collect is
     bounded and counted BEFORE collecting.  Pass ``local_threshold=None``
     (or 0) to force the distributed loop."""
-    del probe_every  # probe is fused into each round's materializing count
     edges = pairs.select(
         F.col("doc_a").alias("src"), F.col("doc_b").alias("dst")
     )

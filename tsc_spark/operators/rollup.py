@@ -16,10 +16,6 @@ Design for 100 TB:
   plan;
 * ``rollup_points(explode_points(...))`` is the explode+groupBy oracle
   the array path is tested against;
-* ``rollup_from_lower_tier`` is the continuous-aggregate compaction
-  path (8 tier-1 windows → 1 tier-2 window, exact because count/min/
-  max/sum are decomposable) for incremental refresh over an already-
-  materialized lower tier — verified equal to the direct computation;
 * gap-fill generates the expected window grid with ``sequence`` +
   explode and left-joins actuals: both sides are partitioned by doc_id,
   so AQE plans a co-partitioned join without a broadcast of big data.
@@ -39,7 +35,6 @@ __all__ = [
     "rollup_points",
     "rollup_arrays",
     "rollup_batch",
-    "rollup_from_lower_tier",
     "tiered_rollups",
     "gapfill",
     "gapfill_locf",
@@ -168,26 +163,6 @@ def rollup_arrays(
         F.col("token").alias("agg_max"),
         F.col("token").cast("long").alias("agg_sum"),
         F.lit(tier).alias("tier"),
-    )
-
-
-def rollup_from_lower_tier(lower: DataFrame, factor: int, tier: int) -> DataFrame:
-    """Compose a higher tier from the tier below (8 windows → 1).
-
-    count/min/max/sum are decomposable, so the rollup is exact and never
-    re-reads raw points (continuous-aggregate compaction)."""
-    return (
-        lower.groupBy(
-            "doc_id",
-            F.floor(F.col("window_idx") / F.lit(factor)).cast("long").alias("window_idx"),
-        )
-        .agg(
-            F.sum("agg_count").alias("agg_count"),
-            F.min("agg_min").alias("agg_min"),
-            F.max("agg_max").alias("agg_max"),
-            F.sum("agg_sum").alias("agg_sum"),
-        )
-        .withColumn("tier", F.lit(tier))
     )
 
 
