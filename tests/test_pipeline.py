@@ -3,11 +3,20 @@ resume, identical outputs vs a fresh full run (SURVEY §5.5)."""
 
 import os
 
+import pyarrow.parquet as pq
 import pytest
+from pyspark.sql import functions as F
 
 from tsc_spark.config import TIER_STRIDES
 from tsc_spark.functions import decode_tokens_table
+from tsc_spark.operators.retention import (
+    DEFAULT_RETENTION_POLICY,
+    apply_retention,
+    retention_sweep,
+)
+from tsc_spark.operators.rollup import tiered_rollups
 from tsc_spark.plans.pipeline import (
+    _stored_form,
     ingest,
     pipeline_metrics,
     read_tier,
@@ -22,12 +31,12 @@ def base_dir(tmp_path, spark, tokens_df):
     return d
 
 
-def _tier_snapshot(spark, base_dir, tier):
-    rows = read_tier(spark, base_dir, tier).collect()
-    return sorted(
-        (r.doc_id, r.window_idx, r.agg_count, r.agg_min, r.agg_max, r.agg_sum, r.gapfilled)
-        for r in rows
-    )
+_TIER_COLS = ["doc_id", "tier", "window_idx", "agg_count", "agg_min", "agg_max", "agg_sum",
+              "gapfilled"]
+
+
+def _tier_rows(df):
+    return sorted(tuple(r) for r in df.select(*_TIER_COLS).collect())
 
 
 class TestPipeline:
@@ -59,7 +68,7 @@ class TestPipeline:
         run_pipeline(spark, d2, with_timeline=False)  # resume the rest
 
         for tier in (0, 1, 2):
-            assert _tier_snapshot(spark, d1, tier) == _tier_snapshot(spark, d2, tier)
+            assert _tier_rows(read_tier(spark, d1, tier)) == _tier_rows(read_tier(spark, d2, tier))
 
     def test_encoded_roundtrip_through_parquet(self, spark, base_dir, tokens_rows):
         run_pipeline(spark, base_dir, with_timeline=False)
@@ -201,3 +210,105 @@ def test_retention_rewrite_preserves_tier_column(spark, base_dir):
     assert cols_after == cols_before
     # every row still carries a concrete tier value
     assert read_tier(spark, base_dir, 0).filter("tier IS NULL").count() == 0
+
+
+def _walk_bytes(path):
+    """Data-file bytes under ``path``, Hadoop .crc checksums skipped."""
+    return sum(
+        os.path.getsize(os.path.join(root, name))
+        for root, _dirs, files in os.walk(path)
+        for name in files
+        if not name.endswith(".crc")
+    )
+
+
+def _assert_one_point_windows_store_only_min(spark, base_dir):
+    """In the raw tier parquet, agg_max/agg_sum are NULL on exactly the
+    agg_count == 1 rows (the pipeline writes no gap rows)."""
+    for tier in (0, 1, 2):
+        raw = spark.read.parquet(os.path.join(base_dir, "rollup", f"tier={tier}"))
+        one = F.col("agg_count") == 1
+        assert raw.filter(one).count() > 0, tier  # edge_one: one point in every tier
+        for col in ("agg_max", "agg_sum"):
+            assert raw.filter(F.col(col).isNull() != one).count() == 0, (tier, col)
+        assert raw.filter(F.col("agg_min").isNull()).count() == 0, tier
+
+
+def test_tier_store_reads_back_the_logical_rollups(spark, base_dir, tokens_df):
+    """Stored one-point windows keep only agg_min; read_tier restores
+    every tier to tiered_rollups' rows, also after a retention sweep
+    that carries the stored rows through.  The edge docs (empty, one or
+    two tokens, constant, negative) are part of the corpus."""
+    run_pipeline(spark, base_dir, with_timeline=False, with_encoded=False)
+    tiers = tiered_rollups(tokens_df, with_gapfill=True)
+    edges = {"edge_one", "edge_two", "edge_const", "edge_neg"}
+    assert edges <= {r.doc_id for r in tiers[0].select("doc_id").distinct().collect()}
+    for tier, tdf in tiers.items():
+        assert _tier_rows(read_tier(spark, base_dir, tier)) == _tier_rows(tdf), tier
+    _assert_one_point_windows_store_only_min(spark, base_dir)
+
+    apply_retention(spark, base_dir)
+    for tier, tdf in tiers.items():
+        expected = retention_sweep(tdf, DEFAULT_RETENTION_POLICY)
+        assert _tier_rows(read_tier(spark, base_dir, tier)) == _tier_rows(expected), tier
+    _assert_one_point_windows_store_only_min(spark, base_dir)
+
+
+def test_stored_form_roundtrips_gap_and_null_rows(spark, tmp_path):
+    """Gap rows (count 0, all aggregates NULL) and a NULL token's
+    one-point window come back from read_tier unchanged."""
+    rows = [
+        ("a", 0, 0, 1, 5, 5, 5, False),
+        ("a", 0, 1, 1, None, None, None, False),  # NULL token
+        ("a", 0, 2, 0, None, None, None, True),  # gap
+        ("a", 0, 3, 3, -4, 7, 5, False),
+        ("b", 0, 0, 1, -2, -2, -2, False),
+    ]
+    df = spark.createDataFrame(
+        rows,
+        "doc_id string, tier int, window_idx long, agg_count long, agg_min int, "
+        "agg_max int, agg_sum long, gapfilled boolean",
+    )
+    base = str(tmp_path / "store")
+    _stored_form(df).write.parquet(os.path.join(base, "rollup", "tier=0", "bucket=0"))
+    assert _tier_rows(read_tier(spark, base, 0)) == sorted(rows)
+
+
+def test_encoded_footers_keep_no_blob_statistics(spark, base_dir):
+    """A min/max over DoD blobs prunes nothing: the encoded column is
+    written without statistics, doc_id keeps its own."""
+    (m,) = run_pipeline(spark, base_dir, buckets=[0], with_timeline=False)
+    files = [
+        os.path.join(root, name)
+        for root, _dirs, names in os.walk(os.path.join(base_dir, "encoded"))
+        for name in names
+        if name.endswith(".parquet")
+    ]
+    assert files and m["docs"] > 0
+    for path in files:
+        meta = pq.ParquetFile(path).metadata
+        for g in range(meta.num_row_groups):
+            cols = {meta.row_group(g).column(c).path_in_schema: meta.row_group(g).column(c)
+                    for c in range(meta.num_columns)}
+            assert not cols["encoded"].is_stats_set, path
+            assert cols["doc_id"].statistics.has_min_max, path
+
+
+def test_manifest_bytes_equal_directory_walk(spark, base_dir):
+    """Each manifest records the data-file bytes of every output
+    directory the bucket wrote; each retention record the per-tier bytes
+    after its swap."""
+    (m,) = run_pipeline(spark, base_dir, buckets=[1])
+    dirs = {f"tier{t}": os.path.join(base_dir, "rollup", f"tier={t}", "bucket=1")
+            for t in (0, 1, 2)}
+    dirs.update({out: os.path.join(base_dir, out, "bucket=1")
+                 for out in ("encoded", "timeline")})
+    assert m["bytes"] == {name: _walk_bytes(path) for name, path in dirs.items()}
+    assert all(n > 0 for n in m["bytes"].values())
+
+    (record,) = apply_retention(spark, base_dir, {0: 4, 1: 2, 2: 1}, buckets=[1])
+    swept = {f"tier{t}": _walk_bytes(dirs[f"tier{t}"]) for t in (0, 1, 2)}
+    assert record["bytes"] == swept
+    assert swept["tier0"] < m["bytes"]["tier0"]
+    (committed,) = pipeline_metrics(base_dir)
+    assert committed["retention"] == [record]

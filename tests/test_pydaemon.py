@@ -2,6 +2,7 @@
 worker path, that workers then import pyspark from its directory, and
 that only local masters get it."""
 
+import os
 import sys
 
 from tsc_spark.pydaemon import kept_entries
@@ -44,6 +45,21 @@ def test_only_local_masters_get_the_daemon(monkeypatch):
         assert key not in get_spark(master=master)
     for master in ("local", "local[2]", "local[*]"):
         assert get_spark(master=master)[key] == "tsc_spark.pydaemon"
+
+
+def test_local_master_threads_size_shuffle_partitions(monkeypatch):
+    from pyspark.sql import SparkSession
+
+    from tsc_spark.session import get_spark
+
+    monkeypatch.setattr(SparkSession.Builder, "getOrCreate", lambda self: dict(self._options))
+    key = "spark.sql.shuffle.partitions"
+    # local[N,F] is local[N] with F task attempts: N threads either way
+    for master in ("local[12]", "local[12,2]"):
+        assert get_spark(master=master)[key] == "12", master
+    host = str(max(os.cpu_count(), 8))
+    for master in ("local[*]", "local[*,3]", "yarn"):
+        assert get_spark(master=master)[key] == host, master
 
 
 def test_workers_import_pyspark_from_its_directory(spark):

@@ -147,9 +147,13 @@ def apply_retention(
     skipped), sweep them once, write the survivors ``partitionBy`` tier
     into a hidden tmp dir, swap each tier directory in, and append a
     ``retention`` record (policy, per-tier rows before/after, from two
-    ``Observation``s on that one write) to the bucket manifest.  Nothing
-    is cached, so AQE coalesces the output into one file per tier."""
-    from ..plans.pipeline import _commit_manifest, _manifest_path  # layout owner
+    ``Observation``s on that one write, and per-tier on-disk bytes
+    after the swap) to the bucket manifest.  Nothing is cached, so AQE
+    coalesces the output into one file per tier.  Rows pass through in
+    their stored form (a one-point window keeps only ``agg_min``; see
+    plans.pipeline): the sweep looks only at the keys and
+    ``window_idx``, so nothing is decoded or re-encoded."""
+    from ..plans.pipeline import _commit_manifest, _dir_bytes, _manifest_path  # layout owner
 
     pol = DEFAULT_RETENTION_POLICY if policy is None else policy
     with open(os.path.join(base_dir, "_ingest.json")) as f:
@@ -161,7 +165,12 @@ def apply_retention(
         mpath = _manifest_path(base_dir, bucket)
         if not os.path.exists(mpath):
             continue
-        record = {"bucket": bucket, "policy": {str(k): v for k, v in pol.items()}, "tiers": {}}
+        record = {
+            "bucket": bucket,
+            "policy": {str(k): v for k, v in pol.items()},
+            "tiers": {},
+            "bytes": {},
+        }
         paths = {
             t: os.path.join(base_dir, "rollup", f"tier={t}", f"bucket={bucket}")
             for t in sorted(pol)
@@ -191,6 +200,7 @@ def apply_retention(
             record["tiers"] = {
                 k: {"rows_before": n, "rows_after": after.get[k]} for k, n in before.get.items()
             }
+            record["bytes"] = {f"tier{t}": _dir_bytes(paths[t]) for t in tiers}
         with open(mpath) as f:
             manifest = json.load(f)
         manifest.setdefault("retention", []).append(record)

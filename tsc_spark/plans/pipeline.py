@@ -10,6 +10,16 @@ watermarks) and per-bucket metrics; a resumed run skips every bucket
 with a manifest — the file-level equivalent of
 ``source LEFT ANTI JOIN done_partitions`` (SURVEY §2.3).
 
+Each value is stored once.  A tier window with ``agg_count == 1`` is
+written with ``agg_max`` and ``agg_sum`` NULL, because both equal
+``agg_min`` (on tier 0 that is every row, which otherwise stores each
+token three times); ``read_tier``, the one reader of the tier store,
+restores them, and gap rows (count 0, all aggregates NULL) pass
+unchanged.  The ``encoded`` column is written without parquet column
+statistics: a min/max over DoD blobs prunes nothing, and parquet-mr
+would store the largest whole blob in every file footer.  Each manifest records the on-disk
+bytes of every output directory the bucket wrote.
+
 At cluster scale, buckets map to independent jobs that can be retried /
 scheduled separately; n_buckets is chosen so one bucket ≈ a few hundred
 GB.  In the sandbox the same code runs with small buckets.
@@ -38,6 +48,27 @@ def _manifest_dir(base_dir: str) -> str:
 
 def _manifest_path(base_dir: str, bucket: int) -> str:
     return os.path.join(_manifest_dir(base_dir), f"bucket={bucket:05d}.json")
+
+
+def _dir_bytes(path: str) -> int:
+    """On-disk bytes of the data files under ``path`` (Hadoop ``.crc``
+    checksum files are not data and are skipped)."""
+    return sum(
+        os.path.getsize(os.path.join(root, name))
+        for root, _dirs, files in os.walk(path)
+        for name in files
+        if not name.endswith(".crc")
+    )
+
+
+def _stored_form(tier_df: DataFrame) -> DataFrame:
+    """The tier rows as written: a one-point window keeps only
+    ``agg_min`` (``read_tier`` inverts this)."""
+    one = F.col("agg_count") == 1
+    return tier_df.withColumns({
+        "agg_max": F.when(~one, F.col("agg_max")),
+        "agg_sum": F.when(~one, F.col("agg_sum")),
+    })
 
 
 def _commit_manifest(mpath: str, manifest: dict) -> None:
@@ -106,6 +137,7 @@ def _process_bucket(
             "watermarks": {f"tier{t}_max_window_idx": -1 for t in (0, 1, 2)},
             "merge_threshold_ratio": merge_threshold_ratio,
             "outputs": outputs,
+            "bytes": {},
             "wall_seconds": 0.0,
             "points_per_sec": None,
             "completed_at_epoch": time.time(),
@@ -125,9 +157,11 @@ def _process_bucket(
 
     # shuffle-free array-path rollup: windows never cross rows, so every
     # tier is a narrow per-row transform (see operators.rollup.rollup_arrays)
+    written = {}
     for tier, tdf in tiered_rollups(df, with_gapfill=True).items():
         path = os.path.join(base_dir, "rollup", f"tier={tier}", f"bucket={bucket}")
-        tdf.write.mode("overwrite").parquet(path)
+        _stored_form(tdf).write.mode("overwrite").parquet(path)
+        written[f"tier{tier}"] = path
     stats = stats_obs.get
 
     # tiers are dense per doc (_gapfill_dense: windows 0..ceil(n_tok/s)-1),
@@ -140,14 +174,16 @@ def _process_bucket(
     }
 
     if with_timeline:
-        tl = cluster_timeline(df, merge_threshold_ratio)
-        tl.write.mode("overwrite").parquet(
-            os.path.join(base_dir, "timeline", f"bucket={bucket}")
+        written["timeline"] = os.path.join(base_dir, "timeline", f"bucket={bucket}")
+        cluster_timeline(df, merge_threshold_ratio).write.mode("overwrite").parquet(
+            written["timeline"]
         )
     if with_encoded:
-        encode_tokens_table(df).write.mode("overwrite").parquet(
-            os.path.join(base_dir, "encoded", f"bucket={bucket}")
-        )
+        written["encoded"] = os.path.join(base_dir, "encoded", f"bucket={bucket}")
+        # per-column parquet-mr setting: doc_id keeps its statistics
+        encode_tokens_table(df).write.mode("overwrite").option(
+            "parquet.column.statistics.enabled#encoded", "false"
+        ).parquet(written["encoded"])
 
     elapsed = time.time() - t0
     manifest = {
@@ -158,6 +194,7 @@ def _process_bucket(
         "watermarks": watermarks,
         "merge_threshold_ratio": merge_threshold_ratio,
         "outputs": outputs,
+        "bytes": {name: _dir_bytes(path) for name, path in written.items()},
         "wall_seconds": round(elapsed, 3),
         "points_per_sec": round((stats["points"] or 0) / elapsed, 1) if elapsed > 0 else None,
         "completed_at_epoch": time.time(),
@@ -213,7 +250,18 @@ def run_pipeline(
 
 
 def read_tier(spark: SparkSession, base_dir: str, tier: int) -> DataFrame:
-    return spark.read.parquet(os.path.join(base_dir, "rollup", f"tier={tier}"))
+    """All buckets of one tier, in the logical schema ``tiered_rollups``
+    emits (plus the ``bucket`` partition column).
+
+    Restores the aggregates a one-point window does not store:
+    ``agg_max`` and ``agg_sum`` equal ``agg_min`` there.  Gap rows keep
+    their NULLs (every aggregate is NULL), and a layout written with all
+    columns stored reads the same."""
+    stored = spark.read.parquet(os.path.join(base_dir, "rollup", f"tier={tier}"))
+    return stored.withColumns({
+        "agg_max": F.coalesce("agg_max", "agg_min"),
+        "agg_sum": F.coalesce("agg_sum", F.col("agg_min").cast("long")),
+    })
 
 
 def pipeline_metrics(base_dir: str) -> list[dict]:

@@ -51,12 +51,10 @@ def get_spark(
         cpus = os.environ.get("SPARK_GRAFT_CPUS") or os.cpu_count()
         master = f"local[{cpus}]"
     if shuffle_partitions is None:
-        n = os.cpu_count()  # local[*], non-local and unparsed masters
-        if "[" in master:
-            try:
-                n = int(master.split("[")[1].rstrip("]"))
-            except ValueError:
-                pass
+        # the thread count of local[N] and local[N,F] (F = max task failures);
+        # local[*], local[*,F] and non-local masters size from the host
+        m = re.fullmatch(r"local\[(\d+)(,\d+)?\]", master)
+        n = int(m.group(1)) if m else os.cpu_count()
         shuffle_partitions = max(n, 8)
 
     builder = (
