@@ -74,6 +74,46 @@ class TestRollupPathEquivalence:
         assert len(arrow) > 0
         assert any(r.n_tok == 0 for r in docs)  # the edge docs ride along
 
+    @pytest.mark.parametrize("keep", [None, 2])
+    @pytest.mark.parametrize("stride", [1, 8, 64])
+    def test_null_elements_match_the_point_stream_oracle(self, spark, stride, keep):
+        """Token arrays holding NULL elements: ``rollup_arrays`` equals
+        its documented oracle ``rollup_points(explode_points(df))`` (cut
+        to each doc's last ``keep`` windows), so a NULL is not counted,
+        the aggregates run over the present values and an all-NULL
+        window has count 0 and NULL aggregates."""
+        from pyspark.sql import functions as F
+
+        from tsc_spark.operators.rollup import (
+            explode_points,
+            rollup_arrays,
+            rollup_points,
+        )
+
+        docs = [
+            ("a", [1, None, 3]),
+            ("b", [None] * 10),
+            ("c", [None, 5] + list(range(70)) + [None] * 9),
+            ("d", []),
+            ("e", None),
+            ("f", list(range(20))),
+        ]
+        df = spark.createDataFrame(
+            [(d, t, len(t or ())) for d, t in docs],
+            "doc_id string, tokens array<int>, n_tok int",
+        )
+        cols = ["doc_id", "window_idx", "agg_count", "agg_min", "agg_max", "agg_sum", "tier"]
+        oracle = rollup_points(explode_points(df), stride, 1)
+        if keep is not None:
+            n_win = F.ceil(F.col("n_tok") / F.lit(stride))
+            oracle = oracle.join(df.select("doc_id", n_win.alias("n_win")), "doc_id").filter(
+                F.col("window_idx") >= F.col("n_win") - keep
+            )
+        got = sorted(tuple(r) for r in rollup_arrays(df, stride, 1, keep).select(*cols).collect())
+        expected = sorted(tuple(r) for r in oracle.select(*cols).collect())
+        assert got == expected
+        assert any(r[2] == 0 and r[3] is None for r in got)  # an all-NULL window
+
 
 # docs mix free tokens with constant runs: runs make every window of the
 # run identical, which is where the unpruned forest grows deepest

@@ -208,3 +208,74 @@ def test_normalize_note_vol_lands_first_note_near_c4(pts):
     # nearest-octave: first note within a half octave of C4 (round-half-
     # even puts the exact 6.0 boundary on either side, so <= 6 both ways)
     assert abs(out[0][0] - 60.0) <= 6.0
+
+
+# --- scalar kernel distance paths and running sums -------------------
+
+# finite, non-integer values: the paths must agree on the rounding too
+fvals = st.floats(min_value=-60.0, max_value=60.0, allow_nan=False)
+# both sides of the 16/17-step and 7/8-candidate path switches
+step_counts = st.sampled_from([1, 2, 15, 16, 17, 18])
+cand_counts = st.sampled_from([1, 7, 8, 9])
+
+
+def _bits(xs):
+    return [float(x).hex() for x in xs]
+
+
+@settings(max_examples=200, deadline=None)
+@given(step_counts, cand_counts, st.floats(min_value=0.25, max_value=30.0), st.data())
+def test_distance_paths_bit_equal(L, k, width, data):
+    """The scalar manager's three distance paths — the scalar loop (one
+    candidate, at most 16 steps), numpy per window (one candidate, 17 or
+    more) and the batch pass (8 or more candidates) — give the bits of an
+    explicit numpy clamp/square/left-to-right sum, as does
+    ``euclidean_distance``."""
+    import numpy as np
+
+    from tsc_spark.kernel.manager import ClusterManager, seq_sum
+
+    window = st.lists(fvals, min_size=L, max_size=L).map(np.array)
+    q = data.draw(window)
+    seqs = [data.draw(window) for _ in range(k)]
+    mgr = ClusterManager([0.0, 0.0])
+    mgr.value_width = width
+
+    expected = []
+    for a in seqs:
+        d = np.minimum(np.abs(a - q) / width, 1.0)
+        expected.append(math.sqrt(seq_sum(d * d)))
+    expected = _bits(expected)
+    assert _bits(mgr.euclidean_distance(a, q) for a in seqs) == expected
+    assert _bits(mgr._dists([a], q)[0] for a in seqs) == expected
+    assert _bits(mgr._dists(seqs, q)) == expected
+    assert _bits(mgr._seq_dists_batch(np.stack(seqs), q)) == expected
+
+
+@settings(max_examples=150, deadline=None)
+@given(st.sampled_from([15, 16, 17, 18]), st.data())
+def test_rep_merge_running_sum_equals_full_resum(L, data):
+    """Merging members one at a time through ``_rep_merge``'s running sum
+    gives the same bits as re-averaging every member (``_average_windows``)
+    and as a plain numpy member-order sum, on both sides of the 16/17
+    switch between the scalar and numpy summation."""
+    import numpy as np
+
+    from tsc_spark.kernel.manager import ClusterManager, ClusterNode
+
+    series = data.draw(st.lists(fvals, min_size=L, max_size=L + 24))
+    starts = data.draw(
+        st.lists(st.integers(0, len(series) - L), min_size=2, max_size=12)
+    )
+    mgr = ClusterManager(series)
+    node = ClusterNode([starts[0]], mgr._window(starts[0], L).copy())
+    arr = np.array(series)
+    for s in starts[1:]:
+        node.si.append(s)
+        rep = mgr._rep_merge(node, L)
+        ref = np.zeros(L)
+        for t in node.si:
+            ref += arr[t : t + L]
+        ref /= float(len(node.si))
+        assert rep.tobytes() == mgr._average_windows(node.si, L).tobytes()
+        assert rep.tobytes() == ref.tobytes()

@@ -151,6 +151,23 @@ class TestRollupBatch:
         for keep in KEEPS:
             assert _batch_windows(sliced, stride, keep) == _reference_windows(kept, stride, keep)
 
+    @pytest.mark.parametrize("stride", [1, 8, 64])
+    def test_null_elements_skip_like_sql_aggregates(self, stride):
+        """A NULL element is not counted and not reduced; a window of
+        NULLs alone has count 0 and NULL aggregates."""
+        docs = {"a": [1, None, 3], "b": [None] * 9,
+                "c": [None, -4] + [7] * 14 + [None] * 8 + [2] * 50}
+        for keep in KEEPS:
+            expected = {}
+            for d, toks in docs.items():
+                n_win = -(-len(toks) // stride)
+                for w in range(0 if keep is None else max(n_win - keep, 0), n_win):
+                    seg = [v for v in toks[w * stride : (w + 1) * stride] if v is not None]
+                    expected[(d, w)] = (
+                        (len(seg), min(seg), max(seg), sum(seg)) if seg else (0, None, None, None)
+                    )
+            assert _batch_windows(_batch(docs), stride, keep) == expected
+
     def test_int32_extremes_and_int64_sums(self):
         lo, hi = np.iinfo(np.int32).min, np.iinfo(np.int32).max
         docs = {"hi": [hi] * 70, "lo": [lo] * 70, "mixed": [lo, hi] * 40}

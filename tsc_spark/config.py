@@ -17,7 +17,6 @@ DEFAULT_QUERY_MIN_MATCH_WINDOW: int = 3
 
 # --- unit scale (reference src/config.jl:13-15) ---
 UNIT_MIN: float = 0.0
-UNIT_MID: float = 0.5
 UNIT_MAX: float = 1.0
 
 # --- recency memory (reference polyphonic_cluster_manager.jl:29) ---
@@ -101,7 +100,6 @@ def step_duration_from_bpm(bpm: float) -> float:
 TIER_STRIDES: dict[int, int] = {0: 1, 1: 8, 2: 64}
 
 # --- Spark tuning defaults (engine-side, not from the reference) ---
-DEFAULT_SHUFFLE_PARTITIONS: int = 32
 ARROW_MAX_RECORDS_PER_BATCH: int = 256
 # docs with n_tok above this are routed to the heavy-doc partition lane
 HEAVY_DOC_TOKEN_THRESHOLD: int = 4096

@@ -25,8 +25,12 @@ Specialisation: the engine's data plane is pre-tokenized sequences
 value.  That collapses the reference's set-distance to
 ``clamp01(|a-b| / value_width)`` exactly (min_avg_distance of two
 singleton sets, ...:244-287), which this kernel exploits with vectorised
-numpy.  A polyphonic (set-valued) mode is out of the token data plane and
-not implemented here.
+numpy.  The set-valued (polyphonic) mode is
+``kernel.polymanager.PolyClusterManager``: it inherits everything below
+except the point layer — storage (``_store``/``_window``/``_push``/
+``_pop``), distances (``_dists``/``euclidean_distance``), averaging
+(``_average_windows``/``_rep_merge``), the value width and the root scan
+(``_root_dists``/``_root_rep_set``, which here keep the flat root matrix).
 """
 
 from __future__ import annotations
@@ -78,8 +82,9 @@ class ClusterNode:
         self.si: list[int] = si
         self.cc: dict[int, "ClusterNode"] = {}
         self.rep: Optional[np.ndarray] = rep
-        # running member-window sum (scalar manager only; lazily built on
-        # first merge) — rep == rsum / len(si).  Never mutated in place.
+        # running member-window sum, built on the first merge by the scalar
+        # _rep_merge — rep == rsum / len(si).  Never mutated in place; set
+        # mode re-averages its ragged members instead and leaves it None.
         self.rsum: Optional[np.ndarray] = None
 
 
@@ -119,28 +124,13 @@ class ClusterManager:
         value_min: float = UNIT_MIN,
         value_max: float = UNIT_MAX,
         recency: float = 0.0,
-        capacity: int = 0,
     ):
-        data = np.asarray(data, dtype=np.float64)
-        n = data.shape[0]
-        cap = max(capacity, n + 64)
-        self._buf = np.empty(cap, dtype=np.float64)
-        self._buf[:n] = data
-        self._n = n
-
-        # prefix_sums[i] = left-to-right sum of data[:i]; maintained
-        # incrementally so append+pop round-trips restore exact bits.
-        self._prefix = [0.0]
-        acc = 0.0
-        for i in range(n):
-            acc = acc + float(data[i])
-            self._prefix.append(acc)
-
         self.mtr = float(merge_threshold_ratio)
         self.min_window_size = int(min_window_size)
         self.calc_dist_on_add = bool(calculate_distance_when_added)
         self.scale_mode = scale_mode
         self.contextual_min_width = float(contextual_min_width)
+        self._store(data)
 
         if scale_mode == "range_fixed":
             vmin, vmax = float(range_min), float(range_max)
@@ -155,23 +145,17 @@ class ClusterManager:
 
         # seed cluster 0 = first window (reference ...:183-191)
         mw = self.min_window_size
-        seed_rep = self._buf[0:mw].copy() if n >= mw else None
+        seed_rep = self._window(0, mw).copy() if self._n >= mw else None
         self.clusters: dict[int, ClusterNode] = {0: ClusterNode([0], seed_rep)}
         self.cluster_id_counter = 1
         self.tasks: list[tuple[list[int], int]] = []
 
-        # --- vectorized root index ---------------------------------------
-        # Root-cluster distance scans dominate the per-step cost, so root
-        # ids/representatives are mirrored in flat numpy arrays.  Ids only
-        # ever grow, so _root_ids stays ascending and argmin's first-hit
-        # tie-break == the reference's smaller-id tie-break (...:1259).
+        # Root ids only ever grow, so _root_ids stays ascending and
+        # argmin's first-hit tie-break == the reference's smaller-id
+        # tie-break (...:1259).
         self._root_ids: list[int] = [0]
         self._root_row: dict[int, int] = {0: 0}
-        cap0 = 16
-        self._root_reps = np.zeros((cap0, mw), dtype=np.float64)
-        if seed_rep is not None:
-            self._root_reps[0] = seed_rep
-        self._root_empty: set[int] = set() if seed_rep is not None else {0}
+        self._root_rep_set(0, seed_rep)
         # start index -> owning root id (each start joins at most one root)
         self._start_to_root: dict[int, int] = {0: 0}
 
@@ -186,14 +170,33 @@ class ClusterManager:
         self._journal: list[tuple] = []
         self._snapshot = None
 
-        # distance scans switch to vectorized batch paths at this many
-        # candidates; set-mode subclasses disable batching (their points
-        # are ragged sets, not scalars)
-        self._batch_threshold = 8
-
     # ------------------------------------------------------------------
     # data access
     # ------------------------------------------------------------------
+    def _store(self, data) -> None:
+        """Point storage: a float64 buffer with append headroom, its
+        prefix sums, and the flat root-representative matrix."""
+        data = np.asarray(data, dtype=np.float64)
+        n = data.shape[0]
+        self._buf = np.empty(n + 64, dtype=np.float64)
+        self._buf[:n] = data
+        self._n = n
+
+        # prefix_sums[i] = left-to-right sum of data[:i]; maintained
+        # incrementally so append+pop round-trips restore exact bits.
+        self._prefix = [0.0]
+        acc = 0.0
+        for i in range(n):
+            acc = acc + float(data[i])
+            self._prefix.append(acc)
+
+        # Root-cluster distance scans dominate the per-step cost, so root
+        # representatives are mirrored row by row (_root_row) in one
+        # matrix; _root_empty holds the roots whose representative is
+        # the empty set.
+        self._root_reps = np.zeros((16, self.min_window_size), dtype=np.float64)
+        self._root_empty: set[int] = set()
+
     @property
     def n(self) -> int:
         return self._n
@@ -238,24 +241,63 @@ class ClusterManager:
         if a is None:
             L = min(self.min_window_size, b.shape[0])
             return math.sqrt(float(L))  # sum of L ones, exact
-        L = min(a.shape[0], b.shape[0])
-        if L <= 16:
-            # scalar fast path: identical IEEE op order to the numpy
-            # path (abs → /width → clamp → square → left-to-right sum),
-            # ~5× cheaper than ufunc dispatch on tiny windows
+        return self._dists([a], b)[0]
+
+    def _dists(self, seqs: list[np.ndarray], latest_seq: np.ndarray) -> list[float]:
+        """Euclidean distance of each window in ``seqs`` to ``latest_seq``.
+
+        The one distance call of every nearest-cluster search and of
+        euclidean_distance.  The path depends on size only; all three
+        apply abs → /width → clamp → square → left-to-right sum → sqrt
+        per window, so their bits are equal: 8 or more candidates take
+        one vectorized pass, windows of at most 16 steps a scalar loop
+        (~5× cheaper than ufunc dispatch there), longer ones numpy per
+        window.
+        """
+        if len(seqs) >= 8:
+            return self._seq_dists_batch(np.stack(seqs), latest_seq).tolist()
+        out = []
+        if latest_seq.shape[0] <= 16:
             w = self.value_width
-            av = a.tolist()
-            bv = b.tolist()
-            s = 0.0
-            for i in range(L):
-                d = abs(av[i] - bv[i]) / w
-                if d > 1.0:
-                    d = 1.0
-                s += d * d
-            return math.sqrt(s)
-        d = self._step_dists(a, b)
+            bv = latest_seq.tolist()
+            for a in seqs:
+                s = 0.0
+                for x, y in zip(a.tolist(), bv):
+                    d = abs(x - y) / w
+                    if d > 1.0:
+                        d = 1.0
+                    s += d * d
+                out.append(math.sqrt(s))
+        else:
+            for a in seqs:
+                d = self._step_dists(a, latest_seq)
+                d *= d
+                out.append(math.sqrt(seq_sum(d)))
+        return out
+
+    def _seq_dists_batch(self, reps: np.ndarray, latest_seq: np.ndarray) -> np.ndarray:
+        """Euclidean distance of each row of ``reps`` (k, L) to latest_seq.
+
+        Row-wise identical arithmetic to euclidean_distance: clamp01 per
+        step, square, *sequential* sum along the step axis, sqrt."""
+        d = np.abs(reps - latest_seq) / self.value_width
+        np.minimum(d, 1.0, out=d)  # d >= 0: min == clip01, cheaper dispatch
         d *= d
-        return math.sqrt(seq_sum(d))
+        # left-to-right column accumulation — the same IEEE op order as
+        # np.add.accumulate(axis=1)[:, -1] without the (k, L) prefix array
+        s = d[:, 0].copy()
+        for j in range(1, d.shape[1]):
+            s += d[:, j]
+        return np.sqrt(s)
+
+    def euclidean_distance_pair(self, n1: ClusterNode, n2: ClusterNode) -> float:
+        if n1.rep is None and n2.rep is None:
+            return 0.0
+        if n1.rep is None:
+            return self.euclidean_distance(None, n2.rep)
+        if n2.rep is None:
+            return self.euclidean_distance(None, n1.rep)
+        return self.euclidean_distance(n1.rep, n2.rep)
 
     def cluster_complexity(self, rep: Optional[np.ndarray]) -> float:
         """Mean adjacent-step distance of the representative (...:691-698)."""
@@ -267,25 +309,25 @@ class ClusterManager:
     # ------------------------------------------------------------------
     # representative averaging (reference ...:387-445, singleton sets)
     # ------------------------------------------------------------------
+    def _window_sum(self, starts: list[int], length: int) -> np.ndarray:
+        """Element-wise sum of the windows at ``starts``, added in
+        ``starts`` order (insertion order == the reference's summation
+        order); short windows add in a scalar loop, bit-equal to numpy."""
+        if length <= 16:
+            buf = self._buf
+            acc = [0.0] * length
+            for s in starts:
+                acc = [x + y for x, y in zip(acc, buf[s : s + length].tolist())]
+            return np.array(acc, dtype=np.float64)
+        acc = np.zeros(length, dtype=np.float64)
+        for s in starts:
+            acc += self._window(s, length)
+        return acc
+
     def _average_windows(self, starts: list[int], length: int) -> np.ndarray:
         if len(starts) == 1:
             return self._window(starts[0], length).copy()
-        if length <= 16:
-            # scalar fast path — per-element accumulation in the same
-            # start order as the ufunc path, so sums are bit-equal
-            buf = self._buf
-            acc = [0.0] * length
-            for s in starts:  # insertion order == reference summation order
-                w = buf[s : s + length].tolist()
-                for i in range(length):
-                    acc[i] += w[i]
-            k = float(len(starts))
-            return np.array([v / k for v in acc], dtype=np.float64)
-        acc = np.zeros(length, dtype=np.float64)
-        for s in starts:  # insertion order == reference summation order
-            acc += self._window(s, length)
-        acc /= float(len(starts))
-        return acc
+        return self._window_sum(starts, length) / float(len(starts))
 
     def _rep_merge(self, node: ClusterNode, length: int) -> np.ndarray:
         """Representative after ``node.si`` gained its last member: the
@@ -297,28 +339,14 @@ class ClusterManager:
         running sum is *bit-equal* to re-summing every member while
         costing O(L) instead of O(k·L).  The cache is (re)built in
         insertion order on first merge (seed nodes predate it) or when
-        absent; the poly subclass overrides this back to full
-        ``_average_windows`` (ragged set members have no flat sum)."""
-        k = len(node.si)
+        absent."""
         rs = node.rsum
         if rs is None or rs.shape[0] != length:
-            length = int(length)
-            if length <= 16:
-                buf = self._buf
-                acc = [0.0] * length
-                for s in node.si:  # insertion order == reference order
-                    w = buf[s : s + length].tolist()
-                    for i in range(length):
-                        acc[i] += w[i]
-                rs = np.array(acc, dtype=np.float64)
-            else:
-                rs = np.zeros(length, dtype=np.float64)
-                for s in node.si:
-                    rs += self._window(s, length)
+            rs = self._window_sum(node.si, length)
         else:
             rs = rs + self._window(node.si[-1], length)
         node.rsum = rs
-        return rs / float(k)
+        return rs / float(len(node.si))
 
     # ------------------------------------------------------------------
     # contextual halves value-width (reference ...:1051-1094)
@@ -374,14 +402,8 @@ class ClusterManager:
             elif tag == _J_AS:
                 entry[1].rep = entry[2]
                 entry[1].rsum = entry[4]
-                root_cid = entry[3]
-                if root_cid is not None:  # restore root rep mirror
-                    row = self._root_row[root_cid]
-                    if entry[2] is None:
-                        self._root_empty.add(root_cid)
-                    else:
-                        self._root_reps[row] = entry[2]
-                        self._root_empty.discard(root_cid)
+                if entry[3] is not None:  # a root's representative
+                    self._root_rep_set(entry[3], entry[2])
             elif tag == _J_CC:
                 del entry[1][entry[2]]
             elif tag == _J_ROOT:
@@ -395,7 +417,6 @@ class ClusterManager:
                 assert self._root_ids[-1] == cid
                 self._root_ids.pop()
                 del self._root_row[cid]
-                self._root_empty.discard(cid)
             elif tag == _J_WS_DIST:
                 del self.dist_cache[entry[1]]
             elif tag == _J_WS_QTY:
@@ -497,89 +518,21 @@ class ClusterManager:
 
         self._process_roots(data_index, self._max_distance(self.min_window_size))
 
-    def _seq_dists_batch(self, reps: np.ndarray, latest_seq: np.ndarray) -> np.ndarray:
-        """Euclidean distance of each row of ``reps`` (k, L) to latest_seq.
-
-        Row-wise identical arithmetic to euclidean_distance: clamp01 per
-        step, square, *sequential* sum along the step axis
-        (np.add.accumulate), sqrt — bit-equal to the scalar path."""
-        d = np.abs(reps - latest_seq) / self.value_width
-        np.minimum(d, 1.0, out=d)  # d >= 0: min == clip01, cheaper dispatch
-        d *= d
-        if d.shape[1] == 1:
-            s = d[:, 0]
-        else:
-            # left-to-right column accumulation — the same IEEE op order
-            # as np.add.accumulate(axis=1)[:, -1] without materializing
-            # the full (k, L) prefix array
-            s = d[:, 0].copy()
-            for j in range(1, d.shape[1]):
-                s += d[:, j]
-        return np.sqrt(s)
-
     def _process_existing(
         self, parent, latest_seq, max_distance, latest_start, new_length, keys_to_parent
     ) -> None:
-        # nearest child by (distance, cluster_id) — reference ...:1144-1157;
-        # the (d, id) min is iteration-order independent.  Child ids are
-        # inserted in ascending cluster_id_counter order and rollback only
-        # deletes the newest, so dict order IS ascending — no sort needed
-        # (argmin first-hit == smallest-cid tie-break).
+        # nearest child by (distance, cluster_id) — reference ...:1144-1157.
+        # Child ids are inserted in ascending cluster_id_counter order and
+        # rollback only deletes the newest, so dict order IS ascending and
+        # the first minimum is the smallest-cid tie-break.
         cids = list(parent.cc)
-        if len(cids) >= self._batch_threshold:
-            reps = np.stack([parent.cc[c].rep for c in cids])
-            dists = self._seq_dists_batch(reps, latest_seq)
-            i = int(np.argmin(dists))  # first minimum == smallest cid
-            best_id = cids[i]
-            best_child = parent.cc[best_id]
-            min_distance = float(dists[i])
-        elif new_length <= 16 and type(self) is ClusterManager:
-            # scalar micro-path with the query window hoisted out of the
-            # per-child loop; identical IEEE op order to euclidean_distance
-            best_id = -1
-            best_child = None
-            min_distance = math.inf
-            w = self.value_width
-            bv = latest_seq.tolist()
-            nb = len(bv)
-            for cid in cids:
-                child = parent.cc[cid]
-                rep = child.rep
-                if rep is None:
-                    L = self.min_window_size
-                    if nb < L:
-                        L = nb
-                    d = math.sqrt(float(L))
-                else:
-                    av = rep.tolist()
-                    L = len(av)
-                    if nb < L:
-                        L = nb
-                    s = 0.0
-                    for i in range(L):
-                        dd = abs(av[i] - bv[i]) / w
-                        if dd > 1.0:
-                            dd = 1.0
-                        s += dd * dd
-                    d = math.sqrt(s)
-                if d < min_distance:
-                    min_distance = d
-                    best_child = child
-                    best_id = cid
-        else:
-            best_id = -1
-            best_child = None
-            min_distance = math.inf
-            for cid in cids:
-                child = parent.cc[cid]
-                d = self.euclidean_distance(child.rep, latest_seq)
-                if d < min_distance:
-                    min_distance = d
-                    best_child = child
-                    best_id = cid
+        dists = self._dists([child.rep for child in parent.cc.values()], latest_seq)
+        min_distance = min(dists)
+        best_id = cids[dists.index(min_distance)]
+        best_child = parent.cc[best_id]
         ratio = 0.0 if max_distance == 0.0 else min_distance / max_distance
 
-        if best_child is not None and ratio <= self.mtr:
+        if ratio <= self.mtr:
             best_child.si.append(latest_start)
             self._record((_J_SI, best_child, None))
             old_rep = best_child.rep
@@ -602,40 +555,10 @@ class ClusterManager:
     ) -> None:
         valid_group: list[int] = []
         invalid_group: list[int] = []
-        if len(valid_si) >= self._batch_threshold:
-            idx = np.asarray(valid_si, dtype=np.int64)[:, None] + np.arange(
-                new_length, dtype=np.int64
-            )
-            wins = self._buf[idx]
-            dists = self._seq_dists_batch(wins, latest_seq)
-            if max_distance == 0.0:
-                ok = np.ones(len(valid_si), dtype=bool)
-            else:
-                ok = (dists / max_distance) <= self.mtr
-            for s, good in zip(valid_si, ok):
-                (valid_group if good else invalid_group).append(s)
-        elif new_length <= 16 and type(self) is ClusterManager:
-            # scalar micro-path, query window hoisted (cf. _process_existing)
-            w = self.value_width
-            bv = latest_seq.tolist()
-            buf = self._buf
-            mtr = self.mtr
-            for s in valid_si:
-                av = buf[s : s + new_length].tolist()
-                acc = 0.0
-                for i in range(new_length):
-                    dd = abs(av[i] - bv[i]) / w
-                    if dd > 1.0:
-                        dd = 1.0
-                    acc += dd * dd
-                d = math.sqrt(acc)
-                ratio = 0.0 if max_distance == 0.0 else d / max_distance
-                (valid_group if ratio <= mtr else invalid_group).append(s)
-        else:
-            for s in valid_si:
-                d = self.euclidean_distance(self._window(s, new_length), latest_seq)
-                ratio = 0.0 if max_distance == 0.0 else d / max_distance
-                (valid_group if ratio <= self.mtr else invalid_group).append(s)
+        dists = self._dists([self._window(s, new_length) for s in valid_si], latest_seq)
+        for s, d in zip(valid_si, dists):
+            ratio = 0.0 if max_distance == 0.0 else d / max_distance
+            (valid_group if ratio <= self.mtr else invalid_group).append(s)
 
         if valid_group:
             starts = valid_group + [latest_start]
@@ -663,7 +586,8 @@ class ClusterManager:
             self.cluster_id_counter += 1
 
     def _root_dists(self, latest_seq) -> np.ndarray:
-        """Distance of every root representative to latest_seq.
+        """Distance of every root representative to latest_seq, in
+        _root_ids order.
 
         Vectorized nearest-root scan over the flat rep mirror; bit-equal
         per-row arithmetic, argmin first-hit == smaller-id tie-break.
@@ -676,20 +600,23 @@ class ClusterManager:
             dists[self._root_row[ecid]] = math.sqrt(float(mw))
         return dists
 
-    def _root_add(self, cid: int, node: ClusterNode) -> None:
-        row = len(self._root_ids)
-        self._root_ids.append(cid)
-        self._root_row[cid] = row
+    def _root_rep_set(self, cid: int, rep: Optional[np.ndarray]) -> None:
+        """Mirror root ``cid``'s representative into its matrix row."""
+        row = self._root_row[cid]
         if row == self._root_reps.shape[0]:
-            grown = np.zeros(
-                (row * 2, self._root_reps.shape[1]), dtype=np.float64
-            )
+            grown = np.zeros((row * 2, self._root_reps.shape[1]), dtype=np.float64)
             grown[:row] = self._root_reps
             self._root_reps = grown
-        if node.rep is None:
+        if rep is None:
             self._root_empty.add(cid)
         else:
-            self._root_reps[row] = node.rep
+            self._root_reps[row] = rep
+            self._root_empty.discard(cid)
+
+    def _root_add(self, cid: int, node: ClusterNode) -> None:
+        self._root_row[cid] = len(self._root_ids)
+        self._root_ids.append(cid)
+        self._root_rep_set(cid, node.rep)
         if node.si:
             self._start_to_root[node.si[0]] = cid
 
@@ -721,8 +648,7 @@ class ClusterManager:
             old_rep = best.rep
             old_rsum = best.rsum
             best.rep = self._rep_merge(best, mw)
-            self._root_reps[self._root_row[best_id]] = best.rep
-            self._root_empty.discard(best_id)
+            self._root_rep_set(best_id, best.rep)
             self._record((_J_AS, best, old_rep, best_id, old_rsum))
             self._add_updated(self.updated_qty, mw, best_id)
             if self.calc_dist_on_add:
@@ -834,17 +760,6 @@ class ClusterManager:
 
         self.updated_dist.clear()
         self.updated_qty.clear()
-
-    def euclidean_distance_pair(self, n1: ClusterNode, n2: ClusterNode) -> float:
-        if n1.rep is None and n2.rep is None:
-            return 0.0
-        if n1.rep is None:
-            return self.euclidean_distance(None, n2.rep)
-        if n2.rep is None:
-            return self.euclidean_distance(None, n1.rep)
-        d = self._step_dists(n1.rep, n2.rep)
-        d *= d
-        return math.sqrt(seq_sum(d))
 
     # ------------------------------------------------------------------
     # recency weighting (reference ...:525-599,912-939)

@@ -4,16 +4,24 @@ Each timestep is a PolySet (an unordered chord of floats) instead of a
 scalar token — the reference's full data model
 (/root/reference/src/polyphonic/polyphonic_cluster_manager.jl:24-27).
 This subclass reuses the scalar ``ClusterManager``'s entire
-orchestration bit-for-bit (task worklist, forest growth, valid/invalid
-grouping, root assignment, journal/rollback, caches, recency — all
-inherited unchanged) and swaps only the point layer:
+orchestration bit-for-bit (constructor, task worklist, forest growth,
+valid/invalid grouping, root assignment, journal/rollback, caches,
+recency — all inherited unchanged) and overrides only the point layer:
 
-* storage: list-of-sets ring instead of the float64 numpy buffer
-* point distance: ``min_avg_distance`` (set mode, ...:244-287) or
-  ``ordered_vector_distance01`` (...:294-312) from kernel.polyset
-* representative averaging: ``average_sequences`` (...:387-445 —
-  sorted index-wise mean for same-size sets, latest-wins otherwise)
-* contextual value width: flat mean over all set members (...:1051-1094)
+* storage (``_store``, ``data_view``, ``_window``, ``_push``, ``_pop``):
+  a list of sets instead of the float64 numpy buffer
+* distances (``euclidean_distance``, ``_dists``, ``cluster_complexity``):
+  per-step ``min_avg_distance`` (set mode, ...:244-287) or
+  ``ordered_vector_distance01`` (...:294-312) from kernel.polyset, one
+  window at a time — ragged sets have no batch path
+* representative averaging (``_average_windows``, ``_rep_merge``):
+  ``average_sequences`` (...:387-445 — sorted index-wise mean for
+  same-size sets, latest-wins otherwise), re-averaged on every merge
+* contextual value width (``_update_value_width``): flat mean over all
+  set members (...:1051-1094)
+* root scan (``_root_dists``, ``_root_rep_set``): ``_dists`` over the
+  root nodes' representatives, with no flat mirror to keep
+* ``tree``: representatives as lists of sets
 
 Equivalence guarantee (tested): with every set a singleton, this
 subclass reproduces the scalar manager's timelines and representative
@@ -28,14 +36,7 @@ import math
 
 import numpy as np
 
-from ..config import (
-    DEFAULT_CONTEXTUAL_MIN_WIDTH,
-    DEFAULT_RANGE_MAX,
-    DEFAULT_RANGE_MIN,
-    SUBSEQUENCE_MIN_WINDOW_SIZE,
-    UNIT_MAX,
-    UNIT_MIN,
-)
+from ..config import SUBSEQUENCE_MIN_WINDOW_SIZE
 from .manager import ClusterManager, ClusterNode, seq_sum
 from .polyset import (
     average_sequences,
@@ -52,7 +53,10 @@ def _copy_seq(seq):
 
 
 class PolyClusterManager(ClusterManager):
-    """Set-valued points; scalar orchestration inherited unchanged."""
+    """Set-valued points; scalar orchestration inherited unchanged.
+
+    Takes the base options (``scale_mode``, ``range_*``, ``value_*``,
+    ``recency``, ...) as keywords, plus the set-mode ones below."""
 
     def __init__(
         self,
@@ -61,28 +65,13 @@ class PolyClusterManager(ClusterManager):
         min_window_size: int = SUBSEQUENCE_MIN_WINDOW_SIZE,
         calculate_distance_when_added: bool = False,
         *,
-        scale_mode: str = "range_fixed",
-        contextual_min_width: float = DEFAULT_CONTEXTUAL_MIN_WIDTH,
-        range_min: float = DEFAULT_RANGE_MIN,
-        range_max: float = DEFAULT_RANGE_MAX,
-        value_min: float = UNIT_MIN,
-        value_max: float = UNIT_MAX,
-        recency: float = 0.0,
         max_set_size: int = 4,
         point_distance_mode: str = "set",
         point_axis_ranges=(),
         use_streamwise_surface_average: bool = False,
         stream_axis_offset: float = 0.0,
+        **options,
     ):
-        sets = [[float(v) for v in s] for s in data]
-        n = len(sets)
-        self._sets: list[list[float]] = sets
-
-        self.mtr = float(merge_threshold_ratio)
-        self.min_window_size = int(min_window_size)
-        self.calc_dist_on_add = bool(calculate_distance_when_added)
-        self.scale_mode = scale_mode
-        self.contextual_min_width = float(contextual_min_width)
         self.max_set_size = max(int(max_set_size), 1)
         self.point_distance_mode = point_distance_mode
         self.point_axis_ranges = [float(r) for r in point_axis_ranges]
@@ -90,45 +79,21 @@ class PolyClusterManager(ClusterManager):
         # decoded stream slot (reference ...pcm.jl:343-389)
         self.use_streamwise_surface_average = bool(use_streamwise_surface_average)
         self.stream_axis_offset = float(stream_axis_offset)
-
-        if scale_mode == "range_fixed":
-            vmin, vmax = float(range_min), float(range_max)
-        else:
-            vmin, vmax = float(value_min), float(value_max)
-        vwidth = abs(vmax - vmin)
-        self.value_min = vmin
-        self.value_max = vmax
-        self.value_width = vwidth if vwidth > 0.0 else 1.0
-
-        self.recency = min(max(float(recency), 0.0), 1.0)
-
-        mw = self.min_window_size
-        self._n = n
-        seed_rep = _copy_seq(sets[0:mw]) if n >= mw else None
-        self.clusters = {0: ClusterNode([0], seed_rep)}
-        self.cluster_id_counter = 1
-        self.tasks = []
-
-        self._root_ids = [0]
-        self._root_row = {0: 0}
-        self._root_reps: list = [seed_rep]  # list mirror (no numpy matrix)
-        self._root_empty = set() if seed_rep is not None else {0}
-        self._start_to_root = {0: 0}
-
-        self.updated_dist = {mw: {0}}
-        self.updated_qty = {mw: {0}}
-        self.dist_cache = {mw: {}}
-        self.qty_cache = {mw: {}}
-        self.comp_cache = {mw: {}}
-
-        self._recording = False
-        self._journal = []
-        self._snapshot = None
-        self._batch_threshold = 1 << 60  # sets are ragged: no batch path
+        super().__init__(
+            data,
+            merge_threshold_ratio,
+            min_window_size,
+            calculate_distance_when_added,
+            **options,
+        )
 
     # ------------------------------------------------------------------
     # data access (set storage)
     # ------------------------------------------------------------------
+    def _store(self, data) -> None:
+        self._sets: list[list[float]] = [[float(v) for v in s] for s in data]
+        self._n = len(self._sets)
+
     def data_view(self):
         return self._sets[: self._n]
 
@@ -169,14 +134,8 @@ class PolyClusterManager(ClusterManager):
             s += d * d
         return math.sqrt(s)
 
-    def euclidean_distance_pair(self, n1: ClusterNode, n2: ClusterNode) -> float:
-        if n1.rep is None and n2.rep is None:
-            return 0.0
-        if n1.rep is None:
-            return self.euclidean_distance(None, n2.rep)
-        if n2.rep is None:
-            return self.euclidean_distance(None, n1.rep)
-        return self.euclidean_distance(n1.rep, n2.rep)
+    def _dists(self, seqs, latest_seq) -> list[float]:
+        return [self.euclidean_distance(a, latest_seq) for a in seqs]
 
     def cluster_complexity(self, rep) -> float:
         """Mean adjacent-step set distance (reference ...:691-716)."""
@@ -229,28 +188,14 @@ class PolyClusterManager(ClusterManager):
         self.value_width = delta if delta > 0.0 else 1.0
 
     # ------------------------------------------------------------------
-    # roots: list mirror instead of the numpy rep matrix
+    # roots: read from the nodes (no flat mirror for ragged sets)
     # ------------------------------------------------------------------
     def _root_dists(self, latest_seq) -> np.ndarray:
-        mw = self.min_window_size
-        dists = np.empty(len(self._root_ids), dtype=np.float64)
-        for row, rid in enumerate(self._root_ids):
-            rep = self.clusters[rid].rep
-            dists[row] = (
-                math.sqrt(float(mw)) if rep is None
-                else self.euclidean_distance(rep, latest_seq)
-            )
-        return dists
+        reps = [self.clusters[rid].rep for rid in self._root_ids]
+        return np.array(self._dists(reps, latest_seq), dtype=np.float64)
 
-    def _root_add(self, cid: int, node: ClusterNode) -> None:
-        row = len(self._root_ids)
-        self._root_ids.append(cid)
-        self._root_row[cid] = row
-        self._root_reps.append(node.rep)
-        if node.rep is None:
-            self._root_empty.add(cid)
-        if node.si:
-            self._start_to_root[node.si[0]] = cid
+    def _root_rep_set(self, cid: int, rep) -> None:
+        """Roots are read from their nodes: nothing to mirror."""
 
     # ------------------------------------------------------------------
     # outputs

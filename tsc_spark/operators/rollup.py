@@ -93,9 +93,13 @@ def rollup_batch(
     pairs and keeps every other result, so gaps between docs (NULL
     arrays, sliced batches) are never summed into a window.  NULL and
     empty arrays yield no windows, like tier-0's ``n_tok > 0`` filter.
-    ``keep`` cuts each doc to its last ``keep`` windows (the retention
-    keep-last horizon, operators.retention.retention_sweep) before any
-    reduction runs; ``None`` keeps every window."""
+    NULL elements are skipped like SQL aggregates skip them: ``agg_count``
+    counts the present values, the other reducers run over them, and a
+    window of NULLs alone has count 0 and NULL aggregates.  Only a batch
+    holding NULL elements pays for that masking.  ``keep`` cuts each doc
+    to its last ``keep`` windows (the retention keep-last horizon,
+    operators.retention.retention_sweep) before any reduction runs;
+    ``None`` keeps every window."""
     tokens = batch.column(1)
     offsets = tokens.offsets.to_numpy().astype(np.int64)
     valid = tokens.is_valid().to_numpy(zero_copy_only=False)
@@ -112,16 +116,29 @@ def rollup_batch(
     bounds[0::2], bounds[1::2] = win_start, win_end
     # the last window ends where the values are cut, so its end index
     # (which may equal len(values), out of reduceat's range) is dropped
-    values = tokens.values.to_numpy()[: win_end.max(initial=0)]
+    values = tokens.values.slice(0, win_end.max(initial=0))
     bounds = bounds[:-1]
+    count, empty = win_end - win_start, None
+    if values.null_count:
+        # each reducer sees NULLs as its identity; windows of NULLs only
+        # (count 0) come out NULL
+        present = values.is_valid().to_numpy(zero_copy_only=False)
+        count = np.add.reduceat(present, bounds, dtype=np.int64)[0::2]
+        empty = count == 0
+        info = np.iinfo(values.type.to_pandas_dtype())
+        lo, hi, total = (
+            values.fill_null(v).to_numpy() for v in (info.max, info.min, 0)
+        )
+    else:
+        lo = hi = total = values.to_numpy()
     return pa.RecordBatch.from_arrays(
         [
             batch.column(0).take(doc),
             win_idx,
-            win_end - win_start,
-            np.minimum.reduceat(values, bounds)[0::2],
-            np.maximum.reduceat(values, bounds)[0::2],
-            np.add.reduceat(values, bounds, dtype=np.int64)[0::2],
+            count,
+            pa.array(np.minimum.reduceat(lo, bounds)[0::2], mask=empty),
+            pa.array(np.maximum.reduceat(hi, bounds)[0::2], mask=empty),
+            pa.array(np.add.reduceat(total, bounds, dtype=np.int64)[0::2], mask=empty),
             np.full(doc.size, tier, dtype=np.int32),
         ],
         names=[f.split()[0] for f in _WINDOW_SCHEMA.split(", ")],
@@ -158,7 +175,7 @@ def rollup_arrays(
     return points.select(
         "doc_id",
         F.col("window_idx").cast("long").alias("window_idx"),
-        F.lit(1).cast("long").alias("agg_count"),
+        F.col("token").isNotNull().cast("long").alias("agg_count"),
         F.col("token").alias("agg_min"),
         F.col("token").alias("agg_max"),
         F.col("token").cast("long").alias("agg_sum"),

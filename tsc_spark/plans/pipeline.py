@@ -12,10 +12,10 @@ with a manifest — the file-level equivalent of
 
 Each value is stored once.  A tier window with ``agg_count == 1`` is
 written with ``agg_max`` and ``agg_sum`` NULL, because both equal
-``agg_min`` (on tier 0 that is every row, which otherwise stores each
-token three times); ``read_tier``, the one reader of the tier store,
-restores them, and gap rows (count 0, all aggregates NULL) pass
-unchanged.  The ``encoded`` column is written without parquet column
+``agg_min`` (on tier 0 that is every row of a present token, which
+otherwise stores each token three times); ``read_tier``, the one reader
+of the tier store, restores them, and count-0 rows (gaps and NULL
+tokens, all aggregates NULL) pass unchanged.  The ``encoded`` column is written without parquet column
 statistics: a min/max over DoD blobs prunes nothing, and parquet-mr
 would store the largest whole blob in every file footer.  Each manifest records the on-disk
 bytes of every output directory the bucket wrote.
