@@ -29,3 +29,17 @@ def tokens_rows():
     from tsc_spark.sources import synth_tokens
 
     return synth_tokens(48, include_edges=True)
+
+
+@pytest.fixture(scope="session")
+def raw_tokens_df(spark, tokens_df):
+    """``tokens_df`` plus a doc with NULL token elements and a doc longer
+    than the default 64-token raw horizon (the synth docs stop at 64)."""
+    extra = spark.createDataFrame(
+        [("edge_null", [4, None, 6, None], 4, "edge"),
+         ("edge_long", [(7 * i) % 24 for i in range(150)], 150, "edge")],
+        "doc_id string, tokens array<int>, n_tok int, source string",
+    )
+    df = tokens_df.unionByName(extra)
+    df.cache().count()
+    return df

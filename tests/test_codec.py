@@ -82,24 +82,57 @@ def test_batch_codec_matches_spec_encoder(docs, cut):
     assert decode(enc[1:]).to_pylist() == docs[1:]
 
 
+ELEM = st.one_of(st.none(), INT32)
+NULLABLE_DOC = st.one_of(st.none(), st.lists(ELEM, max_size=3), st.lists(ELEM, max_size=60))
+
+
+@given(st.lists(NULLABLE_DOC, max_size=30), st.integers(0, 5))
+@settings(max_examples=300, deadline=None)
+def test_codec_roundtrips_null_elements(docs, cut):
+    """NULL token elements round-trip through a sliced list array beside
+    NULL, empty and int32-extreme docs, also from a sliced binary array.
+    A doc's blob is the spec blob of its values with each NULL read as 0,
+    followed by the varint position of each NULL: a doc without NULLs
+    keeps the spec's bytes exactly."""
+    docs = [None, [], [None], [-(2**31), None, 2**31 - 1]] + docs
+    arr = pa.array([[1, 2]] * cut + docs, pa.list_(pa.int32()))[cut:]
+    enc = encode(arr)
+    assert decode(enc).to_pylist() == docs
+    assert decode(enc[1:]).to_pylist() == docs[1:]
+    for doc, blob in zip(docs, enc.to_pylist()):
+        if doc is None:
+            assert blob is None
+            continue
+        nulls = b"".join(_spec_varint(i) for i, t in enumerate(doc) if t is None)
+        assert blob == _spec_encode([0 if t is None else t for t in doc]) + nulls
+
+
+def test_codec_pins_blob_bytes():
+    """Literal blobs: [5, 7] is n=2, zigzag 5, zigzag +2; a NULL in the
+    middle adds only its position after the values."""
+    arr = pa.array([[5, 7], [5, None, 7]], pa.list_(pa.int32()))
+    assert encode(arr).to_pylist() == [b"\x02\x0a\x04", b"\x03\x0a\x09\x18\x01"]
+
+
 def test_codec_rejects_malformed_input():
-    with pytest.raises(ValueError, match="NULL element"):
-        encode(pa.array([[1, None]], pa.list_(pa.int32())))
     with pytest.raises(ValueError, match="corrupt"):
         decode(pa.array([b"\x05\x00"], pa.binary()))  # n=5, one value
+    with pytest.raises(ValueError, match="corrupt"):
+        decode(pa.array([b"\x01\x00\x05"], pa.binary()))  # a NULL at position 5 of 1
 
 
 def test_null_tokens_row_roundtrips_to_null(spark):
     from tsc_spark.functions.codec_udfs import decode_tokens_table, encode_tokens_table
 
     df = spark.createDataFrame(
-        [("d1", [1, 2, 3], 3, "s"), ("d2", None, 0, "s"), ("d3", [], 0, "s")],
+        [("d1", [1, 2, 3], 3, "s"), ("d2", None, 0, "s"), ("d3", [], 0, "s"),
+         ("d4", [1, None, 3], 3, "s")],
         "doc_id string, tokens array<int>, n_tok int, source string",
     )
     enc = encode_tokens_table(df)
     assert "ArrowEvalPython" in enc._jdf.queryExecution().executedPlan().toString()
     got = {r.doc_id: r.tokens for r in decode_tokens_table(enc).collect()}
-    assert got == {"d1": [1, 2, 3], "d2": None, "d3": []}
+    assert got == {"d1": [1, 2, 3], "d2": None, "d3": [], "d4": [1, None, 3]}
 
 
 def test_decode_rejects_unknown_codec_version(spark):

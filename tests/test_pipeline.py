@@ -7,6 +7,7 @@ import pyarrow.parquet as pq
 import pytest
 from pyspark.sql import functions as F
 
+from tsc_spark.codecs import decode
 from tsc_spark.config import TIER_STRIDES
 from tsc_spark.functions import decode_tokens_table
 from tsc_spark.operators.retention import (
@@ -16,7 +17,7 @@ from tsc_spark.operators.retention import (
 )
 from tsc_spark.operators.rollup import tiered_rollups
 from tsc_spark.plans.pipeline import (
-    _stored_form,
+    _dir_bytes,
     ingest,
     pipeline_metrics,
     read_tier,
@@ -157,11 +158,11 @@ def test_manifest_watermarks_match_written_files(spark, base_dir):
     manifests = run_pipeline(spark, base_dir, with_timeline=False)
     for m in manifests:
         for tier in (0, 1, 2):
-            path = os.path.join(
-                base_dir, "rollup", f"tier={tier}", f"bucket={m['bucket']}"
-            )
             actual = (
-                spark.read.parquet(path).agg(F.max("window_idx")).collect()[0][0]
+                read_tier(spark, base_dir, tier)
+                .where(F.col("bucket") == m["bucket"])
+                .agg(F.max("window_idx"))
+                .collect()[0][0]
             )
             assert m["watermarks"][f"tier{tier}_max_window_idx"] == int(actual), (
                 m["bucket"], tier
@@ -222,56 +223,36 @@ def _walk_bytes(path):
     )
 
 
-def _assert_one_point_windows_store_only_min(spark, base_dir):
-    """In the raw tier parquet, agg_max/agg_sum are NULL on exactly the
-    agg_count == 1 rows (the pipeline writes no gap rows)."""
-    for tier in (0, 1, 2):
-        raw = spark.read.parquet(os.path.join(base_dir, "rollup", f"tier={tier}"))
-        one = F.col("agg_count") == 1
-        assert raw.filter(one).count() > 0, tier  # edge_one: one point in every tier
-        for col in ("agg_max", "agg_sum"):
-            assert raw.filter(F.col(col).isNull() != one).count() == 0, (tier, col)
-        assert raw.filter(F.col("agg_min").isNull()).count() == 0, tier
+def _max_stored_tokens(spark, base_dir):
+    blobs = spark.read.parquet(os.path.join(base_dir, "encoded")).select("encoded").toArrow()
+    return max(len(t or ()) for t in decode(blobs.column(0).combine_chunks()).to_pylist())
 
 
-def test_tier_store_reads_back_the_logical_rollups(spark, base_dir, tokens_df):
-    """Stored one-point windows keep only agg_min; read_tier restores
-    every tier to tiered_rollups' rows, also after a retention sweep
-    that carries the stored rows through.  The edge docs (empty, one or
-    two tokens, constant, negative) are part of the corpus."""
-    run_pipeline(spark, base_dir, with_timeline=False, with_encoded=False)
-    tiers = tiered_rollups(tokens_df, with_gapfill=True)
-    edges = {"edge_one", "edge_two", "edge_const", "edge_neg"}
+def test_tier_store_reads_back_the_logical_rollups(spark, tmp_path, raw_tokens_df):
+    """read_tier gives every tier as tiered_rollups emits it, tier 0
+    rebuilt from the encoded table (no tier-0 directory is written), and
+    after each of two retention sweeps it gives retention_sweep of it,
+    while no stored blob holds more than the 64-token raw horizon.  The
+    edge docs (empty, one or two tokens, constant, negative, NULL token
+    elements, longer than 64 tokens) are part of the corpus."""
+    base_dir = str(tmp_path / "pipe")
+    ingest(spark, raw_tokens_df, base_dir, n_buckets=4)
+    run_pipeline(spark, base_dir, with_timeline=False)
+    assert not os.path.exists(os.path.join(base_dir, "rollup", "tier=0"))
+    tiers = tiered_rollups(raw_tokens_df, with_gapfill=True)
+    edges = {"edge_one", "edge_two", "edge_const", "edge_neg", "edge_null", "edge_long"}
     assert edges <= {r.doc_id for r in tiers[0].select("doc_id").distinct().collect()}
+    assert tiers[0].filter("agg_count = 0").count() == 2  # edge_null's NULLs
     for tier, tdf in tiers.items():
         assert _tier_rows(read_tier(spark, base_dir, tier)) == _tier_rows(tdf), tier
-    _assert_one_point_windows_store_only_min(spark, base_dir)
+    assert _max_stored_tokens(spark, base_dir) == 150
 
-    apply_retention(spark, base_dir)
-    for tier, tdf in tiers.items():
-        expected = retention_sweep(tdf, DEFAULT_RETENTION_POLICY)
-        assert _tier_rows(read_tier(spark, base_dir, tier)) == _tier_rows(expected), tier
-    _assert_one_point_windows_store_only_min(spark, base_dir)
-
-
-def test_stored_form_roundtrips_gap_and_null_rows(spark, tmp_path):
-    """Gap rows (count 0, all aggregates NULL) and a NULL token's
-    one-point window come back from read_tier unchanged."""
-    rows = [
-        ("a", 0, 0, 1, 5, 5, 5, False),
-        ("a", 0, 1, 1, None, None, None, False),  # NULL token
-        ("a", 0, 2, 0, None, None, None, True),  # gap
-        ("a", 0, 3, 3, -4, 7, 5, False),
-        ("b", 0, 0, 1, -2, -2, -2, False),
-    ]
-    df = spark.createDataFrame(
-        rows,
-        "doc_id string, tier int, window_idx long, agg_count long, agg_min int, "
-        "agg_max int, agg_sum long, gapfilled boolean",
-    )
-    base = str(tmp_path / "store")
-    _stored_form(df).write.parquet(os.path.join(base, "rollup", "tier=0", "bucket=0"))
-    assert _tier_rows(read_tier(spark, base, 0)) == sorted(rows)
+    for _sweep in range(2):
+        apply_retention(spark, base_dir)
+        for tier, tdf in tiers.items():
+            expected = retention_sweep(tdf, DEFAULT_RETENTION_POLICY)
+            assert _tier_rows(read_tier(spark, base_dir, tier)) == _tier_rows(expected), tier
+        assert _max_stored_tokens(spark, base_dir) == DEFAULT_RETENTION_POLICY[0]
 
 
 def test_encoded_footers_keep_no_blob_statistics(spark, base_dir):
@@ -296,19 +277,37 @@ def test_encoded_footers_keep_no_blob_statistics(spark, base_dir):
 
 def test_manifest_bytes_equal_directory_walk(spark, base_dir):
     """Each manifest records the data-file bytes of every output
-    directory the bucket wrote; each retention record the per-tier bytes
-    after its swap."""
+    directory the bucket wrote; each retention record the bytes of the
+    tier and encoded directories after its sweep."""
     (m,) = run_pipeline(spark, base_dir, buckets=[1])
     dirs = {f"tier{t}": os.path.join(base_dir, "rollup", f"tier={t}", "bucket=1")
-            for t in (0, 1, 2)}
+            for t in (1, 2)}
     dirs.update({out: os.path.join(base_dir, out, "bucket=1")
                  for out in ("encoded", "timeline")})
     assert m["bytes"] == {name: _walk_bytes(path) for name, path in dirs.items()}
     assert all(n > 0 for n in m["bytes"].values())
 
     (record,) = apply_retention(spark, base_dir, {0: 4, 1: 2, 2: 1}, buckets=[1])
-    swept = {f"tier{t}": _walk_bytes(dirs[f"tier{t}"]) for t in (0, 1, 2)}
+    swept = {name: _walk_bytes(dirs[name]) for name in ("tier1", "tier2", "encoded")}
     assert record["bytes"] == swept
-    assert swept["tier0"] < m["bytes"]["tier0"]
+    assert swept["encoded"] < m["bytes"]["encoded"]
     (committed,) = pipeline_metrics(base_dir)
     assert committed["retention"] == [record]
+
+
+def test_recorded_bytes_sum_to_the_buckets_directories(spark, base_dir):
+    """A bucket's recorded bytes add up to every output directory it has
+    on disk (whatever the names), before and after a sweep: no output is
+    left out of the record and no stale directory is left behind."""
+
+    def bucket_dirs_bytes(bucket):
+        return sum(
+            _dir_bytes(root)
+            for root, dirs, _files in os.walk(base_dir)
+            if os.path.basename(root) == f"bucket={bucket}" and "tokens_bucketed" not in root
+        )
+
+    (m,) = run_pipeline(spark, base_dir, buckets=[2], with_timeline=False)
+    assert sum(m["bytes"].values()) == bucket_dirs_bytes(2) > 0
+    (record,) = apply_retention(spark, base_dir, buckets=[2])
+    assert sum(record["bytes"].values()) == bucket_dirs_bytes(2)

@@ -218,3 +218,16 @@ class TestChordBehavior:
         pm.simulate_add_and_calculate_all([63.0, 67.0])
         assert pm.n == before_n
         assert pm.timeline() == before_tl
+
+    def test_push_pop_round_trips_keep_the_set_store(self):
+        """Each push appends in place and each pop removes it again: after
+        many round trips the store holds exactly the original sets."""
+        data = [[60.0, 64.0], [62.0], [60.0, 64.0], [62.0]]
+        pm = _poly_mgr(data)
+        before, n = pm.data_view(), pm._n
+        for k in range(50):
+            pm._push([float(k), 1.0] if k % 2 else float(k))
+            assert len(pm._sets) == pm._n == n + 1
+            pm._pop()
+        assert pm.data_view() == before
+        assert len(pm._sets) == pm._n == n

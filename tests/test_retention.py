@@ -72,10 +72,10 @@ class TestPlan:
 
 
 class TestApplyRetention:
-    def test_end_to_end_over_bucketed_layout(self, spark, tokens_df, tmp_path):
+    def test_end_to_end_over_bucketed_layout(self, spark, raw_tokens_df, tmp_path):
         base = str(tmp_path / "ret")
-        ingest(spark, tokens_df, base, n_buckets=2)
-        run_pipeline(spark, base, with_timeline=False, with_encoded=False)
+        ingest(spark, raw_tokens_df, base, n_buckets=2)
+        run_pipeline(spark, base, with_timeline=False)
 
         before = {t: read_tier(spark, base, t).count() for t in (0, 1, 2)}
         records = apply_retention(spark, base, DEFAULT_RETENTION_POLICY)
@@ -84,7 +84,7 @@ class TestApplyRetention:
 
         # expected survivors: recompute the sweep from scratch per tier
         for tier in (0, 1, 2):
-            t_all = tiered_rollups(tokens_df, with_gapfill=True)[tier]
+            t_all = tiered_rollups(raw_tokens_df, with_gapfill=True)[tier]
             expected = retention_sweep(t_all, DEFAULT_RETENTION_POLICY).count()
             assert after[tier] == expected
             assert after[tier] <= before[tier]
@@ -96,15 +96,17 @@ class TestApplyRetention:
             m = json.load(f)
         assert m["retention"][0]["tiers"]["0"]["rows_after"] <= m["retention"][0]["tiers"]["0"]["rows_before"]
 
-    def test_sweep_is_idempotent(self, spark, tokens_df, tmp_path):
+    def test_sweep_is_idempotent(self, spark, raw_tokens_df, tmp_path):
         base = str(tmp_path / "ret2")
-        ingest(spark, tokens_df, base, n_buckets=2)
-        run_pipeline(spark, base, with_timeline=False, with_encoded=False)
+        ingest(spark, raw_tokens_df, base, n_buckets=2)
+        run_pipeline(spark, base, with_timeline=False)
         apply_retention(spark, base)
         first = {t: sorted(map(tuple, read_tier(spark, base, t).collect())) for t in (0, 1)}
+        blobs = sorted(map(tuple, spark.read.parquet(os.path.join(base, "encoded")).collect()))
         apply_retention(spark, base)
         second = {t: sorted(map(tuple, read_tier(spark, base, t).collect())) for t in (0, 1)}
         assert first == second
+        assert sorted(map(tuple, spark.read.parquet(os.path.join(base, "encoded")).collect())) == blobs
 
 
 def _rows(df):
@@ -115,11 +117,12 @@ def _rows(df):
 
 
 @pytest.fixture()
-def swept_base(spark, tokens_df, tmp_path):
-    """Two-bucket pipeline layout with its tier rollups written."""
+def swept_base(spark, raw_tokens_df, tmp_path):
+    """Two-bucket pipeline layout of ``raw_tokens_df`` with its tier
+    rollups and encoded table written."""
     base = str(tmp_path / "edge")
-    ingest(spark, tokens_df, base, n_buckets=2)
-    run_pipeline(spark, base, with_timeline=False, with_encoded=False)
+    ingest(spark, raw_tokens_df, base, n_buckets=2)
+    run_pipeline(spark, base, with_timeline=False)
     return base
 
 
@@ -154,29 +157,35 @@ class TestApplyRetentionEdges:
         assert sorted(records[1]["tiers"]) == ["0", "1", "2"]
         assert not os.path.exists(missing)
 
-    def test_leftover_tmp_dir_is_invisible_and_overwritten(self, spark, tokens_df, swept_base):
-        """A sweep interrupted after its write leaves its tmp dir behind:
-        read_tier must not see it, and the next sweep replaces it."""
+    def test_leftover_tmp_dir_is_invisible_and_overwritten(self, spark, raw_tokens_df, swept_base):
+        """A sweep interrupted after its write leaves its tmp dirs behind:
+        read_tier must not see them, and the next sweep replaces them."""
         tmp = os.path.join(swept_base, "rollup", "_retention_tmp_bucket=0")
-        stale = read_tier(spark, swept_base, 0).limit(5)
-        stale.withColumn("sweep_tier", F.lit(0)).write.partitionBy("sweep_tier").parquet(tmp)
-        assert _rows(read_tier(spark, swept_base, 0)) == _rows(
-            tiered_rollups(tokens_df, with_gapfill=True)[0]
+        stale = read_tier(spark, swept_base, 1).limit(5)
+        stale.withColumn("sweep_tier", F.lit(1)).write.partitionBy("sweep_tier").parquet(tmp)
+        enc_tmp = os.path.join(swept_base, "encoded", "_retention_tmp_0")
+        spark.read.parquet(os.path.join(swept_base, "encoded", "bucket=0")).limit(5).write.parquet(
+            enc_tmp
         )
+        for tier in (0, 1):
+            assert _rows(read_tier(spark, swept_base, tier)) == _rows(
+                tiered_rollups(raw_tokens_df, with_gapfill=True)[tier]
+            )
 
         apply_retention(spark, swept_base)
         assert not os.path.exists(tmp)
+        assert not os.path.exists(enc_tmp)
         for tier in (0, 1, 2):
             expected = retention_sweep(
-                tiered_rollups(tokens_df, with_gapfill=True)[tier], DEFAULT_RETENTION_POLICY
+                tiered_rollups(raw_tokens_df, with_gapfill=True)[tier], DEFAULT_RETENTION_POLICY
             )
             assert _rows(read_tier(spark, swept_base, tier)) == _rows(expected)
 
-    def test_observed_counts_equal_per_tier_counts(self, spark, tokens_df, swept_base):
+    def test_observed_counts_equal_per_tier_counts(self, spark, raw_tokens_df, swept_base):
         """The Observation-derived rows_before/rows_after summed over
         buckets equal per-tier count()s of the sweep on the raw corpus."""
         records = apply_retention(spark, swept_base)
-        tiers = tiered_rollups(tokens_df, with_gapfill=True)
+        tiers = tiered_rollups(raw_tokens_df, with_gapfill=True)
         for tier, tdf in tiers.items():
             got = {
                 field: sum(r["tiers"][str(tier)][field] for r in records)
@@ -186,6 +195,19 @@ class TestApplyRetentionEdges:
                 "rows_before": tdf.count(),
                 "rows_after": retention_sweep(tdf, DEFAULT_RETENTION_POLICY).count(),
             }
+
+
+    def test_policy_without_tier0_keeps_the_raw_archive(self, spark, raw_tokens_df, swept_base):
+        """Tier 0 absent from the policy: the encoded blobs stay whole and
+        the record has no tier-0 entry, like any tier the policy omits."""
+        encoded = os.path.join(swept_base, "encoded")
+        blobs = sorted(map(tuple, spark.read.parquet(encoded).collect()))
+        records = apply_retention(spark, swept_base, {1: 2, 2: 1})
+        assert all(sorted(r["tiers"]) == ["1", "2"] for r in records)
+        assert sorted(map(tuple, spark.read.parquet(encoded).collect())) == blobs
+        assert _rows(read_tier(spark, swept_base, 0)) == _rows(
+            tiered_rollups(raw_tokens_df, with_gapfill=True)[0]
+        )
 
 
 class TestStreamingRetention:

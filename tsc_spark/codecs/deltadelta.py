@@ -7,13 +7,19 @@ TSDB delta-of-delta scheme (Gorilla §4.1 timestamp encoding, adapted to
 token values): v[0], d[0]=v[1]-v[0], then dod[i]=d[i]-d[i-1], each
 zigzag-mapped and LEB128-varint packed.
 
-Layout per doc: [varint n] [zigzag-varint stream of n values: v0, d0, dod...].
+Layout per doc: [varint n] [zigzag-varint stream of n values: v0, d0,
+dod...] [varint in-doc position of each NULL element].  A NULL element
+takes the value 0 in the stream; a doc without NULL elements ends after
+its values, so only a doc that holds a NULL pays for its validity, and
+the decoder tells the two apart by the doc's varint count (n + 1 means
+no NULL).
 
 ``encode``/``decode`` work on a whole Arrow batch at once: one delta,
 zigzag and LEB128 pass over the batch's concatenated values (each doc's
-first two positions patched, its ``n`` header interleaved), and decode
-rebuilds the values with two segmented cumulative sums. A NULL doc maps
-to a NULL output. ``encode_dod``/``decode_dod`` are the one-doc calls.
+first two positions patched, its ``n`` header and NULL positions
+interleaved), and decode rebuilds the values with two segmented
+cumulative sums. A NULL doc maps to a NULL output. ``encode_dod``/
+``decode_dod`` are the one-doc calls.
 """
 
 from __future__ import annotations
@@ -73,13 +79,16 @@ def _segmented_cumsum(x: np.ndarray, offsets: np.ndarray) -> np.ndarray:
     return c[1:] - np.repeat(c[offsets[:-1]], np.diff(offsets))
 
 
+def _ranges(first: np.ndarray, counts: np.ndarray) -> np.ndarray:
+    """Concatenated ``range(first[i], first[i] + counts[i])``."""
+    return np.arange(counts.sum()) + np.repeat(first - np.cumsum(counts) + counts, counts)
+
+
 def encode(tokens: pa.Array) -> pa.Array:
     """list<int> array -> binary array of DoD blobs, one per doc."""
     valid = tokens.is_valid().to_numpy(zero_copy_only=False)
     flat = tokens.flatten()
-    if flat.null_count:
-        raise ValueError("a token array holds a NULL element")
-    v = flat.to_numpy(zero_copy_only=False).astype(np.int64)
+    v = flat.fill_null(0).to_numpy(zero_copy_only=False).astype(np.int64)
     lens = pc.list_value_length(tokens).fill_null(0).to_numpy(zero_copy_only=False)
     starts = np.zeros(len(tokens) + 1, dtype=np.int64)
     np.cumsum(lens, out=starts[1:])
@@ -88,17 +97,20 @@ def encode(tokens: pa.Array) -> pa.Array:
     s = np.diff(d, prepend=np.int64(0))
     first, second = starts[:-1][lens > 0], starts[:-1][lens > 1] + 1
     s[first], s[second] = v[first], d[second]
-    # stream with an n header ahead of each non-NULL doc's values
+    # stream per non-NULL doc: n header, values, positions of its NULLs
+    nulls = np.flatnonzero(flat.is_null().to_numpy(zero_copy_only=False))
+    n_null = np.diff(np.searchsorted(nulls, starts))
     heads = np.zeros(len(tokens) + 1, dtype=np.int64)
-    np.cumsum(valid, out=heads[1:])
-    stream = np.empty(starts[-1] + heads[-1], dtype=np.uint64)
+    np.cumsum(valid + lens + n_null, out=heads[1:])
+    stream = np.empty(heads[-1], dtype=np.uint64)
     body = np.ones(stream.shape[0], dtype=bool)
-    hpos = (starts[:-1] + heads[:-1])[valid]
-    body[hpos] = False
+    hpos, npos = heads[:-1][valid], _ranges(heads[:-1] + 1 + lens, n_null)
+    body[hpos] = body[npos] = False
     stream[hpos] = lens[valid]
+    stream[npos] = nulls - np.repeat(starts[:-1], n_null)
     stream[body] = _zigzag(s)
     data, val_offsets = _varint_encode(stream)
-    doc_offsets = val_offsets[starts + heads].astype(np.int32)
+    doc_offsets = val_offsets[heads].astype(np.int32)
     mask = None if valid.all() else pa.array(valid).buffers()[1]
     return pa.Array.from_buffers(
         pa.binary(), len(tokens), [mask, pa.py_buffer(doc_offsets), pa.py_buffer(data)]
@@ -114,11 +126,22 @@ def decode(blobs: pa.Array) -> pa.Array:
         offs = np.frombuffer(offs_buf, np.int32)[blobs.offset :][: len(blobs) + 1]
     data = np.frombuffer(data_buf or b"", np.uint8)
     vals, vidx = _varint_decode(data[offs[0] : offs[-1]])
-    hidx = vidx[offs[:-1] - offs[0]][valid]
+    vfirst = vidx[offs - offs[0]]  # each blob's first varint, the total appended
+    n_var = np.diff(vfirst)
+    headed = valid & (n_var > 0)
+    hidx = vfirst[:-1][headed]
     lens = np.zeros(len(blobs), dtype=np.int64)
-    lens[valid] = vals[hidx]
+    lens[headed] = vals[hidx]
+    # varints past a doc's header and n values are its NULL positions
+    n_null = np.where(valid, n_var - 1 - lens, 0)
+    if ((n_null < 0) | (lens < 0)).any():
+        raise ValueError("corrupt DoD stream: headers and value count disagree")
+    nidx = _ranges(vfirst[1:] - n_null, n_null)
+    pos = vals[nidx]
+    if (pos >= np.repeat(lens, n_null).astype(np.uint64)).any():
+        raise ValueError("corrupt DoD stream: a NULL position past its doc")
     body = np.ones(vals.shape[0], dtype=bool)
-    body[hidx] = False
+    body[hidx] = body[nidx] = False
     s = _unzigzag(vals[body])
     starts = np.zeros(len(blobs) + 1, dtype=np.int64)
     np.cumsum(lens, out=starts[1:])
@@ -132,7 +155,9 @@ def decode(blobs: pa.Array) -> pa.Array:
     d = _segmented_cumsum(d, starts)
     d[first] = s[first]
     mask = None if valid.all() else pa.array(~valid)
-    values = pa.array(_segmented_cumsum(d, starts))
+    nulls = np.zeros(s.shape[0], dtype=bool)
+    nulls[np.repeat(starts[:-1], n_null) + pos.astype(np.int64)] = True
+    values = pa.array(_segmented_cumsum(d, starts), mask=nulls if pos.size else None)
     return pa.ListArray.from_arrays(pa.array(starts.astype(np.int32)), values, mask=mask)
 
 

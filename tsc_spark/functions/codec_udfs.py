@@ -3,7 +3,8 @@
 Each is a scalar ``arrow_udf``: a column crosses the JVM↔Python boundary
 as one Arrow array per batch (an ``ArrowEvalPython`` plan node) and
 ``tsc_spark.codecs.encode``/``decode`` transform the whole array in one
-vectorized pass — no per-doc Python, no pandas. A NULL doc stays NULL."""
+vectorized pass — no per-doc Python, no pandas. A NULL doc stays NULL, and
+so does a NULL token element."""
 
 from __future__ import annotations
 
@@ -48,7 +49,12 @@ def encode_tokens_table(tokens_df: DataFrame) -> DataFrame:
 
 
 def decode_tokens_table(encoded_df: DataFrame) -> DataFrame:
-    """Inverse of encode_tokens_table: restore the tokens column.
+    """Inverse of encode_tokens_table: the ``encoded`` and
+    ``codec_version`` columns become ``tokens``, the others pass through.
+
+    After a retention sweep (operators.retention.apply_retention) a blob
+    holds only the retained tail of its doc, so ``tokens`` is that tail
+    while ``n_tok`` still counts the whole series.
 
     Validates ``codec_version`` (the column encode_tokens_table stamps
     exactly so decoding can be gated): an unknown version raises a clear
@@ -67,9 +73,6 @@ def decode_tokens_table(encoded_df: DataFrame) -> DataFrame:
         )
     else:
         version_ok = F.col("encoded")
-    return encoded_df.select(
-        "doc_id",
-        decode_tokens_udf(version_ok).alias("tokens"),
-        "n_tok",
-        "source",
+    return encoded_df.withColumn("tokens", decode_tokens_udf(version_ok)).drop(
+        "encoded", "codec_version"
     )

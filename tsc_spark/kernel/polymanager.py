@@ -103,7 +103,6 @@ class PolyClusterManager(ClusterManager):
     def _push(self, value) -> None:
         if np.isscalar(value):
             value = [float(value)]
-        self._sets = self._sets[: self._n]
         self._sets.append([float(v) for v in value])
         self._n += 1
 

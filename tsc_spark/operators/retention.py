@@ -15,9 +15,10 @@ scalable engine operator:
   segments are metadata-only partition drops and only boundary
   segments are rewritten, which is what keeps a 100 TB sweep cheap;
 * ``apply_retention`` → sweeps the bucketed pipeline layout
-  (plans.pipeline) in one Spark job per bucket — all of the bucket's
-  tiers in one uncached pass, row counts from ``Observation``s — and
-  records the sweep in each bucket manifest.
+  (plans.pipeline) per bucket — tiers 1/2 in one uncached pass, tier 0
+  (the DoD ``encoded`` table) in one narrow decode → tail → encode
+  ``mapInArrow`` pass, row counts from ``Observation``s — and records
+  the sweep in each bucket manifest.
 """
 
 from __future__ import annotations
@@ -27,8 +28,13 @@ import os
 import shutil
 from functools import reduce
 
+import numpy as np
+import pyarrow as pa
 from pyspark.sql import DataFrame, Observation, Window
 from pyspark.sql import functions as F
+from pyspark.sql.types import LongType, StructField, StructType
+
+from ..codecs import decode, encode
 
 __all__ = [
     "DEFAULT_RETENTION_POLICY",
@@ -134,25 +140,60 @@ def retention_plan(
     )
 
 
+def _keep_tail(batch: pa.RecordBatch, keep: int) -> pa.RecordBatch:
+    """An ``encoded`` batch with every blob cut to its last ``keep``
+    tokens, plus each doc's stored token count before and after the cut."""
+    tokens = decode(batch.column("encoded"))
+    offsets = tokens.offsets.to_numpy().astype(np.int64)
+    lens = np.diff(offsets)
+    kept = np.minimum(lens, keep)
+    tail = pa.ListArray.from_arrays(
+        pa.array(np.concatenate(([0], np.cumsum(kept))).astype(np.int32)),
+        tokens.values.take(np.arange(kept.sum()) + np.repeat(offsets[1:] - np.cumsum(kept), kept)),
+        mask=tokens.is_null(),
+    )
+    names = batch.schema.names
+    columns = [encode(tail) if name == "encoded" else col for name, col in zip(names, batch.columns)]
+    return pa.RecordBatch.from_arrays(
+        columns + [pa.array(lens), pa.array(kept)], names=names + ["n_before", "n_after"]
+    )
+
+
+def _trim_encoded(spark, path: str, tmp: str, keep: int) -> dict:
+    """Cut every blob under ``path`` to its last ``keep`` tokens (written
+    to ``tmp``, then swapped in); returns the tier-0 rows before/after."""
+    from ..plans.pipeline import _write_encoded  # layout owner
+
+    stored = spark.read.parquet(path)
+    counts = [StructField(name, LongType()) for name in ("n_before", "n_after")]
+    counted = Observation()
+    trimmed = stored.mapInArrow(
+        lambda batches: (_keep_tail(b, keep) for b in batches),
+        StructType(stored.schema.fields + counts),
+    ).observe(counted, F.sum("n_before").alias("rows_before"), F.sum("n_after").alias("rows_after"))
+    _write_encoded(trimmed.drop("n_before", "n_after"), tmp)
+    swap_in_dir(path, tmp)  # crash-recoverable, see swap_in_dir
+    return {k: int(v or 0) for k, v in counted.get.items()}
+
+
 def apply_retention(
     spark,
     base_dir: str,
     policy: dict[int, int] | None = None,
     buckets: list[int] | None = None,
 ) -> list[dict]:
-    """Execute the sweep over the bucketed pipeline layout, one Spark
-    job per bucket.
+    """Execute the sweep over the bucketed pipeline layout, bucket by
+    bucket.
 
-    Per bucket: union the tier directories (tiers without one are
-    skipped), sweep them once, write the survivors ``partitionBy`` tier
-    into a hidden tmp dir, swap each tier directory in, and append a
-    ``retention`` record (policy, per-tier rows before/after, from two
-    ``Observation``s on that one write, and per-tier on-disk bytes
-    after the swap) to the bucket manifest.  Nothing is cached, so AQE
-    coalesces the output into one file per tier.  Rows pass through in
-    their stored form (a one-point window keeps only ``agg_min``; see
-    plans.pipeline): the sweep looks only at the keys and
-    ``window_idx``, so nothing is decoded or re-encoded."""
+    Per bucket: cut each ``encoded`` blob to its last ``policy[0]``
+    tokens (``_trim_encoded``; without tier 0 in the policy the raw
+    archive stays whole); union the tier 1/2 directories (tiers without
+    one are skipped), sweep them once, write the survivors
+    ``partitionBy`` tier into a hidden tmp dir and swap each tier
+    directory in; and append a ``retention`` record (policy, per-tier
+    rows before/after from ``Observation``s, on-disk bytes of every
+    swept directory) to the bucket manifest.  Nothing is cached, so AQE
+    coalesces the output into one file per tier."""
     from ..plans.pipeline import _commit_manifest, _dir_bytes, _manifest_path  # layout owner
 
     pol = DEFAULT_RETENTION_POLICY if policy is None else policy
@@ -169,12 +210,14 @@ def apply_retention(
             "bucket": bucket,
             "policy": {str(k): v for k, v in pol.items()},
             "tiers": {},
-            "bytes": {},
         }
-        paths = {
-            t: os.path.join(base_dir, "rollup", f"tier={t}", f"bucket={bucket}")
-            for t in sorted(pol)
-        }
+        encoded = os.path.join(base_dir, "encoded", f"bucket={bucket}")
+        if 0 in pol and os.path.isdir(encoded):
+            # "_"-prefixed without "=": a read of the encoded table skips it
+            tmp = os.path.join(base_dir, "encoded", f"_retention_tmp_{bucket}")
+            record["tiers"]["0"] = _trim_encoded(spark, encoded, tmp, pol[0])
+        paths = {t: os.path.join(base_dir, "rollup", f"tier={t}", f"bucket={bucket}")
+                 for t in sorted(pol) if t > 0}
         tiers = [t for t, path in paths.items() if os.path.isdir(path)]
         if tiers:
             counts = [F.count(F.when(F.col("tier") == t, 1)).alias(str(t)) for t in tiers]
@@ -197,10 +240,11 @@ def apply_retention(
                     spark.createDataFrame([], survivors.schema).write.parquet(tier_tmp)
                 swap_in_dir(paths[t], tier_tmp)  # crash-recoverable, see swap_in_dir
             shutil.rmtree(tmp)
-            record["tiers"] = {
-                k: {"rows_before": n, "rows_after": after.get[k]} for k, n in before.get.items()
-            }
-            record["bytes"] = {f"tier{t}": _dir_bytes(paths[t]) for t in tiers}
+            record["tiers"].update(
+                {k: {"rows_before": n, "rows_after": after.get[k]} for k, n in before.get.items()}
+            )
+        swept = {f"tier{t}": paths[t] for t in tiers} | {"encoded": encoded}
+        record["bytes"] = {k: _dir_bytes(d) for k, d in swept.items() if os.path.isdir(d)}
         with open(mpath) as f:
             manifest = json.load(f)
         manifest.setdefault("retention", []).append(record)

@@ -10,15 +10,14 @@ watermarks) and per-bucket metrics; a resumed run skips every bucket
 with a manifest — the file-level equivalent of
 ``source LEFT ANTI JOIN done_partitions`` (SURVEY §2.3).
 
-Each value is stored once.  A tier window with ``agg_count == 1`` is
-written with ``agg_max`` and ``agg_sum`` NULL, because both equal
-``agg_min`` (on tier 0 that is every row of a present token, which
-otherwise stores each token three times); ``read_tier``, the one reader
-of the tier store, restores them, and count-0 rows (gaps and NULL
-tokens, all aggregates NULL) pass unchanged.  The ``encoded`` column is written without parquet column
-statistics: a min/max over DoD blobs prunes nothing, and parquet-mr
-would store the largest whole blob in every file footer.  Each manifest records the on-disk
-bytes of every output directory the bucket wrote.
+Each raw value is stored once: the ``encoded`` table, one delta-of-delta
+blob per doc, is tier 0.  ``read_tier(spark, base, 0)`` rebuilds its
+rows; retention trims each blob to its last ``keep`` tokens while
+``n_tok`` keeps the series length.  The ``encoded`` column is written
+without parquet column statistics: a min/max over DoD blobs prunes
+nothing, and parquet-mr would store the largest whole blob in every
+file footer.  Each manifest records the on-disk bytes of every output
+directory the bucket wrote.
 
 At cluster scale, buckets map to independent jobs that can be retried /
 scheduled separately; n_buckets is chosen so one bucket ≈ a few hundred
@@ -35,7 +34,7 @@ from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from ..config import DEFAULT_MERGE_THRESHOLD_RATIO, TIER_STRIDES
-from ..functions.codec_udfs import encode_tokens_table
+from ..functions.codec_udfs import decode_tokens_table, encode_tokens_table
 from ..operators.clustering import cluster_timeline
 from ..operators.rollup import tiered_rollups
 
@@ -61,14 +60,12 @@ def _dir_bytes(path: str) -> int:
     )
 
 
-def _stored_form(tier_df: DataFrame) -> DataFrame:
-    """The tier rows as written: a one-point window keeps only
-    ``agg_min`` (``read_tier`` inverts this)."""
-    one = F.col("agg_count") == 1
-    return tier_df.withColumns({
-        "agg_max": F.when(~one, F.col("agg_max")),
-        "agg_sum": F.when(~one, F.col("agg_sum")),
-    })
+def _write_encoded(encoded_df: DataFrame, path: str) -> None:
+    """Write an ``encoded`` table without column statistics on the blobs
+    (a per-column parquet-mr setting: ``doc_id`` keeps its own)."""
+    encoded_df.write.mode("overwrite").option(
+        "parquet.column.statistics.enabled#encoded", "false"
+    ).parquet(path)
 
 
 def _commit_manifest(mpath: str, manifest: dict) -> None:
@@ -156,11 +153,13 @@ def _process_bucket(
     )
 
     # shuffle-free array-path rollup: windows never cross rows, so every
-    # tier is a narrow per-row transform (see operators.rollup.rollup_arrays)
+    # tier is a narrow per-row transform (see operators.rollup.rollup_arrays);
+    # tier 0 is the encoded table below
     written = {}
-    for tier, tdf in tiered_rollups(df, with_gapfill=True).items():
+    tiers = tiered_rollups(df, with_gapfill=True)
+    for tier in (1, 2):
         path = os.path.join(base_dir, "rollup", f"tier={tier}", f"bucket={bucket}")
-        _stored_form(tdf).write.mode("overwrite").parquet(path)
+        tiers[tier].write.mode("overwrite").parquet(path)
         written[f"tier{tier}"] = path
     stats = stats_obs.get
 
@@ -180,10 +179,7 @@ def _process_bucket(
         )
     if with_encoded:
         written["encoded"] = os.path.join(base_dir, "encoded", f"bucket={bucket}")
-        # per-column parquet-mr setting: doc_id keeps its statistics
-        encode_tokens_table(df).write.mode("overwrite").option(
-            "parquet.column.statistics.enabled#encoded", "false"
-        ).parquet(written["encoded"])
+        _write_encoded(encode_tokens_table(df), written["encoded"])
 
     elapsed = time.time() - t0
     manifest = {
@@ -213,6 +209,7 @@ def run_pipeline(
 ) -> list[dict]:
     """Process every (remaining) bucket; returns the manifests written.
 
+    ``with_encoded=False`` stores no raw tier (no tier 0 at all).
     ``resume=True`` skips buckets whose checkpoint manifest exists, so a
     killed run restarts without duplicate work."""
     with open(os.path.join(base_dir, "_ingest.json")) as f:
@@ -253,15 +250,24 @@ def read_tier(spark: SparkSession, base_dir: str, tier: int) -> DataFrame:
     """All buckets of one tier, in the logical schema ``tiered_rollups``
     emits (plus the ``bucket`` partition column).
 
-    Restores the aggregates a one-point window does not store:
-    ``agg_max`` and ``agg_sum`` equal ``agg_min`` there.  Gap rows keep
-    their NULLs (every aggregate is NULL), and a layout written with all
-    columns stored reads the same."""
-    stored = spark.read.parquet(os.path.join(base_dir, "rollup", f"tier={tier}"))
-    return stored.withColumns({
-        "agg_max": F.coalesce("agg_max", "agg_min"),
-        "agg_sum": F.coalesce("agg_sum", F.col("agg_min").cast("long")),
-    })
+    Tier 0 is rebuilt from the ``encoded`` table: one row per decoded
+    token (a NULL token gives a count-0 row), whose ``window_idx`` is its
+    position plus ``n_tok - size(tokens)``, so a blob that retention cut
+    to its tail keeps its indices."""
+    if tier:
+        return spark.read.parquet(os.path.join(base_dir, "rollup", f"tier={tier}"))
+    decoded = decode_tokens_table(spark.read.parquet(os.path.join(base_dir, "encoded")))
+    token = F.col("token")
+    return decoded.select(
+        "doc_id", "bucket", (F.col("n_tok") - F.size("tokens")).alias("offset"),
+        F.posexplode("tokens").alias("pos", "token"),
+    ).select(
+        "doc_id", F.lit(0).alias("tier"),
+        (F.col("pos") + F.col("offset")).cast("long").alias("window_idx"),
+        token.isNotNull().cast("long").alias("agg_count"), token.alias("agg_min"),
+        token.alias("agg_max"), token.cast("long").alias("agg_sum"),
+        F.lit(False).alias("gapfilled"), "bucket",
+    )
 
 
 def pipeline_metrics(base_dir: str) -> list[dict]:
