@@ -493,29 +493,13 @@ FROM m JOIN halves USING (doc_id)"""
 
 def q_text_stats(spark, sf_dir):
     """The per-doc text signals — token counts, quality heuristics,
-    language, fingerprint, repetition and PII counts — one operator
-    each, joined on doc_id.  Every operator emits exactly one row per
-    doc, so the inner join keeps every value and a dropped or
-    duplicated row still shows in the row count."""
-    from tsc_spark.operators import text
+    language, fingerprint, repetition and PII counts — one select over
+    one scan of ``documents`` (operators.text.text_stats)."""
+    from tsc_spark.operators.text import text_stats
 
-    docs = _docs(spark, sf_dir).withColumn("doc_id", F.col("doc_id").cast("string"))
-    out = text.token_stats(docs).select(
-        "doc_id",
-        F.col("n_words").cast("long").alias("n_words"),
-        F.col("n_chars").cast("long").alias("n_chars"),
-        F.col("n_tokens_est").cast("long").alias("n_tokens_est"),
+    return text_stats(
+        _docs(spark, sf_dir).withColumn("doc_id", F.col("doc_id").cast("string"))
     )
-    # quality_scores' n_words is token_stats' (same definition): carried once
-    for part in (
-        text.quality_scores(docs).drop("n_words"),
-        text.lang_id(docs),
-        text.fingerprint(docs),
-        text.repetition_stats(docs),
-        text.pii_stats(docs),
-    ):
-        out = out.join(part, "doc_id")
-    return out
 
 
 SQL_TOKEN_STATS = """

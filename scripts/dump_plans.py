@@ -66,6 +66,31 @@ def main() -> None:
                 df.explain("formatted")
             out.append(f"## {name}\n\n```\n{buf.getvalue().rstrip()}\n```\n")
             written += 1
+            if name == "bucketed_rollup_join":
+                # the query returns a parquet snapshot of its result; the
+                # join it snapshots reads the two bucketed tables it just
+                # wrote, and that plan is the zero-Exchange evidence.
+                # Broadcast is off for it: at gate scale both sides would
+                # broadcast, which is not the corpus-scale plan
+                from tsc_spark.plans.bucketing import bucketed_join
+
+                key = "spark.sql.autoBroadcastJoinThreshold"
+                prev = spark.conf.get(key)
+                spark.conf.set(key, "-1")
+                buf = io.StringIO()
+                try:
+                    with redirect_stdout(buf):
+                        bucketed_join(spark, "tsc_bq_tokens", "tsc_bq_rollup").explain(
+                            "formatted"
+                        )
+                finally:
+                    spark.conf.set(key, prev)
+                out.append(
+                    "## bucketed_rollup_join (the bucketed join before the "
+                    "snapshot, broadcast off: SortMergeJoin, no Exchange)"
+                    f"\n\n```\n{buf.getvalue().rstrip()}\n```\n"
+                )
+                written += 1
             if name == "dedup_groups":
                 # at gate scale the CC hybrid finishes the small graph on
                 # the driver, so the default plan is just an ExistingRDD

@@ -33,6 +33,16 @@ def test_dod_roundtrip_synth_corpus():
         assert decode_dod(encode_dod(toks)).tolist() == toks, doc_id
 
 
+def test_decode_dod_rejects_null_elements():
+    """decode_dod's int64 form cannot hold a NULL token element: such a
+    blob raises a clear ValueError naming decode, which keeps the NULL."""
+    blob = encode(pa.array([[1, None, 3]], pa.list_(pa.int32())))[0].as_py()
+    with pytest.raises(ValueError, match=r"NULL token element.*decode\(\)"):
+        decode_dod(blob)
+    assert decode(pa.array([blob], pa.binary())).to_pylist() == [[1, None, 3]]
+    assert decode_dod(encode_dod([1, 2, 3])).dtype == "int64"
+
+
 def test_dod_compresses_constant_runs():
     toks = [7] * 1000
     assert len(encode_dod(toks)) < 1010  # ~1 byte/value worst, constant ≈ n bytes

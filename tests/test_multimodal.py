@@ -74,7 +74,7 @@ def test_video_frame_sampling_is_metadata_only(media_df):
 
 class TestQualityFilters:
     def test_repetition_stats_on_crafted_docs(self, spark):
-        from tsc_spark.operators.text import repetition_stats
+        from tsc_spark.operators.text import text_stats
 
         docs = spark.createDataFrame(
             [
@@ -85,7 +85,7 @@ class TestQualityFilters:
             ],
             "doc_id string, text string",
         )
-        out = {r.doc_id: r for r in repetition_stats(docs).collect()}
+        out = {r.doc_id: r for r in text_stats(docs).collect()}
         assert out["r"].top_bigram_frac == 0.6
         assert out["u"].top_bigram_frac == round(1 / 3, 6)
         assert out["l"].dup_line_frac == round(1 / 3, 6)
@@ -98,7 +98,7 @@ class TestQualityFilters:
         randomized docs, including repetition-heavy ones."""
         import random
 
-        from tsc_spark.operators.text import repetition_stats
+        from tsc_spark.operators.text import text_stats
 
         rng = random.Random(41)
         vocab = ["a", "b", "c", "dd", "e"]
@@ -110,7 +110,7 @@ class TestQualityFilters:
                 words = words[:2] * (n // 2)
             rows.append((str(i), " ".join(words)))
         docs = spark.createDataFrame(rows, "doc_id string, text string")
-        got = {r.doc_id: r.top_bigram_frac for r in repetition_stats(docs).collect()}
+        got = {r.doc_id: r.top_bigram_frac for r in text_stats(docs).collect()}
 
         from collections import Counter
 
@@ -126,8 +126,45 @@ class TestQualityFilters:
             )
             assert got[doc_id] == want, doc_id
 
+    def test_text_stats_matches_duckdb_twin(self, spark):
+        """text_stats equals its ANSI SQL twin (SQL_TEXT_STATS) run by
+        DuckDB on crafted docs: NULL and empty text, URLs and emails,
+        repeated lines, punctuation, stopwords, a single word and
+        whitespace runs.  Values compare like scripts/check_entry.py."""
+        import duckdb
+        import pandas as pd
+
+        import __spark_entry__ as entry
+        from scripts.check_entry import norm_rows
+        from tsc_spark.operators.text import text_stats
+
+        rows = [
+            (1, None),
+            (2, ""),
+            (3, "solo"),
+            (4, "see https://x.example/a and http://y.example, mail bob@example.com"),
+            (5, "The cat sat on the mat.\nThe cat sat on the mat.\nend"),
+            (6, "a b a b a b"),
+            (7, "Hello,   WORLD!\t tabs\n\nand  blank lines"),
+            (8, "x\nx\ny"),
+            (9, "one two three four five six seven eight nine ten eleven"),
+        ]
+        pdf = pd.DataFrame(rows, columns=["doc_id", "text"])
+        con = duckdb.connect()
+        con.register("documents", pdf)
+        want = con.sql(entry.SQL_TEXT_STATS)
+        want_cols, want_rows = want.columns, want.fetchall()
+        con.close()
+
+        docs = spark.createDataFrame(rows, "doc_id long, text string")
+        got = text_stats(docs.withColumn("doc_id", F.col("doc_id").cast("string")))
+        assert got.columns == want_cols
+        assert norm_rows(got.columns, [tuple(r) for r in got.collect()]) == norm_rows(
+            want_cols, want_rows
+        )
+
     def test_pii_stats_counts_urls_and_emails(self, spark):
-        from tsc_spark.operators.text import pii_stats
+        from tsc_spark.operators.text import text_stats
 
         docs = spark.createDataFrame(
             [
@@ -136,5 +173,5 @@ class TestQualityFilters:
             ],
             "doc_id string, text string",
         )
-        out = {r.doc_id: (r.url_count, r.email_count) for r in pii_stats(docs).collect()}
+        out = {r.doc_id: (r.url_count, r.email_count) for r in text_stats(docs).collect()}
         assert out == {"a": (2, 1), "b": (0, 0)}

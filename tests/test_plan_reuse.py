@@ -93,3 +93,45 @@ def test_lsh_pairs_plan_reads_checkpoint_not_parquet(spark, parquet_docs):
     # the banded self-join reads the checkpointed band table; the one
     # materialization job upstream is where the single corpus scan lives
     assert plan_file_scans(out) == 0, plan_nodes(out)
+
+
+_PY_EVAL = ("ArrowEvalPythonExec", "BatchEvalPythonExec")
+
+
+def test_text_stats_plan_one_scan_no_join(spark, parquet_docs):
+    """Every text signal comes from one select over one scan: no
+    per-signal re-scan of `documents` and no join back on doc_id."""
+    from tsc_spark.operators.text import text_stats
+
+    out = text_stats(parquet_docs)
+    assert out.count() == 44
+    nodes = plan_nodes(out)
+    assert plan_file_scans(out) == 1, nodes
+    assert not [n for n in nodes if "Join" in n], nodes
+
+
+def test_near_dup_embeddings_plan_one_bucket_self_join(spark, tmp_path):
+    """All LSH tables' buckets come from one matmul UDF into one stacked
+    (vec_id, table, bucket) table, paired by ONE checkpointed self-join;
+    only the two verify joins re-read the parquet embeddings."""
+    import numpy as np
+
+    from tsc_spark.operators.similarity import near_dup_embeddings
+
+    rng = np.random.default_rng(5)
+    base = rng.standard_normal(16)
+    vecs = [(i, rng.standard_normal(16).tolist()) for i in range(40)]
+    vecs += [(100 + i, (base + rng.standard_normal(16) * 0.01).tolist()) for i in range(3)]
+    path = str(tmp_path / "emb")
+    spark.createDataFrame(vecs, "vec_id long, embedding array<double>").write.parquet(path)
+
+    out = near_dup_embeddings(spark.read.parquet(path), dim=16, threshold=0.99)
+    pairs = {(r.vec_a, r.vec_b) for r in out.collect()}
+    assert {(100, 101), (100, 102), (101, 102)} <= pairs
+    nodes = plan_nodes(out)
+    assert plan_file_scans(out) <= 2, nodes
+    assert sum(n in _PY_EVAL for n in nodes) <= 1, nodes
+    # the bucket self-join is the one join whose both sides read the
+    # checkpointed bucket table; the others attach embeddings to pairs
+    assert sum("Join" in n for n in nodes) == 3, nodes
+    assert sum(n == "RDDScanExec" for n in nodes) == 2, nodes

@@ -168,5 +168,14 @@ def encode_dod(tokens) -> bytes:
 
 
 def decode_dod(data: bytes) -> np.ndarray:
-    """delta-of-delta bytes -> int64 array (exact round-trip)."""
-    return decode(pa.array([data], type=pa.binary())).values.to_numpy()
+    """delta-of-delta bytes -> int64 array (exact round-trip).
+
+    A blob that holds NULL token elements has no int64 form: it raises
+    ``ValueError``, and ``decode`` returns such a doc with its NULLs."""
+    values = decode(pa.array([data], type=pa.binary())).values
+    if values.null_count:
+        raise ValueError(
+            f"DoD blob holds {values.null_count} NULL token element(s);"
+            " use decode() to read them"
+        )
+    return values.to_numpy()

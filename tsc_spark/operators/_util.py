@@ -1,5 +1,6 @@
-"""Shared operator plumbing: the partition spreader and the per-row
-Python operator shell every per-doc kernel operator runs through."""
+"""Shared operator plumbing: the partition spreader, the per-row
+Python operator shell every per-doc kernel operator runs through, and
+the bucket self-join both LSH operators pair candidates with."""
 
 from __future__ import annotations
 
@@ -7,10 +8,11 @@ from typing import Callable, Iterable, Iterator, Sequence
 
 import pandas as pd
 from pyspark.sql import Column, DataFrame
+from pyspark.sql import functions as F
 
 from ..config import HEAVY_DOC_TOKEN_THRESHOLD
 
-__all__ = ["balance_for_kernel", "ensure_min_partitions", "map_rows"]
+__all__ = ["balance_for_kernel", "bucket_pairs", "ensure_min_partitions", "map_rows"]
 
 
 def balance_for_kernel(
@@ -79,3 +81,23 @@ def map_rows(
                 yield pd.DataFrame(rows)
 
     return ensure_min_partitions(df.select(*cols), cost).mapInPandas(run, schema)
+
+
+def bucket_pairs(stacked: DataFrame, id_col: str, out_a: str, out_b: str) -> DataFrame:
+    """Distinct id pairs ``(out_a < out_b)`` that share a bucket under
+    the same key: ``stacked`` holds ``id_col`` plus the key columns
+    (e.g. ``band, bucket``), one row per (id, key).
+
+    The stacked table is materialized (lazy localCheckpoint) before the
+    self-join: both join sides otherwise re-execute its upstream subtree
+    (a corpus scan plus the hashing); it holds ids × keys rows — small —
+    so checkpointing it is cheaper than one extra corpus pass."""
+    keys = [c for c in stacked.columns if c != id_col]
+    stacked = stacked.localCheckpoint(eager=False)
+    return (
+        stacked.alias("a")
+        .join(stacked.alias("b"), keys)
+        .filter(F.col(f"a.{id_col}") < F.col(f"b.{id_col}"))
+        .select(F.col(f"a.{id_col}").alias(out_a), F.col(f"b.{id_col}").alias(out_b))
+        .distinct()
+    )

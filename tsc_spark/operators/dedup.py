@@ -20,7 +20,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from ._util import ensure_min_partitions
+from ._util import bucket_pairs, ensure_min_partitions
 
 __all__ = [
     "exact_dup_groups",
@@ -37,6 +37,21 @@ __all__ = [
 def _norm_text() -> F.Column:
     # explicit class == RE2 \s (DuckDB oracle); Java \s would also eat \x0B
     return F.lower(F.regexp_replace(F.col("text"), "[ \t\n\f\r]+", " "))
+
+
+def _ngrams(words: F.Column, n: int) -> F.Column:
+    """The space-joined word n-grams of ``words`` in order; empty below
+    ``n`` words."""
+    # guard: sequence(0, size-n) is only valid when size >= n (Spark's
+    # sequence auto-steps backwards for stop < start, which would emit
+    # bogus negative indices)
+    return F.when(
+        F.size(words) >= n,
+        F.transform(
+            F.sequence(F.lit(0), F.size(words) - n),
+            lambda i: F.concat_ws(" ", F.slice(words, i + 1, n)),
+        ),
+    ).otherwise(F.array().cast("array<string>"))
 
 
 def exact_dup_groups(docs: DataFrame) -> DataFrame:
@@ -60,17 +75,7 @@ def shingles(
     ``extra_cols`` carries doc-level attributes (e.g. ``source``) through
     in the same scan — they're functionally dependent on doc_id, so the
     distinct is unaffected and callers avoid a re-scan + join."""
-    words = F.split(F.col("text"), " ")
-    # guard: sequence(0, size-n) is only valid when size >= n (Spark's
-    # sequence auto-steps backwards for stop < start, which would emit
-    # bogus negative indices)
-    sh = F.when(
-        F.size(words) >= n,
-        F.transform(
-            F.sequence(F.lit(0), F.size(words) - n),
-            lambda i: F.concat_ws(" ", F.slice(words, i + 1, n)),
-        ),
-    ).otherwise(F.array().cast("array<string>"))
+    sh = _ngrams(F.split(F.col("text"), " "), n)
     return (
         ensure_min_partitions(docs)
         .select("doc_id", *extra_cols, F.explode(sh).alias("shingle"))
@@ -183,18 +188,7 @@ def lsh_candidate_pairs(
             )
         ).alias("bb"),
     ).select("doc_id", "bb.band", "bb.bucket")
-    # materialize the banded table before the self-join: both join sides
-    # otherwise re-execute the shingle → minhash-groupBy subtree (2 full
-    # corpus scans); the banded table is docs × bands rows — tiny — so
-    # checkpointing it is strictly cheaper than one extra corpus pass
-    stacked = stacked.localCheckpoint(eager=False)
-    return (
-        stacked.alias("a")
-        .join(stacked.alias("b"), ["band", "bucket"])
-        .filter(F.col("a.doc_id") < F.col("b.doc_id"))
-        .select(F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"))
-        .distinct()
-    )
+    return bucket_pairs(stacked, "doc_id", "doc_a", "doc_b")
 
 
 def contamination_flags(

@@ -9,9 +9,12 @@ inside a bucket, turning the O(N·Q) scan into an equi-join.
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.functions import arrow_udf
+
+from ._util import bucket_pairs
 
 __all__ = [
     "cosine_scores",
@@ -26,19 +29,33 @@ __all__ = [
 ]
 
 
-def _batch_matrix(s) -> "np.ndarray":
-    """Stack an Arrow batch of embeddings into an (n, dim) float matrix,
-    failing with a CLEAR error on ragged lengths instead of numpy's
-    opaque inhomogeneous-shape crash (NULL rows are filtered upstream)."""
-    try:
-        m = np.array([np.asarray(v, dtype=np.float64) for v in s])
-    except ValueError as exc:  # numpy >= 1.24 raises on inhomogeneous rows
-        lens = sorted({len(v) for v in s})
-        raise ValueError(f"ragged embedding lengths in batch: {lens}") from exc
-    if m.dtype == object:  # older numpy builds an object array instead
-        lens = sorted({len(v) for v in s})
-        raise ValueError(f"ragged embedding lengths in batch: {lens}")
-    return m
+def _matmul_udf(mat: np.ndarray, post, rtype: str):
+    """Arrow-batched ``post(x, x @ matᵀ)`` per embedding batch ``x``:
+    one BLAS matmul per batch instead of Spark's per-element array HOFs.
+    One check of the list offsets (every row holds ``mat``'s dim), then
+    the flat values reshape to ``(n, dim)`` with no per-row copy (NULL
+    rows are filtered upstream).  ``post`` gives one value per row, or a
+    fixed-length row per row for an array ``rtype``."""
+    mat = np.asarray(mat, dtype=np.float64)
+    dim = mat.shape[1]
+
+    @arrow_udf(rtype)
+    def _f(emb: pa.Array) -> pa.Array:
+        lens = np.diff(emb.offsets.to_numpy())
+        if (lens != dim).any():
+            raise ValueError(
+                f"ragged embedding lengths in batch: {sorted(set(lens.tolist()))}"
+                f" (expected dim {dim})"
+            )
+        x = emb.flatten().to_numpy(zero_copy_only=False).reshape(-1, dim)
+        x = x.astype(np.float64)
+        out = post(x, x @ mat.T)
+        if out.ndim == 1:
+            return pa.array(out)
+        offsets = np.arange(len(out) + 1, dtype=np.int32) * out.shape[1]
+        return pa.ListArray.from_arrays(offsets, pa.array(out.ravel()))
+
+    return _f
 
 
 def _dot(a, b) -> F.Column:
@@ -66,28 +83,19 @@ def cosine_scores(
 
     Spark's array higher-order functions are interpreted per element
     (measured in BASELINE.md), so the exact scorer is a vectorized
-    pandas_udf: one ``m @ q`` per Arrow batch — the per-row cost is a
+    arrow_udf: one ``m @ q`` per Arrow batch — the per-row cost is a
     C-loop multiply-add, not 64 interpreted expression nodes."""
     q = np.asarray(query_vec, dtype=np.float64)
     qn = max(float(np.sqrt((q * q).sum())), 1e-12)
 
-    @F.pandas_udf("double")
-    def _score(s: pd.Series) -> pd.Series:
-        if len(s) == 0:
-            return pd.Series([], dtype="float64")
-        m = _batch_matrix(s)
-        if m.shape[1] != q.shape[0]:
-            raise ValueError(
-                f"ragged embedding lengths: batch dim {m.shape[1]} != "
-                f"query dim {q.shape[0]}"
-            )
-        dots = m @ q
+    def cos(x, dots):
         # zero-norm clamp: an all-zero embedding scores 0.0, not NaN
         # (Spark treats NaN as greatest, so NaN would top the DESC sort
         # and pass >= thresholds)
-        norms = np.maximum(np.sqrt((m * m).sum(axis=1)), 1e-12)
-        return pd.Series(dots / (norms * qn))
+        norms = np.maximum(np.sqrt((x * x).sum(axis=1)), 1e-12)
+        return dots[:, 0] / (norms * qn)
 
+    _score = _matmul_udf(q[None, :], cos, "double")
     return emb.filter(F.col("embedding").isNotNull()).withColumn(
         out_col, F.round(_score("embedding"), 6)
     )
@@ -103,27 +111,25 @@ def cosine_topk(emb: DataFrame, query_vec: list[float], k: int = 10) -> DataFram
     )
 
 
-def _batch_matmul_int_udf(mat: np.ndarray, post):
-    """Arrow-batched X @ matᵀ → ``post(sims)`` int32 per row — the hot
-    path for bucket/list assignment over a full corpus (Spark array
-    HOFs are interpreted per element; one BLAS matmul per batch is the
-    boundary the north rule allows)."""
-
-    @F.pandas_udf("int")
-    def _f(s: pd.Series) -> pd.Series:
-        if len(s) == 0:
-            return pd.Series([], dtype="int32")
-        x = _batch_matrix(s)
-        return pd.Series(post(x @ mat.T).astype("int32"))
-
-    return _f
-
-
 def _planes(dim: int, n_planes: int, seed: int) -> np.ndarray:
     """Deterministic seeded hyperplane matrix — the single source for
     corpus bucketing, query bucketing and the oracle replica (a seed
     drift between them would silently send probes to the wrong buckets)."""
     return np.random.default_rng(seed).standard_normal((n_planes, dim))
+
+
+def _buckets_udf(dim: int, n_planes: int, seeds) -> F.Column:
+    """Sign-bit bucket id under each seed's plane set, as array<int>:
+    the plane sets stack into one matrix, so one matmul serves them all."""
+    seeds = list(seeds)
+    planes = np.vstack([_planes(dim, n_planes, s) for s in seeds])
+    bits = 1 << np.arange(n_planes)
+
+    def post(x, sims):
+        signs = (sims > 0).reshape(len(x), len(seeds), n_planes)
+        return (signs @ bits).astype(np.int32)
+
+    return _matmul_udf(planes, post, "array<int>")("embedding")
 
 
 def hyperplane_buckets(
@@ -134,11 +140,8 @@ def hyperplane_buckets(
     Planes are a deterministic seeded matrix; the bucket is the
     concatenated sign bits of the plane dot products, computed as one
     vectorized matmul per Arrow batch.  NULL embeddings are ignored."""
-    planes = _planes(dim, n_planes, seed)
-    bits = 1 << np.arange(n_planes)
-    bucket_udf = _batch_matmul_int_udf(planes, lambda sims: (sims > 0) @ bits)
     return emb.filter(F.col("embedding").isNotNull()).select(
-        "vec_id", "embedding", bucket_udf("embedding").alias("bucket")
+        "vec_id", "embedding", _buckets_udf(dim, n_planes, [seed])[0].alias("bucket")
     )
 
 
@@ -277,8 +280,8 @@ def ivf_assign(emb: DataFrame, cents: np.ndarray) -> DataFrame:
     partitioned by ``ivf_list`` so a probe scans only
     nprobe/n_centroids of the data (partition pruning), the IVF payoff."""
     emb = emb.filter(F.col("embedding").isNotNull())
-    assign_udf = _batch_matmul_int_udf(
-        np.asarray(cents, dtype=np.float64), lambda sims: sims.argmax(axis=1)
+    assign_udf = _matmul_udf(
+        cents, lambda x, sims: sims.argmax(axis=1).astype(np.int32), "int"
     )
     return emb.withColumn("ivf_list", assign_udf("embedding"))
 
@@ -348,36 +351,28 @@ def near_dup_embeddings(
     recall (each plane keeps a θ/π-angle pair with prob 1-θ/π), so
     ``n_tables`` independent plane sets (seeds seed..seed+L-1) are
     unioned — recall = 1-(1-(1-θ/π)^p)^L stays controlled while the
-    candidate volume stays ~L·N·target/2.  Only (vec_id, bucket) flows
-    through the self-joins; embeddings re-attach for the exact-cosine
-    verify (native fold, bit-matching the SQL oracle's sequential SUM)."""
+    candidate volume stays ~L·N·target/2.
+
+    One matmul per Arrow batch gives every table's bucket id; the
+    (vec_id, table, bucket) rows meet in ONE checkpointed self-join
+    (``_util.bucket_pairs``, shared with dedup.lsh_candidate_pairs).
+    Embeddings re-attach for the exact-cosine verify (native fold,
+    bit-matching the SQL oracle's sequential SUM)."""
     if n_planes is None:
         # one count job (parquet scans serve this from footer stats)
         n_planes = adaptive_n_planes(emb.count(), target_bucket_size)
+    emb = emb.filter(F.col("embedding").isNotNull())
+    buckets = _buckets_udf(dim, n_planes, range(seed, seed + int(n_tables)))
+    stacked = emb.select("vec_id", F.posexplode(buckets).alias("table", "bucket"))
+    cand = bucket_pairs(stacked, "vec_id", "vec_a", "vec_b")
     # norms computed ONCE per vector (same fold expression, so the values
     # are bit-identical to computing them inside each pair) — the verify
     # join then pays one dot per candidate pair instead of dot + 2 norms
-    ids = emb.filter(F.col("embedding").isNotNull()).select(
+    ids = emb.select(
         "vec_id",
         "embedding",
         F.greatest(_norm(F.col("embedding")), F.lit(1e-12)).alias("nrm"),
     )
-    cand = None
-    for t in range(int(n_tables)):
-        b = hyperplane_buckets(emb, dim, n_planes, seed=seed + t).select(
-            "vec_id", "bucket"
-        )
-        p = (
-            b.alias("a")
-            .join(b.alias("b"), "bucket")
-            .filter(F.col("a.vec_id") < F.col("b.vec_id"))
-            .select(
-                F.col("a.vec_id").alias("vec_a"),
-                F.col("b.vec_id").alias("vec_b"),
-            )
-        )
-        cand = p if cand is None else cand.unionByName(p)
-    cand = cand.distinct()
     pairs = cand.join(
         ids.withColumnRenamed("vec_id", "vec_a")
         .withColumnRenamed("embedding", "emb_a")
