@@ -153,7 +153,7 @@ def _rollup_cols(df: DataFrame) -> DataFrame:
 def q_rollup_tier2(spark, sf_dir):
     from tsc_spark.operators.rollup import tiered_rollups
 
-    return _rollup_cols(tiered_rollups(_tokens(spark, sf_dir), with_gapfill=False)[2])
+    return _rollup_cols(tiered_rollups(_tokens(spark, sf_dir))[2])
 
 
 def q_rollup_tier1_streamed(spark, sf_dir):
@@ -979,7 +979,7 @@ def q_recency_weights(spark, sf_dir):
     r=0.5 → span 8): w = 0.5 + 0.5*exp(-age/8)."""
     from tsc_spark.operators.rollup import tiered_rollups
 
-    t1 = tiered_rollups(_tokens(spark, sf_dir), with_gapfill=False)[1]
+    t1 = tiered_rollups(_tokens(spark, sf_dir))[1]
     w = F.round(
         F.lit(0.5) + F.lit(0.5) * F.exp(-(F.col("max_w") - F.col("window_idx")) / F.lit(8.0)),
         6,
@@ -1027,7 +1027,7 @@ def q_retention_plan(spark, sf_dir):
     from tsc_spark.operators.retention import retention_plan
     from tsc_spark.operators.rollup import tiered_rollups
 
-    t1 = tiered_rollups(_tokens(spark, sf_dir), with_gapfill=False)[1]
+    t1 = tiered_rollups(_tokens(spark, sf_dir))[1]
     return retention_plan(t1, {1: 6}, segment_size=4).select(
         F.col("tier").cast("long").alias("tier"),
         "doc_id",
@@ -1225,7 +1225,7 @@ def q_normalize_combine(spark, sf_dir):
     sum's min-max ``norm_score`` and its ``reliability`` weight."""
     from tsc_spark.operators.rollup import combined_window_scores, tiered_rollups
 
-    t1 = tiered_rollups(_tokens(spark, sf_dir), with_gapfill=False)[1]
+    t1 = tiered_rollups(_tokens(spark, sf_dir))[1]
     return combined_window_scores(t1)
 
 
@@ -1680,7 +1680,7 @@ def q_bucketed_rollup_join(spark, sf_dir):
 
     toks = _tokens(spark, sf_dir).select("doc_id", "n_tok", "source")
     per_doc = (
-        tiered_rollups(_tokens(spark, sf_dir), with_gapfill=False)[1]
+        tiered_rollups(_tokens(spark, sf_dir))[1]
         .groupBy("doc_id")
         .agg(
             F.count("*").cast("long").alias("n_windows"),

@@ -4,7 +4,7 @@
 Default mode (what the per-round driver runs):
   python bench.py
     * runs the headline north-rule pipeline — deterministic synthetic
-      tokens corpus -> ingest -> tier-0/1/2 rollup + gap-fill — on
+      tokens corpus -> ingest -> tier-0/1/2 rollup — on
       local[$SPARK_GRAFT_CPUS], reporting rolled-up points/sec;
     * times each headline query from __spark_entry__.queries() at
       $SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1);
@@ -95,12 +95,11 @@ def _force(df) -> int:
 def run_pipeline_bench(
     spark, n_docs: int, repeats: int = 2, corpus_dir: str | None = None
 ) -> dict:
-    """North-rule headline: ingest -> tier-0/1/2 rollup+gapfill points/sec.
+    """North-rule headline: ingest -> tier-0/1/2 rollup points/sec.
 
     Input generation is excluded from the timed region (the corpus is
     written to parquet first = the at-rest Iceberg-style table); the
-    timed region is scan -> explode -> 3-tier rollup -> gap-fill ->
-    sink, i.e. everything the north rule calls 'ingest -> tier-2'.
+    timed region is scan -> 3-tier rollup -> sink, i.e. everything the north rule calls 'ingest -> tier-2'.
 
     ``corpus_dir`` persists/reuses the generated at-rest table across
     invocations (a present ``_SUCCESS`` marker skips regeneration, and
@@ -156,7 +155,7 @@ def run_pipeline_bench(
         # 4.6M pts/s cold vs ~11M warm on identical code).
         try:
             _warmup(spark)
-            wtiers = tiered_rollups(toks.limit(2048), with_gapfill=True)
+            wtiers = tiered_rollups(toks.limit(2048))
             for tier in (0, 1, 2):
                 _force(wtiers[tier])
         except Exception as e:
@@ -169,7 +168,7 @@ def run_pipeline_bench(
         elapsed = None
         for _ in range(max(repeats, 1)):
             t0 = time.perf_counter()
-            tiers = tiered_rollups(toks, with_gapfill=True)
+            tiers = tiered_rollups(toks)
             for tier in (0, 1, 2):
                 _force(tiers[tier])
             el = time.perf_counter() - t0

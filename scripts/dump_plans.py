@@ -29,6 +29,7 @@ DEFAULT_QUERIES = [
     "window_matches",
     "retention_plan",
     "text_stats",
+    "chord_roughness",
     "ngram_jaccard",
     "bucketed_rollup_join",
 ]

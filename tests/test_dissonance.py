@@ -132,3 +132,26 @@ def test_hungarian_deterministic_under_ties():
     for _ in range(5):
         assert hungarian_min_assignment(cost) == first
     assert sorted(first) == list(range(n))
+
+
+def test_chord_roughness_matches_dissonance_current(spark):
+    """The relational chord scan scores each chord as the kernel does:
+    unison and octave chords (equal-frequency partial pairs), the note
+    gate (amp <= eps), near-silent partials and chords of fewer than two
+    notes."""
+    from tsc_spark.functions.roughness import chord_roughness
+
+    chords = [
+        ([60, 61], 1.0), ([60, 72], 1.0), ([60, 60], 1.0), ([60, 64, 67, 71], 1.0),
+        ([60, 61], 2e-7), ([60, 61], 2.4e-6), ([60], 1.0), ([], 1.0),
+    ]
+    df = spark.createDataFrame(
+        [(f"c{i}", notes, vol) for i, (notes, vol) in enumerate(chords)],
+        "doc_id string, notes array<int>, vol double",
+    )
+    got = {r.doc_id: (r.roughness, r.n_notes) for r in chord_roughness(df).collect()}
+    for i, (notes, vol) in enumerate(chords):
+        expected = dissonance_current(notes, [vol / len(notes)] * len(notes)) if notes else 0.0
+        assert got[f"c{i}"][0] == pytest.approx(expected, abs=1e-6), (notes, vol)
+        assert got[f"c{i}"][1] == len(notes)
+    assert got["c0"][0] > got["c1"][0] > 0  # non-vacuous: pairs were scored

@@ -32,8 +32,7 @@ def base_dir(tmp_path, spark, tokens_df):
     return d
 
 
-_TIER_COLS = ["doc_id", "tier", "window_idx", "agg_count", "agg_min", "agg_max", "agg_sum",
-              "gapfilled"]
+_TIER_COLS = ["doc_id", "tier", "window_idx", "agg_count", "agg_min", "agg_max", "agg_sum"]
 
 
 def _tier_rows(df):
@@ -134,6 +133,11 @@ def test_empty_buckets_complete_with_empty_manifests(spark, tmp_path):
     empties = [m for m in manifests if m["docs"] == 0]
     assert empties, "expected at least one hash-empty bucket"
     assert all(m["points"] == 0 for m in empties)
+    # the same manifest fields as a filled bucket, from zero stats
+    full = next(m for m in manifests if m["docs"])
+    for m in empties:
+        assert m.keys() == full.keys() and m["bytes"] == {}
+        assert m["doc_id_range"] == [None, None] and set(m["watermarks"].values()) == {-1}
     # second run resumes cleanly past the empty buckets
     assert run_pipeline(spark, d, with_timeline=False, with_encoded=False) == []
 
@@ -239,7 +243,7 @@ def test_tier_store_reads_back_the_logical_rollups(spark, tmp_path, raw_tokens_d
     ingest(spark, raw_tokens_df, base_dir, n_buckets=4)
     run_pipeline(spark, base_dir, with_timeline=False)
     assert not os.path.exists(os.path.join(base_dir, "rollup", "tier=0"))
-    tiers = tiered_rollups(raw_tokens_df, with_gapfill=True)
+    tiers = tiered_rollups(raw_tokens_df)
     edges = {"edge_one", "edge_two", "edge_const", "edge_neg", "edge_null", "edge_long"}
     assert edges <= {r.doc_id for r in tiers[0].select("doc_id").distinct().collect()}
     assert tiers[0].filter("agg_count = 0").count() == 2  # edge_null's NULLs
@@ -253,6 +257,27 @@ def test_tier_store_reads_back_the_logical_rollups(spark, tmp_path, raw_tokens_d
             expected = retention_sweep(tdf, DEFAULT_RETENTION_POLICY)
             assert _tier_rows(read_tier(spark, base_dir, tier)) == _tier_rows(expected), tier
         assert _max_stored_tokens(spark, base_dir) == DEFAULT_RETENTION_POLICY[0]
+
+
+def test_every_tier_table_has_the_rollup_row_schema(spark, tmp_path, tokens_df, base_dir):
+    """One tier-row form: read_tier of every stored tier, tiered_rollups
+    and the stream sink all have rollup_arrays' columns and types (the
+    stored tiers add the bucket partition column)."""
+    from tsc_spark.operators.rollup import _WINDOW_SCHEMA
+    from tsc_spark.streaming.rollup_stream import run_rollup_stream_with_retention
+
+    expected = spark.createDataFrame([], _WINDOW_SCHEMA).dtypes
+    run_pipeline(spark, base_dir, with_timeline=False)
+    src = str(tmp_path / "src")
+    tokens_df.write.parquet(src)
+    for tier, tdf in tiered_rollups(tokens_df).items():
+        assert tdf.dtypes == expected, tier
+        stored = read_tier(spark, base_dir, tier).dtypes
+        assert [c for c in stored if c[0] != "bucket"] == expected, tier
+        sink = str(tmp_path / f"sink{tier}")
+        run_rollup_stream_with_retention(spark, src, sink, str(tmp_path / f"ckpt{tier}"),
+                                         tier=tier, policy={})
+        assert spark.read.parquet(sink).dtypes == expected, tier
 
 
 def test_encoded_footers_keep_no_blob_statistics(spark, base_dir):

@@ -110,6 +110,28 @@ def test_text_stats_plan_one_scan_no_join(spark, parquet_docs):
     assert not [n for n in nodes if "Join" in n], nodes
 
 
+def test_chord_roughness_plan_one_scan_no_join(spark, parquet_tokens):
+    """Each doc's partial pairs are summed inside its own row: one scan
+    of the chords' source, no self-join and no join back to the docs
+    (the only Exchange is ensure_min_partitions' spread)."""
+    from pyspark.sql import functions as F
+
+    from tsc_spark.functions.roughness import chord_roughness
+
+    chords = parquet_tokens.select(
+        "doc_id",
+        F.transform(F.slice("tokens", 1, 3), lambda x: x + F.lit(48)).alias("notes"),
+        F.lit(1.0).alias("vol"),
+    )
+    out = chord_roughness(chords)
+    rows = out.collect()
+    assert len(rows) == parquet_tokens.count()
+    assert any(r.roughness > 0 for r in rows)  # non-vacuous: pairs were scored
+    nodes = plan_nodes(out)
+    assert plan_file_scans(out) == 1, nodes
+    assert not [n for n in nodes if "Join" in n], nodes
+
+
 def test_near_dup_embeddings_plan_one_bucket_self_join(spark, tmp_path):
     """All LSH tables' buckets come from one matmul UDF into one stacked
     (vec_id, table, bucket) table, paired by ONE checkpointed self-join;

@@ -84,7 +84,7 @@ class TestApplyRetention:
 
         # expected survivors: recompute the sweep from scratch per tier
         for tier in (0, 1, 2):
-            t_all = tiered_rollups(raw_tokens_df, with_gapfill=True)[tier]
+            t_all = tiered_rollups(raw_tokens_df)[tier]
             expected = retention_sweep(t_all, DEFAULT_RETENTION_POLICY).count()
             assert after[tier] == expected
             assert after[tier] <= before[tier]
@@ -169,7 +169,7 @@ class TestApplyRetentionEdges:
         )
         for tier in (0, 1):
             assert _rows(read_tier(spark, swept_base, tier)) == _rows(
-                tiered_rollups(raw_tokens_df, with_gapfill=True)[tier]
+                tiered_rollups(raw_tokens_df)[tier]
             )
 
         apply_retention(spark, swept_base)
@@ -177,7 +177,7 @@ class TestApplyRetentionEdges:
         assert not os.path.exists(enc_tmp)
         for tier in (0, 1, 2):
             expected = retention_sweep(
-                tiered_rollups(raw_tokens_df, with_gapfill=True)[tier], DEFAULT_RETENTION_POLICY
+                tiered_rollups(raw_tokens_df)[tier], DEFAULT_RETENTION_POLICY
             )
             assert _rows(read_tier(spark, swept_base, tier)) == _rows(expected)
 
@@ -185,7 +185,7 @@ class TestApplyRetentionEdges:
         """The Observation-derived rows_before/rows_after summed over
         buckets equal per-tier count()s of the sweep on the raw corpus."""
         records = apply_retention(spark, swept_base)
-        tiers = tiered_rollups(raw_tokens_df, with_gapfill=True)
+        tiers = tiered_rollups(raw_tokens_df)
         for tier, tdf in tiers.items():
             got = {
                 field: sum(r["tiers"][str(tier)][field] for r in records)
@@ -206,8 +206,27 @@ class TestApplyRetentionEdges:
         assert all(sorted(r["tiers"]) == ["1", "2"] for r in records)
         assert sorted(map(tuple, spark.read.parquet(encoded).collect())) == blobs
         assert _rows(read_tier(spark, swept_base, 0)) == _rows(
-            tiered_rollups(raw_tokens_df, with_gapfill=True)[0]
+            tiered_rollups(raw_tokens_df)[0]
         )
+
+
+    def test_swap_backup_is_not_read_as_a_partition(self, spark, raw_tokens_df, swept_base,
+                                                    monkeypatch):
+        """Between swap_in_dir's second rename and its rmtree (for good,
+        after a crash there) every swapped bucket dir has its backup
+        beside it: a read of the tier must not take it for a bucket."""
+        import shutil
+
+        monkeypatch.setattr(shutil, "rmtree", lambda *a, **k: None)
+        apply_retention(spark, swept_base)
+        monkeypatch.undo()
+        backups = [d for root in ("encoded", "rollup/tier=1", "rollup/tier=2")
+                   for d in os.listdir(os.path.join(swept_base, root)) if "swap_old" in d]
+        assert len(backups) == 6  # 2 buckets x 3 swapped dirs: the test is not vacuous
+        for tier, tdf in tiered_rollups(raw_tokens_df).items():
+            stored = read_tier(spark, swept_base, tier)
+            assert dict(stored.dtypes)["bucket"] == "int", tier
+            assert stored.count() == retention_sweep(tdf, DEFAULT_RETENTION_POLICY).count(), tier
 
 
 class TestStreamingRetention:
@@ -221,7 +240,7 @@ class TestStreamingRetention:
 
         half = tokens_df.limit(20).cache()
         rest = tokens_df.subtract(half).cache()
-        tiers = tiered_rollups(tokens_df, with_gapfill=False)
+        tiers = tiered_rollups(tokens_df)
         for tier in (0, 1, 2):
             src, out, ckpt = (str(tmp_path / f"{d}{tier}") for d in ("src", "out", "ckpt"))
             half.write.parquet(src)
@@ -280,7 +299,7 @@ class TestStreamingRetention:
         run()  # batch 1 replays; the sink already holds it
         assert sink_log() == logged
 
-        expected = retention_sweep(tiered_rollups(tokens_df, with_gapfill=False)[1], {1: 3})
+        expected = retention_sweep(tiered_rollups(tokens_df)[1], {1: 3})
         assert _rows(spark.read.parquet(out)) == _rows(expected)
 
     def test_doc_arriving_twice_keeps_each_arrivals_windows(self, spark, tmp_path):
@@ -318,26 +337,27 @@ class TestStreamingRetention:
 
 def test_swap_recovery_restores_interrupted_swap(tmp_path):
     """A crash between swap_in_dir's two renames leaves the data in the
-    .swap_old backup; recovery restores it instead of losing history or
+    _swap_backup dir; recovery restores it instead of losing history or
     wedging on the stale backup."""
     import os
 
-    from tsc_spark.operators.retention import recover_swapped_dir, swap_in_dir
+    from tsc_spark.operators.retention import recover_swapped_dir, _swap_backup, swap_in_dir
 
     path = str(tmp_path / "sink")
+    backup = _swap_backup(path)
     # simulate the crash window: path missing, backup holds the data
-    os.makedirs(path + ".swap_old")
-    open(os.path.join(path + ".swap_old", "part-0"), "w").write("history")
+    os.makedirs(backup)
+    open(os.path.join(backup, "part-0"), "w").write("history")
     recover_swapped_dir(path)
     assert os.path.isdir(path)
     assert open(os.path.join(path, "part-0")).read() == "history"
-    assert not os.path.isdir(path + ".swap_old")
+    assert not os.path.isdir(backup)
 
     # a normal swap with a stale backup lying around still succeeds
-    os.makedirs(path + ".swap_old")
+    os.makedirs(backup)
     tmp = str(tmp_path / "new")
     os.makedirs(tmp)
     open(os.path.join(tmp, "part-1"), "w").write("swept")
     swap_in_dir(path, tmp)
     assert open(os.path.join(path, "part-1")).read() == "swept"
-    assert not os.path.isdir(path + ".swap_old")
+    assert not os.path.isdir(backup)

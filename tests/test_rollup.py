@@ -49,10 +49,6 @@ class TestTierRollups:
         }
         assert got == golden
 
-    def test_dense_arrays_have_no_gaps(self, rollups):
-        for tier in (0, 1, 2):
-            assert all(not r.gapfilled for r in rollups[tier])
-
     def test_tier2_composes_from_tier1(self, spark, tokens_df):
         # composing 8×8 from tier-1 must equal a direct 64× rollup
         points = explode_points(tokens_df)
@@ -62,7 +58,7 @@ class TestTierRollups:
         }
         composed = {
             (r.doc_id, r.window_idx): (r.agg_count, r.agg_min, r.agg_max, r.agg_sum)
-            for r in tiered_rollups(tokens_df, with_gapfill=False)[2].collect()
+            for r in tiered_rollups(tokens_df)[2].collect()
         }
         assert composed == direct
 

@@ -19,6 +19,7 @@ from ..kernel.dissonance import (
     SETHARES_S1,
     SETHARES_S2,
 )
+from ..operators._util import ensure_min_partitions
 
 __all__ = [
     "token_to_freq_col",
@@ -58,56 +59,56 @@ def chord_roughness(
     contributes ``n_partials`` partials at f0·p with amp (vol/|notes|)·
     base^p (reference dissonance_stm_manager.jl:114-139); total
     roughness is Σ over partial pairs of the Sethares kernel
-    (dissonance.jl:19-64).  The pair expansion is a within-doc
-    equi-join on doc_id — bounded at ``(4·n_partials choose 2)`` rows
-    per doc (chord size ≤ 4), i.e. a fixed constant per row at any
-    corpus scale.  Equal-frequency pairs contribute exactly 0 (x = 0)
-    so the strict ``f_a < f_b`` join keeps one row per unordered pair
-    without changing the sum.  Chords with fewer than two audible notes
-    score exactly 0 (reference dissonance_current's n < 2 gate)."""
-    base = (
-        chords_df.filter(F.size("notes") >= 2)
-        .select(
-            "doc_id",
-            F.size("notes").alias("n_notes"),
-            (F.col("vol") / F.size("notes")).alias("amp"),
-            F.explode("notes").alias("midi"),
+    (dissonance.jl:19-64).  One ``select`` over the input (spread by
+    ``ensure_min_partitions``), no join: the doc's audible partials
+    become an array column, and a nested ``aggregate`` sums every pair
+    ``i < j`` of it — at most ``(4·n_partials choose 2)`` pairs per doc
+    (chord size ≤ 4), a fixed constant per row at any corpus scale.  Each pair is scored with
+    ``pair_roughness_col``'s ``least``/``greatest`` ordering; an
+    equal-frequency pair contributes exactly 0 (x = 0), so the sum is
+    the one over strictly ordered pairs.  Chords with fewer than two
+    audible notes score exactly 0 (reference dissonance_current's n < 2
+    gate)."""
+    n_notes = F.size("notes")
+    amp = F.col("vol") / n_notes
+
+    def note_partials(midi):
+        f0 = F.lit(440.0) * F.pow(F.lit(2.0), (midi.cast("double") - F.lit(69.0)) / F.lit(12.0))
+        return F.transform(
+            F.sequence(F.lit(1), F.lit(int(n_partials))),
+            lambda p: F.struct(
+                (f0 * p).alias("f"), (amp * F.pow(F.lit(float(amp_base)), p)).alias("a")
+            ),
         )
-        .filter(F.col("amp") > F.lit(AMP_EPS))  # note-level audibility gate
+
+    # note-level (amp) and partial-level (a) audibility gates of dissonance()
+    audible = F.filter(
+        F.flatten(F.transform("notes", note_partials)),
+        lambda q: q["f"].isNotNull() & (q["a"] >= F.lit(AMP_EPS)),
     )
-    f0 = F.lit(440.0) * F.pow(
-        F.lit(2.0), (F.col("midi").cast("double") - F.lit(69.0)) / F.lit(12.0)
+    parts = F.col("parts")
+
+    def pairs_from(i):
+        # Σ over the pairs (i, j > i) of the doc's partials
+        head = parts[i]
+        return F.aggregate(
+            F.slice(parts, i + 2, F.size(parts)),
+            F.lit(0.0),
+            lambda acc, q: acc + (head["a"] * q["a"]) * pair_roughness_col(head["f"], q["f"]),
+        )
+
+    raw = F.aggregate(
+        F.sequence(F.lit(0), F.size(parts) - 2), F.lit(0.0), lambda acc, i: acc + pairs_from(i)
     )
-    parts = base.select(
+    # parts is a column of its own, so the pair lambdas read it instead
+    # of rebuilding the partials per element
+    return ensure_min_partitions(chords_df).select(
         "doc_id",
-        "n_notes",
-        F.explode(F.sequence(F.lit(1), F.lit(int(n_partials)))).alias("p"),
-        f0.alias("f0"),
-        "amp",
+        n_notes.cast("long").alias("n_notes"),
+        F.when((n_notes >= 2) & (amp > F.lit(AMP_EPS)), audible).alias("parts"),
     ).select(
         "doc_id",
-        "n_notes",
-        (F.col("f0") * F.col("p")).alias("f"),
-        (F.col("amp") * F.pow(F.lit(float(amp_base)), F.col("p"))).alias("a"),
-    ).filter(F.col("a") >= F.lit(AMP_EPS))  # partial-level gate (dissonance())
-    a = parts.alias("a")
-    b = parts.alias("b")
-    x = (
-        F.lit(SETHARES_D_MAX)
-        / (F.lit(SETHARES_S1) * F.col("a.f") + F.lit(SETHARES_S2))
-    ) * (F.col("b.f") - F.col("a.f"))
-    contrib = (F.col("a.a") * F.col("b.a")) * (
-        F.exp(-F.lit(SETHARES_A) * x) - F.exp(-F.lit(SETHARES_B) * x)
-    )
-    pair_sums = (
-        a.join(b, (F.col("a.doc_id") == F.col("b.doc_id")) & (F.col("a.f") < F.col("b.f")))
-        .groupBy(F.col("a.doc_id").alias("doc_id"))
-        .agg(F.sum(contrib).alias("raw"))
-    )
-    grid = chords_df.select("doc_id", F.size("notes").cast("long").alias("n_notes"))
-    return grid.join(pair_sums, "doc_id", "left").select(
-        "doc_id",
-        F.round(F.coalesce(F.col("raw"), F.lit(0.0)), 6).alias("roughness"),
+        F.round(F.when(F.size(parts) >= 2, raw).otherwise(F.lit(0.0)), 6).alias("roughness"),
         "n_notes",
     )
 

@@ -449,18 +449,6 @@ class ClusterManager:
             _MAXDIST_CACHE[length] = v
         return v
 
-    def _dig(self, keys: list[int]) -> Optional[ClusterNode]:
-        if not keys:
-            return None
-        cur_dict = self.clusters
-        node = None
-        for k in keys:
-            node = cur_dict.get(k)
-            if node is None:
-                return None
-            cur_dict = node.cc
-        return node
-
     @staticmethod
     def _add_updated(target: dict[int, set[int]], ws: int, cid: int) -> None:
         s = target.get(ws)
@@ -488,7 +476,7 @@ class ClusterManager:
         self.tasks = []
 
         # tasks carry a direct reference to their target node (3rd slot)
-        # so each step skips the root-to-node _dig re-walk; node objects
+        # so each step skips a root-to-node re-walk of the keys; node objects
         # survive rollback (creates are undone, existing nodes are never
         # replaced), so snapshot-restored tasks stay valid.
         for keys_to_parent, length0, parent in current_tasks:

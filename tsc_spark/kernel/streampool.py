@@ -309,19 +309,6 @@ class StreamPool:
         ]
 
     # -- strength / presence (reference ...:578-694) -------------------
-    def update_stream_strength(self, stream_id: int, volume_value: float):
-        if not self.track_presence:
-            return
-        c = self.containers_by_id.get(stream_id)
-        if c is None:
-            return
-        vv = _clamp01(volume_value)
-        c.presence_sum += vv
-        c.presence_count += 1
-        c.presence_avg = (
-            _clamp01(c.presence_sum / c.presence_count) if c.presence_count > 0 else vv
-        )
-
     def presence_of_id(self, sid: int) -> float:
         c = self.containers_by_id.get(sid)
         if c is None:

@@ -47,12 +47,21 @@ __all__ = [
 ]
 
 
+def _swap_backup(path: str) -> str:
+    """The backup ``swap_in_dir`` moves ``path`` to: a ``.``-prefixed
+    sibling, which Spark's file index skips, so a reader of the parent
+    table never takes it for a partition (``_``-prefixed names are
+    skipped only without ``=``, and ``bucket=0`` holds one)."""
+    head, name = os.path.split(os.path.normpath(path))
+    return os.path.join(head, f".{name}.swap_old")
+
+
 def recover_swapped_dir(path: str) -> None:
     """Crash recovery for ``swap_in_dir``: if a previous swap died
     between its two renames, ``path`` is missing and the backup holds
     the data — restore it.  A stale backup alongside an intact ``path``
     means the swap completed; drop it."""
-    old = path + ".swap_old"
+    old = _swap_backup(path)
     if os.path.isdir(old):
         if not os.path.isdir(path):
             os.rename(old, path)  # the interrupted swap's data, restored
@@ -70,7 +79,7 @@ def swap_in_dir(path: str, tmp: str) -> None:
     callable at startup) restores, so the failure mode is "sweep didn't
     happen", never data loss or a permanently wedged sink."""
     recover_swapped_dir(path)
-    old = path + ".swap_old"
+    old = _swap_backup(path)
     if os.path.isdir(path):
         os.rename(path, old)
     os.rename(tmp, path)

@@ -14,11 +14,16 @@ Design for 100 TB:
   tiers 1/2) — a doc's windows never cross rows, so no tier pays a
   shuffle, and the batch pipeline and the streaming tier run the same
   plan;
+* its rows (``_WINDOW_SCHEMA``) are the one tier-row form: the batch
+  tier store, the stream sink and ``plans.pipeline.read_tier`` all hold
+  them, and ``point_windows`` builds the one-point windows of tier 0;
 * ``rollup_points(explode_points(...))`` is the explode+groupBy oracle
   the array path is tested against;
-* gap-fill generates the expected window grid with ``sequence`` +
-  explode and left-joins actuals: both sides are partitioned by doc_id,
-  so AQE plans a co-partitioned join without a broadcast of big data.
+* gap-fill, for sparse point streams only, generates the expected
+  window grid with ``sequence`` + explode and left-joins actuals: both
+  sides are partitioned by doc_id, so AQE plans a co-partitioned join
+  without a broadcast of big data.  Its output alone carries the
+  ``gapfilled`` flag.
 """
 
 from __future__ import annotations
@@ -35,6 +40,7 @@ __all__ = [
     "rollup_points",
     "rollup_arrays",
     "rollup_batch",
+    "point_windows",
     "tiered_rollups",
     "gapfill",
     "gapfill_locf",
@@ -172,14 +178,23 @@ def rollup_arrays(
     )
     if keep is not None:
         points = points.filter(F.col("window_idx") >= F.col("n_tok") - keep)
+    return point_windows(points, tier)
+
+
+def point_windows(points: DataFrame, tier: int, *passthrough: str) -> DataFrame:
+    """Tier rows of one-point windows from ``(doc_id, window_idx, token)``
+    rows, in ``_WINDOW_SCHEMA`` order followed by the ``passthrough``
+    columns.  A NULL token gives a count-0 window with NULL aggregates."""
+    token = F.col("token")
     return points.select(
         "doc_id",
         F.col("window_idx").cast("long").alias("window_idx"),
-        F.col("token").isNotNull().cast("long").alias("agg_count"),
-        F.col("token").alias("agg_min"),
-        F.col("token").alias("agg_max"),
-        F.col("token").cast("long").alias("agg_sum"),
+        token.isNotNull().cast("long").alias("agg_count"),
+        token.alias("agg_min"),
+        token.alias("agg_max"),
+        token.cast("long").alias("agg_sum"),
         F.lit(tier).alias("tier"),
+        *passthrough,
     )
 
 
@@ -243,40 +258,19 @@ def gapfill_locf(filled: DataFrame) -> DataFrame:
     )
 
 
-def _gapfill_dense(rollup: DataFrame) -> DataFrame:
-    """Gap-fill for the dense array path: token position IS the window
-    index, so the expected grid equals the actual windows and the join
-    degenerates to a literal column (zero-cost, same output schema as
-    ``gapfill``)."""
-    return rollup.select(
-        "doc_id",
-        "tier",
-        "window_idx",
-        "agg_count",
-        "agg_min",
-        "agg_max",
-        "agg_sum",
-        F.lit(False).alias("gapfilled"),
-    )
-
-
-def tiered_rollups(tokens_df: DataFrame, with_gapfill: bool = True) -> dict[int, DataFrame]:
-    """Full tier-0/1/2 rollup set from a tokens table.
+def tiered_rollups(tokens_df: DataFrame) -> dict[int, DataFrame]:
+    """Full tier-0/1/2 rollup set from a tokens table, ``{tier:
+    DataFrame}`` of ``rollup_arrays`` rows.
 
     tier-0 = stride 1 (raw points as windows), tier-1 = 8×, tier-2 = 64×.
     All tiers are shuffle-free ``rollup_arrays`` plans: tier-0 is the
     native posexplode (windows ARE the points); tiers 1/2 use the
     Arrow-vectorized ``reduceat`` path, which beat a JVM higher-order-
     function plan ~1.4× and explode+groupBy ~2× (no shuffle, no per-row
-    Python).
-    Dense arrays cannot have gaps, so gap-fill is the zero-cost dense
-    variant.  Sparse point streams (deletes, retention-expired ranges)
-    use ``rollup_points`` + ``gapfill`` instead.  Returns {tier:
-    DataFrame}."""
-    out = {tier: rollup_arrays(tokens_df, TIER_STRIDES[tier], tier) for tier in (0, 1, 2)}
-    if with_gapfill:
-        out = {tier: _gapfill_dense(df) for tier, df in out.items()}
-    return out
+    Python).  Dense token arrays have no gaps, so no window is
+    gap-filled; sparse point streams (deletes, retention-expired ranges)
+    use ``rollup_points`` + ``gapfill`` instead."""
+    return {tier: rollup_arrays(tokens_df, TIER_STRIDES[tier], tier) for tier in (0, 1, 2)}
 
 
 def contextual_width(tokens_df: DataFrame, min_width: float = 1.0) -> DataFrame:

@@ -10,10 +10,13 @@ watermarks) and per-bucket metrics; a resumed run skips every bucket
 with a manifest — the file-level equivalent of
 ``source LEFT ANTI JOIN done_partitions`` (SURVEY §2.3).
 
-Each raw value is stored once: the ``encoded`` table, one delta-of-delta
-blob per doc, is tier 0.  ``read_tier(spark, base, 0)`` rebuilds its
-rows; retention trims each blob to its last ``keep`` tokens while
-``n_tok`` keeps the series length.  The ``encoded`` column is written
+Tiers 1/2 are stored as ``rollup_arrays`` emits them, the rows the
+stream sink (streaming.rollup_stream) appends too, so batch and stream
+tier tables share one schema.  Each raw value is stored once: the
+``encoded`` table, one delta-of-delta blob per doc, is tier 0.
+``read_tier(spark, base, 0)`` rebuilds its rows; retention trims each
+blob to its last ``keep`` tokens while ``n_tok`` keeps the series
+length.  The ``encoded`` column is written
 without parquet column statistics: a min/max over DoD blobs prunes
 nothing, and parquet-mr would store the largest whole blob in every
 file footer.  Each manifest records the on-disk bytes of every output
@@ -36,7 +39,7 @@ from pyspark.sql import functions as F
 from ..config import DEFAULT_MERGE_THRESHOLD_RATIO, TIER_STRIDES
 from ..functions.codec_udfs import decode_tokens_table, encode_tokens_table
 from ..operators.clustering import cluster_timeline
-from ..operators.rollup import tiered_rollups
+from ..operators.rollup import point_windows, tiered_rollups
 
 __all__ = ["ingest", "run_pipeline", "read_tier", "pipeline_metrics"]
 
@@ -122,80 +125,63 @@ def _process_bucket(
         ["encoded"] if with_encoded else []
     )
     bucket_dir = os.path.join(base_dir, "tokens_bucketed", f"bucket={bucket}")
-    if not os.path.isdir(bucket_dir):
-        # hash-empty bucket: partitionBy only creates directories for
-        # buckets that received docs — commit an empty manifest so the
-        # run completes and resume doesn't retry forever
-        return {
-            "bucket": bucket,
-            "docs": 0,
-            "points": 0,
-            "doc_id_range": [None, None],
-            "watermarks": {f"tier{t}_max_window_idx": -1 for t in (0, 1, 2)},
-            "merge_threshold_ratio": merge_threshold_ratio,
-            "outputs": outputs,
-            "bytes": {},
-            "wall_seconds": 0.0,
-            "points_per_sec": None,
-            "completed_at_epoch": time.time(),
-        }
-    # manifest stats ride on the bucket scan: the Observation sits below
-    # every operator's filters (tier-0 drops n_tok == 0 docs) and is
-    # filled by the first write, so no separate stats job re-reads it
-    stats_obs = Observation()
-    df = spark.read.parquet(bucket_dir).observe(
-        stats_obs,
-        F.count("*").alias("docs"),
-        F.sum("n_tok").alias("points"),
-        F.min("doc_id").alias("doc_min"),
-        F.max("doc_id").alias("doc_max"),
-        F.max("n_tok").alias("max_n_tok"),
-    )
-
-    # shuffle-free array-path rollup: windows never cross rows, so every
-    # tier is a narrow per-row transform (see operators.rollup.rollup_arrays);
-    # tier 0 is the encoded table below
+    # a hash-empty bucket (partitionBy only creates directories for
+    # buckets that received docs) commits zero stats and no outputs, so
+    # the run completes and resume doesn't retry it forever
+    stats = {"docs": 0, "points": 0, "doc_min": None, "doc_max": None, "max_n_tok": 0}
     written = {}
-    tiers = tiered_rollups(df, with_gapfill=True)
-    for tier in (1, 2):
-        path = os.path.join(base_dir, "rollup", f"tier={tier}", f"bucket={bucket}")
-        tiers[tier].write.mode("overwrite").parquet(path)
-        written[f"tier{tier}"] = path
-    stats = stats_obs.get
-
-    # tiers are dense per doc (_gapfill_dense: windows 0..ceil(n_tok/s)-1),
-    # so the per-tier watermark derives from max(n_tok) — no re-read of
-    # the just-written parquet
-    max_n_tok = int(stats["max_n_tok"] or 0)
-    watermarks = {
-        f"tier{tier}_max_window_idx": -(-max_n_tok // stride) - 1 if max_n_tok > 0 else -1
-        for tier, stride in TIER_STRIDES.items()
-    }
-
-    if with_timeline:
-        written["timeline"] = os.path.join(base_dir, "timeline", f"bucket={bucket}")
-        cluster_timeline(df, merge_threshold_ratio).write.mode("overwrite").parquet(
-            written["timeline"]
+    if os.path.isdir(bucket_dir):
+        # manifest stats ride on the bucket scan: the Observation sits
+        # below every operator's filters and is filled by the first
+        # write, so no separate stats job re-reads it
+        stats_obs = Observation()
+        df = spark.read.parquet(bucket_dir).observe(
+            stats_obs,
+            F.count("*").alias("docs"),
+            F.sum("n_tok").alias("points"),
+            F.min("doc_id").alias("doc_min"),
+            F.max("doc_id").alias("doc_max"),
+            F.max("n_tok").alias("max_n_tok"),
         )
-    if with_encoded:
-        written["encoded"] = os.path.join(base_dir, "encoded", f"bucket={bucket}")
-        _write_encoded(encode_tokens_table(df), written["encoded"])
+        # shuffle-free array-path rollup (operators.rollup.rollup_arrays),
+        # stored as it is emitted; tier 0 is the encoded table below
+        tiers = tiered_rollups(df)
+        for tier in (1, 2):
+            path = os.path.join(base_dir, "rollup", f"tier={tier}", f"bucket={bucket}")
+            tiers[tier].write.mode("overwrite").parquet(path)
+            written[f"tier{tier}"] = path
+        stats = stats_obs.get
+        if with_timeline:
+            written["timeline"] = os.path.join(base_dir, "timeline", f"bucket={bucket}")
+            cluster_timeline(df, merge_threshold_ratio).write.mode("overwrite").parquet(
+                written["timeline"]
+            )
+        if with_encoded:
+            written["encoded"] = os.path.join(base_dir, "encoded", f"bucket={bucket}")
+            _write_encoded(encode_tokens_table(df), written["encoded"])
 
+    # every doc's windows run 0..ceil(n_tok/s)-1 with no gap, so the
+    # per-tier watermark derives from max(n_tok) — no re-read of the
+    # just-written parquet
+    max_n_tok = int(stats["max_n_tok"] or 0)
+    points = int(stats["points"] or 0)
     elapsed = time.time() - t0
-    manifest = {
+    return {
         "bucket": bucket,
         "docs": int(stats["docs"]),
-        "points": int(stats["points"] or 0),
+        "points": points,
         "doc_id_range": [stats["doc_min"], stats["doc_max"]],
-        "watermarks": watermarks,
+        "watermarks": {
+            f"tier{tier}_max_window_idx": -(-max_n_tok // stride) - 1
+            for tier, stride in TIER_STRIDES.items()
+        },
         "merge_threshold_ratio": merge_threshold_ratio,
         "outputs": outputs,
         "bytes": {name: _dir_bytes(path) for name, path in written.items()},
         "wall_seconds": round(elapsed, 3),
-        "points_per_sec": round((stats["points"] or 0) / elapsed, 1) if elapsed > 0 else None,
+        "points_per_sec": round(points / elapsed, 1) if elapsed > 0 else None,
         "completed_at_epoch": time.time(),
     }
-    return manifest
 
 
 def run_pipeline(
@@ -247,27 +233,21 @@ def run_pipeline(
 
 
 def read_tier(spark: SparkSession, base_dir: str, tier: int) -> DataFrame:
-    """All buckets of one tier, in the logical schema ``tiered_rollups``
-    emits (plus the ``bucket`` partition column).
+    """All buckets of one tier as ``tiered_rollups`` emits it
+    (``rollup_arrays`` rows), plus the ``bucket`` partition column.
 
-    Tier 0 is rebuilt from the ``encoded`` table: one row per decoded
-    token (a NULL token gives a count-0 row), whose ``window_idx`` is its
-    position plus ``n_tok - size(tokens)``, so a blob that retention cut
-    to its tail keeps its indices."""
+    Tier 0 is rebuilt from the ``encoded`` table by ``point_windows``:
+    one row per decoded token, whose ``window_idx`` is its position plus
+    ``n_tok - size(tokens)``, so a blob that retention cut to its tail
+    keeps its indices."""
     if tier:
         return spark.read.parquet(os.path.join(base_dir, "rollup", f"tier={tier}"))
     decoded = decode_tokens_table(spark.read.parquet(os.path.join(base_dir, "encoded")))
-    token = F.col("token")
-    return decoded.select(
+    points = decoded.select(
         "doc_id", "bucket", (F.col("n_tok") - F.size("tokens")).alias("offset"),
         F.posexplode("tokens").alias("pos", "token"),
-    ).select(
-        "doc_id", F.lit(0).alias("tier"),
-        (F.col("pos") + F.col("offset")).cast("long").alias("window_idx"),
-        token.isNotNull().cast("long").alias("agg_count"), token.alias("agg_min"),
-        token.alias("agg_max"), token.cast("long").alias("agg_sum"),
-        F.lit(False).alias("gapfilled"), "bucket",
-    )
+    ).withColumn("window_idx", F.col("pos") + F.col("offset"))
+    return point_windows(points, 0, "bucket")
 
 
 def pipeline_metrics(base_dir: str) -> list[dict]:
