@@ -174,3 +174,40 @@ def test_decode_rejects_unknown_codec_version(spark):
         except Exception:
             if attempt == 2:
                 raise
+
+
+_RESTART = """
+import sys
+sys.path.insert(0, {repo!r})
+from pyspark.sql import functions as F
+from tsc_spark.functions import decode_tokens_udf, encode_tokens_udf
+from tsc_spark.functions.canon import fmt_double_arr
+from tsc_spark.session import get_spark
+
+for _ in range(2):
+    spark = get_spark("udf_restart", master="local[1]", shuffle_partitions=1)
+    df = spark.createDataFrame([([1, 5, 2],)], "tokens array<int>")
+    row = df.select(
+        decode_tokens_udf(encode_tokens_udf("tokens")).alias("t"),
+        fmt_double_arr(F.transform("tokens", lambda x: x.cast("double"))).alias("f"),
+    ).first()
+    assert (row.t, row.f) == ([1, 5, 2], "1.0,5.0,2.0"), row
+    spark.stop()
+"""
+
+
+def test_udfs_survive_a_session_restart():
+    """The codec and canon UDFs work in a second SparkContext of the same
+    process: a UDF object that kept the first context's accumulator makes
+    every task of the second log 'Failed to update accumulator'."""
+    import os
+    import subprocess
+    import sys
+
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    proc = subprocess.run(
+        [sys.executable, "-c", _RESTART.format(repo=repo)],
+        capture_output=True, text=True, timeout=300,
+    )
+    assert proc.returncode == 0, proc.stderr[-2000:]
+    assert "Failed to update accumulator" not in proc.stderr, proc.stderr[-2000:]

@@ -17,7 +17,7 @@ import pytest
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from tsc_spark.plans.bucketing import plan_file_scans, plan_nodes  # noqa: E402
+from plan_walk import execution_plans, plan_file_scans, plan_nodes  # noqa: E402
 
 
 @pytest.fixture(scope="module")
@@ -157,3 +157,49 @@ def test_near_dup_embeddings_plan_one_bucket_self_join(spark, tmp_path):
     # checkpointed bucket table; the others attach embeddings to pairs
     assert sum("Join" in n for n in nodes) == 3, nodes
     assert sum(n == "RDDScanExec" for n in nodes) == 2, nodes
+
+
+_PY_NODES = ("MapInArrow", "PythonMapInArrow", "MapInPandas", "ArrowEvalPython")
+
+
+@pytest.fixture()
+def one_bucket(spark, tokens_df, tmp_path):
+    from tsc_spark.plans.pipeline import ingest
+
+    base = str(tmp_path / "pipe")
+    ingest(spark, tokens_df, base, n_buckets=1)
+    return base
+
+
+def test_pipeline_bucket_pass_scans_twice(spark, one_bucket):
+    """A bucket's pass reads the bucket twice: once for the one
+    mapInArrow that emits both doc-major tiers, once for the encoder's
+    Arrow UDF — two scans, two Python nodes."""
+    from tsc_spark.plans.pipeline import run_pipeline
+
+    plans = execution_plans(spark, lambda: run_pipeline(spark, one_bucket, with_timeline=False))
+    nodes = [n for plan in plans for n in plan]
+    assert sum(n.startswith("Scan ") for n in nodes) == 2, plans
+    assert sorted(n for n in nodes if n in _PY_NODES) == ["ArrowEvalPython", "MapInArrow"], plans
+
+
+def test_stored_tier_sweep_is_narrow(spark, one_bucket):
+    """The stored-tier sweep slices each doc-major row in place: its
+    executed plan has no Exchange and no Window, where the window-row
+    sweep it replaces (retention_sweep, kept as its oracle) has both.
+    Its one Sort puts the coalesced output in doc_id order; with no
+    Exchange in the plan it sorts within a task, never across tasks."""
+    from tsc_spark.operators.retention import apply_retention, retention_sweep
+    from tsc_spark.plans.pipeline import read_tier, run_pipeline
+
+    run_pipeline(spark, one_bucket, with_timeline=False, with_encoded=False)
+    shuffled = {"Exchange", "Window"}
+    sweep = retention_sweep(read_tier(spark, one_bucket, 1))
+    (oracle,) = execution_plans(spark, sweep.collect)
+    assert shuffled <= set(oracle), oracle  # the walker sees them when they are there
+    plans = execution_plans(spark, lambda: apply_retention(spark, one_bucket, {1: 2, 2: 1}))
+    assert len(plans) == 1, plans  # both tiers in one job
+    (nodes,) = plans
+    assert sum(n.startswith("Scan ") for n in nodes) == 2, nodes
+    assert not shuffled & set(nodes), nodes
+    assert nodes.count("Sort") == 1, nodes

@@ -341,7 +341,7 @@ def test_swap_recovery_restores_interrupted_swap(tmp_path):
     wedging on the stale backup."""
     import os
 
-    from tsc_spark.operators.retention import recover_swapped_dir, _swap_backup, swap_in_dir
+    from tsc_spark.plans.pipeline import _swap_backup, recover_swapped_dir, swap_in_dir
 
     path = str(tmp_path / "sink")
     backup = _swap_backup(path)

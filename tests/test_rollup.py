@@ -4,12 +4,16 @@
 import numpy as np
 import pyarrow as pa
 import pytest
+from hypothesis import HealthCheck, given, settings
+from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
 from tsc_spark.config import TIER_STRIDES
 from tsc_spark.kernel.scoring import combine_complexity_metric_scores, normalize_scores
 from tsc_spark.operators.rollup import (
+    _DOC_TIER_SCHEMA,
     combined_window_scores,
+    doc_tier_batches,
     explode_points,
     gapfill,
     gapfill_locf,
@@ -17,7 +21,9 @@ from tsc_spark.operators.rollup import (
     rollup_points,
     series_stats,
     tiered_rollups,
+    window_rows,
 )
+from tsc_spark.operators.retention import keep_last, retention_sweep
 
 
 def _oracle_rollup(tokens, stride):
@@ -317,3 +323,81 @@ def test_synth_tokens_skewed_parallelism_invariant(spark):
     assert ra == rb
     heavy = [r for r in ra if r[3] == "heavy"]
     assert len(heavy) == 4 and all(r[2] == 64 for r in heavy)
+
+
+# docs for the doc-major tier pass: NULL and empty docs, NULL token
+# elements, docs shorter than one tier-2 window and docs over several;
+# the batch is sliced (a nonzero offset) when ``cut`` is drawn
+_token = st.one_of(st.none(), st.integers(-(2**31), 2**31 - 1)) | st.integers(-3, 3)
+_doc = st.one_of(
+    st.none(),
+    st.lists(_token, max_size=20),
+    st.lists(st.integers(-(2**31), 2**31 - 1) | st.none(), min_size=60, max_size=200),
+)
+
+
+@st.composite
+def _doc_batches(draw):
+    docs = draw(st.lists(_doc, max_size=8))
+    batch = _batch({f"d{i}": toks for i, toks in enumerate(docs)})
+    if draw(st.booleans()) and len(batch):
+        start = draw(st.integers(0, len(batch) - 1))
+        batch = batch.slice(start, draw(st.integers(0, len(batch) - start)))
+    return batch
+
+
+def _exploded(out: pa.RecordBatch) -> list[tuple]:
+    """Window rows of doc-major tier rows, in Python."""
+    return [
+        (r["doc_id"], r["first_window_idx"] + k, *aggs, r["tier"])
+        for r in out.to_pylist()
+        for k, aggs in enumerate(zip(r["agg_count"], r["agg_min"], r["agg_max"], r["agg_sum"]))
+    ]
+
+
+class TestDocMajorTiers:
+    """The doc-major tier pass (``doc_tier_batches``, stored by the
+    pipeline) against ``rollup_batch``, and its keep-last slice
+    (``retention.keep_last``) against ``retention_sweep``."""
+
+    @settings(max_examples=80, deadline=None)
+    @given(_doc_batches())
+    def test_packed_tiers_explode_to_rollup_batch(self, batch):
+        tier1, tier2 = doc_tier_batches(batch)
+        assert tier1.schema == tier2.schema
+        assert tier1.schema.names == [f.split()[0] for f in _DOC_TIER_SCHEMA.split(", ")]
+        # tier 2 is reduced from the tier-1 partials; rollup_batch at
+        # stride 64 reduces the tokens directly: every field bit-equal
+        for tier, out in ((1, tier1), (2, tier2)):
+            direct = rollup_batch(batch, TIER_STRIDES[tier], tier)
+            assert _exploded(out) == [tuple(r.values()) for r in direct.to_pylist()], tier
+            assert out.column("doc_id").to_pylist() == sorted(
+                set(direct.column("doc_id").to_pylist()), key=lambda d: int(d[1:])
+            )
+
+    @settings(max_examples=8, deadline=None,
+              suppress_health_check=[HealthCheck.function_scoped_fixture])
+    @given(_doc_batches(), st.integers(0, 12), st.none() | st.integers(0, 12), st.integers(0, 12))
+    def test_slice_sweep_equals_retention_sweep(self, spark, batch, keep1, keep2, smaller):
+        """``keep`` 0, ``keep`` past a doc's window count, a tier the
+        policy omits (kept whole), and a second sweep with a smaller
+        ``keep`` over the first one's output."""
+        policy = {1: keep1} if keep2 is None else {1: keep1, 2: keep2}
+        stored = spark.createDataFrame(
+            [r for out in doc_tier_batches(batch) for r in out.to_pylist()], _DOC_TIER_SCHEMA
+        )
+        rows = spark.createDataFrame(
+            [r for t in (1, 2) for r in rollup_batch(batch, TIER_STRIDES[t], t).to_pylist()],
+            "doc_id string, window_idx long, agg_count long, agg_min int, agg_max int, "
+            "agg_sum long, tier int",
+        )
+
+        def collect(df):
+            return sorted(map(tuple, df.collect()), key=repr)
+
+        once = keep_last(stored, policy)
+        assert collect(window_rows(once)) == collect(retention_sweep(rows, policy))
+        again = {t: max(k - smaller, 0) for t, k in policy.items()}
+        assert collect(window_rows(keep_last(once, again))) == collect(
+            retention_sweep(retention_sweep(rows, policy), again)
+        )

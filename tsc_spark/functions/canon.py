@@ -26,9 +26,14 @@ def fmt_double_seq(vals) -> str:
     return ",".join(repr(float(x)) for x in vals)
 
 
-@F.pandas_udf(StringType())
-def fmt_double_arr(s: pd.Series) -> pd.Series:
+def _fmt(s: pd.Series) -> pd.Series:
     return s.map(fmt_double_seq)
+
+
+def fmt_double_arr(col) -> F.Column:
+    """Built per call, like ``codec_udfs.encode_tokens_udf``: a UDF
+    object keeps the accumulator of the SparkContext it first ran under."""
+    return F.pandas_udf(_fmt, StringType())(col)
 
 
 def csv_int_arr(col) -> F.Column:

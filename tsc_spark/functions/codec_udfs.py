@@ -9,7 +9,7 @@ so does a NULL token element."""
 from __future__ import annotations
 
 import pyarrow as pa
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.functions import arrow_udf
 from pyspark.sql.types import ArrayType, BinaryType, IntegerType
@@ -25,14 +25,22 @@ __all__ = [
 ]
 
 
-@arrow_udf(BinaryType())
-def encode_tokens_udf(tokens: pa.Array) -> pa.Array:
+def _encode(tokens: pa.Array) -> pa.Array:
     return encode(tokens)
 
 
-@arrow_udf(ArrayType(IntegerType()))
-def decode_tokens_udf(blob: pa.Array) -> pa.Array:
+def _decode(blob: pa.Array) -> pa.Array:
     return decode(blob).cast(pa.list_(pa.int32()))
+
+
+# built per call: a UDF object keeps the accumulator of the SparkContext
+# it first ran under, and each task of a later context fails to update it
+def encode_tokens_udf(col) -> Column:
+    return arrow_udf(_encode, BinaryType())(col)
+
+
+def decode_tokens_udf(col) -> Column:
+    return arrow_udf(_decode, ArrayType(IntegerType()))(col)
 
 
 def encode_tokens_table(tokens_df: DataFrame) -> DataFrame:

@@ -1,31 +1,27 @@
 """Retention / TTL enforcement over the tiered rollup layout.
 
-The north rule's third leg (rollup + downsample + **retention**).
-Reference analogue: InfluxDB retention-policy expiry (the reference's
-``scripts/seed_influx.jl:152-177``).  Here retention is an explicit,
-scalable engine operator:
+The north rule's third leg (rollup + downsample + **retention**), after
+InfluxDB retention-policy expiry (the reference's
+``scripts/seed_influx.jl:152-177``).  Policy = per-tier ``keep_last``
+horizon in that tier's own windows, counted back from each series'
+newest window (per-doc ``window_idx`` is the engine's time axis).
 
-* policy = per-tier ``keep_last`` horizon, in that tier's own windows,
-  counted back from each series' newest window (per-doc ``window_idx``
-  is the engine's time axis);
-* ``retention_sweep`` → surviving rows (the logical view); expiry is a
-  per-(doc, tier) window max, so no shuffle beyond doc partitioning;
-* ``retention_plan``  → per-(tier, doc, segment) ``drop`` / ``keep`` /
-  ``rewrite`` action: with a date/bucket-partitioned layout, ``drop``
-  segments are metadata-only partition drops and only boundary
-  segments are rewritten, which is what keeps a 100 TB sweep cheap;
-* ``apply_retention`` → sweeps the bucketed pipeline layout
-  (plans.pipeline) per bucket — tiers 1/2 in one uncached pass, tier 0
-  (the DoD ``encoded`` table) in one narrow decode → tail → encode
-  ``mapInArrow`` pass, row counts from ``Observation``s — and records
-  the sweep in each bucket manifest.
+* ``retention_sweep`` / ``retention_plan`` → surviving window rows and
+  per-(tier, doc, segment) ``drop`` / ``keep`` / ``rewrite`` actions;
+  finding each doc's newest window takes an Exchange, a Sort and a
+  Window over ``(doc_id, tier)`` (PLANS.md ``retention_plan``).  The
+  sweep is the oracle of ``keep_last``;
+* ``keep_last`` → the same cut over the doc-major stored tiers: a
+  ``slice`` per row, narrow (no Exchange, Sort or Window);
+* ``apply_retention`` → sweeps the bucketed pipeline layout per bucket:
+  tiers 1/2 by ``keep_last`` in one pass, tier 0 (the DoD ``encoded``
+  table) by one decode → tail → encode ``mapInArrow`` pass.
 """
 
 from __future__ import annotations
 
 import json
 import os
-import shutil
 from functools import reduce
 
 import numpy as np
@@ -35,55 +31,19 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import LongType, StructField, StructType
 
 from ..codecs import decode, encode
+from ..plans.pipeline import _commit_manifest, _dir_bytes, _manifest_path  # layout owner
+from ..plans.pipeline import _write_encoded, swap_in_dir, write_tiers
+from .rollup import _AGGS
 
 __all__ = [
     "DEFAULT_RETENTION_POLICY",
     "with_expiry_flags",
     "retention_sweep",
     "retention_plan",
+    "keep_last",
     "apply_retention",
-    "recover_swapped_dir",
-    "swap_in_dir",
 ]
 
-
-def _swap_backup(path: str) -> str:
-    """The backup ``swap_in_dir`` moves ``path`` to: a ``.``-prefixed
-    sibling, which Spark's file index skips, so a reader of the parent
-    table never takes it for a partition (``_``-prefixed names are
-    skipped only without ``=``, and ``bucket=0`` holds one)."""
-    head, name = os.path.split(os.path.normpath(path))
-    return os.path.join(head, f".{name}.swap_old")
-
-
-def recover_swapped_dir(path: str) -> None:
-    """Crash recovery for ``swap_in_dir``: if a previous swap died
-    between its two renames, ``path`` is missing and the backup holds
-    the data — restore it.  A stale backup alongside an intact ``path``
-    means the swap completed; drop it."""
-    old = _swap_backup(path)
-    if os.path.isdir(old):
-        if not os.path.isdir(path):
-            os.rename(old, path)  # the interrupted swap's data, restored
-        else:
-            shutil.rmtree(old)
-
-
-def swap_in_dir(path: str, tmp: str) -> None:
-    """Replace directory ``path`` with fully-written ``tmp`` via
-    rename-to-backup + rename-in + drop-backup.
-
-    Not truly atomic (POSIX has no two-directory exchange): a crash
-    between the renames leaves ``path`` missing and the data in the
-    backup — which ``recover_swapped_dir`` (called here on entry, and
-    callable at startup) restores, so the failure mode is "sweep didn't
-    happen", never data loss or a permanently wedged sink."""
-    recover_swapped_dir(path)
-    old = _swap_backup(path)
-    if os.path.isdir(path):
-        os.rename(path, old)
-    os.rename(tmp, path)
-    shutil.rmtree(old, ignore_errors=True)
 
 # keep raw windows briefly, rolled-up tiers progressively longer —
 # the classic downsample-and-expire ladder (tier0 raw / tier1 8x / tier2 64x)
@@ -99,16 +59,11 @@ def _keep_last_expr(policy: dict[int, int]) -> F.Column:
 
 def with_expiry_flags(rollup_df: DataFrame, policy: dict[int, int]) -> DataFrame:
     """Attach ``expired`` per row: window older than the tier horizon
-    counted back from the doc's newest window of that tier.
-
-    Rows from tiers absent from the policy are retained forever."""
-    w = Window.partitionBy("doc_id", "tier")
-    keep = _keep_last_expr(policy)
-    horizon = F.max("window_idx").over(w) - keep + 1
-    return rollup_df.withColumn(
-        "expired",
-        F.when(keep.isNull(), F.lit(False)).otherwise(F.col("window_idx") < horizon),
-    )
+    counted back from the doc's newest window of that tier.  Rows of a
+    tier absent from the policy never expire."""
+    newest = F.max("window_idx").over(Window.partitionBy("doc_id", "tier"))
+    expired = F.col("window_idx") <= newest - _keep_last_expr(policy)
+    return rollup_df.withColumn("expired", F.coalesce(expired, F.lit(False)))
 
 
 def retention_sweep(rollup_df: DataFrame, policy: dict[int, int] | None = None) -> DataFrame:
@@ -149,6 +104,22 @@ def retention_plan(
     )
 
 
+def keep_last(tiers_df: DataFrame, policy: dict[int, int]) -> DataFrame:
+    """``retention_sweep`` over doc-major tier rows (``rollup.doc_tiers``
+    with a ``tier`` of the policy): each row's window arrays are cut to
+    their last ``keep`` elements and ``first_window_idx`` moves past the
+    cut; a row left without windows is dropped, and the rows of a tier
+    absent from the policy are kept whole.  Narrow per row."""
+    n = F.size("agg_count")
+    cut = F.greatest(n - F.coalesce(_keep_last_expr(policy), n), F.lit(0))
+    return tiers_df.select(
+        "doc_id",
+        (F.col("first_window_idx") + cut).alias("first_window_idx"),
+        *[F.slice(c, cut + 1, n - cut).alias(c) for c in _AGGS],
+        "tier",
+    ).filter(F.size("agg_count") > 0)
+
+
 def _keep_tail(batch: pa.RecordBatch, keep: int) -> pa.RecordBatch:
     """An ``encoded`` batch with every blob cut to its last ``keep``
     tokens, plus each doc's stored token count before and after the cut."""
@@ -171,8 +142,6 @@ def _keep_tail(batch: pa.RecordBatch, keep: int) -> pa.RecordBatch:
 def _trim_encoded(spark, path: str, tmp: str, keep: int) -> dict:
     """Cut every blob under ``path`` to its last ``keep`` tokens (written
     to ``tmp``, then swapped in); returns the tier-0 rows before/after."""
-    from ..plans.pipeline import _write_encoded  # layout owner
-
     stored = spark.read.parquet(path)
     counts = [StructField(name, LongType()) for name in ("n_before", "n_after")]
     counted = Observation()
@@ -192,19 +161,13 @@ def apply_retention(
     buckets: list[int] | None = None,
 ) -> list[dict]:
     """Execute the sweep over the bucketed pipeline layout, bucket by
-    bucket.
-
-    Per bucket: cut each ``encoded`` blob to its last ``policy[0]``
-    tokens (``_trim_encoded``; without tier 0 in the policy the raw
-    archive stays whole); union the tier 1/2 directories (tiers without
-    one are skipped), sweep them once, write the survivors
-    ``partitionBy`` tier into a hidden tmp dir and swap each tier
-    directory in; and append a ``retention`` record (policy, per-tier
-    rows before/after from ``Observation``s, on-disk bytes of every
-    swept directory) to the bucket manifest.  Nothing is cached, so AQE
-    coalesces the output into one file per tier."""
-    from ..plans.pipeline import _commit_manifest, _dir_bytes, _manifest_path  # layout owner
-
+    bucket: cut each ``encoded`` blob to its last ``policy[0]`` tokens
+    (``_trim_encoded``; without tier 0 in the policy the raw archive
+    stays whole); ``keep_last`` the tier 1/2 directories (tiers without
+    one are skipped) in one pass and ``write_tiers`` the survivors; and
+    append a ``retention`` record (policy, per-tier windows before/after
+    from ``Observation``s, on-disk bytes of every swept directory) to
+    the bucket manifest."""
     pol = DEFAULT_RETENTION_POLICY if policy is None else policy
     with open(os.path.join(base_dir, "_ingest.json")) as f:
         n_buckets = json.load(f)["n_buckets"]
@@ -215,11 +178,7 @@ def apply_retention(
         mpath = _manifest_path(base_dir, bucket)
         if not os.path.exists(mpath):
             continue
-        record = {
-            "bucket": bucket,
-            "policy": {str(k): v for k, v in pol.items()},
-            "tiers": {},
-        }
+        record = {"bucket": bucket, "policy": {str(k): v for k, v in pol.items()}, "tiers": {}}
         encoded = os.path.join(base_dir, "encoded", f"bucket={bucket}")
         if 0 in pol and os.path.isdir(encoded):
             # "_"-prefixed without "=": a read of the encoded table skips it
@@ -229,29 +188,25 @@ def apply_retention(
                  for t in sorted(pol) if t > 0}
         tiers = [t for t, path in paths.items() if os.path.isdir(path)]
         if tiers:
-            counts = [F.count(F.when(F.col("tier") == t, 1)).alias(str(t)) for t in tiers]
+            size = F.size("agg_count")
+            counts = [F.sum(F.when(F.col("tier") == t, size)).alias(str(t)) for t in tiers]
             before, after = Observation(), Observation()
-            # keep the tier column: swept buckets must keep the schema of
-            # unswept ones, or read_tier's merged schema is nondeterministic
-            rollup = reduce(
+            stored = reduce(
                 DataFrame.unionByName,
                 [spark.read.parquet(paths[t]).withColumn("tier", F.lit(t)) for t in tiers],
             ).observe(before, *counts)
-            survivors = retention_sweep(rollup, pol).observe(after, *counts)
             # "_"-prefixed and outside every tier dir: read_tier never sees it
             tmp = os.path.join(base_dir, "rollup", f"_retention_tmp_bucket={bucket}")
-            survivors.withColumn("sweep_tier", F.col("tier")).write.partitionBy(
-                "sweep_tier"
-            ).mode("overwrite").parquet(tmp)
-            for t in tiers:
-                tier_tmp = os.path.join(tmp, f"sweep_tier={t}")
-                if not os.path.isdir(tier_tmp):  # all expired: no dir, but stay readable
-                    spark.createDataFrame([], survivors.schema).write.parquet(tier_tmp)
-                swap_in_dir(paths[t], tier_tmp)  # crash-recoverable, see swap_in_dir
-            shutil.rmtree(tmp)
-            record["tiers"].update(
-                {k: {"rows_before": n, "rows_after": after.get[k]} for k, n in before.get.items()}
-            )
+            # one file per 128 MiB swept, its rows in doc_id order (sorted
+            # doc_ids compress ~3x better); coalesce and sort stay inside
+            # the task, so the sweep moves no row between tasks
+            n_files = 1 + sum(_dir_bytes(paths[t]) for t in tiers) // (128 << 20)
+            survivors = keep_last(stored, pol).observe(after, *counts)
+            survivors = survivors.coalesce(n_files).sortWithinPartitions("doc_id")
+            write_tiers(survivors, tmp, {t: paths[t] for t in tiers})
+            windows = {k: (n, after.get[k]) for k, n in before.get.items()}
+            record["tiers"].update({k: {"rows_before": int(b or 0), "rows_after": int(a or 0)}
+                                    for k, (b, a) in windows.items()})
         swept = {f"tier{t}": paths[t] for t in tiers} | {"encoded": encoded}
         record["bytes"] = {k: _dir_bytes(d) for k, d in swept.items() if os.path.isdir(d)}
         with open(mpath) as f:

@@ -1,29 +1,19 @@
 """Tiered continuous aggregates (1×/8×/64× downsample) with gap-fill.
 
-The genuinely new aggregation mandated by the north rule on top of the
-reference's clustering (the reference's analogue is the per-series point
-stream grouped by synthetic time, /root/reference/scripts/seed_influx.jl:
-575-598).  Apart from the one Arrow crossing of the strided tiers,
-everything here is native DataFrame API — Catalyst sees every operator,
-so AQE handles partial aggregation, shuffle sizing and skew.
+The north rule's aggregation (the reference's analogue is the per-series
+point stream grouped by synthetic time, its scripts/seed_influx.jl:
+575-598).  A doc's points live in one row, so every tier is a
+shuffle-free per-row transform:
 
-Design for 100 TB:
-* every tier is a SHUFFLE-FREE per-row transform over the token arrays,
-  and ``rollup_arrays`` is the one array implementation (posexplode for
-  tier-0, ``rollup_batch``'s numpy ``reduceat`` over ``mapInArrow`` for
-  tiers 1/2) — a doc's windows never cross rows, so no tier pays a
-  shuffle, and the batch pipeline and the streaming tier run the same
-  plan;
-* its rows (``_WINDOW_SCHEMA``) are the one tier-row form: the batch
-  tier store, the stream sink and ``plans.pipeline.read_tier`` all hold
-  them, and ``point_windows`` builds the one-point windows of tier 0;
-* ``rollup_points(explode_points(...))`` is the explode+groupBy oracle
-  the array path is tested against;
-* gap-fill, for sparse point streams only, generates the expected
-  window grid with ``sequence`` + explode and left-joins actuals: both
-  sides are partitioned by doc_id, so AQE plans a co-partitioned join
-  without a broadcast of big data.  Its output alone carries the
-  ``gapfilled`` flag.
+* ``rollup_arrays`` emits window rows (``_WINDOW_SCHEMA``, the one
+  tier-row form of ``tiered_rollups``, the stream sink and
+  ``plans.pipeline.read_tier``): ``posexplode`` at stride 1, and
+  ``rollup_batch``'s numpy ``reduceat`` over ``mapInArrow`` above it;
+* ``doc_tiers`` emits tiers 1/2 doc-major (``_DOC_TIER_SCHEMA``, the
+  stored form) in one pass, and ``window_rows`` explodes them back;
+* ``rollup_points(explode_points(...))`` is the explode+groupBy oracle;
+* ``gapfill``, for sparse point streams only, left-joins actuals to the
+  expected window grid; its output alone carries ``gapfilled``.
 """
 
 from __future__ import annotations
@@ -40,6 +30,9 @@ __all__ = [
     "rollup_points",
     "rollup_arrays",
     "rollup_batch",
+    "doc_tier_batches",
+    "doc_tiers",
+    "window_rows",
     "point_windows",
     "tiered_rollups",
     "gapfill",
@@ -85,33 +78,32 @@ _WINDOW_SCHEMA = (
     "doc_id string, window_idx long, agg_count long, "
     "agg_min int, agg_max int, agg_sum long, tier int"
 )
+_AGGS = ("agg_count", "agg_min", "agg_max", "agg_sum")
+# tiers 1/2 at rest: one row per (doc, tier), window k of the row is
+# window ``first_window_idx + k`` of the doc (plans.pipeline.read_tier)
+_DOC_TIER_SCHEMA = (
+    "doc_id string, first_window_idx long, agg_count array<long>, "
+    "agg_min array<int>, agg_max array<int>, agg_sum array<long>, tier int"
+)
 
 
-def rollup_batch(
-    batch: pa.RecordBatch, stride: int, tier: int, keep: int | None = None
-) -> pa.RecordBatch:
-    """Tier windows of one ``(doc_id, tokens)`` Arrow batch, in numpy.
+def _windows(tokens: pa.ListArray, stride: int, keep: int | None = None) -> tuple:
+    """``(doc, window_idx, count, min, max, sum, has_nulls)`` numpy arrays,
+    one entry per window of the token lists, doc-major.
 
-    Window bounds come straight from the list offsets: doc ``d`` spans
-    ``values[offsets[d]:offsets[d + 1]]`` and its window ``k`` is
-    ``[start + k*stride, min(start + (k+1)*stride, end))``.  One
-    ``reduceat`` per reducer runs over the interleaved ``[start, end)``
-    pairs and keeps every other result, so gaps between docs (NULL
+    Doc ``d`` spans ``values[offsets[d]:offsets[d + 1]]``; one
+    ``reduceat`` per reducer runs over the interleaved window ``[start,
+    end)`` pairs and keeps every other result, so gaps between docs (NULL
     arrays, sliced batches) are never summed into a window.  NULL and
-    empty arrays yield no windows, like tier-0's ``n_tok > 0`` filter.
-    NULL elements are skipped like SQL aggregates skip them: ``agg_count``
-    counts the present values, the other reducers run over them, and a
-    window of NULLs alone has count 0 and NULL aggregates.  Only a batch
-    holding NULL elements pays for that masking.  ``keep`` cuts each doc
-    to its last ``keep`` windows (the retention keep-last horizon,
-    operators.retention.retention_sweep) before any reduction runs;
-    ``None`` keeps every window."""
-    tokens = batch.column(1)
+    empty arrays yield no windows.  NULL elements are skipped like SQL
+    aggregates skip them (only a batch holding some pays for the mask):
+    a window of NULLs alone has count 0 and identity aggregates.
+    ``keep`` cuts each doc to its last ``keep`` windows first."""
     offsets = tokens.offsets.to_numpy().astype(np.int64)
     valid = tokens.is_valid().to_numpy(zero_copy_only=False)
     starts, ends = offsets[:-1], offsets[1:]
     n_win = -(-np.where(valid, ends - starts, 0) // stride)
-    doc = np.repeat(np.arange(len(batch)), n_win)
+    doc = np.repeat(np.arange(len(tokens)), n_win)
     win_idx = np.arange(doc.size) - np.repeat(np.cumsum(n_win) - n_win, n_win)
     if keep is not None:
         cut = win_idx >= n_win[doc] - keep
@@ -124,50 +116,102 @@ def rollup_batch(
     # (which may equal len(values), out of reduceat's range) is dropped
     values = tokens.values.slice(0, win_end.max(initial=0))
     bounds = bounds[:-1]
-    count, empty = win_end - win_start, None
+    count = win_end - win_start
     if values.null_count:
-        # each reducer sees NULLs as its identity; windows of NULLs only
-        # (count 0) come out NULL
         present = values.is_valid().to_numpy(zero_copy_only=False)
         count = np.add.reduceat(present, bounds, dtype=np.int64)[0::2]
-        empty = count == 0
         info = np.iinfo(values.type.to_pandas_dtype())
-        lo, hi, total = (
-            values.fill_null(v).to_numpy() for v in (info.max, info.min, 0)
-        )
+        lo, hi, total = (values.fill_null(v).to_numpy() for v in (info.max, info.min, 0))
     else:
         lo = hi = total = values.to_numpy()
+    return (
+        doc,
+        win_idx,
+        count,
+        np.minimum.reduceat(lo, bounds)[0::2],
+        np.maximum.reduceat(hi, bounds)[0::2],
+        np.add.reduceat(total, bounds, dtype=np.int64)[0::2],
+        values.null_count > 0,
+    )
+
+
+def rollup_batch(
+    batch: pa.RecordBatch, stride: int, tier: int, keep: int | None = None
+) -> pa.RecordBatch:
+    """``_WINDOW_SCHEMA`` rows of one ``(doc_id, tokens)`` Arrow batch, one
+    per ``_windows`` window; a count-0 window has NULL aggregates."""
+    doc, win_idx, count, lo, hi, total, nulls = _windows(batch.column(1), stride, keep)
+    empty = count == 0 if nulls else None
     return pa.RecordBatch.from_arrays(
-        [
-            batch.column(0).take(doc),
-            win_idx,
-            count,
-            pa.array(np.minimum.reduceat(lo, bounds)[0::2], mask=empty),
-            pa.array(np.maximum.reduceat(hi, bounds)[0::2], mask=empty),
-            pa.array(np.add.reduceat(total, bounds, dtype=np.int64)[0::2], mask=empty),
-            np.full(doc.size, tier, dtype=np.int32),
-        ],
+        [batch.column(0).take(doc), win_idx, count]
+        + [pa.array(v, mask=empty) for v in (lo, hi, total)]
+        + [np.full(doc.size, tier, dtype=np.int32)],
         names=[f.split()[0] for f in _WINDOW_SCHEMA.split(", ")],
+    )
+
+
+def doc_tier_batches(batch: pa.RecordBatch):
+    """Tiers 1 and 2 of one ``(doc_id, tokens)`` batch, doc-major: one
+    ``_DOC_TIER_SCHEMA`` row per doc and tier holding ``rollup_batch``'s
+    windows as list elements.  Tier 2 is reduced from the tier-1
+    partials (sum of counts, min of mins, max of maxes, sum of sums); a
+    count-0 partial holds the reducers' identities, so it is exact."""
+    doc, win_idx, count, lo, hi, total, nulls = _windows(batch.column(1), TIER_STRIDES[1])
+    for tier in (1, 2):
+        if tier == 2:
+            first = np.flatnonzero(win_idx % (TIER_STRIDES[2] // TIER_STRIDES[1]) == 0)
+            doc = doc[first]
+            count, total = (np.add.reduceat(v, first) for v in (count, total))
+            lo, hi = np.minimum.reduceat(lo, first), np.maximum.reduceat(hi, first)
+        rows = np.flatnonzero(np.diff(doc, prepend=-1))
+        offsets = pa.array(np.append(rows, doc.size).astype(np.int32))
+        empty = count == 0 if nulls else None
+        yield pa.RecordBatch.from_arrays(
+            [batch.column(0).take(doc[rows]), np.zeros(rows.size, dtype=np.int64)]
+            + [pa.ListArray.from_arrays(offsets, pa.array(count))]
+            + [pa.ListArray.from_arrays(offsets, pa.array(v, mask=empty)) for v in (lo, hi, total)]
+            + [np.full(rows.size, tier, dtype=np.int32)],
+            names=[f.split()[0] for f in _DOC_TIER_SCHEMA.split(", ")],
+        )
+
+
+def doc_tiers(tokens_df: DataFrame) -> DataFrame:
+    """Doc-major tiers 1 and 2 (``doc_tier_batches``) of a tokens table
+    in one ``mapInArrow`` pass: one scan and one Python crossing."""
+    return tokens_df.select("doc_id", "tokens").mapInArrow(
+        lambda batches: (out for b in batches for out in doc_tier_batches(b)),
+        _DOC_TIER_SCHEMA,
+    )
+
+
+def window_rows(doc_tiers_df: DataFrame, *passthrough: str) -> DataFrame:
+    """``_WINDOW_SCHEMA`` rows, then the ``passthrough`` columns, of
+    doc-major tier rows: element ``k`` of a row's arrays is window
+    ``first_window_idx + k``."""
+    return doc_tiers_df.select(
+        "doc_id", "first_window_idx", "tier", *passthrough,
+        F.posexplode(F.arrays_zip(*_AGGS)).alias("pos", "w"),
+    ).select(
+        "doc_id",
+        (F.col("first_window_idx") + F.col("pos")).alias("window_idx"),
+        *[F.col("w")[c].alias(c) for c in _AGGS],
+        "tier",
+        *passthrough,
     )
 
 
 def rollup_arrays(
     tokens_df: DataFrame, stride: int, tier: int, keep: int | None = None
 ) -> DataFrame:
-    """Shuffle-free tier rollup straight from the token arrays.
+    """Shuffle-free tier rollup straight from the token arrays, rows
+    equal to ``rollup_points(explode_points(df), stride, tier)``.
 
-    A doc's points live in ONE row, so tier windows never cross rows and
-    the whole rollup is a narrow per-row transform.  Stride 1 is a plain
-    ``posexplode`` (the windows ARE the points).  Larger strides run
-    ``rollup_batch`` as ``mapInArrow``: the token arrays reach Python as
-    one values buffer plus offsets, never as per-doc objects, and every
-    window is reduced by numpy ``reduceat``.  The plan is stateless, so
-    the same call serves batch tables and append-mode streams.  Emits
-    rows identical to ``rollup_points(explode_points(df), stride, tier)``
-    (the point-stream path kept for sparse/deleted streams).  ``keep``
-    emits only each doc's last ``keep`` windows, i.e. the rows
-    ``retention_sweep`` keeps from them under ``{tier: keep}``.
-    """
+    Stride 1 is a plain ``posexplode`` (the windows ARE the points);
+    larger strides run ``rollup_batch`` as ``mapInArrow``, so the tokens
+    reach Python as one values buffer plus offsets.  The plan is
+    stateless: it serves batch tables and append-mode streams.  ``keep``
+    emits each doc's last ``keep`` windows, the rows ``retention_sweep``
+    keeps under ``{tier: keep}``."""
     if stride > 1:
         return tokens_df.select("doc_id", "tokens").mapInArrow(
             lambda batches: (rollup_batch(b, stride, tier, keep) for b in batches),
@@ -259,17 +303,11 @@ def gapfill_locf(filled: DataFrame) -> DataFrame:
 
 
 def tiered_rollups(tokens_df: DataFrame) -> dict[int, DataFrame]:
-    """Full tier-0/1/2 rollup set from a tokens table, ``{tier:
-    DataFrame}`` of ``rollup_arrays`` rows.
-
-    tier-0 = stride 1 (raw points as windows), tier-1 = 8×, tier-2 = 64×.
-    All tiers are shuffle-free ``rollup_arrays`` plans: tier-0 is the
-    native posexplode (windows ARE the points); tiers 1/2 use the
-    Arrow-vectorized ``reduceat`` path, which beat a JVM higher-order-
-    function plan ~1.4× and explode+groupBy ~2× (no shuffle, no per-row
-    Python).  Dense token arrays have no gaps, so no window is
-    gap-filled; sparse point streams (deletes, retention-expired ranges)
-    use ``rollup_points`` + ``gapfill`` instead."""
+    """Full tier-0/1/2 rollup set of a tokens table, ``{tier: DataFrame}``
+    of ``rollup_arrays`` rows at strides 1/8/64.  The Arrow ``reduceat``
+    path beat a JVM higher-order-function plan ~1.4× and explode+groupBy
+    ~2×.  Dense token arrays have no gaps; sparse point streams use
+    ``rollup_points`` + ``gapfill`` instead."""
     return {tier: rollup_arrays(tokens_df, TIER_STRIDES[tier], tier) for tier in (0, 1, 2)}
 
 

@@ -1,26 +1,22 @@
 """Resumable ingest → tier-0/1/2 pipeline with per-partition lineage.
 
-The unit of work and of checkpointing is a **doc-hash bucket**:
-``bucket = pmod(xxhash64(doc_id), n_buckets)``.  Ingest writes the corpus
-once, hive-partitioned by bucket; every later stage reads a single
-bucket directory (partition pruning — no re-scan of the other 100 TB /
-n_buckets).  After a bucket's outputs are committed, a manifest JSON
-records its lineage (doc_id range, doc/point counts, per-tier window
-watermarks) and per-bucket metrics; a resumed run skips every bucket
-with a manifest — the file-level equivalent of
-``source LEFT ANTI JOIN done_partitions`` (SURVEY §2.3).
+The unit of work and of checkpointing is a **doc-hash bucket**
+(``pmod(xxhash64(doc_id), n_buckets)``).  Ingest writes the corpus once,
+hive-partitioned by bucket; every later stage reads one bucket directory.
+A committed bucket's manifest JSON records its lineage (doc_id range,
+doc/point counts, per-tier window watermarks), metrics and the on-disk
+bytes of each output; a resumed run skips every bucket with a manifest —
+the file-level ``source LEFT ANTI JOIN done_partitions`` (SURVEY §2.3).
 
-Tiers 1/2 are stored as ``rollup_arrays`` emits them, the rows the
-stream sink (streaming.rollup_stream) appends too, so batch and stream
-tier tables share one schema.  Each raw value is stored once: the
-``encoded`` table, one delta-of-delta blob per doc, is tier 0.
-``read_tier(spark, base, 0)`` rebuilds its rows; retention trims each
-blob to its last ``keep`` tokens while ``n_tok`` keeps the series
-length.  The ``encoded`` column is written
-without parquet column statistics: a min/max over DoD blobs prunes
-nothing, and parquet-mr would store the largest whole blob in every
-file footer.  Each manifest records the on-disk bytes of every output
-directory the bucket wrote.
+Tiers 1/2 are stored doc-major (``operators.rollup.doc_tiers``, both from
+one ``mapInArrow`` pass): one row per (doc, tier) holding
+``first_window_idx`` and the window arrays, so retention is a per-row
+``slice``.  ``read_tier`` explodes them back to ``rollup_arrays``' window
+rows, the rows the stream sink appends.  Each raw value is stored once:
+the ``encoded`` table (one delta-of-delta blob per doc, written without
+column statistics — a min/max over blobs prunes nothing and would put
+whole blobs in every footer) is tier 0; retention trims each blob to its
+last ``keep`` tokens while ``n_tok`` keeps the series length.
 
 At cluster scale, buckets map to independent jobs that can be retried /
 scheduled separately; n_buckets is chosen so one bucket ≈ a few hundred
@@ -31,6 +27,7 @@ from __future__ import annotations
 
 import json
 import os
+import shutil
 import time
 
 from pyspark.sql import DataFrame, Observation, SparkSession
@@ -39,9 +36,12 @@ from pyspark.sql import functions as F
 from ..config import DEFAULT_MERGE_THRESHOLD_RATIO, TIER_STRIDES
 from ..functions.codec_udfs import decode_tokens_table, encode_tokens_table
 from ..operators.clustering import cluster_timeline
-from ..operators.rollup import point_windows, tiered_rollups
+from ..operators.rollup import doc_tiers, point_windows, window_rows
 
-__all__ = ["ingest", "run_pipeline", "read_tier", "pipeline_metrics"]
+__all__ = [
+    "ingest", "run_pipeline", "read_tier", "write_tiers", "swap_in_dir", "recover_swapped_dir",
+    "pipeline_metrics",
+]
 
 
 def _manifest_dir(base_dir: str) -> str:
@@ -69,6 +69,58 @@ def _write_encoded(encoded_df: DataFrame, path: str) -> None:
     encoded_df.write.mode("overwrite").option(
         "parquet.column.statistics.enabled#encoded", "false"
     ).parquet(path)
+
+
+def _swap_backup(path: str) -> str:
+    """The backup ``swap_in_dir`` moves ``path`` to: a ``.``-prefixed
+    sibling, which Spark's file index skips (``_``-prefixed names are
+    skipped only without ``=``), so no reader takes it for a partition."""
+    head, name = os.path.split(os.path.normpath(path))
+    return os.path.join(head, f".{name}.swap_old")
+
+
+def recover_swapped_dir(path: str) -> None:
+    """Crash recovery for ``swap_in_dir``: if a previous swap died
+    between its two renames, ``path`` is missing and the backup holds
+    the data — restore it.  A stale backup alongside an intact ``path``
+    means the swap completed; drop it."""
+    old = _swap_backup(path)
+    if os.path.isdir(old):
+        if not os.path.isdir(path):
+            os.rename(old, path)  # the interrupted swap's data, restored
+        else:
+            shutil.rmtree(old)
+
+
+def swap_in_dir(path: str, tmp: str) -> None:
+    """Replace directory ``path`` with fully-written ``tmp`` via
+    rename-to-backup + rename-in + drop-backup.  Not atomic (POSIX has no
+    two-directory exchange): a crash between the renames leaves the data
+    in the backup, which ``recover_swapped_dir`` (run here on entry)
+    restores — the failure mode is "swap didn't happen", never loss."""
+    recover_swapped_dir(path)
+    old = _swap_backup(path)
+    if os.path.isdir(path):
+        os.rename(path, old)
+    os.rename(tmp, path)
+    shutil.rmtree(old, ignore_errors=True)
+
+
+def write_tiers(tiers_df: DataFrame, stage: str, paths: dict[int, str]) -> None:
+    """Write doc-major tier rows ``partitionBy`` their ``tier`` into the
+    hidden ``stage`` dir, then swap each tier's rows in at ``paths[tier]``
+    (crash-recoverable, see swap_in_dir).  A tier left without rows
+    becomes an empty table with the stored schema, so it stays readable."""
+    tiers_df.write.partitionBy("tier").mode("overwrite").parquet(stage)
+    for tier, path in paths.items():
+        tier_stage = os.path.join(stage, f"tier={tier}")
+        if not os.path.isdir(tier_stage):
+            tiers_df.sparkSession.createDataFrame([], tiers_df.drop("tier").schema).write.parquet(
+                tier_stage
+            )
+        os.makedirs(os.path.dirname(path), exist_ok=True)
+        swap_in_dir(path, tier_stage)
+    shutil.rmtree(stage)
 
 
 def _commit_manifest(mpath: str, manifest: dict) -> None:
@@ -143,13 +195,13 @@ def _process_bucket(
             F.max("doc_id").alias("doc_max"),
             F.max("n_tok").alias("max_n_tok"),
         )
-        # shuffle-free array-path rollup (operators.rollup.rollup_arrays),
-        # stored as it is emitted; tier 0 is the encoded table below
-        tiers = tiered_rollups(df)
-        for tier in (1, 2):
-            path = os.path.join(base_dir, "rollup", f"tier={tier}", f"bucket={bucket}")
-            tiers[tier].write.mode("overwrite").parquet(path)
-            written[f"tier{tier}"] = path
+        # both doc-major tiers from one pass (tier 0 is the encoded table);
+        # the stage is "_"-prefixed and outside every tier dir
+        paths = {t: os.path.join(base_dir, "rollup", f"tier={t}", f"bucket={bucket}")
+                 for t in (1, 2)}
+        stage = os.path.join(base_dir, "rollup", f"_pipeline_tmp_bucket={bucket}")
+        write_tiers(doc_tiers(df), stage, paths)
+        written.update({f"tier{t}": path for t, path in paths.items()})
         stats = stats_obs.get
         if with_timeline:
             written["timeline"] = os.path.join(base_dir, "timeline", f"bucket={bucket}")
@@ -236,12 +288,14 @@ def read_tier(spark: SparkSession, base_dir: str, tier: int) -> DataFrame:
     """All buckets of one tier as ``tiered_rollups`` emits it
     (``rollup_arrays`` rows), plus the ``bucket`` partition column.
 
-    Tier 0 is rebuilt from the ``encoded`` table by ``point_windows``:
-    one row per decoded token, whose ``window_idx`` is its position plus
+    Tiers 1/2 explode each doc-major row (``window_rows``).  Tier 0 is
+    rebuilt from the ``encoded`` table by ``point_windows``: one row per
+    decoded token, whose ``window_idx`` is its position plus
     ``n_tok - size(tokens)``, so a blob that retention cut to its tail
     keeps its indices."""
     if tier:
-        return spark.read.parquet(os.path.join(base_dir, "rollup", f"tier={tier}"))
+        stored = spark.read.parquet(os.path.join(base_dir, "rollup", f"tier={tier}"))
+        return window_rows(stored.withColumn("tier", F.lit(tier)), "bucket")
     decoded = decode_tokens_table(spark.read.parquet(os.path.join(base_dir, "encoded")))
     points = decoded.select(
         "doc_id", "bucket", (F.col("n_tok") - F.size("tokens")).alias("offset"),
