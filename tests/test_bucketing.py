@@ -13,8 +13,11 @@ import pytest
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from plan_walk import plan_exchanges  # noqa: E402
-from tsc_spark.plans.bucketing import bucketed_join, write_bucketed  # noqa: E402
+from tsc_spark.plans.bucketing import (  # noqa: E402
+    bucketed_join,
+    plan_exchanges,
+    write_bucketed,
+)
 
 
 @pytest.fixture()

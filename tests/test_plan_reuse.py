@@ -17,7 +17,7 @@ import pytest
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from plan_walk import execution_plans, plan_file_scans, plan_nodes  # noqa: E402
+from tsc_spark.plans.bucketing import plan_file_scans, plan_nodes  # noqa: E402
 
 
 @pytest.fixture(scope="module")
@@ -159,6 +159,29 @@ def test_near_dup_embeddings_plan_one_bucket_self_join(spark, tmp_path):
     assert sum(n == "RDDScanExec" for n in nodes) == 2, nodes
 
 
+def execution_plans(spark, fn) -> list[list[str]]:
+    """Final-plan node names of each SQL execution ``fn`` runs, as the SQL
+    status store records them (the listener bus is drained around ``fn``,
+    so the store has caught up).  Writes are executions too, which is why
+    the store is read instead of a DataFrame's plan."""
+    store = spark._jsparkSession.sharedState().statusStore()
+    bus = spark.sparkContext._jsc.sc().listenerBus()
+
+    def ids():
+        execs = store.executionsList()
+        return [execs.apply(i).executionId() for i in range(execs.size())]
+
+    bus.waitUntilEmpty()
+    seen = max(ids(), default=-1)
+    fn()
+    bus.waitUntilEmpty()
+    plans = []
+    for eid in sorted(i for i in ids() if i > seen):
+        nodes = store.planGraph(eid).allNodes()
+        plans.append([nodes.apply(j).name() for j in range(nodes.size())])
+    return plans
+
+
 _PY_NODES = ("MapInArrow", "PythonMapInArrow", "MapInPandas", "ArrowEvalPython")
 
 
@@ -184,22 +207,28 @@ def test_pipeline_bucket_pass_scans_twice(spark, one_bucket):
 
 
 def test_stored_tier_sweep_is_narrow(spark, one_bucket):
-    """The stored-tier sweep slices each doc-major row in place: its
-    executed plan has no Exchange and no Window, where the window-row
-    sweep it replaces (retention_sweep, kept as its oracle) has both.
-    Its one Sort puts the coalesced output in doc_id order; with no
-    Exchange in the plan it sorts within a task, never across tasks."""
-    from tsc_spark.operators.retention import apply_retention, retention_sweep
+    """The stored-tier sweep (keep_last) slices each doc-major row in
+    place: its executed plan has no Exchange, Sort or Window, where the
+    window-row sweep it replaces (retention_sweep, kept as its oracle)
+    has all three.  apply_retention's write of the survivors adds one
+    Sort by (tier, doc_id) inside each task: partitionBy("tier") needs
+    the rows grouped by tier, and doc_id order is the file layout."""
+    from pyspark.sql import functions as F
+
+    from tsc_spark.operators.retention import apply_retention, keep_last, retention_sweep
     from tsc_spark.plans.pipeline import read_tier, run_pipeline
 
     run_pipeline(spark, one_bucket, with_timeline=False, with_encoded=False)
-    shuffled = {"Exchange", "Window"}
-    sweep = retention_sweep(read_tier(spark, one_bucket, 1))
-    (oracle,) = execution_plans(spark, sweep.collect)
+    shuffled = {"Exchange", "Sort", "Window"}
+    oracle_sweep = retention_sweep(read_tier(spark, one_bucket, 1), {1: 2})
+    (oracle,) = execution_plans(spark, oracle_sweep.collect)
     assert shuffled <= set(oracle), oracle  # the walker sees them when they are there
+    stored = spark.read.parquet(os.path.join(one_bucket, "rollup", "tier=1"))
+    (sweep,) = execution_plans(spark, keep_last(stored.withColumn("tier", F.lit(1)), {1: 2}).collect)
+    assert not shuffled & set(sweep), sweep
     plans = execution_plans(spark, lambda: apply_retention(spark, one_bucket, {1: 2, 2: 1}))
     assert len(plans) == 1, plans  # both tiers in one job
     (nodes,) = plans
     assert sum(n.startswith("Scan ") for n in nodes) == 2, nodes
-    assert not shuffled & set(nodes), nodes
+    assert not {"Exchange", "Window"} & set(nodes), nodes
     assert nodes.count("Sort") == 1, nodes

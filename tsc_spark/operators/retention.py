@@ -1,21 +1,28 @@
 """Retention / TTL enforcement over the tiered rollup layout.
 
-The north rule's third leg (rollup + downsample + **retention**), after
-InfluxDB retention-policy expiry (the reference's
-``scripts/seed_influx.jl:152-177``).  Policy = per-tier ``keep_last``
-horizon in that tier's own windows, counted back from each series'
-newest window (per-doc ``window_idx`` is the engine's time axis).
+The north rule's third leg (rollup + downsample + **retention**).
+Reference analogue: InfluxDB retention-policy expiry (the reference's
+``scripts/seed_influx.jl:152-177``).  Here retention is an explicit,
+scalable engine operator:
 
-* ``retention_sweep`` / ``retention_plan`` → surviving window rows and
-  per-(tier, doc, segment) ``drop`` / ``keep`` / ``rewrite`` actions;
+* policy = per-tier ``keep_last`` horizon, in that tier's own windows,
+  counted back from each series' newest window (per-doc ``window_idx``
+  is the engine's time axis);
+* ``retention_sweep`` → surviving window rows (the logical view);
   finding each doc's newest window takes an Exchange, a Sort and a
-  Window over ``(doc_id, tier)`` (PLANS.md ``retention_plan``).  The
-  sweep is the oracle of ``keep_last``;
+  Window over ``(doc_id, tier)`` (PLANS.md ``retention_plan``).  It is
+  the oracle of ``keep_last``;
+* ``retention_plan``  → per-(tier, doc, segment) ``drop`` / ``keep`` /
+  ``rewrite`` action: with a date/bucket-partitioned layout, ``drop``
+  segments are metadata-only partition drops and only boundary
+  segments are rewritten, which is what keeps a 100 TB sweep cheap;
 * ``keep_last`` → the same cut over the doc-major stored tiers: a
   ``slice`` per row, narrow (no Exchange, Sort or Window);
-* ``apply_retention`` → sweeps the bucketed pipeline layout per bucket:
-  tiers 1/2 by ``keep_last`` in one pass, tier 0 (the DoD ``encoded``
-  table) by one decode → tail → encode ``mapInArrow`` pass.
+* ``apply_retention`` → sweeps the bucketed pipeline layout
+  (plans.pipeline) per bucket — tiers 1/2 by ``keep_last`` in one
+  uncached pass, tier 0 (the DoD ``encoded`` table) in one narrow
+  decode → tail → encode ``mapInArrow`` pass, row counts from
+  ``Observation``s — and records the sweep in each bucket manifest.
 """
 
 from __future__ import annotations
@@ -59,11 +66,16 @@ def _keep_last_expr(policy: dict[int, int]) -> F.Column:
 
 def with_expiry_flags(rollup_df: DataFrame, policy: dict[int, int]) -> DataFrame:
     """Attach ``expired`` per row: window older than the tier horizon
-    counted back from the doc's newest window of that tier.  Rows of a
-    tier absent from the policy never expire."""
-    newest = F.max("window_idx").over(Window.partitionBy("doc_id", "tier"))
-    expired = F.col("window_idx") <= newest - _keep_last_expr(policy)
-    return rollup_df.withColumn("expired", F.coalesce(expired, F.lit(False)))
+    counted back from the doc's newest window of that tier.
+
+    Rows from tiers absent from the policy are retained forever."""
+    w = Window.partitionBy("doc_id", "tier")
+    keep = _keep_last_expr(policy)
+    horizon = F.max("window_idx").over(w) - keep + 1
+    return rollup_df.withColumn(
+        "expired",
+        F.when(keep.isNull(), F.lit(False)).otherwise(F.col("window_idx") < horizon),
+    )
 
 
 def retention_sweep(rollup_df: DataFrame, policy: dict[int, int] | None = None) -> DataFrame:
@@ -161,13 +173,16 @@ def apply_retention(
     buckets: list[int] | None = None,
 ) -> list[dict]:
     """Execute the sweep over the bucketed pipeline layout, bucket by
-    bucket: cut each ``encoded`` blob to its last ``policy[0]`` tokens
-    (``_trim_encoded``; without tier 0 in the policy the raw archive
-    stays whole); ``keep_last`` the tier 1/2 directories (tiers without
-    one are skipped) in one pass and ``write_tiers`` the survivors; and
-    append a ``retention`` record (policy, per-tier windows before/after
-    from ``Observation``s, on-disk bytes of every swept directory) to
-    the bucket manifest."""
+    bucket.
+
+    Per bucket: cut each ``encoded`` blob to its last ``policy[0]``
+    tokens (``_trim_encoded``; without tier 0 in the policy the raw
+    archive stays whole); union the tier 1/2 directories (tiers without
+    one are skipped), ``keep_last`` them once and ``write_tiers`` the
+    survivors (one file per tier and 128 MiB swept, in doc_id order);
+    and append a ``retention`` record (policy, per-tier windows
+    before/after from ``Observation``s, on-disk bytes of every swept
+    directory) to the bucket manifest."""
     pol = DEFAULT_RETENTION_POLICY if policy is None else policy
     with open(os.path.join(base_dir, "_ingest.json")) as f:
         n_buckets = json.load(f)["n_buckets"]
@@ -178,7 +193,11 @@ def apply_retention(
         mpath = _manifest_path(base_dir, bucket)
         if not os.path.exists(mpath):
             continue
-        record = {"bucket": bucket, "policy": {str(k): v for k, v in pol.items()}, "tiers": {}}
+        record = {
+            "bucket": bucket,
+            "policy": {str(k): v for k, v in pol.items()},
+            "tiers": {},
+        }
         encoded = os.path.join(base_dir, "encoded", f"bucket={bucket}")
         if 0 in pol and os.path.isdir(encoded):
             # "_"-prefixed without "=": a read of the encoded table skips it
@@ -197,12 +216,13 @@ def apply_retention(
             ).observe(before, *counts)
             # "_"-prefixed and outside every tier dir: read_tier never sees it
             tmp = os.path.join(base_dir, "rollup", f"_retention_tmp_bucket={bucket}")
-            # one file per 128 MiB swept, its rows in doc_id order (sorted
-            # doc_ids compress ~3x better); coalesce and sort stay inside
-            # the task, so the sweep moves no row between tasks
+            # one file per tier and 128 MiB swept, its rows in doc_id order
+            # (sorted doc_ids compress ~3x better); coalesce and sort stay
+            # inside the task, so the sweep moves no row between tasks, and
+            # the tier-major order is the one partitionBy("tier") needs
             n_files = 1 + sum(_dir_bytes(paths[t]) for t in tiers) // (128 << 20)
             survivors = keep_last(stored, pol).observe(after, *counts)
-            survivors = survivors.coalesce(n_files).sortWithinPartitions("doc_id")
+            survivors = survivors.coalesce(n_files).sortWithinPartitions("tier", "doc_id")
             write_tiers(survivors, tmp, {t: paths[t] for t in tiers})
             windows = {k: (n, after.get[k]) for k, n in before.get.items()}
             record["tiers"].update({k: {"rows_before": int(b or 0), "rows_after": int(a or 0)}

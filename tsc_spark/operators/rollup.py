@@ -1,19 +1,34 @@
 """Tiered continuous aggregates (1×/8×/64× downsample) with gap-fill.
 
-The north rule's aggregation (the reference's analogue is the per-series
-point stream grouped by synthetic time, its scripts/seed_influx.jl:
-575-598).  A doc's points live in one row, so every tier is a
-shuffle-free per-row transform:
+The genuinely new aggregation mandated by the north rule on top of the
+reference's clustering (the reference's analogue is the per-series point
+stream grouped by synthetic time, its scripts/seed_influx.jl:
+575-598).  Apart from the Arrow crossings of the strided tiers,
+everything here is native DataFrame API — Catalyst sees every operator,
+so AQE handles partial aggregation, shuffle sizing and skew.
 
-* ``rollup_arrays`` emits window rows (``_WINDOW_SCHEMA``, the one
-  tier-row form of ``tiered_rollups``, the stream sink and
-  ``plans.pipeline.read_tier``): ``posexplode`` at stride 1, and
-  ``rollup_batch``'s numpy ``reduceat`` over ``mapInArrow`` above it;
-* ``doc_tiers`` emits tiers 1/2 doc-major (``_DOC_TIER_SCHEMA``, the
-  stored form) in one pass, and ``window_rows`` explodes them back;
-* ``rollup_points(explode_points(...))`` is the explode+groupBy oracle;
-* ``gapfill``, for sparse point streams only, left-joins actuals to the
-  expected window grid; its output alone carries ``gapfilled``.
+Design for 100 TB:
+* every tier is a SHUFFLE-FREE per-row transform over the token arrays,
+  and ``rollup_arrays`` is the one window-row implementation (posexplode
+  for tier-0, ``rollup_batch``'s numpy ``reduceat`` over ``mapInArrow``
+  for tiers 1/2) — a doc's windows never cross rows, so no tier pays a
+  shuffle, and the batch pipeline and the streaming tier run the same
+  plan;
+* its rows (``_WINDOW_SCHEMA``) are the tier-row form of
+  ``tiered_rollups``, the stream sink and ``plans.pipeline.read_tier``,
+  and ``point_windows`` builds the one-point windows of tier 0;
+* the batch tier store holds tiers 1/2 doc-major (``_DOC_TIER_SCHEMA``:
+  one row per doc and tier holding its window arrays): ``doc_tiers``
+  emits both in one pass over ``rollup_batch``'s numpy core, tier 2
+  reduced from the tier-1 partials, and ``window_rows`` explodes them
+  back to ``_WINDOW_SCHEMA``;
+* ``rollup_points(explode_points(...))`` is the explode+groupBy oracle
+  the array path is tested against;
+* gap-fill, for sparse point streams only, generates the expected
+  window grid with ``sequence`` + explode and left-joins actuals: both
+  sides are partitioned by doc_id, so AQE plans a co-partitioned join
+  without a broadcast of big data.  Its output alone carries the
+  ``gapfilled`` flag.
 """
 
 from __future__ import annotations
@@ -91,14 +106,20 @@ def _windows(tokens: pa.ListArray, stride: int, keep: int | None = None) -> tupl
     """``(doc, window_idx, count, min, max, sum, has_nulls)`` numpy arrays,
     one entry per window of the token lists, doc-major.
 
-    Doc ``d`` spans ``values[offsets[d]:offsets[d + 1]]``; one
-    ``reduceat`` per reducer runs over the interleaved window ``[start,
-    end)`` pairs and keeps every other result, so gaps between docs (NULL
+    Window bounds come straight from the list offsets: doc ``d`` spans
+    ``values[offsets[d]:offsets[d + 1]]`` and its window ``k`` is
+    ``[start + k*stride, min(start + (k+1)*stride, end))``.  One
+    ``reduceat`` per reducer runs over the interleaved ``[start, end)``
+    pairs and keeps every other result, so gaps between docs (NULL
     arrays, sliced batches) are never summed into a window.  NULL and
-    empty arrays yield no windows.  NULL elements are skipped like SQL
-    aggregates skip them (only a batch holding some pays for the mask):
-    a window of NULLs alone has count 0 and identity aggregates.
-    ``keep`` cuts each doc to its last ``keep`` windows first."""
+    empty arrays yield no windows, like tier-0's ``n_tok > 0`` filter.
+    NULL elements are skipped like SQL aggregates skip them: ``count``
+    counts the present values, the other reducers run over them, and a
+    window of NULLs alone has count 0 and the reducers' identities.
+    Only a batch holding NULL elements pays for that masking.  ``keep``
+    cuts each doc to its last ``keep`` windows (the retention keep-last
+    horizon, operators.retention.retention_sweep) before any reduction
+    runs; ``None`` keeps every window."""
     offsets = tokens.offsets.to_numpy().astype(np.int64)
     valid = tokens.is_valid().to_numpy(zero_copy_only=False)
     starts, ends = offsets[:-1], offsets[1:]
@@ -118,10 +139,13 @@ def _windows(tokens: pa.ListArray, stride: int, keep: int | None = None) -> tupl
     bounds = bounds[:-1]
     count = win_end - win_start
     if values.null_count:
+        # each reducer sees NULLs as its identity
         present = values.is_valid().to_numpy(zero_copy_only=False)
         count = np.add.reduceat(present, bounds, dtype=np.int64)[0::2]
         info = np.iinfo(values.type.to_pandas_dtype())
-        lo, hi, total = (values.fill_null(v).to_numpy() for v in (info.max, info.min, 0))
+        lo, hi, total = (
+            values.fill_null(v).to_numpy() for v in (info.max, info.min, 0)
+        )
     else:
         lo = hi = total = values.to_numpy()
     return (
@@ -203,15 +227,20 @@ def window_rows(doc_tiers_df: DataFrame, *passthrough: str) -> DataFrame:
 def rollup_arrays(
     tokens_df: DataFrame, stride: int, tier: int, keep: int | None = None
 ) -> DataFrame:
-    """Shuffle-free tier rollup straight from the token arrays, rows
-    equal to ``rollup_points(explode_points(df), stride, tier)``.
+    """Shuffle-free tier rollup straight from the token arrays.
 
-    Stride 1 is a plain ``posexplode`` (the windows ARE the points);
-    larger strides run ``rollup_batch`` as ``mapInArrow``, so the tokens
-    reach Python as one values buffer plus offsets.  The plan is
-    stateless: it serves batch tables and append-mode streams.  ``keep``
-    emits each doc's last ``keep`` windows, the rows ``retention_sweep``
-    keeps under ``{tier: keep}``."""
+    A doc's points live in ONE row, so tier windows never cross rows and
+    the whole rollup is a narrow per-row transform.  Stride 1 is a plain
+    ``posexplode`` (the windows ARE the points).  Larger strides run
+    ``rollup_batch`` as ``mapInArrow``: the token arrays reach Python as
+    one values buffer plus offsets, never as per-doc objects, and every
+    window is reduced by numpy ``reduceat``.  The plan is stateless, so
+    the same call serves batch tables and append-mode streams.  Emits
+    rows identical to ``rollup_points(explode_points(df), stride, tier)``
+    (the point-stream path kept for sparse/deleted streams).  ``keep``
+    emits only each doc's last ``keep`` windows, i.e. the rows
+    ``retention_sweep`` keeps from them under ``{tier: keep}``.
+    """
     if stride > 1:
         return tokens_df.select("doc_id", "tokens").mapInArrow(
             lambda batches: (rollup_batch(b, stride, tier, keep) for b in batches),
@@ -303,11 +332,17 @@ def gapfill_locf(filled: DataFrame) -> DataFrame:
 
 
 def tiered_rollups(tokens_df: DataFrame) -> dict[int, DataFrame]:
-    """Full tier-0/1/2 rollup set of a tokens table, ``{tier: DataFrame}``
-    of ``rollup_arrays`` rows at strides 1/8/64.  The Arrow ``reduceat``
-    path beat a JVM higher-order-function plan ~1.4× and explode+groupBy
-    ~2×.  Dense token arrays have no gaps; sparse point streams use
-    ``rollup_points`` + ``gapfill`` instead."""
+    """Full tier-0/1/2 rollup set from a tokens table, ``{tier:
+    DataFrame}`` of ``rollup_arrays`` rows.
+
+    tier-0 = stride 1 (raw points as windows), tier-1 = 8×, tier-2 = 64×.
+    All tiers are shuffle-free ``rollup_arrays`` plans: tier-0 is the
+    native posexplode (windows ARE the points); tiers 1/2 use the
+    Arrow-vectorized ``reduceat`` path, which beat a JVM higher-order-
+    function plan ~1.4× and explode+groupBy ~2× (no shuffle, no per-row
+    Python).  Dense token arrays have no gaps, so no window is
+    gap-filled; sparse point streams (deletes, retention-expired ranges)
+    use ``rollup_points`` + ``gapfill`` instead."""
     return {tier: rollup_arrays(tokens_df, TIER_STRIDES[tier], tier) for tier in (0, 1, 2)}
 
 

@@ -30,7 +30,13 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
-__all__ = ["write_bucketed", "bucketed_join"]
+__all__ = [
+    "write_bucketed",
+    "bucketed_join",
+    "plan_nodes",
+    "plan_exchanges",
+    "plan_file_scans",
+]
 
 
 def write_bucketed(
@@ -73,3 +79,67 @@ def bucketed_join(
     locally.  ``plan_exchanges`` asserts that property in tests.
     """
     return spark.table(left_table).join(spark.table(right_table), on, how)
+
+
+def _walk_plan(node):
+    """Yield every physical operator reachable from ``node``, descending
+    through AQE wrappers: AdaptiveSparkPlanExec exposes the CURRENT
+    physical plan via ``executedPlan()`` (= the final adaptive plan once
+    an action ran, the initial plan before — callers asserting on
+    adaptive re-planning must execute the DataFrame first), and
+    QueryStageExec wrappers expose their materialized subtree via
+    ``plan()``.  Tree walk per class name, not string matching — plan
+    RENDERING changes across Spark versions; node class names are the
+    stable surface."""
+    yield node
+    name = node.getClass().getSimpleName()
+    if name == "AdaptiveSparkPlanExec":
+        try:
+            inner = node.executedPlan()
+        except Exception:  # pre-4.x fallback accessor
+            inner = node.initialPlan()
+        yield from _walk_plan(inner)
+        return
+    if name.endswith("QueryStageExec"):
+        yield from _walk_plan(node.plan())
+        return
+    children = node.children()
+    for i in range(children.size()):
+        yield from _walk_plan(children.apply(i))
+
+
+def plan_nodes(df: DataFrame) -> list[str]:
+    """Physical-operator class names of ``df``'s (executed) plan.
+
+    Under AQE the pre-execution plan is the INITIAL plan; run an action
+    on ``df`` first when the assertion concerns runtime re-planning or
+    exchange reuse."""
+    plan = df._jdf.queryExecution().executedPlan()
+    return [n.getClass().getSimpleName() for n in _walk_plan(plan)]
+
+
+def plan_exchanges(df: DataFrame) -> int:
+    """Number of SHUFFLE Exchange operators in the executed plan.
+
+    BroadcastExchangeExec is excluded: replicating a small side is not
+    the data movement bucketing exists to remove (and at the scale where
+    bucketing matters, neither side broadcasts).  ReusedExchangeExec is
+    excluded for the same reason — a reused exchange re-reads shuffle
+    files already paid for."""
+    return sum(1 for n in plan_nodes(df) if n == "ShuffleExchangeExec")
+
+
+def plan_file_scans(df: DataFrame) -> int:
+    """Number of file/table scan operators (FileSourceScanExec for
+    parquet v1 reads, BatchScanExec for DSv2) in the executed plan.
+
+    The subtree-reuse assertions use this: a self-join whose input was
+    materialized (localCheckpoint/persist) before joining shows ZERO
+    file scans in its final plan — both sides read the materialized
+    RDD — where the unmaterialized version re-scans the source once per
+    reference."""
+    return sum(
+        1
+        for n in plan_nodes(df)
+        if n in ("FileSourceScanExec", "BatchScanExec")
+    )

@@ -1,22 +1,29 @@
 """Resumable ingest → tier-0/1/2 pipeline with per-partition lineage.
 
-The unit of work and of checkpointing is a **doc-hash bucket**
-(``pmod(xxhash64(doc_id), n_buckets)``).  Ingest writes the corpus once,
-hive-partitioned by bucket; every later stage reads one bucket directory.
-A committed bucket's manifest JSON records its lineage (doc_id range,
-doc/point counts, per-tier window watermarks), metrics and the on-disk
-bytes of each output; a resumed run skips every bucket with a manifest —
-the file-level ``source LEFT ANTI JOIN done_partitions`` (SURVEY §2.3).
+The unit of work and of checkpointing is a **doc-hash bucket**:
+``bucket = pmod(xxhash64(doc_id), n_buckets)``.  Ingest writes the corpus
+once, hive-partitioned by bucket; every later stage reads a single
+bucket directory (partition pruning — no re-scan of the other 100 TB /
+n_buckets).  After a bucket's outputs are committed, a manifest JSON
+records its lineage (doc_id range, doc/point counts, per-tier window
+watermarks) and per-bucket metrics; a resumed run skips every bucket
+with a manifest — the file-level equivalent of
+``source LEFT ANTI JOIN done_partitions`` (SURVEY §2.3).
 
 Tiers 1/2 are stored doc-major (``operators.rollup.doc_tiers``, both from
 one ``mapInArrow`` pass): one row per (doc, tier) holding
 ``first_window_idx`` and the window arrays, so retention is a per-row
-``slice``.  ``read_tier`` explodes them back to ``rollup_arrays``' window
-rows, the rows the stream sink appends.  Each raw value is stored once:
-the ``encoded`` table (one delta-of-delta blob per doc, written without
-column statistics — a min/max over blobs prunes nothing and would put
-whole blobs in every footer) is tier 0; retention trims each blob to its
-last ``keep`` tokens while ``n_tok`` keeps the series length.
+``slice``.  ``read_tier`` explodes them back to ``rollup_arrays``' rows,
+the rows the stream sink (streaming.rollup_stream) appends, so batch and
+stream tier tables read with one schema.  Each raw value is stored once:
+the ``encoded`` table, one delta-of-delta blob per doc, is tier 0.
+``read_tier(spark, base, 0)`` rebuilds its rows; retention trims each
+blob to its last ``keep`` tokens while ``n_tok`` keeps the series
+length.  The ``encoded`` column is written
+without parquet column statistics: a min/max over DoD blobs prunes
+nothing, and parquet-mr would store the largest whole blob in every
+file footer.  Each manifest records the on-disk bytes of every output
+directory the bucket wrote.
 
 At cluster scale, buckets map to independent jobs that can be retried /
 scheduled separately; n_buckets is chosen so one bucket ≈ a few hundred
@@ -73,8 +80,9 @@ def _write_encoded(encoded_df: DataFrame, path: str) -> None:
 
 def _swap_backup(path: str) -> str:
     """The backup ``swap_in_dir`` moves ``path`` to: a ``.``-prefixed
-    sibling, which Spark's file index skips (``_``-prefixed names are
-    skipped only without ``=``), so no reader takes it for a partition."""
+    sibling, which Spark's file index skips, so a reader of the parent
+    table never takes it for a partition (``_``-prefixed names are
+    skipped only without ``=``, and ``bucket=0`` holds one)."""
     head, name = os.path.split(os.path.normpath(path))
     return os.path.join(head, f".{name}.swap_old")
 
@@ -94,10 +102,13 @@ def recover_swapped_dir(path: str) -> None:
 
 def swap_in_dir(path: str, tmp: str) -> None:
     """Replace directory ``path`` with fully-written ``tmp`` via
-    rename-to-backup + rename-in + drop-backup.  Not atomic (POSIX has no
-    two-directory exchange): a crash between the renames leaves the data
-    in the backup, which ``recover_swapped_dir`` (run here on entry)
-    restores — the failure mode is "swap didn't happen", never loss."""
+    rename-to-backup + rename-in + drop-backup.
+
+    Not truly atomic (POSIX has no two-directory exchange): a crash
+    between the renames leaves ``path`` missing and the data in the
+    backup — which ``recover_swapped_dir`` (called here on entry, and
+    callable at startup) restores, so the failure mode is "sweep didn't
+    happen", never data loss or a permanently wedged sink."""
     recover_swapped_dir(path)
     old = _swap_backup(path)
     if os.path.isdir(path):

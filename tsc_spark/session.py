@@ -4,15 +4,18 @@ Targets a 1000-executor cluster reading ~100 TB; in this sandbox runs on
 local[N].  Knobs chosen so the same job scales by partition count only:
 
 * AQE on (runtime coalescing + skew splitting replaces hand-tuned
-  shuffle partition counts); shuffle partitions default to the cores;
-* Arrow-batched Python boundary for the operators that cross it;
-* a partitioned write keeps one open file per value instead of sorting
-  its rows by that value first (the doc-major tier writes of
-  plans.pipeline.write_tiers hold two values, tiers 1 and 2);
-* local masters start Python workers from ``tsc_spark.pydaemon``, which
-  drops the archives on the worker path whose contents are installed
-  (each task re-read them, costing more CPU than the rollup UDFs).  It
-  stays local-only: a cluster executor may have no installed pyspark.
+  shuffle partition counts at every SF),
+* Arrow-batched Python boundary (the clustering kernel is the only
+  non-JVM operator; everything Catalyst-visible stays native),
+* shuffle partitions default to cores in local mode, 2×cores estates
+  on clusters via spark.sql.adaptive.coalescePartitions,
+* local masters start Python workers from ``tsc_spark.pydaemon``: each
+  task re-reads the directory of every archive on the worker path
+  (``pyspark.zip``, the py4j zip, the spark-core jar), which cost more
+  CPU than the rollup UDFs themselves; that daemon drops the archives
+  whose contents are installed.  It stays local-only because a cluster
+  executor may have no installed pyspark, and a ``--py-files`` zip need
+  not be importable before its first task.
 """
 
 from __future__ import annotations
@@ -70,7 +73,6 @@ def get_spark(
         # memory holds a few Arrow batches of heavy docs
         .config("spark.sql.files.maxPartitionBytes", str(128 * 1024 * 1024))
         .config("spark.sql.parquet.compression.codec", "zstd")
-        .config("spark.sql.maxConcurrentOutputFileWriters", "2")
         .config("spark.driver.memory", os.environ.get("TSC_DRIVER_MEM", "8g"))
         .config("spark.ui.enabled", "false")
         .config("spark.sql.session.timeZone", "UTC")

@@ -1,17 +1,24 @@
 """Structured Streaming tier: incremental token ingest → rollup → sink.
 
-The batch rollup operator (operators.rollup.rollup_arrays) is stateless
-and narrow — windows live inside one row — so the same plan runs under
-``readStream`` with no watermark and no stateful operator.  The
-retention keep-last cut runs inside that rollup (``keep``), and each
-micro-batch is appended to a parquet sink once, exactly-once by the
-checkpoint plus the sink's ``_spark_metadata`` log — the streaming twin
-of the batch pipeline's per-bucket manifests (plans.pipeline).
-``windowed_event_counts`` shows the watermarked tumbling-window shape
-for event-time data (bounded state, late rows dropped).
+The batch rollup operator (operators.rollup.rollup_arrays — posexplode
+for tier-0, the Arrow ``reduceat`` crossing for tiers 1/2) is stateless
+and narrow — windows live inside one row — so the exact same plan runs
+under ``readStream`` with no watermark and no stateful operator.  The
+retention keep-last cut is applied inside that rollup (``keep``), so
+each micro-batch's docs are rolled up, cut to their tier horizon and
+appended to a parquet sink once: no re-read of the sink, no shuffle.
+The checkpoint plus the sink's ``_spark_metadata`` log make the append
+exactly-once — the streaming twin of the batch pipeline's per-bucket
+manifests (plans.pipeline).
+
+For event-time data (the events table), ``windowed_event_counts`` shows
+the watermarked tumbling-window aggregation shape: late rows beyond the
+watermark are dropped, state is bounded.
 
 Reference analogue: incremental point append `add_data_point_permanently!`
-(the reference's src/polyphonic/polyphonic_cluster_manager.jl:514-517).
+(/root/reference/src/polyphonic/polyphonic_cluster_manager.jl:514-517) —
+the reference re-clusters per appended point in memory; our streaming
+tier appends whole docs per micro-batch and rolls them up incrementally.
 """
 
 from __future__ import annotations
@@ -97,17 +104,24 @@ def run_rollup_stream_with_retention(
 ) -> None:
     """Drain every available source file into the tier sink, then stop.
 
-    Each micro-batch runs ``rollup_arrays(..., keep=policy[tier])`` and
-    appends the rows (``_WINDOW_SCHEMA``, the form ``read_tier`` gives);
-    a tier absent from ``policy`` is kept whole, so ``policy={}`` is the
-    plain tier stream.  ``availableNow`` makes this an incremental batch:
-    a repeated call processes only files added since the last one.  The
-    checkpoint replays an uncommitted batch and the sink skips any batch
-    id its ``_spark_metadata`` log already holds.
+    Each micro-batch runs the batch rollup with the tier's keep-last cut
+    (``rollup_arrays(..., keep=policy[tier])``) and appends the result
+    to a parquet sink; a tier absent from ``policy`` is kept whole
+    (as in retention.with_expiry_flags), so ``policy={}`` is the plain
+    tier stream.  ``availableNow`` makes this an incremental batch:
+    repeated invocations process only files added since the last run.
 
-    The cut is per arrival: the sink is never re-swept, so it equals
-    ``retention_sweep`` of the batch tier when each doc_id arrives once;
-    a doc_id arriving again is a new arrival with its own windows."""
+    Exactly-once: the checkpoint replays an uncommitted batch, and the
+    file sink skips any batch id its ``_spark_metadata`` log already
+    holds; reads list only committed files.
+
+    Contract: the cut is per arrival.  A doc's windows are cut within
+    the micro-batch that carries its token row, and the sink is never
+    re-swept, so the sink equals ``retention_sweep`` of the batch tier
+    when each doc_id arrives once.  A doc_id that arrives again in a
+    later micro-batch is a new arrival: the sink holds each arrival's
+    keep-last windows, once per arrival.
+    """
     pol = DEFAULT_RETENTION_POLICY if policy is None else policy
     q = (
         rollup_arrays(
