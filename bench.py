@@ -16,10 +16,11 @@ Default mode (what the per-round driver runs):
 Scaling mode (the sandbox substitution for the north rule's N vs 4N
 executor criterion — no real cluster here):
   python bench.py --scaling
-    re-execs the pipeline-only bench in two subprocess JVMs at local[8]
-    and local[32] over the *identical* deterministic input
+    re-execs the pipeline-only bench in two subprocess JVMs at local[N]
+    and local[4N] (N = --scale-base, by default max(--cpus // 4, 1), so
+    the pair fits the host) over the *identical* deterministic input
     (synth_tokens_distributed is parallelism-invariant), and reports
-    throughput at both plus efficiency = (pps32/pps8)/(32/8).
+    throughput at both plus efficiency = (pps_4N/pps_N)/4.
 
 Env knobs:
   SPARK_GRAFT_SF_DIR     query-bench data dir   (default /root/testdata/sf0.1)
@@ -502,8 +503,8 @@ def main() -> None:
     ap = argparse.ArgumentParser()
     ap.add_argument("--scaling", action="store_true",
                     help="run pipeline at local[N] and local[4N]; report efficiency")
-    ap.add_argument("--scale-base", type=int, default=8,
-                    help="N for the N vs 4N comparison (default 8)")
+    ap.add_argument("--scale-base", type=int, default=None,
+                    help="N for the N vs 4N comparison (default max(--cpus // 4, 1))")
     ap.add_argument("--kernel", choices=["rollup", "cluster"], default="rollup",
                     help="which job the scaling pair runs (rollup = "
                          "bandwidth-bound reduceat; cluster = CPU-bound "
@@ -534,7 +535,8 @@ def main() -> None:
         )
 
     if args.scaling:
-        lo, hi = str(args.scale_base), str(args.scale_base * 4)
+        base = args.scale_base or max(int(args.cpus) // 4, 1)
+        lo, hi = str(base), str(base * 4)
         key = f"{args.kernel}_points_per_sec"
         results = {}
         # best-of-N per level: on a shared host external contention only

@@ -305,15 +305,13 @@ def test_manifest_bytes_equal_directory_walk(spark, base_dir):
     directory the bucket wrote; each retention record the bytes of the
     tier and encoded directories after its sweep."""
     (m,) = run_pipeline(spark, base_dir, buckets=[1])
-    dirs = {f"tier{t}": os.path.join(base_dir, "rollup", f"tier={t}", "bucket=1")
-            for t in (1, 2)}
-    dirs.update({out: os.path.join(base_dir, out, "bucket=1")
-                 for out in ("encoded", "timeline")})
+    dirs = {out: os.path.join(base_dir, out, "bucket=1")
+            for out in ("rollup", "encoded", "timeline")}
     assert m["bytes"] == {name: _walk_bytes(path) for name, path in dirs.items()}
     assert all(n > 0 for n in m["bytes"].values())
 
     (record,) = apply_retention(spark, base_dir, {0: 4, 1: 2, 2: 1}, buckets=[1])
-    swept = {name: _walk_bytes(dirs[name]) for name in ("tier1", "tier2", "encoded")}
+    swept = {name: _walk_bytes(dirs[name]) for name in ("rollup", "encoded")}
     assert record["bytes"] == swept
     assert swept["encoded"] < m["bytes"]["encoded"]
     (committed,) = pipeline_metrics(base_dir)

@@ -210,11 +210,10 @@ def test_stored_tier_sweep_is_narrow(spark, one_bucket):
     """The stored-tier sweep (keep_last) slices each doc-major row in
     place: its executed plan has no Exchange, Sort or Window, where the
     window-row sweep it replaces (retention_sweep, kept as its oracle)
-    has all three.  apply_retention's write of the survivors adds one
-    Sort by (tier, doc_id) inside each task: partitionBy("tier") needs
-    the rows grouped by tier, and doc_id order is the file layout."""
-    from pyspark.sql import functions as F
-
+    has all three.  apply_retention reads the bucket's tiers in one scan,
+    and its write of the survivors adds one Sort by (tier, doc_id)
+    inside each task: partitionBy("tier") needs the rows grouped by
+    tier, and doc_id order is the file layout."""
     from tsc_spark.operators.retention import apply_retention, keep_last, retention_sweep
     from tsc_spark.plans.pipeline import read_tier, run_pipeline
 
@@ -223,12 +222,12 @@ def test_stored_tier_sweep_is_narrow(spark, one_bucket):
     oracle_sweep = retention_sweep(read_tier(spark, one_bucket, 1), {1: 2})
     (oracle,) = execution_plans(spark, oracle_sweep.collect)
     assert shuffled <= set(oracle), oracle  # the walker sees them when they are there
-    stored = spark.read.parquet(os.path.join(one_bucket, "rollup", "tier=1"))
-    (sweep,) = execution_plans(spark, keep_last(stored.withColumn("tier", F.lit(1)), {1: 2}).collect)
+    stored = spark.read.parquet(os.path.join(one_bucket, "rollup", "bucket=0"))
+    (sweep,) = execution_plans(spark, keep_last(stored, {1: 2}).collect)
     assert not shuffled & set(sweep), sweep
     plans = execution_plans(spark, lambda: apply_retention(spark, one_bucket, {1: 2, 2: 1}))
     assert len(plans) == 1, plans  # both tiers in one job
     (nodes,) = plans
-    assert sum(n.startswith("Scan ") for n in nodes) == 2, nodes
+    assert sum(n.startswith("Scan ") for n in nodes) == 1, nodes
     assert not {"Exchange", "Window"} & set(nodes), nodes
     assert nodes.count("Sort") == 1, nodes

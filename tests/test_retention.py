@@ -129,41 +129,56 @@ def swept_base(spark, raw_tokens_df, tmp_path):
 class TestApplyRetentionEdges:
     def test_fully_expired_tier_stays_readable(self, spark, swept_base):
         """keep 0 expires every survivor of tier 1: partitionBy writes no
-        directory for it, but the tier directory must remain a readable,
-        empty table with the unswept schema (tier column included)."""
-        cols = read_tier(spark, swept_base, 1).schema.fieldNames()
+        directory for it, but the tier must remain a readable, empty
+        table with the unswept columns and types (tier column included)
+        — also once no bucket holds a tier data file at all."""
+        dtypes = {t: read_tier(spark, swept_base, t).dtypes for t in (1, 2)}
         records = apply_retention(spark, swept_base, {0: 64, 1: 0, 2: 8})
         assert all(r["tiers"]["1"]["rows_after"] == 0 for r in records)
         assert all(r["tiers"]["1"]["rows_before"] > 0 for r in records)
         for bucket in (0, 1):
-            path = os.path.join(swept_base, "rollup", "tier=1", f"bucket={bucket}")
-            assert spark.read.parquet(path).count() == 0
+            assert not os.path.exists(
+                os.path.join(swept_base, "rollup", f"bucket={bucket}", "tier=1")
+            )
         tier1 = read_tier(spark, swept_base, 1)
         assert tier1.count() == 0
-        assert tier1.schema.fieldNames() == cols
+        assert tier1.dtypes == dtypes[1]
         # the other tiers of the same one-job sweep are unaffected
         assert read_tier(spark, swept_base, 0).count() > 0
         # and a second sweep over the empty tier is a no-op
         again = apply_retention(spark, swept_base, {0: 64, 1: 0, 2: 8})
         assert [r["tiers"]["1"] for r in again] == [{"rows_before": 0, "rows_after": 0}] * 2
 
-    def test_bucket_missing_a_tier_is_skipped(self, spark, swept_base):
+        apply_retention(spark, swept_base, {0: 64, 1: 0, 2: 0})
+        assert not [name for _root, _dirs, files in os.walk(os.path.join(swept_base, "rollup"))
+                    for name in files if name.endswith(".parquet")]
+        for tier in (1, 2):
+            stored = read_tier(spark, swept_base, tier)
+            assert stored.count() == 0, tier
+            assert stored.dtypes == dtypes[tier], tier
+        again = apply_retention(spark, swept_base, {0: 64, 1: 0, 2: 0})
+        assert [r["tiers"]["2"] for r in again] == [{"rows_before": 0, "rows_after": 0}] * 2
+
+    def test_bucket_missing_a_tier_is_recorded_empty(self, spark, swept_base):
+        """A policy tier the bucket has no rows of is recorded 0/0, and
+        the sweep creates no directory for it."""
         import shutil
 
-        missing = os.path.join(swept_base, "rollup", "tier=2", "bucket=0")
+        missing = os.path.join(swept_base, "rollup", "bucket=0", "tier=2")
         shutil.rmtree(missing)
         records = {r["bucket"]: r for r in apply_retention(spark, swept_base)}
-        assert sorted(records[0]["tiers"]) == ["0", "1"]
-        assert sorted(records[1]["tiers"]) == ["0", "1", "2"]
+        assert records[0]["tiers"]["2"] == {"rows_before": 0, "rows_after": 0}
+        assert records[0]["tiers"]["1"]["rows_after"] > 0
+        assert records[1]["tiers"]["2"]["rows_after"] > 0
         assert not os.path.exists(missing)
 
     def test_leftover_tmp_dir_is_invisible_and_overwritten(self, spark, raw_tokens_df, swept_base):
         """A sweep interrupted after its write leaves its tmp dirs behind:
         read_tier must not see them, and the next sweep replaces them."""
-        tmp = os.path.join(swept_base, "rollup", "_retention_tmp_bucket=0")
-        stale = read_tier(spark, swept_base, 1).limit(5)
-        stale.withColumn("sweep_tier", F.lit(1)).write.partitionBy("sweep_tier").parquet(tmp)
-        enc_tmp = os.path.join(swept_base, "encoded", "_retention_tmp_0")
+        tmp = os.path.join(swept_base, "rollup", ".bucket=0.sweep_tmp")
+        stale = spark.read.parquet(os.path.join(swept_base, "rollup", "bucket=0")).limit(5)
+        stale.write.partitionBy("tier").parquet(tmp)
+        enc_tmp = os.path.join(swept_base, "encoded", ".bucket=0.sweep_tmp")
         spark.read.parquet(os.path.join(swept_base, "encoded", "bucket=0")).limit(5).write.parquet(
             enc_tmp
         )
@@ -220,9 +235,9 @@ class TestApplyRetentionEdges:
         monkeypatch.setattr(shutil, "rmtree", lambda *a, **k: None)
         apply_retention(spark, swept_base)
         monkeypatch.undo()
-        backups = [d for root in ("encoded", "rollup/tier=1", "rollup/tier=2")
+        backups = [d for root in ("encoded", "rollup")
                    for d in os.listdir(os.path.join(swept_base, root)) if "swap_old" in d]
-        assert len(backups) == 6  # 2 buckets x 3 swapped dirs: the test is not vacuous
+        assert len(backups) == 4  # 2 buckets x 2 swapped dirs: the test is not vacuous
         for tier, tdf in tiered_rollups(raw_tokens_df).items():
             stored = read_tier(spark, swept_base, tier)
             assert dict(stored.dtypes)["bucket"] == "int", tier
@@ -337,14 +352,14 @@ class TestStreamingRetention:
 
 def test_swap_recovery_restores_interrupted_swap(tmp_path):
     """A crash between swap_in_dir's two renames leaves the data in the
-    _swap_backup dir; recovery restores it instead of losing history or
-    wedging on the stale backup."""
+    swap_old backup dir; recovery restores it instead of losing history
+    or wedging on the stale backup."""
     import os
 
-    from tsc_spark.plans.pipeline import _swap_backup, recover_swapped_dir, swap_in_dir
+    from tsc_spark.plans.pipeline import _hidden_sibling, recover_swapped_dir, swap_in_dir
 
     path = str(tmp_path / "sink")
-    backup = _swap_backup(path)
+    backup = _hidden_sibling(path, "swap_old")
     # simulate the crash window: path missing, backup holds the data
     os.makedirs(backup)
     open(os.path.join(backup, "part-0"), "w").write("history")

@@ -19,8 +19,8 @@ scalable engine operator:
 * ``keep_last`` → the same cut over the doc-major stored tiers: a
   ``slice`` per row, narrow (no Exchange, Sort or Window);
 * ``apply_retention`` → sweeps the bucketed pipeline layout
-  (plans.pipeline) per bucket — tiers 1/2 by ``keep_last`` in one
-  uncached pass, tier 0 (the DoD ``encoded`` table) in one narrow
+  (plans.pipeline) per bucket — its tier 1/2 directory by ``keep_last``
+  in one uncached pass, tier 0 (the DoD ``encoded`` table) in one narrow
   decode → tail → encode ``mapInArrow`` pass, row counts from
   ``Observation``s — and records the sweep in each bucket manifest.
 """
@@ -29,7 +29,6 @@ from __future__ import annotations
 
 import json
 import os
-from functools import reduce
 
 import numpy as np
 import pyarrow as pa
@@ -38,8 +37,8 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import LongType, StructField, StructType
 
 from ..codecs import decode, encode
-from ..plans.pipeline import _commit_manifest, _dir_bytes, _manifest_path  # layout owner
-from ..plans.pipeline import _write_encoded, swap_in_dir, write_tiers
+from ..plans.pipeline import _commit_manifest, _dir_bytes, _hidden_sibling, _manifest_path
+from ..plans.pipeline import _TIER_STORE_SCHEMA, _write_encoded, swap_in_dir  # layout owner
 from .rollup import _AGGS
 
 __all__ = [
@@ -177,12 +176,12 @@ def apply_retention(
 
     Per bucket: cut each ``encoded`` blob to its last ``policy[0]``
     tokens (``_trim_encoded``; without tier 0 in the policy the raw
-    archive stays whole); union the tier 1/2 directories (tiers without
-    one are skipped), ``keep_last`` them once and ``write_tiers`` the
-    survivors (one file per tier and 128 MiB swept, in doc_id order);
-    and append a ``retention`` record (policy, per-tier windows
-    before/after from ``Observation``s, on-disk bytes of every swept
-    directory) to the bucket manifest."""
+    archive stays whole); ``keep_last`` the bucket's tier directory in
+    one scan (a tier the policy omits is rewritten unchanged) and swap
+    the survivors in (one file per tier and 128 MiB swept, in doc_id
+    order); and append a ``retention`` record (policy, per-tier windows
+    before/after from ``Observation``s, 0/0 for a tier without rows,
+    on-disk bytes of every swept directory) to the bucket manifest."""
     pol = DEFAULT_RETENTION_POLICY if policy is None else policy
     with open(os.path.join(base_dir, "_ingest.json")) as f:
         n_buckets = json.load(f)["n_buckets"]
@@ -200,34 +199,30 @@ def apply_retention(
         }
         encoded = os.path.join(base_dir, "encoded", f"bucket={bucket}")
         if 0 in pol and os.path.isdir(encoded):
-            # "_"-prefixed without "=": a read of the encoded table skips it
-            tmp = os.path.join(base_dir, "encoded", f"_retention_tmp_{bucket}")
+            tmp = _hidden_sibling(encoded, "sweep_tmp")
             record["tiers"]["0"] = _trim_encoded(spark, encoded, tmp, pol[0])
-        paths = {t: os.path.join(base_dir, "rollup", f"tier={t}", f"bucket={bucket}")
-                 for t in sorted(pol) if t > 0}
-        tiers = [t for t, path in paths.items() if os.path.isdir(path)]
-        if tiers:
+        rollup = os.path.join(base_dir, "rollup", f"bucket={bucket}")
+        tiers = [t for t in sorted(pol) if t > 0]
+        if tiers and os.path.isdir(rollup):
             size = F.size("agg_count")
             counts = [F.sum(F.when(F.col("tier") == t, size)).alias(str(t)) for t in tiers]
             before, after = Observation(), Observation()
-            stored = reduce(
-                DataFrame.unionByName,
-                [spark.read.parquet(paths[t]).withColumn("tier", F.lit(t)) for t in tiers],
-            ).observe(before, *counts)
-            # "_"-prefixed and outside every tier dir: read_tier never sees it
-            tmp = os.path.join(base_dir, "rollup", f"_retention_tmp_bucket={bucket}")
+            # below rollup/, bucket is no partition (it reads NULL): keep_last drops it
+            stored = spark.read.schema(_TIER_STORE_SCHEMA).parquet(rollup).observe(before, *counts)
             # one file per tier and 128 MiB swept, its rows in doc_id order
             # (sorted doc_ids compress ~3x better); coalesce and sort stay
             # inside the task, so the sweep moves no row between tasks, and
             # the tier-major order is the one partitionBy("tier") needs
-            n_files = 1 + sum(_dir_bytes(paths[t]) for t in tiers) // (128 << 20)
+            n_files = 1 + _dir_bytes(rollup) // (128 << 20)
             survivors = keep_last(stored, pol).observe(after, *counts)
+            tmp = _hidden_sibling(rollup, "sweep_tmp")
             survivors = survivors.coalesce(n_files).sortWithinPartitions("tier", "doc_id")
-            write_tiers(survivors, tmp, {t: paths[t] for t in tiers})
+            survivors.write.partitionBy("tier").mode("overwrite").parquet(tmp)
+            swap_in_dir(rollup, tmp)  # crash-recoverable, see swap_in_dir
             windows = {k: (n, after.get[k]) for k, n in before.get.items()}
             record["tiers"].update({k: {"rows_before": int(b or 0), "rows_after": int(a or 0)}
                                     for k, (b, a) in windows.items()})
-        swept = {f"tier{t}": paths[t] for t in tiers} | {"encoded": encoded}
+        swept = {"rollup": rollup, "encoded": encoded}
         record["bytes"] = {k: _dir_bytes(d) for k, d in swept.items() if os.path.isdir(d)}
         with open(mpath) as f:
             manifest = json.load(f)

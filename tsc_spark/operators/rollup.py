@@ -8,12 +8,12 @@ everything here is native DataFrame API — Catalyst sees every operator,
 so AQE handles partial aggregation, shuffle sizing and skew.
 
 Design for 100 TB:
-* every tier is a SHUFFLE-FREE per-row transform over the token arrays,
-  and ``rollup_arrays`` is the one window-row implementation (posexplode
+* every tier is a SHUFFLE-FREE per-row transform over the token arrays:
+  a doc's windows never cross rows, so no tier pays a shuffle.
+  ``rollup_arrays`` is the one window-row implementation (posexplode
   for tier-0, ``rollup_batch``'s numpy ``reduceat`` over ``mapInArrow``
-  for tiers 1/2) — a doc's windows never cross rows, so no tier pays a
-  shuffle, and the batch pipeline and the streaming tier run the same
-  plan;
+  for tiers 1/2), run by ``tiered_rollups`` and the streaming tier; the
+  batch pipeline runs ``doc_tiers`` over the same numpy core;
 * its rows (``_WINDOW_SCHEMA``) are the tier-row form of
   ``tiered_rollups``, the stream sink and ``plans.pipeline.read_tier``,
   and ``point_windows`` builds the one-point windows of tier 0;

@@ -13,10 +13,12 @@ with a manifest — the file-level equivalent of
 Tiers 1/2 are stored doc-major (``operators.rollup.doc_tiers``, both from
 one ``mapInArrow`` pass): one row per (doc, tier) holding
 ``first_window_idx`` and the window arrays, so retention is a per-row
-``slice``.  ``read_tier`` explodes them back to ``rollup_arrays``' rows,
-the rows the stream sink (streaming.rollup_stream) appends, so batch and
-stream tier tables read with one schema.  Each raw value is stored once:
-the ``encoded`` table, one delta-of-delta blob per doc, is tier 0.
+``slice``.  They are stored bucket-major, ``rollup/bucket=b/tier=t``, so
+a bucket's tiers are one directory, written and swept as one unit.
+``read_tier`` explodes them back to ``rollup_arrays``' rows, the rows
+the stream sink (streaming.rollup_stream) appends, so batch and stream
+tier tables read with one schema.  Each raw value is stored once: the
+``encoded`` table, one delta-of-delta blob per doc, is tier 0.
 ``read_tier(spark, base, 0)`` rebuilds its rows; retention trims each
 blob to its last ``keep`` tokens while ``n_tok`` keeps the series
 length.  The ``encoded`` column is written
@@ -43,12 +45,16 @@ from pyspark.sql import functions as F
 from ..config import DEFAULT_MERGE_THRESHOLD_RATIO, TIER_STRIDES
 from ..functions.codec_udfs import decode_tokens_table, encode_tokens_table
 from ..operators.clustering import cluster_timeline
-from ..operators.rollup import doc_tiers, point_windows, window_rows
+from ..operators.rollup import _DOC_TIER_SCHEMA, doc_tiers, point_windows, window_rows
 
 __all__ = [
-    "ingest", "run_pipeline", "read_tier", "write_tiers", "swap_in_dir", "recover_swapped_dir",
+    "ingest", "run_pipeline", "read_tier", "swap_in_dir", "recover_swapped_dir",
     "pipeline_metrics",
 ]
+
+# what both readers of the tier store pass: with no schema to infer, a
+# bucket or store holding no tier data file reads as an empty table
+_TIER_STORE_SCHEMA = f"{_DOC_TIER_SCHEMA}, bucket int"
 
 
 def _manifest_dir(base_dir: str) -> str:
@@ -78,13 +84,14 @@ def _write_encoded(encoded_df: DataFrame, path: str) -> None:
     ).parquet(path)
 
 
-def _swap_backup(path: str) -> str:
-    """The backup ``swap_in_dir`` moves ``path`` to: a ``.``-prefixed
-    sibling, which Spark's file index skips, so a reader of the parent
-    table never takes it for a partition (``_``-prefixed names are
-    skipped only without ``=``, and ``bucket=0`` holds one)."""
+def _hidden_sibling(path: str, suffix: str) -> str:
+    """The ``.``-prefixed sibling ``.<name>.<suffix>`` of ``path`` that
+    names every sweep temp dir and swap backup: Spark's file index skips
+    it at any depth, so a reader of the parent table never takes it for
+    a partition (``_``-prefixed names are skipped only without ``=``,
+    and ``bucket=0`` holds one)."""
     head, name = os.path.split(os.path.normpath(path))
-    return os.path.join(head, f".{name}.swap_old")
+    return os.path.join(head, f".{name}.{suffix}")
 
 
 def recover_swapped_dir(path: str) -> None:
@@ -92,7 +99,7 @@ def recover_swapped_dir(path: str) -> None:
     between its two renames, ``path`` is missing and the backup holds
     the data — restore it.  A stale backup alongside an intact ``path``
     means the swap completed; drop it."""
-    old = _swap_backup(path)
+    old = _hidden_sibling(path, "swap_old")
     if os.path.isdir(old):
         if not os.path.isdir(path):
             os.rename(old, path)  # the interrupted swap's data, restored
@@ -110,28 +117,11 @@ def swap_in_dir(path: str, tmp: str) -> None:
     callable at startup) restores, so the failure mode is "sweep didn't
     happen", never data loss or a permanently wedged sink."""
     recover_swapped_dir(path)
-    old = _swap_backup(path)
+    old = _hidden_sibling(path, "swap_old")
     if os.path.isdir(path):
         os.rename(path, old)
     os.rename(tmp, path)
     shutil.rmtree(old, ignore_errors=True)
-
-
-def write_tiers(tiers_df: DataFrame, stage: str, paths: dict[int, str]) -> None:
-    """Write doc-major tier rows ``partitionBy`` their ``tier`` into the
-    hidden ``stage`` dir, then swap each tier's rows in at ``paths[tier]``
-    (crash-recoverable, see swap_in_dir).  A tier left without rows
-    becomes an empty table with the stored schema, so it stays readable."""
-    tiers_df.write.partitionBy("tier").mode("overwrite").parquet(stage)
-    for tier, path in paths.items():
-        tier_stage = os.path.join(stage, f"tier={tier}")
-        if not os.path.isdir(tier_stage):
-            tiers_df.sparkSession.createDataFrame([], tiers_df.drop("tier").schema).write.parquet(
-                tier_stage
-            )
-        os.makedirs(os.path.dirname(path), exist_ok=True)
-        swap_in_dir(path, tier_stage)
-    shutil.rmtree(stage)
 
 
 def _commit_manifest(mpath: str, manifest: dict) -> None:
@@ -206,13 +196,9 @@ def _process_bucket(
             F.max("doc_id").alias("doc_max"),
             F.max("n_tok").alias("max_n_tok"),
         )
-        # both doc-major tiers from one pass (tier 0 is the encoded table);
-        # the stage is "_"-prefixed and outside every tier dir
-        paths = {t: os.path.join(base_dir, "rollup", f"tier={t}", f"bucket={bucket}")
-                 for t in (1, 2)}
-        stage = os.path.join(base_dir, "rollup", f"_pipeline_tmp_bucket={bucket}")
-        write_tiers(doc_tiers(df), stage, paths)
-        written.update({f"tier{t}": path for t, path in paths.items()})
+        # both doc-major tiers from one pass (tier 0 is the encoded table)
+        written["rollup"] = os.path.join(base_dir, "rollup", f"bucket={bucket}")
+        doc_tiers(df).write.partitionBy("tier").mode("overwrite").parquet(written["rollup"])
         stats = stats_obs.get
         if with_timeline:
             written["timeline"] = os.path.join(base_dir, "timeline", f"bucket={bucket}")
@@ -275,11 +261,9 @@ def run_pipeline(
         if resume and os.path.exists(mpath):
             # skip only when the earlier run produced every output this
             # run asks for (a with_timeline=False run's manifest must not
-            # suppress the timeline a later with_timeline=True run wants);
-            # legacy manifests without the field recorded all outputs
+            # suppress the timeline a later with_timeline=True run wants)
             with open(mpath) as f:
-                done = set(json.load(f).get("outputs",
-                                            ["rollup", "timeline", "encoded"]))
+                done = set(json.load(f)["outputs"])
             if requested <= done:
                 continue
         else:
@@ -305,8 +289,8 @@ def read_tier(spark: SparkSession, base_dir: str, tier: int) -> DataFrame:
     ``n_tok - size(tokens)``, so a blob that retention cut to its tail
     keeps its indices."""
     if tier:
-        stored = spark.read.parquet(os.path.join(base_dir, "rollup", f"tier={tier}"))
-        return window_rows(stored.withColumn("tier", F.lit(tier)), "bucket")
+        stored = spark.read.schema(_TIER_STORE_SCHEMA).parquet(os.path.join(base_dir, "rollup"))
+        return window_rows(stored.filter(F.col("tier") == tier), "bucket")
     decoded = decode_tokens_table(spark.read.parquet(os.path.join(base_dir, "encoded")))
     points = decoded.select(
         "doc_id", "bucket", (F.col("n_tok") - F.size("tokens")).alias("offset"),

@@ -107,7 +107,7 @@ def synth_tokens_distributed(spark, n_docs: int, seed: int = 42, partitions: int
     Unlike ``synth_tokens`` (one sequential rng, driver-side), every doc
     seeds its own rng from ``(seed, i)``, so output is bit-identical at
     any parallelism / partitioning — the property the scaling-efficiency
-    benchmark depends on (same input at local[8] and local[32]).
+    benchmark depends on (same input at local[N] and local[4N]).
     Generation runs inside ``mapInPandas`` over ``spark.range`` so the
     corpus never materializes on the driver.
     """
