@@ -75,7 +75,7 @@ def test_dissonance_current_semitone_vs_fifth():
 
 def test_stm_decay_and_prune():
     mgr = StmManager()
-    mgr.add_event([60, 64], [1.0, 1.0], onset=0.0)
+    mgr.commit([60, 64], [1.0, 1.0], onset=0.0)
     d_cur, interf0 = mgr.evaluate([61, 65], [1.0, 1.0], onset=0.0)
     assert d_cur > 0
     # same chord later: weight decays as exp(-dt/1.5)
@@ -91,7 +91,7 @@ def test_stm_decay_and_prune():
 def test_stm_interference_formula_single_event():
     mgr = StmManager()
     past = ([60], [1.0])
-    mgr.add_event(*past, onset=0.0)
+    mgr.commit(*past, onset=0.0)
     cur = ([67], [1.0])
     d_cur, interf = mgr.evaluate(*cur, onset=0.5)
     d_past = dissonance_current(*past)

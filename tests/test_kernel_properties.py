@@ -18,11 +18,7 @@ import math
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
-from tsc_spark.kernel.polyset import (
-    min_avg_distance,
-    ordered_vector_distance01,
-    simple_squared_euclidean,
-)
+from tsc_spark.kernel.polyset import min_avg_distance
 from tsc_spark.kernel.scoring import (
     combine_complexity_metric_scores,
     normalize_scores,
@@ -31,7 +27,6 @@ from tsc_spark.kernel.scoring import (
 # integer-valued floats: products/sums/differences below stay exact
 ivals = st.integers(min_value=-1000, max_value=1000).map(float)
 sets_ = st.lists(ivals, min_size=0, max_size=8)
-vecs = st.lists(ivals, min_size=0, max_size=8)
 widths = st.integers(min_value=1, max_value=100).map(float)
 
 
@@ -64,40 +59,6 @@ def test_min_avg_distance_translation_invariant(a, b, w, m, c):
     float arithmetic exact, so the distances are bit-equal."""
     shifted = min_avg_distance([x + c for x in a], [y + c for y in b], w, m)
     assert shifted == min_avg_distance(a, b, w, m)
-
-
-# --- ordered_vector_distance01 ---------------------------------------
-
-
-@settings(max_examples=200, deadline=None)
-@given(vecs, vecs, st.lists(widths, min_size=0, max_size=8), widths)
-def test_ordered_vector_distance_symmetric_bounded_identity(a, b, rng, w):
-    d = ordered_vector_distance01(a, b, rng, w)
-    # (av−bv)² == (bv−av)² exactly (IEEE negation is exact)
-    assert d == ordered_vector_distance01(b, a, rng, w)
-    assert 0.0 <= d <= 1.0
-    assert ordered_vector_distance01(a, a, rng, w) == 0.0
-
-
-# --- simple_squared_euclidean ----------------------------------------
-
-
-@settings(max_examples=200, deadline=None)
-@given(vecs, vecs, widths)
-def test_simple_squared_euclidean_symmetric_nonneg_identity(a, b, w):
-    s = simple_squared_euclidean(a, b, w)
-    assert s == simple_squared_euclidean(b, a, w)
-    assert s >= 0.0
-    assert simple_squared_euclidean(a, a, w) == 0.0
-
-
-@settings(max_examples=100, deadline=None)
-@given(st.lists(ivals, min_size=0, max_size=8),
-       st.lists(ivals, min_size=1, max_size=4), widths)
-def test_simple_squared_euclidean_length_penalty_exact(a, tail, w):
-    """Appending a tail to one side adds exactly |Δlen|·w² on top of the
-    shared-prefix distance (reference ...:455-467 penalty shape)."""
-    assert simple_squared_euclidean(a, a + tail, w) == len(tail) * (w ** 2)
 
 
 # --- normalize_scores -------------------------------------------------
@@ -190,24 +151,6 @@ def test_octave_window_distance_invariant_under_db_octave_shift(q, db, k):
     base = octave_invariant_window_distance01(q, db, 0, 0, ws)
     shifted_db = [[n + 12.0 * k, v] for n, v in db]
     assert octave_invariant_window_distance01(q, shifted_db, 0, 0, ws) == base
-
-
-@settings(max_examples=150, deadline=None)
-@given(points)
-def test_normalize_note_vol_lands_first_note_near_c4(pts):
-    from tsc_spark.kernel.notevol import normalize_note_vol_points
-
-    out = normalize_note_vol_points(pts)
-    assert len(out) == len(pts)
-    # whole-octave shift only, volumes untouched
-    shift = out[0][0] - pts[0][0]
-    assert shift % 12.0 == 0.0
-    for (n0, v0), (n1, v1) in zip(pts, out):
-        assert n1 - n0 == shift
-        assert v1 == v0
-    # nearest-octave: first note within a half octave of C4 (round-half-
-    # even puts the exact 6.0 boundary on either side, so <= 6 both ways)
-    assert abs(out[0][0] - 60.0) <= 6.0
 
 
 # --- scalar kernel distance paths and running sums -------------------

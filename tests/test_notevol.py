@@ -4,11 +4,10 @@ same exact assertions."""
 
 import pytest
 
+from tsc_spark.config import MIDI_C4
 from tsc_spark.kernel.notevol import (
-    MIDI_C4,
     STEPS_PER_OCTAVE,
     find_octave_invariant_matches,
-    normalize_note_vol_points,
     octave_invariant_window_distance01,
 )
 
@@ -23,14 +22,6 @@ class TestOctaveInvariantNoteMatching:
     db_down = [[C4 - SPO, 1.0], [C4 - SPO + 2.0, 1.0], [C4 - SPO + 6.0, 1.0]]
     db_up = [[C4 + SPO, 1.0], [C4 + SPO + 2.0, 1.0], [C4 + SPO + 6.0, 1.0]]
     db_unrelated = [[C4 - SPO, 1.0], [C4, 1.0], [C4 + SPO, 1.0]]
-
-    def test_normalization_lands_on_c4(self):
-        assert [pt[0] for pt in normalize_note_vol_points(self.q)] == [
-            C4, C4 + 2.0, C4 + 6.0,
-        ]
-        assert [pt[0] for pt in normalize_note_vol_points(self.db_down)] == [
-            C4, C4 + 2.0, C4 + 6.0,
-        ]
 
     def test_window_distance_zero_across_octaves(self):
         assert octave_invariant_window_distance01(self.q, self.db_down, 0, 0, 3) == 0.0

@@ -174,7 +174,7 @@ class TestStreamPool:
 
     def test_precalculate_costs_normalized(self):
         pool = self._pool()
-        costs = pool.precalculate_costs([0.0, 0.5, 1.0], 2)
+        costs = pool.precalculate_costs([0.0, 0.5, 1.0])
         assert set(costs) == set(pool.active_ids)
         for per_value in costs.values():
             assert set(per_value) == {0.0, 0.5, 1.0}
@@ -183,7 +183,7 @@ class TestStreamPool:
 
     def test_mapping_is_a_permutation(self):
         pool = self._pool()
-        costs = pool.precalculate_costs([0.2, 0.8], 2)
+        costs = pool.precalculate_costs([0.2, 0.8])
         ordered, metric = pool.resolve_mapping_and_score([0.2, 0.8], costs)
         assert sorted(v[0] for v in ordered) == [0.2, 0.8]
         assert 0.0 <= metric["avg_distance01"] <= 1.0

@@ -180,6 +180,24 @@ def test_lenient_bool_parsing_in_dimension_policy():
     assert out["results"][1][0][1] == 0.25  # vol held fixed, not searched
 
 
+def test_stream_records_are_strict_8_or_12_fields():
+    """A record is the 8-field input form or the 12-field form the
+    generator emits: a generated record re-normalises to itself, and a
+    10-field record is rejected."""
+    import copy
+
+    from tsc_spark.kernel.polygen import _normalize_stream_record, generate_polyphonic
+    from tsc_spark.oracle_fixtures import GENERATE_POLY_REQUESTS
+
+    out = generate_polyphonic(copy.deepcopy(dict(GENERATE_POLY_REQUESTS[1][1])))
+    records = [rec for step in out["results"] for rec in step]
+    assert records and all(len(rec) == 12 for rec in records)
+    for rec in records:
+        assert _normalize_stream_record(copy.deepcopy(rec)) == rec
+    with pytest.raises(ValueError):
+        _normalize_stream_record([[60], 1.0, 0.5, 0.5, 0.5, 0.5, 0.5, 0.5, 0, 0.0])
+
+
 class TestAreaDecisionHandComputedParity:
     """Hand-computed worked examples for the 3-stage area decision
     (reference time_series_controller.jl:3970-4212), independent of the
@@ -287,41 +305,8 @@ class TestAreaDecisionHandComputedParity:
 
 
 class TestDimensionPolicyAliases:
-    """Reference alias keys (controller:2975-3013): default_dim_policy as
-    the block name; receive_params/enabled/use_user_params for the accept
-    flag; fallback_value/value for the fixed value; and any bare
-    non-bool value (including numeric strings) IS the fixed value."""
-
-    def _payload(self, policy_key, policy):
-        ctx_row = [[60], 1.0, 0.5, 0.5, 0.5, 0.5, 0.5, 0.5]
-        return {
-            "bpm": 240,
-            "initial_context": [[list(ctx_row)]],
-            "stream_counts": [1],
-            policy_key: policy,
-            "merge_threshold_ratio": 0.02,
-        }
-
-    def test_default_dim_policy_alias_and_value_key(self):
-        from tsc_spark.kernel.polygen import generate_polyphonic
-
-        out = generate_polyphonic(
-            self._payload(
-                "default_dim_policy",
-                {"vol": {"enabled": False, "value": 0.3}},
-            )
-        )
-        gen = out["results"][1][0]
-        assert gen[1] == 0.3  # vol fixed via alias keys, not searched
-
-    def test_bare_numeric_string_is_fixed_value(self):
-        from tsc_spark.kernel.polygen import generate_polyphonic
-
-        out = generate_polyphonic(
-            self._payload("dimension_policy", {"brightness": "0.7"})
-        )
-        gen = out["results"][1][0]
-        assert gen[2] == 0.7  # string routed to the fixed value
+    """Payload value parsing: non-finite numbers clamp to the range edge
+    (reference _parse_float, controller:2054)."""
 
     def test_inf_clamps_to_range_edge(self):
         from tsc_spark.kernel.polygen import _clamp01, _f

@@ -31,8 +31,6 @@ def _poly_mgr(sets, **kw):
         scale_mode="contextual_global_halves",
         contextual_min_width=1.0,
         max_set_size=kw.get("max_set_size", 4),
-        point_distance_mode=kw.get("mode", "set"),
-        point_axis_ranges=kw.get("axes", ()),
     )
     m.process_data()
     return m
@@ -101,15 +99,6 @@ class TestChordBehavior:
         # (2,1)-size windows when the threshold is tight
         d = min_avg_distance([60.0], [60.0, 64.0], pm.value_width, 4)
         assert d > 0.05
-
-    def test_ordered_vector_mode_note_vol(self):
-        # (note, vol) points; identical after vol-axis normalization
-        data = [[60.0, 0.5], [62.0, 0.5], [60.0, 0.5], [62.0, 0.5]]
-        pm = _poly_mgr(data, mode="ordered_vector", axes=(127.0, 1.0), mtr=0.1)
-        tl = pm.timeline()
-        ws2 = [row for row in tl if row[0] == 2]
-        big = max(ws2, key=lambda r: len(r[2]))
-        assert len(big[2]) >= 2
 
     def test_hand_computed_polyphonic_timeline(self):
         """Hand-derived end-to-end parity vector for the SET-mode manager

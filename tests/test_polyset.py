@@ -4,10 +4,7 @@ import pytest
 
 from tsc_spark.kernel.polyset import (
     average_sequences,
-    calculate_vector_mean,
     min_avg_distance,
-    ordered_vector_distance01,
-    simple_squared_euclidean,
     streamwise_surface_average,
 )
 
@@ -39,22 +36,6 @@ class TestMinAvgDistance:
         assert min_avg_distance([0.0], [1000.0], 1.0, 1) == 1.0
 
 
-class TestOrderedVectorDistance:
-    def test_reference_note_vol_axes(self):
-        # (note Δ=12.7, vol Δ=0.1) over ranges [127, 1]:
-        # sqrt((0.1² + 0.1²)) / sqrt(2) = 0.1
-        d = ordered_vector_distance01([60.0, 0.5], [72.7, 0.6], [127.0, 1.0], 1.0)
-        assert d == pytest.approx(0.1)
-
-    def test_missing_dims_read_zero(self):
-        d = ordered_vector_distance01([1.0], [1.0, 1.0], [1.0, 1.0], 1.0)
-        # axis 2: (0-1)/1 = 1 -> sqrt(1)/sqrt(2)
-        assert d == pytest.approx(1.0 / 2 ** 0.5)
-
-    def test_both_empty(self):
-        assert ordered_vector_distance01([], [], [127.0, 1.0], 1.0) == 0.0
-
-
 class TestAverageSequences:
     def test_single_member_copied(self):
         seq = [[60.0, 64.0], [62.0]]
@@ -65,11 +46,6 @@ class TestAverageSequences:
         s1 = [[64.0, 60.0]]
         s2 = [[60.0, 64.0]]
         assert average_sequences([s1, s2]) == [[60.0, 64.0]]
-
-    def test_ordered_vector_mode_keeps_order(self):
-        s1 = [[64.0, 60.0]]
-        s2 = [[60.0, 64.0]]
-        assert average_sequences([s1, s2], ordered_vector=True) == [[62.0, 62.0]]
 
     def test_mixed_sizes_latest_wins(self):
         s1 = [[60.0]]
@@ -95,15 +71,3 @@ class TestStreamwiseSurface:
         s1 = [[10.0]]
         s2 = [[30.0]]
         assert streamwise_surface_average([s1, s2], 0.0, 0.0, 4) == [[20.0]]
-
-
-class TestVectorHelpers:
-    def test_simple_squared_euclidean_with_length_penalty(self):
-        # common prefix (1-2)²=1; |Δlen|=1 × width²=9 -> 10
-        assert simple_squared_euclidean([1.0, 5.0], [2.0], 3.0) == pytest.approx(10.0)
-        assert simple_squared_euclidean([], [], 3.0) == 0.0
-
-    def test_ragged_vector_mean(self):
-        got = calculate_vector_mean([[1.0, 10.0], [3.0], [5.0, 20.0, 7.0]])
-        assert got == [3.0, 15.0, 7.0]
-        assert calculate_vector_mean([[2.0, 4.0]]) == [2.0, 4.0]

@@ -176,12 +176,6 @@ class StmManager:
         d_cur = self._d(midi_notes, amps)
         return d_cur, self.memory_interference(midi_notes, amps, onset, d_cur)
 
-    def add_event(self, midi_notes, amps, onset: float) -> None:
-        d_cur = self._d(midi_notes, amps)
-        self.memory.append(
-            (float(onset), list(midi_notes), list(amps), d_cur)
-        )
-
     def evaluate_total(self, midi_notes, amps, onset: float) -> float:
         """Scalar roughness = current + interference (reference
         ...stm_manager.jl:51-54)."""

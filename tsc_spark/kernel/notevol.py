@@ -1,10 +1,8 @@
-"""Note+vol 2-axis query mode: octave normalization and the
-octave-invariant brute-force window matcher.
+"""Note+vol 2-axis query mode: the octave-invariant brute-force window
+matcher.
 
 Exact semantics of the reference note/vol path
 (/root/reference/src/controllers/time_series_controller.jl):
-* _normalize_note_vol_points_for_octave_invariance — ...:335-350
-  (whole-series shift so the first note lands in the C4 octave)
 * _note_vol_point_distance01 — ...:352-366 (per-axis normalized RMS
   over axis ranges [127, 1], /root/reference/src/config.jl:43)
 * _octave_invariant_note_vol_window_distance01 — ...:368-397
@@ -24,10 +22,8 @@ import math
 from .matching import filter_contained_matches
 
 __all__ = [
-    "MIDI_C4",
     "STEPS_PER_OCTAVE",
     "NOTE_VOL_AXIS_RANGES",
-    "normalize_note_vol_points",
     "note_vol_point_distance01",
     "octave_invariant_window_distance01",
     "find_octave_invariant_matches",
@@ -35,7 +31,6 @@ __all__ = [
 
 # /root/reference/src/config.jl:28-30,43
 STEPS_PER_OCTAVE = 12
-MIDI_C4 = (4 + 1) * STEPS_PER_OCTAVE  # 60
 NOTE_VOL_AXIS_RANGES = (127.0, 1.0)
 
 
@@ -45,18 +40,6 @@ def _note(pt) -> float:
 
 def _vol(pt) -> float:
     return float(pt[1]) if len(pt) >= 2 else 0.0
-
-
-def normalize_note_vol_points(points):
-    """Shift the whole series by whole octaves so the first note lands
-    nearest C4 (reference ...:335-350); banker's rounding as in Julia."""
-    if not points:
-        return []
-    first_note = _note(points[0])
-    spo = float(STEPS_PER_OCTAVE)
-    # Julia round() is round-half-even, matching Python 3 round()
-    octave_shift = -spo * round((first_note - float(MIDI_C4)) / spo)
-    return [[_note(pt) + octave_shift, _vol(pt)] for pt in points]
 
 
 def note_vol_point_distance01(query_pt, db_pt, db_note_shift: float) -> float:

@@ -18,6 +18,12 @@ on top of the already-built kernels:
   by STM dissonance over the register-restricted combination space
   (...:4214-4348) → note/STM commits.
 
+The payload takes the canonical keys only: ``stream_counts`` is a list,
+an initial-context record has the 8 input fields or the 12 generated
+ones, and a ``dimension_policy`` entry is a dict of ``accept_params``,
+``fixed_value`` and ``fixed_value_source``. The reference web app's
+alias spellings of these are not accepted.
+
 The distributed engine parallelises across independent requests
 (operators.generate.generate_polyphonic_distributed); one request is
 inherently serial step-to-step, exactly like the reference.
@@ -260,7 +266,7 @@ def select_best_chord_for_dimension_with_cost(
             else 0.0
         )
         s_d, s_q, s_c, s_u = [], [], [], []
-        actives = pool.active_stream_containers(n)
+        actives = pool.active_stream_containers()
         for i in range(n):
             if i < len(actives) and i < len(ordered):
                 d, q, c, u = _safe_sim_all(actives[i].manager, ordered[i])
@@ -330,11 +336,7 @@ def generate_polyphonic(payload: dict) -> dict:
     _t0 = _time.perf_counter()
     gp = dict(payload)
 
-    stream_counts_raw = gp.get("stream_counts", [])
-    if isinstance(stream_counts_raw, (list, tuple)):
-        stream_counts = [_i(x) for x in stream_counts_raw]
-    else:
-        stream_counts = [_i(stream_counts_raw)]
+    stream_counts = [_i(x) for x in gp.get("stream_counts", [])]
     if not stream_counts:
         stream_counts = [1]
 
@@ -380,9 +382,7 @@ def generate_polyphonic(payload: dict) -> dict:
             vals = [_clamp01(fallback)]
         return [vals[i] if i < len(vals) else vals[-1] for i in range(max(n, 0))]
 
-    legato_series = _unit_series(
-        gp.get("legato", gp.get("same_note_legato")), len(stream_counts), 0.0
-    )
+    legato_series = _unit_series(gp.get("legato"), len(stream_counts), 0.0)
     initial_step_durations = [C.step_duration_from_bpm(b) for b in initial_context_bpm]
     future_step_durations = [C.step_duration_from_bpm(b) for b in future_bpm]
 
@@ -410,61 +410,25 @@ def generate_polyphonic(payload: dict) -> dict:
         dim_accept[key] = bool(d["accept_params"])
         dim_fixed[key] = _norm_fixed(key, d["fixed_value"])
         dim_fixed_source[key] = "manual_input"
-    # reference accepts default_dim_policy as an alias for the whole
-    # block (controller:2975-2976)
-    raw_policy = gp.get("dimension_policy")
-    if raw_policy is None:
-        raw_policy = gp.get("default_dim_policy")
-    for raw_key, raw_val in (raw_policy or {}).items():
+    # each entry is {accept_params, fixed_value, fixed_value_source}
+    # (controller:2975-3013, canonical keys only)
+    for raw_key, raw_val in (gp.get("dimension_policy") or {}).items():
         key = str(raw_key).strip().lower()
-        key = {"sus": "sustain", "tie": "legato", "same_note_legato": "legato"}.get(key, key)
-        if key not in MANAGED_DIMS:
+        if key not in MANAGED_DIMS or not isinstance(raw_val, dict):
             continue
-        if isinstance(raw_val, dict):
-            # accept-flag aliases (controller:2985-2989)
-            accept_src = next(
-                (
-                    raw_val[k]
-                    for k in ("accept_params", "receive_params", "enabled",
-                              "use_user_params")
-                    if k in raw_val
-                ),
-                None,
+        accept_src = raw_val.get("accept_params")
+        if accept_src is not None:
+            dim_accept[key] = _b(accept_src, dim_accept[key])
+        src = raw_val.get("fixed_value_source")
+        if src:
+            dim_fixed_source[key] = (
+                "initial_context_last_step"
+                if str(src).strip().lower() == "initial_context_last_step"
+                else "manual_input"
             )
-            if accept_src is not None:
-                dim_accept[key] = _b(accept_src, dim_accept[key])
-            src = (
-                raw_val.get("fixed_value_source")
-                or raw_val.get("fixed_source")
-                or raw_val.get("value_source")
-            )
-            if src is not None:
-                dim_fixed_source[key] = (
-                    "initial_context_last_step"
-                    if str(src).strip().lower()
-                    in (
-                        "initial_context_last_step", "initial_context",
-                        "context_last_step", "last_step", "last-step",
-                    )
-                    else "manual_input"
-                )
-            # fixed-value aliases (controller:2994-2996)
-            fixed_src = next(
-                (
-                    raw_val[k]
-                    for k in ("fixed_value", "fallback_value", "value")
-                    if k in raw_val
-                ),
-                None,
-            )
-            if fixed_src is not None:
-                dim_fixed[key] = _norm_fixed(key, fixed_src)
-        elif isinstance(raw_val, bool):
-            dim_accept[key] = raw_val
-        elif raw_val is not None:
-            # any other non-nothing value IS the fixed value
-            # (controller:3010-3013) — including numeric strings
-            dim_fixed[key] = _norm_fixed(key, raw_val)
+        fixed_src = raw_val.get("fixed_value")
+        if fixed_src is not None:
+            dim_fixed[key] = _norm_fixed(key, fixed_src)
 
     def _fixed_area_band_low(stream_idx: int = 0) -> int:
         """reference _fixed_area_band_low_for_stream (...:3028-3041)."""
@@ -491,16 +455,10 @@ def generate_polyphonic(payload: dict) -> dict:
                 return 0.0
             idx = _clamp((band_low - BAND_LOW_MIN) // BAND_SIZE, 0, n_bins)
             return _clamp01(float(idx) / float(n_bins))
-        idx = _DIM_IDX.get(key, 0)
-        if idx == 0 or not results:
-            return dim_fixed[key]
         last_step = results[-1]
         if not (0 <= stream_idx < len(last_step)):
             return dim_fixed[key]
-        st = last_step[stream_idx]
-        if len(st) <= idx:
-            return dim_fixed[key]
-        return _norm_fixed(key, st[idx])
+        return _norm_fixed(key, last_step[stream_idx][_DIM_IDX[key]])
 
     # -- strict-record normalization + observed cr/density ------------
     for step in results:
@@ -592,10 +550,8 @@ def generate_polyphonic(payload: dict) -> dict:
         grow = max(max((len(r) for r in ghist), default=1), 1)
         pool = StreamPool(
             history, mtr, min_window,
-            use_complexity_mapping=True,
             value_range=value_range,
             track_presence=track_presence,
-            recency=0.0,
         )
         gseries = [
             [float(x) + j * offset for j, x in enumerate(row)] for row in ghist
@@ -656,10 +612,8 @@ def generate_polyphonic(payload: dict) -> dict:
 
     note_pool = StreamPool(
         hist_note_anchor, mtr, min_window,
-        use_complexity_mapping=True,
         value_range=list(range(ABS_MIN, ABS_MAX + 1)),
         track_presence=True,
-        recency=0.0,
     )
     g_note = PolyClusterManager(
         note_global_series, mtr, min_window,
@@ -686,7 +640,7 @@ def generate_polyphonic(payload: dict) -> dict:
             pool = mgrs.get("stream")
             if pool is not None:
                 pool.recency = grec
-                actives = pool.active_stream_containers(n_streams)
+                actives = pool.active_stream_containers()
                 for c in pool.stream_pool:
                     c.manager.recency = grec
                 for i, c in enumerate(actives):
@@ -733,11 +687,6 @@ def generate_polyphonic(payload: dict) -> dict:
 
     def _restrict_with_target_window(key, search_values, idx0):
         """reference ...:3688-3731."""
-        if key not in (
-            "vol", "brightness", "noise", "harmonicity", "attack",
-            "decay_sustain", "release", "chord_range", "density", "sustain",
-        ) or not search_values:
-            return search_values
         t_raw = array_param(gp, f"{key}_target", idx0)
         s_raw = array_param(gp, f"{key}_target_spread", idx0)
         if t_raw is None and s_raw is None:
@@ -888,7 +837,7 @@ def generate_polyphonic(payload: dict) -> dict:
             stream_targets = generate_centered_targets(n_streams, s_center, s_spread)
 
             restricted = _restrict_with_target_window(key, range_vec, idx0) or range_vec
-            stream_costs = mgrs["stream"].precalculate_costs(restricted, n_streams)
+            stream_costs = mgrs["stream"].precalculate_costs(restricted)
 
             preserve = n_streams > 1
             if n_streams == 1:
@@ -1256,35 +1205,28 @@ def _norm_fixed(key: str, raw) -> float:
 
 
 def _normalize_stream_record(st: list) -> list:
-    """reference _normalize_stream! (...:3140-3189), strict records."""
-    if len(st) < 8 or not isinstance(st[0], (list, tuple)):
+    """reference _normalize_stream! (...:3140-3189), strict records: the
+    8-field input record or the 12-field record the generator emits."""
+    if len(st) not in (8, 12) or not isinstance(st[0], (list, tuple)):
         raise ValueError(
             "stream record must be strict [abs_notes, vol, brightness, noise, "
-            "harmonicity, attack, decay_sustain, release, ...]"
+            "harmonicity, attack, decay_sustain, release] or the 12-field "
+            "generated record"
         )
     abs_notes = _normalize_abs_notes(st[0])
-    vol = _clamp01(st[1] if len(st) >= 2 else 1.0)
-    brightness = _clamp01(st[2] if len(st) >= 3 else 0.5)
-    noise = _clamp01(st[3] if len(st) >= 4 else 0.5)
-    harmonicity = _clamp01(st[4] if len(st) >= 5 else 0.5)
-    attack = _clamp01(st[5] if len(st) >= 6 else 0.5)
-    decay_sustain = _clamp01(st[6] if len(st) >= 7 else 0.5)
-    release = _clamp01(st[7] if len(st) >= 8 else 1.0)
+    vol = _clamp01(st[1])
+    brightness = _clamp01(st[2])
+    noise = _clamp01(st[3])
+    harmonicity = _clamp01(st[4])
+    attack = _clamp01(st[5])
+    decay_sustain = _clamp01(st[6])
+    release = _clamp01(st[7])
     cr, den, sus, legato = 0, 0.0, 0.5, 0.0
-    if len(st) >= 12:
+    if len(st) == 12:
         cr = max(_i(st[8]), 0)
         den = _clamp01(st[9])
         sus = C.quantize_sustain(_f(st[10]))
         legato = _clamp01(st[11])
-    elif len(st) >= 11:
-        cr = max(_i(st[8]), 0)
-        den = _clamp01(st[9])
-        sus = C.quantize_sustain(_f(st[10]))
-    elif len(st) == 10:
-        cr = max(_i(st[8]), 0)
-        den = _clamp01(st[9])
-    elif len(st) == 9:
-        sus = C.quantize_sustain(_f(st[8]))
     st[:] = [abs_notes, vol, brightness, noise, harmonicity, attack,
              decay_sustain, release, cr, den, sus, legato]
     return st

@@ -11,12 +11,13 @@ recency — all inherited unchanged) and overrides only the point layer:
 * storage (``_store``, ``data_view``, ``_window``, ``_push``, ``_pop``):
   a list of sets instead of the float64 numpy buffer
 * distances (``euclidean_distance``, ``_dists``, ``cluster_complexity``):
-  per-step ``min_avg_distance`` (set mode, ...:244-287) or
-  ``ordered_vector_distance01`` (...:294-312) from kernel.polyset, one
+  per-step ``min_avg_distance`` (...:244-287) from kernel.polyset, one
   window at a time — ragged sets have no batch path
 * representative averaging (``_average_windows``, ``_rep_merge``):
   ``average_sequences`` (...:387-445 — sorted index-wise mean for
-  same-size sets, latest-wins otherwise), re-averaged on every merge
+  same-size sets, latest-wins otherwise) or, for the generator's
+  forced-global streams, the streamwise surface average (...:346-385),
+  re-averaged on every merge
 * contextual value width (``_update_value_width``): flat mean over all
   set members (...:1051-1094)
 * root scan (``_root_dists``, ``_root_rep_set``): ``_dists`` over the
@@ -38,12 +39,7 @@ import numpy as np
 
 from ..config import SUBSEQUENCE_MIN_WINDOW_SIZE
 from .manager import ClusterManager, ClusterNode, seq_sum
-from .polyset import (
-    average_sequences,
-    min_avg_distance,
-    ordered_vector_distance01,
-    streamwise_surface_average,
-)
+from .polyset import average_sequences, min_avg_distance, streamwise_surface_average
 
 __all__ = ["PolyClusterManager"]
 
@@ -66,15 +62,11 @@ class PolyClusterManager(ClusterManager):
         calculate_distance_when_added: bool = False,
         *,
         max_set_size: int = 4,
-        point_distance_mode: str = "set",
-        point_axis_ranges=(),
         use_streamwise_surface_average: bool = False,
         stream_axis_offset: float = 0.0,
         **options,
     ):
         self.max_set_size = max(int(max_set_size), 1)
-        self.point_distance_mode = point_distance_mode
-        self.point_axis_ranges = [float(r) for r in point_axis_ranges]
         # forced-global polyphonic streams: representatives average by
         # decoded stream slot (reference ...pcm.jl:343-389)
         self.use_streamwise_surface_average = bool(use_streamwise_surface_average)
@@ -114,10 +106,6 @@ class PolyClusterManager(ClusterManager):
     # point layer
     # ------------------------------------------------------------------
     def _point_dist(self, a, b) -> float:
-        if self.point_distance_mode == "ordered_vector":
-            return ordered_vector_distance01(
-                a, b, self.point_axis_ranges, self.value_width
-            )
         return min_avg_distance(a, b, self.value_width, self.max_set_size)
 
     def euclidean_distance(self, a, b) -> float:
@@ -153,9 +141,7 @@ class PolyClusterManager(ClusterManager):
             return streamwise_surface_average(
                 seqs, self.value_min, self.stream_axis_offset, self.max_set_size
             )
-        return average_sequences(
-            seqs, ordered_vector=self.point_distance_mode == "ordered_vector"
-        )
+        return average_sequences(seqs)
 
     def _rep_merge(self, node: ClusterNode, length: int):
         # ragged set members have no flat running sum — full re-average

@@ -7,17 +7,13 @@ Exact ports of the reference set math
   distance ÷ value_width, blended 50/50 with count penalty ÷
   max_set_size only when set sizes differ; empty-vs-nonempty = 1.0)
 * average_sequences — ...:387-445 (per timestep: all-same-size →
-  index-wise mean of SORTED sets [plain mean in ordered-vector mode],
-  else latest sequence's set wins)
+  index-wise mean of SORTED sets, else latest sequence's set wins)
 * streamwise surface average — ...:346-385 (stream-offset-encoded
   values decoded into slots, averaged per slot, re-encoded)
-* simple_squared_euclidean — ...:455-467 (index-wise over min length +
-  length-diff × width² penalty)
-* calculate_vector_mean — ...:475-500 (ragged per-index mean)
 
 These are pure functions over (set, params) so they can be unit-tested
-standalone and later threaded into a set-mode ClusterManager (round-2
-polyphonic work) without touching the bit-exact scalar token path.
+standalone; kernel.polymanager builds the set-mode ClusterManager on
+them without touching the bit-exact scalar token path.
 """
 
 from __future__ import annotations
@@ -26,11 +22,8 @@ import math
 
 __all__ = [
     "min_avg_distance",
-    "ordered_vector_distance01",
     "average_sequences",
     "streamwise_surface_average",
-    "simple_squared_euclidean",
-    "calculate_vector_mean",
 ]
 
 
@@ -68,33 +61,12 @@ def min_avg_distance(a, b, value_width: float, max_set_size: int) -> float:
     return (pitch_norm + count_norm) / 2.0
 
 
-def ordered_vector_distance01(a, b, axis_ranges, value_width: float) -> float:
-    """Per-axis normalized RMS ÷ sqrt(dims), clamped (reference
-    ...:294-312); missing dims read 0, missing axis ranges fall back to
-    value_width."""
-    a = [float(x) for x in a]
-    b = [float(x) for x in b]
-    if not a and not b:
-        return 0.0
-    dims = max(len(a), len(b), len(axis_ranges), 1)
-    s = 0.0
-    for i in range(dims):
-        av = a[i] if i < len(a) else 0.0
-        bv = b[i] if i < len(b) else 0.0
-        width = abs(float(axis_ranges[i])) if i < len(axis_ranges) else float(value_width)
-        if width <= 0.0:
-            width = 1.0
-        d = (av - bv) / width
-        s += d * d
-    return _clamp01(math.sqrt(s) / math.sqrt(float(dims)))
-
-
-def average_sequences(sequences, ordered_vector: bool = False):
+def average_sequences(sequences):
     """Representative of member sequences (reference ...:387-445).
 
     Per timestep: if every member's set has the same size, average
-    index-wise over SORTED sets (unsorted in ordered-vector mode);
-    otherwise take the LATEST sequence's set verbatim."""
+    index-wise over SORTED sets; otherwise take the LATEST sequence's
+    set verbatim."""
     if len(sequences) == 1:
         return [list(map(float, s)) for s in sequences[0]]
     length = len(sequences[0])
@@ -104,7 +76,7 @@ def average_sequences(sequences, ordered_vector: bool = False):
         first_count = len(sets_at_t[0])
         all_same = all(len(s) == first_count for s in sets_at_t)
         if all_same:
-            cols = sets_at_t if ordered_vector else [sorted(s) for s in sets_at_t]
+            cols = [sorted(s) for s in sets_at_t]
             avg = [0.0] * first_count
             for s in cols:
                 for i in range(first_count):
@@ -148,30 +120,3 @@ def streamwise_surface_average(
             avg_set.append(avg_raw + float(slot - 1) * stream_axis_offset)
         result.append(avg_set)
     return result
-
-
-def simple_squared_euclidean(vec_a, vec_b, value_width: float) -> float:
-    """Index-wise squared diff over min length + |Δlen|·width² penalty
-    (reference ...:455-467)."""
-    a = [float(x) for x in vec_a]
-    b = [float(x) for x in vec_b]
-    if not a and not b:
-        return 0.0
-    s = sum((a[i] - b[i]) ** 2 for i in range(min(len(a), len(b))))
-    s += float(abs(len(a) - len(b))) * (float(value_width) ** 2)
-    return s
-
-
-def calculate_vector_mean(vectors):
-    """Ragged per-index mean; missing dims ignored (reference
-    ...:475-500)."""
-    if len(vectors) <= 1:
-        return [float(x) for x in vectors[0]]
-    max_dim = max(max((len(v) for v in vectors), default=1), 1)
-    sums = [0.0] * max_dim
-    cnts = [0] * max_dim
-    for v in vectors:
-        for i, val in enumerate(v):
-            sums[i] += float(val)
-            cnts[i] += 1
-    return [sums[i] / float(cnts[i]) if cnts[i] > 0 else 0.0 for i in range(max_dim)]

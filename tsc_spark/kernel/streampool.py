@@ -3,8 +3,9 @@
 Exact semantics of the reference multi-stream manager
 (/root/reference/src/polyphonic/multi_stream_manager.jl): a pool of
 per-stream PolyClusterManagers with lifecycle (fork / deactivate /
-revive), presence/strength tracking, per-candidate complexity cost
-precalculation, and Hungarian stream↔candidate mapping.
+revive), presence tracking, per-candidate complexity cost
+precalculation, and Hungarian stream↔candidate mapping over the
+streams' last values.
 
 Numeric primitives are shared with kernel.multistream
 (set_distance01, generate_centered_targets, INACTIVE_STRENGTH_DECAY)
@@ -17,11 +18,7 @@ from __future__ import annotations
 import copy
 import math
 
-from ..config import (
-    MAX_SET_SIZE,
-    NOTE_RANGE_MAX,
-    NOTE_RANGE_MIN,
-)
+from ..config import MAX_SET_SIZE
 from .multistream import (
     INACTIVE_STRENGTH_DECAY,
     generate_centered_targets,
@@ -43,17 +40,15 @@ class StreamContainer:
     """Reference StreamContainer (...:68-77)."""
 
     __slots__ = (
-        "id", "manager", "last_value", "last_abs_pitch",
-        "strength", "presence_sum", "presence_count", "presence_avg",
+        "id", "manager", "last_value",
+        "presence_sum", "presence_count", "presence_avg",
     )
 
-    def __init__(self, sid, manager, last_value, last_abs_pitch,
+    def __init__(self, sid, manager, last_value,
                  presence_sum=0.0, presence_count=0, presence_avg=0.0):
         self.id = sid
         self.manager = manager
         self.last_value = list(last_value)
-        self.last_abs_pitch = None if last_abs_pitch is None else list(last_abs_pitch)
-        self.strength = 0.0
         self.presence_sum = presence_sum
         self.presence_count = presence_count
         self.presence_avg = presence_avg
@@ -82,15 +77,11 @@ class StreamPool:
         merge_threshold_ratio: float,
         min_window_size: int,
         *,
-        use_complexity_mapping: bool = True,
-        value_range=None,
-        max_set_size: int = MAX_SET_SIZE,
+        value_range,
         track_presence: bool = False,
-        recency: float = 0.0,
     ):
         self.merge_threshold_ratio = float(merge_threshold_ratio)
         self.min_window_size = int(min_window_size)
-        self.use_complexity_mapping = bool(use_complexity_mapping)
         self.track_presence = bool(track_presence)
         self.history_matrix = self._normalize_history_matrix(history_matrix)
         self.next_stream_id = 1
@@ -98,21 +89,12 @@ class StreamPool:
         self.containers_by_id: dict[int, StreamContainer] = {}
         self.active_ids: list[int] = []
         self.inactive_ids: list[int] = []
-        self.max_simultaneous_notes = max(int(max_set_size), 1)
-        self.recency = _clamp01(recency)
-        self.pending_absolute_bases = None
-
-        self._infer_value_range_from_history()
-        if value_range is not None:
-            vmin = float(min(value_range))
-            vmax = float(max(value_range))
-            width = abs(vmax - vmin)
-            self.value_min = vmin
-            self.value_max = vmax
-            self.value_width = width if width > 0.0 else 1.0
-            self.fixed_value_range = True
-        else:
-            self.fixed_value_range = False
+        self.max_simultaneous_notes = MAX_SET_SIZE
+        self.recency = 0.0
+        self.value_min = float(min(value_range))
+        self.value_max = float(max(value_range))
+        width = abs(self.value_max - self.value_min)
+        self.value_width = width if width > 0.0 else 1.0
 
         self._build_initial_streams_from_history()
 
@@ -139,24 +121,6 @@ class StreamPool:
                     rr.append([float(v)])
             out.append(rr)
         return out
-
-    def _infer_value_range_from_history(self):
-        vals = [x for row in self.history_matrix for v in row for x in v]
-        if not vals:
-            self.value_min, self.value_max = 0.0, 1.0
-        else:
-            self.value_min, self.value_max = min(vals), max(vals)
-        w = abs(self.value_max - self.value_min)
-        self.value_width = w if w > 0.0 else 1.0
-
-    def _update_value_range_from_candidates(self, candidate_values):
-        vals = [x for v in candidate_values for x in v]
-        if not vals:
-            return
-        self.value_min = min(self.value_min, min(vals))
-        self.value_max = max(self.value_max, max(vals))
-        w = abs(self.value_max - self.value_min)
-        self.value_width = w if w > 0.0 else 1.0
 
     def _build_stream_manager(self, series) -> PolyClusterManager:
         mgr = PolyClusterManager(
@@ -208,38 +172,16 @@ class StreamPool:
                     if pres_cnt > 0
                     else self._scalar_to_strength01(series[-1][0])
                 )
-            c = StreamContainer(sid, mgr, list(series[-1]), None,
+            c = StreamContainer(sid, mgr, list(series[-1]),
                                 pres_sum, pres_cnt, pres_avg)
             self.stream_pool.append(c)
             self.containers_by_id[sid] = c
             self.active_ids.append(sid)
 
     # -- active stream control (reference ...:388-571) -----------------
-    def ensure_stream_id_max(self, max_id: int):
-        if max_id <= 0:
-            return
-        while self.next_stream_id <= max_id:
-            self.add_new_stream_with_id(self.next_stream_id)
-            self.next_stream_id += 1
-
-    def ensure_stream_count_min(self, n: int):
-        n = max(n, 1)
-        if len(self.stream_pool) < n:
-            self.ensure_stream_id_max(n)
-
-    def add_new_stream_with_id(self, sid: int):
-        if sid in self.containers_by_id:
-            return
-        length = max(len(self.history_matrix), 1)
-        seed = [self.value_min]
-        series = [list(seed) for _ in range(length)]
-        mgr = self._build_stream_manager(series)
-        c = StreamContainer(sid, mgr, list(seed), None)
-        self.stream_pool.append(c)
-        self.containers_by_id[sid] = c
-        if sid not in self.active_ids:
-            self.active_ids.append(sid)
-
+    # Every pool of one request starts with the same stream ids and
+    # applies the same lifecycle plans, so each id a plan names exists and
+    # the active list holds exactly the streams the step asks for.
     def revive_stream_ids(self, ids):
         for sid in ids:
             if sid in self.inactive_ids:
@@ -255,18 +197,11 @@ class StreamPool:
                     self.inactive_ids.append(sid)
 
     def fork_stream_from_id(self, source_id: int, new_id: int):
-        if new_id in self.containers_by_id:
-            return
-        self.ensure_stream_id_max(source_id)
-        src = self.containers_by_id.get(source_id)
-        if src is None:
-            self.add_new_stream_with_id(new_id)
-            return
+        src = self.containers_by_id[source_id]
         c = StreamContainer(
             new_id,
             copy.deepcopy(src.manager),
             list(src.last_value),
-            None if src.last_abs_pitch is None else list(src.last_abs_pitch),
             src.presence_sum,
             src.presence_count,
             src.presence_avg,
@@ -277,67 +212,32 @@ class StreamPool:
             self.active_ids.append(new_id)
 
     def set_active_stream_ids(self, ids_raw):
-        ids = list(dict.fromkeys(int(x) for x in ids_raw))
-        if not ids:
-            ids = [self.active_ids[0]] if self.active_ids else [1]
-        self.ensure_stream_id_max(max(ids))
-        self.revive_stream_ids([i for i in ids if i in self.inactive_ids])
-        self.active_ids = ids
+        self.active_ids = list(dict.fromkeys(int(x) for x in ids_raw))
 
-    def active_stream_containers(self, n: int) -> list[StreamContainer]:
-        n = max(int(n), 1)
-        if not self.active_ids:
-            self.ensure_stream_count_min(n)
-            self.active_ids = [
-                c.id for c in self.stream_pool[: min(n, len(self.stream_pool))]
-            ]
-        if len(self.active_ids) < n:
-            self.ensure_stream_count_min(n)
-            extra = []
-            for c in self.stream_pool:
-                if c.id not in self.active_ids and c.id not in self.inactive_ids:
-                    extra.append(c.id)
-                if len(extra) >= n - len(self.active_ids):
-                    break
-            self.active_ids.extend(extra)
-        elif len(self.active_ids) > n:
-            self.active_ids = self.active_ids[:n]
-        return [
-            self.containers_by_id[i]
-            for i in self.active_ids
-            if i in self.containers_by_id
-        ]
+    def active_stream_containers(self) -> list[StreamContainer]:
+        return [self.containers_by_id[i] for i in self.active_ids]
 
     # -- strength / presence (reference ...:578-694) -------------------
     def presence_of_id(self, sid: int) -> float:
+        """Tracked presence; lifecycle plans run on the vol or note pool,
+        and both track presence."""
         c = self.containers_by_id.get(sid)
         if c is None:
             return 0.0
-        if self.track_presence:
-            return _clamp01(c.presence_avg)
-        return (
-            self._scalar_to_strength01(c.last_value[0])
-            if len(c.last_value) == 1
-            else 0.0
-        )
+        return _clamp01(c.presence_avg)
 
-    def decay_inactive_strengths(self, factor: float = INACTIVE_STRENGTH_DECAY):
-        f = _clamp01(factor)
+    def decay_inactive_strengths(self):
         for sid in self.inactive_ids:
             c = self.containers_by_id.get(sid)
             if c is None:
                 continue
-            c.presence_sum *= f
-            c.presence_avg = _clamp01(c.presence_avg * f)
+            c.presence_sum *= INACTIVE_STRENGTH_DECAY
+            c.presence_avg = _clamp01(c.presence_avg * INACTIVE_STRENGTH_DECAY)
 
     # -- lifecycle planning (reference ...:700-821) --------------------
     def build_stream_lifecycle_plan(self, desired_count: int, *, target, spread) -> LifecyclePlan:
         dc = max(int(desired_count), 1)
         self.decay_inactive_strengths()
-        if not self.active_ids:
-            self.ensure_stream_count_min(1)
-            if self.stream_pool:
-                self.active_ids = [self.stream_pool[0].id]
         current_active = list(self.active_ids)
         cur_n = len(current_active)
         t = _clamp01(target)
@@ -403,15 +303,11 @@ class StreamPool:
             self.set_active_stream_ids(plan.active_ids)
 
     # -- cost precalculation (reference ...:828-893) -------------------
-    def precalculate_costs(self, candidate_values_raw, n_raw=None) -> dict[int, dict[float, tuple[float, float]]]:
+    def precalculate_costs(self, candidate_values_raw) -> dict[int, dict[float, tuple[float, float]]]:
         """{stream_id: {candidate_value: (raw, complexity01)}}."""
         candidate_values = [_to_polyset(v) for v in candidate_values_raw]
-        if not self.fixed_value_range:
-            self._update_value_range_from_candidates(candidate_values)
-        n = len(self.active_ids) if n_raw is None else int(n_raw)
-        n = max(n, 1)
         per_stream: dict[int, dict[float, tuple[float, float]]] = {}
-        for c in self.active_stream_containers(n):
+        for c in self.active_stream_containers():
             per_value: dict[float, tuple[float, float]] = {}
             raw_list = []
             for v in candidate_values:
@@ -442,75 +338,32 @@ class StreamPool:
         return per_stream
 
     # -- mapping + scoring (reference ...:1032-1189) -------------------
-    def resolve_mapping_and_score(
-        self,
-        cand_set_raw,
-        stream_costs,
-        *,
-        absolute_bases=None,
-        active_note_counts=None,
-        active_total_notes=None,
-        distance_weight=None,
-        complexity_weight=None,
-    ):
+    def resolve_mapping_and_score(self, cand_set_raw, stream_costs):
         cand_set = [_to_polyset(v) for v in cand_set_raw]
         n = max(len(cand_set), 1)
-        if absolute_bases is not None:
-            self.pending_absolute_bases = list(absolute_bases)
 
-        if distance_weight is None or complexity_weight is None:
-            dw, cw = (0.0, 1.0) if self.use_complexity_mapping else (1.0, 0.0)
-        else:
-            dw, cw = _clamp01(distance_weight), _clamp01(complexity_weight)
-
-        actives = self.active_stream_containers(n)
+        actives = self.active_stream_containers()
         dist_m = [[0.0] * n for _ in range(n)]
         comp_m = [[0.0] * n for _ in range(n)]
         cost_m = [[0.0] * n for _ in range(n)]
 
-        abs_width = 1.0
-        if absolute_bases is not None:
-            bases = [float(x) for x in absolute_bases]
-            pc_width = float(NOTE_RANGE_MAX - NOTE_RANGE_MIN)
-            if pc_width <= 0.0:
-                pc_width = 1.0
-            abs_width = abs(max(bases) - min(bases)) + pc_width
-            if abs_width <= 0.0:
-                abs_width = 1.0
-
         for i, stream in enumerate(actives):
             for j in range(n):
                 v = cand_set[j]
-                if absolute_bases is not None:
-                    base = absolute_bases[i]
-                    abs_candidate = [base + (int(pc) % 12) for pc in v]
-                    last_abs = stream.last_abs_pitch
-                    if last_abs is None:
-                        last_abs = [base + (int(pc) % 12) for pc in stream.last_value]
-                    pitch_dist01 = set_distance01(
-                        abs_candidate, last_abs, abs_width, self.max_simultaneous_notes
-                    )
-                    count01 = (
-                        0.0
-                        if active_note_counts is None
-                        else _clamp01(active_note_counts[i] / self.max_simultaneous_notes)
-                    )
-                    dist01 = _clamp01((pitch_dist01 + count01) / 2.0)
+                last = stream.last_value
+                if (
+                    self.track_presence
+                    and stream_costs is not None
+                    and len(v) == 1
+                    and len(last) == 1
+                ):
+                    dist01 = 0.0
+                elif len(v) == 1 and len(last) == 1:
+                    dist01 = _clamp01(abs(v[0] - last[0]) / self.value_width)
                 else:
-                    last = stream.last_value
-                    if (
-                        self.track_presence
-                        and stream_costs is not None
-                        and len(v) == 1
-                        and len(last) == 1
-                    ):
-                        dist01 = 0.0
-                    elif len(v) == 1 and len(last) == 1:
-                        dist01 = _clamp01(abs(v[0] - last[0]) / self.value_width)
-                    else:
-                        dist01 = set_distance01(
-                            v, last, self.value_width, self.max_simultaneous_notes
-                        )
+                    dist01 = set_distance01(
+                        v, last, self.value_width, self.max_simultaneous_notes
+                    )
 
                 if stream_costs is None:
                     comp01 = 0.5
@@ -525,11 +378,9 @@ class StreamPool:
 
                 dist_m[i][j] = dist01
                 comp_m[i][j] = comp01
-                cost_m[i][j] = (
-                    dw * dist01
-                    + cw * comp01
-                    + 1e-9 * (float(j + 1) + float(i + 1) * 1e-3)
-                )
+                # complexity mapping: the cost is comp01 alone, plus the
+                # reference's index tie epsilon; dist01 is only reported
+                cost_m[i][j] = comp01 + 1e-9 * (float(j + 1) + float(i + 1) * 1e-3)
 
         assignment = hungarian_min_assignment(cost_m)
         ordered = [None] * n
@@ -549,12 +400,9 @@ class StreamPool:
         return ordered, metric
 
     # -- commit (reference ...:1219-1291) ------------------------------
-    def commit_state(self, best_chord_raw, strength_params=None, absolute_bases=None):
+    def commit_state(self, best_chord_raw):
         best_chord = [_to_polyset(v) for v in best_chord_raw]
-        n = max(len(best_chord), 1)
-        if absolute_bases is not None:
-            self.pending_absolute_bases = list(absolute_bases)
-        for i, stream in enumerate(self.active_stream_containers(n)):
+        for i, stream in enumerate(self.active_stream_containers()):
             v = best_chord[i]
             try:
                 stream.manager.add_data_point(v)
@@ -564,9 +412,6 @@ class StreamPool:
                 # request — fall back to pushing the raw point
                 stream.manager._push(v)
             stream.last_value = list(v)
-            if self.pending_absolute_bases is not None:
-                base = self.pending_absolute_bases[i]
-                stream.last_abs_pitch = [base + (int(pc) % 12) for pc in v]
             if self.track_presence and len(v) == 1:
                 vv = self._scalar_to_strength01(v[0])
                 stream.presence_sum += vv
@@ -585,7 +430,6 @@ class StreamPool:
             except Exception:
                 # reference per-stream try/catch noop (...:1264-1276)
                 pass
-        self.pending_absolute_bases = None
 
     def stream_strengths_report(self) -> dict[int, dict]:
         return {

@@ -79,8 +79,6 @@ def cluster_timeline_poly(
     merge_threshold_ratio: float = DEFAULT_MERGE_THRESHOLD_RATIO,
     contextual_min_width: float = DEFAULT_CONTEXTUAL_MIN_WIDTH,
     max_set_size: int = 4,
-    point_distance_mode: str = "set",
-    point_axis_ranges: tuple = (),
 ) -> DataFrame:
     """Polyphonic clustering over a chords table
     (doc_id, chords: array<array<double>>) — each timestep is a PolySet
@@ -92,7 +90,6 @@ def cluster_timeline_poly(
     mtr = float(merge_threshold_ratio)
     cmw = float(contextual_min_width)
     mss = int(max_set_size)
-    axes = tuple(float(a) for a in point_axis_ranges)
 
     def make():
         from ..kernel.polymanager import PolyClusterManager
@@ -108,8 +105,6 @@ def cluster_timeline_poly(
                 scale_mode="contextual_global_halves",
                 contextual_min_width=cmw,
                 max_set_size=mss,
-                point_distance_mode=point_distance_mode,
-                point_axis_ranges=axes,
             )
             mgr.process_data()
             for row in mgr.timeline():

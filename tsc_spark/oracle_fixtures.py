@@ -199,8 +199,6 @@ def _fx_cluster_timeline_poly(sf_dir: str):
             scale_mode="contextual_global_halves",
             contextual_min_width=DEFAULT_CONTEXTUAL_MIN_WIDTH,
             max_set_size=4,
-            point_distance_mode="set",
-            point_axis_ranges=(),
         )
         mgr.process_data()
         for ws, cid, inds in mgr.timeline():
