@@ -47,8 +47,8 @@ def main() -> None:
     ap.add_argument("--no-resume", dest="resume", action="store_false")
     ap.add_argument("--no-timeline", dest="timeline", action="store_false", default=True)
     ap.add_argument("--no-encoded", dest="encoded", action="store_false", default=True,
-                    help="no raw tier: skip the DoD-encoded table, the only stored "
-                         "copy of the raw points (tier 0)")
+                    help="no raw tier: store no DoD blob, the only stored copy of "
+                         "the raw points (tier 0), in the bucket rows")
     ap.add_argument("--retention", default=None, metavar="T0,T1,T2",
                     help="apply a TTL sweep after processing: per-tier keep-last "
                          "window counts, e.g. 64,16,8 (operators.retention)")

@@ -6,8 +6,10 @@ import pytest
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
-from tsc_spark.codecs import decode, decode_dod, encode, encode_dod
+from tsc_spark.codecs import decode, decode_dod, encode
 from tsc_spark.sources import synth_tokens
+
+INT64_LISTS = pa.list_(pa.int64())
 
 ADVERSARIAL_INT = [
     [],
@@ -24,13 +26,14 @@ ADVERSARIAL_INT = [
 
 @pytest.mark.parametrize("case", ADVERSARIAL_INT, ids=range(len(ADVERSARIAL_INT)))
 def test_dod_roundtrip_adversarial(case):
-    out = decode_dod(encode_dod(case))
+    out = decode_dod(encode(pa.array([case], INT64_LISTS))[0].as_py())
     assert out.tolist() == case
 
 
 def test_dod_roundtrip_synth_corpus():
     for doc_id, toks, _src in synth_tokens(64, include_edges=True):
-        assert decode_dod(encode_dod(toks)).tolist() == toks, doc_id
+        blob = encode(pa.array([toks], INT64_LISTS))[0].as_py()
+        assert decode_dod(blob).tolist() == toks, doc_id
 
 
 def test_decode_dod_rejects_null_elements():
@@ -40,20 +43,20 @@ def test_decode_dod_rejects_null_elements():
     with pytest.raises(ValueError, match=r"NULL token element.*decode\(\)"):
         decode_dod(blob)
     assert decode(pa.array([blob], pa.binary())).to_pylist() == [[1, None, 3]]
-    assert decode_dod(encode_dod([1, 2, 3])).dtype == "int64"
+    assert decode_dod(encode(pa.array([[1, 2, 3]], INT64_LISTS))[0].as_py()).dtype == "int64"
 
 
 def test_dod_compresses_constant_runs():
     toks = [7] * 1000
-    assert len(encode_dod(toks)) < 1010  # ~1 byte/value worst, constant ≈ n bytes
     ramp = list(range(1000))
-    assert len(encode_dod(ramp)) < 1010
+    # ~1 byte/value worst, constant ≈ n bytes
+    assert all(len(b) < 1010 for b in encode(pa.array([toks, ramp], INT64_LISTS)).to_pylist())
 
 
 @given(st.lists(st.integers(min_value=-(2**40), max_value=2**40), max_size=300))
 @settings(max_examples=200, deadline=None)
 def test_dod_roundtrip_property(xs):
-    assert decode_dod(encode_dod(xs)).tolist() == xs
+    assert decode_dod(encode(pa.array([xs], INT64_LISTS))[0].as_py()).tolist() == xs
 
 
 def _spec_varint(u):
@@ -131,15 +134,28 @@ def test_codec_rejects_malformed_input():
         decode(pa.array([b"\x01\x00\x05"], pa.binary()))  # a NULL at position 5 of 1
 
 
+def _encoded_table(df):
+    """The blob columns of a stored bucket table, from the encoder UDF."""
+    from pyspark.sql import functions as F
+
+    from tsc_spark.codecs.deltadelta import CODEC_VERSION
+    from tsc_spark.functions.codec_udfs import encode_tokens_udf
+
+    return df.select(
+        "doc_id", encode_tokens_udf("tokens").alias("encoded"),
+        F.lit(CODEC_VERSION).alias("codec_version"), "n_tok", "source",
+    )
+
+
 def test_null_tokens_row_roundtrips_to_null(spark):
-    from tsc_spark.functions.codec_udfs import decode_tokens_table, encode_tokens_table
+    from tsc_spark.functions.codec_udfs import decode_tokens_table
 
     df = spark.createDataFrame(
         [("d1", [1, 2, 3], 3, "s"), ("d2", None, 0, "s"), ("d3", [], 0, "s"),
          ("d4", [1, None, 3], 3, "s")],
         "doc_id string, tokens array<int>, n_tok int, source string",
     )
-    enc = encode_tokens_table(df)
+    enc = _encoded_table(df)
     assert "ArrowEvalPython" in enc._jdf.queryExecution().executedPlan().toString()
     got = {r.doc_id: r.tokens for r in decode_tokens_table(enc).collect()}
     assert got == {"d1": [1, 2, 3], "d2": None, "d3": [], "d4": [1, None, 3]}
@@ -149,13 +165,13 @@ def test_decode_rejects_unknown_codec_version(spark):
     import pytest
     from pyspark.sql import functions as F
 
-    from tsc_spark.functions.codec_udfs import decode_tokens_table, encode_tokens_table
+    from tsc_spark.functions.codec_udfs import decode_tokens_table
 
     df = spark.createDataFrame(
         [("d1", [1, 2, 3], 3, "s")],
         "doc_id string, tokens array<int>, n_tok int, source string",
     )
-    enc = encode_tokens_table(df)
+    enc = _encoded_table(df)
     # the stamped version decodes fine — run BEFORE the failure-injection
     # query: cancelling that stage kills the reused Python workers, and the
     # next Arrow job can transiently hit ClosedChannelException while the

@@ -242,7 +242,6 @@ def test_tier_store_reads_back_the_logical_rollups(spark, tmp_path, raw_tokens_d
     base_dir = str(tmp_path / "pipe")
     ingest(spark, raw_tokens_df, base_dir, n_buckets=4)
     run_pipeline(spark, base_dir, with_timeline=False)
-    assert not os.path.exists(os.path.join(base_dir, "rollup", "tier=0"))
     tiers = tiered_rollups(raw_tokens_df)
     edges = {"edge_one", "edge_two", "edge_const", "edge_neg", "edge_null", "edge_long"}
     assert edges <= {r.doc_id for r in tiers[0].select("doc_id").distinct().collect()}
@@ -257,6 +256,22 @@ def test_tier_store_reads_back_the_logical_rollups(spark, tmp_path, raw_tokens_d
             expected = retention_sweep(tdf, DEFAULT_RETENTION_POLICY)
             assert _tier_rows(read_tier(spark, base_dir, tier)) == _tier_rows(expected), tier
         assert _max_stored_tokens(spark, base_dir) == DEFAULT_RETENTION_POLICY[0]
+
+
+@pytest.mark.parametrize("with_encoded", [True, False])
+def test_pipeline_writes_one_table_per_bucket(spark, base_dir, with_encoded):
+    """Each bucket is one table, encoded/bucket=b, with one row per doc
+    holding its blob (without with_encoded, none) and its tier-1/2
+    structs; the pipeline writes no rollup/ directory."""
+    run_pipeline(spark, base_dir, with_timeline=False, with_encoded=with_encoded)
+    assert sorted(os.listdir(base_dir)) == ["_checkpoints", "_ingest.json", "encoded",
+                                            "tokens_bucketed"]
+    stored = spark.read.parquet(os.path.join(base_dir, "encoded"))
+    blob = ["encoded", "codec_version"] if with_encoded else []
+    assert stored.columns == ["doc_id", *blob, "n_tok", "source", "tier1", "tier2", "bucket"]
+    assert stored.count() == 56  # every doc, the empty one included
+    for tier in (1, 2):
+        assert read_tier(spark, base_dir, tier).count() > 0
 
 
 def test_every_tier_table_has_the_rollup_row_schema(spark, tmp_path, tokens_df, base_dir):
@@ -305,13 +320,12 @@ def test_manifest_bytes_equal_directory_walk(spark, base_dir):
     directory the bucket wrote; each retention record the bytes of the
     tier and encoded directories after its sweep."""
     (m,) = run_pipeline(spark, base_dir, buckets=[1])
-    dirs = {out: os.path.join(base_dir, out, "bucket=1")
-            for out in ("rollup", "encoded", "timeline")}
+    dirs = {out: os.path.join(base_dir, out, "bucket=1") for out in ("encoded", "timeline")}
     assert m["bytes"] == {name: _walk_bytes(path) for name, path in dirs.items()}
     assert all(n > 0 for n in m["bytes"].values())
 
     (record,) = apply_retention(spark, base_dir, {0: 4, 1: 2, 2: 1}, buckets=[1])
-    swept = {name: _walk_bytes(dirs[name]) for name in ("rollup", "encoded")}
+    swept = {"encoded": _walk_bytes(dirs["encoded"])}
     assert record["bytes"] == swept
     assert swept["encoded"] < m["bytes"]["encoded"]
     (committed,) = pipeline_metrics(base_dir)

@@ -194,40 +194,36 @@ def one_bucket(spark, tokens_df, tmp_path):
     return base
 
 
-def test_pipeline_bucket_pass_scans_twice(spark, one_bucket):
-    """A bucket's pass reads the bucket twice: once for the one
-    mapInArrow that emits both doc-major tiers, once for the encoder's
-    Arrow UDF — two scans, two Python nodes."""
+def test_pipeline_bucket_pass_scans_once(spark, one_bucket):
+    """A bucket's pass reads the bucket once: one mapInArrow emits each
+    doc's whole stored row (its blob and both doc-major tiers) — one
+    scan, one Python node and no Arrow UDF."""
     from tsc_spark.plans.pipeline import run_pipeline
 
     plans = execution_plans(spark, lambda: run_pipeline(spark, one_bucket, with_timeline=False))
     nodes = [n for plan in plans for n in plan]
-    assert sum(n.startswith("Scan ") for n in nodes) == 2, plans
-    assert sorted(n for n in nodes if n in _PY_NODES) == ["ArrowEvalPython", "MapInArrow"], plans
+    assert sum(n.startswith("Scan ") for n in nodes) == 1, plans
+    assert [n for n in nodes if n in _PY_NODES] == ["MapInArrow"], plans
 
 
 def test_stored_tier_sweep_is_narrow(spark, one_bucket):
-    """The stored-tier sweep (keep_last) slices each doc-major row in
-    place: its executed plan has no Exchange, Sort or Window, where the
+    """apply_retention cuts each stored doc row in place: one job with
+    one scan and one mapInArrow, and no Exchange or Window, where the
     window-row sweep it replaces (retention_sweep, kept as its oracle)
-    has all three.  apply_retention reads the bucket's tiers in one scan,
-    and its write of the survivors adds one Sort by (tier, doc_id)
-    inside each task: partitionBy("tier") needs the rows grouped by
-    tier, and doc_id order is the file layout."""
-    from tsc_spark.operators.retention import apply_retention, keep_last, retention_sweep
+    has an Exchange, a Sort and a Window.  Its write adds one Sort by
+    doc_id inside each task: doc_id order is the file layout."""
+    from tsc_spark.operators.retention import apply_retention, retention_sweep
     from tsc_spark.plans.pipeline import read_tier, run_pipeline
 
-    run_pipeline(spark, one_bucket, with_timeline=False, with_encoded=False)
+    run_pipeline(spark, one_bucket, with_timeline=False)
     shuffled = {"Exchange", "Sort", "Window"}
     oracle_sweep = retention_sweep(read_tier(spark, one_bucket, 1), {1: 2})
     (oracle,) = execution_plans(spark, oracle_sweep.collect)
     assert shuffled <= set(oracle), oracle  # the walker sees them when they are there
-    stored = spark.read.parquet(os.path.join(one_bucket, "rollup", "bucket=0"))
-    (sweep,) = execution_plans(spark, keep_last(stored, {1: 2}).collect)
-    assert not shuffled & set(sweep), sweep
-    plans = execution_plans(spark, lambda: apply_retention(spark, one_bucket, {1: 2, 2: 1}))
-    assert len(plans) == 1, plans  # both tiers in one job
+    plans = execution_plans(spark, lambda: apply_retention(spark, one_bucket, {0: 4, 1: 2, 2: 1}))
+    assert len(plans) == 1, plans  # every tier in one job
     (nodes,) = plans
     assert sum(n.startswith("Scan ") for n in nodes) == 1, nodes
+    assert [n for n in nodes if n in _PY_NODES] == ["MapInArrow"], nodes
     assert not {"Exchange", "Window"} & set(nodes), nodes
     assert nodes.count("Sort") == 1, nodes

@@ -6,7 +6,6 @@ import pytest
 
 from tsc_spark import config as C
 from tsc_spark.kernel.dissonance import hungarian_min_assignment
-from tsc_spark.kernel.multistream import set_distance01
 from tsc_spark.kernel.polygen import (
     _concordance_cost,
     _observed_chord_range_and_density,
@@ -70,22 +69,6 @@ class TestControllerHelpers:
         assert _concordance_cost(0.5, 0.3) == pytest.approx(0.5 * abs(0.7 - 1.0))
         assert _concordance_cost(-0.5, 0.3) == pytest.approx(0.5 * abs(0.7 - 0.0))
         assert _concordance_cost(0.0, 0.9) == 0.0
-
-
-class TestSetDistance:
-    def test_scalar_pair(self):
-        # reference msm:964-1029: symmetric min-avg / width, no count
-        # penalty for equal sizes
-        assert set_distance01([60], [62], 10, 4) == pytest.approx(0.2)
-
-    def test_size_mismatch_blends_count_penalty(self):
-        # a_avg = mean(2,2)=2; b_avg = 2; pitch = 0.2; count = 1/4;
-        # blended (0.2+0.25)/2
-        assert set_distance01([60, 64], [62], 10, 4) == pytest.approx(0.225)
-
-    def test_empty_rules(self):
-        assert set_distance01([], [], 10, 4) == 0.0
-        assert set_distance01([], [60], 10, 4) == 1.0
 
 
 class TestHungarian:
@@ -315,3 +298,22 @@ class TestDimensionPolicyAliases:
         assert _clamp01(float("inf")) == 1.0
         assert _clamp01(float("-inf")) == 0.0
         assert _f(float("nan"), 0.25) == 0.25
+
+
+def test_chord_search_over_the_bound_raises_before_it_allocates():
+    """density 0.5 over a 12-note chord range offers C(28, 14) ≈ 4.0e7
+    chords to one stream: the request is refused at once, naming the
+    stream, density and chord range, instead of building them all."""
+    import copy
+    import time
+
+    from tsc_spark.kernel.polygen import MAX_STREAM_CHORDS, generate_polyphonic
+    from tsc_spark.oracle_fixtures import GENERATE_POLY_REQUESTS
+
+    p = copy.deepcopy(dict(GENERATE_POLY_REQUESTS[0][1]))
+    p["dimension_policy"] = {"density": {"fixed_value": 0.5}, "chord_range": {"fixed_value": 12}}
+    t0 = time.perf_counter()
+    with pytest.raises(ValueError, match=r"stream 0: density 0\.5 and chord_range 12"):
+        generate_polyphonic(p)
+    assert time.perf_counter() - t0 < 1.0
+    assert MAX_STREAM_CHORDS < 40_116_600

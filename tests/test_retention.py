@@ -128,30 +128,29 @@ def swept_base(spark, raw_tokens_df, tmp_path):
 
 class TestApplyRetentionEdges:
     def test_fully_expired_tier_stays_readable(self, spark, swept_base):
-        """keep 0 expires every survivor of tier 1: partitionBy writes no
-        directory for it, but the tier must remain a readable, empty
-        table with the unswept columns and types (tier column included)
-        — also once no bucket holds a tier data file at all."""
+        """keep 0 expires every window of tier 1: each doc row keeps its
+        blob and an empty tier-1 struct, and the tier remains a readable,
+        empty table with the unswept columns and types (tier column
+        included) — also once both tiers hold no window at all."""
         dtypes = {t: read_tier(spark, swept_base, t).dtypes for t in (1, 2)}
+        docs = spark.read.parquet(os.path.join(swept_base, "encoded")).count()
         records = apply_retention(spark, swept_base, {0: 64, 1: 0, 2: 8})
         assert all(r["tiers"]["1"]["rows_after"] == 0 for r in records)
         assert all(r["tiers"]["1"]["rows_before"] > 0 for r in records)
-        for bucket in (0, 1):
-            assert not os.path.exists(
-                os.path.join(swept_base, "rollup", f"bucket={bucket}", "tier=1")
-            )
+        stored = spark.read.parquet(os.path.join(swept_base, "encoded"))
+        assert stored.count() == docs
+        assert stored.filter(F.size("tier1.agg_count") > 0).count() == 0
         tier1 = read_tier(spark, swept_base, 1)
         assert tier1.count() == 0
         assert tier1.dtypes == dtypes[1]
         # the other tiers of the same one-job sweep are unaffected
         assert read_tier(spark, swept_base, 0).count() > 0
+        assert read_tier(spark, swept_base, 2).count() > 0
         # and a second sweep over the empty tier is a no-op
         again = apply_retention(spark, swept_base, {0: 64, 1: 0, 2: 8})
         assert [r["tiers"]["1"] for r in again] == [{"rows_before": 0, "rows_after": 0}] * 2
 
         apply_retention(spark, swept_base, {0: 64, 1: 0, 2: 0})
-        assert not [name for _root, _dirs, files in os.walk(os.path.join(swept_base, "rollup"))
-                    for name in files if name.endswith(".parquet")]
         for tier in (1, 2):
             stored = read_tier(spark, swept_base, tier)
             assert stored.count() == 0, tier
@@ -159,28 +158,30 @@ class TestApplyRetentionEdges:
         again = apply_retention(spark, swept_base, {0: 64, 1: 0, 2: 0})
         assert [r["tiers"]["2"] for r in again] == [{"rows_before": 0, "rows_after": 0}] * 2
 
-    def test_bucket_missing_a_tier_is_recorded_empty(self, spark, swept_base):
-        """A policy tier the bucket has no rows of is recorded 0/0, and
-        the sweep creates no directory for it."""
-        import shutil
-
-        missing = os.path.join(swept_base, "rollup", "bucket=0", "tier=2")
-        shutil.rmtree(missing)
-        records = {r["bucket"]: r for r in apply_retention(spark, swept_base)}
-        assert records[0]["tiers"]["2"] == {"rows_before": 0, "rows_after": 0}
-        assert records[0]["tiers"]["1"]["rows_after"] > 0
-        assert records[1]["tiers"]["2"]["rows_after"] > 0
-        assert not os.path.exists(missing)
+    def test_bucket_missing_a_tier_is_recorded_empty(self, spark, raw_tokens_df, tmp_path):
+        """A bucket whose docs hold no tokens has no window in any tier:
+        each policy tier is recorded 0/0, its doc rows stay, and the
+        other bucket is swept as usual."""
+        bucket = F.pmod(F.xxhash64("doc_id"), F.lit(2))
+        empty = F.when(bucket == 0, F.array().cast("array<int>")).otherwise(F.col("tokens"))
+        corpus = raw_tokens_df.withColumn("tokens", empty).withColumn("n_tok", F.size("tokens"))
+        base = str(tmp_path / "hollow")
+        ingest(spark, corpus, base, n_buckets=2)
+        run_pipeline(spark, base, with_timeline=False)
+        records = {r["bucket"]: r for r in apply_retention(spark, base)}
+        assert records[0]["tiers"] == {t: {"rows_before": 0, "rows_after": 0} for t in "012"}
+        assert all(records[1]["tiers"][t]["rows_after"] > 0 for t in "012")
+        for tier in (0, 1, 2):
+            assert read_tier(spark, base, tier).filter("bucket = 0").count() == 0, tier
+        stored = spark.read.parquet(os.path.join(base, "encoded", "bucket=0"))
+        assert stored.count() == corpus.filter(bucket == 0).count() > 0
 
     def test_leftover_tmp_dir_is_invisible_and_overwritten(self, spark, raw_tokens_df, swept_base):
-        """A sweep interrupted after its write leaves its tmp dirs behind:
-        read_tier must not see them, and the next sweep replaces them."""
-        tmp = os.path.join(swept_base, "rollup", ".bucket=0.sweep_tmp")
-        stale = spark.read.parquet(os.path.join(swept_base, "rollup", "bucket=0")).limit(5)
-        stale.write.partitionBy("tier").parquet(tmp)
-        enc_tmp = os.path.join(swept_base, "encoded", ".bucket=0.sweep_tmp")
+        """A sweep interrupted after its write leaves its tmp dir behind:
+        read_tier must not see it, and the next sweep replaces it."""
+        tmp = os.path.join(swept_base, "encoded", ".bucket=0.sweep_tmp")
         spark.read.parquet(os.path.join(swept_base, "encoded", "bucket=0")).limit(5).write.parquet(
-            enc_tmp
+            tmp
         )
         for tier in (0, 1):
             assert _rows(read_tier(spark, swept_base, tier)) == _rows(
@@ -189,7 +190,6 @@ class TestApplyRetentionEdges:
 
         apply_retention(spark, swept_base)
         assert not os.path.exists(tmp)
-        assert not os.path.exists(enc_tmp)
         for tier in (0, 1, 2):
             expected = retention_sweep(
                 tiered_rollups(raw_tokens_df)[tier], DEFAULT_RETENTION_POLICY
@@ -216,10 +216,15 @@ class TestApplyRetentionEdges:
         """Tier 0 absent from the policy: the encoded blobs stay whole and
         the record has no tier-0 entry, like any tier the policy omits."""
         encoded = os.path.join(swept_base, "encoded")
-        blobs = sorted(map(tuple, spark.read.parquet(encoded).collect()))
+
+        def blobs():
+            stored = spark.read.parquet(encoded).drop("tier1", "tier2")
+            return sorted(map(tuple, stored.collect()))
+
+        before = blobs()
         records = apply_retention(spark, swept_base, {1: 2, 2: 1})
         assert all(sorted(r["tiers"]) == ["1", "2"] for r in records)
-        assert sorted(map(tuple, spark.read.parquet(encoded).collect())) == blobs
+        assert blobs() == before
         assert _rows(read_tier(spark, swept_base, 0)) == _rows(
             tiered_rollups(raw_tokens_df)[0]
         )
@@ -235,9 +240,8 @@ class TestApplyRetentionEdges:
         monkeypatch.setattr(shutil, "rmtree", lambda *a, **k: None)
         apply_retention(spark, swept_base)
         monkeypatch.undo()
-        backups = [d for root in ("encoded", "rollup")
-                   for d in os.listdir(os.path.join(swept_base, root)) if "swap_old" in d]
-        assert len(backups) == 4  # 2 buckets x 2 swapped dirs: the test is not vacuous
+        backups = [d for d in os.listdir(os.path.join(swept_base, "encoded")) if "swap_old" in d]
+        assert len(backups) == 2  # one swapped table per bucket: the test is not vacuous
         for tier, tdf in tiered_rollups(raw_tokens_df).items():
             stored = read_tier(spark, swept_base, tier)
             assert dict(stored.dtypes)["bucket"] == "int", tier

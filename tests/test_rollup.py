@@ -8,12 +8,13 @@ from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
+from tsc_spark.codecs import decode
 from tsc_spark.config import TIER_STRIDES
 from tsc_spark.kernel.scoring import combine_complexity_metric_scores, normalize_scores
+from tsc_spark.operators.retention import _sweep_batch, retention_sweep
 from tsc_spark.operators.rollup import (
-    _DOC_TIER_SCHEMA,
+    _AGGS,
     combined_window_scores,
-    doc_tier_batches,
     explode_points,
     gapfill,
     gapfill_locf,
@@ -21,9 +22,8 @@ from tsc_spark.operators.rollup import (
     rollup_points,
     series_stats,
     tiered_rollups,
-    window_rows,
 )
-from tsc_spark.operators.retention import keep_last, retention_sweep
+from tsc_spark.plans.pipeline import _doc_rows
 
 
 def _oracle_rollup(tokens, stride):
@@ -346,58 +346,94 @@ def _doc_batches(draw):
     return batch
 
 
-def _exploded(out: pa.RecordBatch) -> list[tuple]:
-    """Window rows of doc-major tier rows, in Python."""
+def _exploded(rows: pa.RecordBatch, tier: int) -> list[tuple]:
+    """Window rows of a batch's doc-major ``tier{tier}`` structs, in
+    Python; tier 0 explodes each row's ``encoded`` blob, its windows
+    indexed from the end of the doc (``n_tok``)."""
+    if tier == 0:
+        tokens = decode(rows.column("encoded")).to_pylist()
+        return [
+            (d, n - len(toks) + k, int(t is not None), t, t, t, 0)
+            for d, n, toks in zip(rows.column("doc_id").to_pylist(),
+                                  rows.column("n_tok").to_pylist(), tokens)
+            for k, t in enumerate(toks or ())
+        ]
     return [
-        (r["doc_id"], r["first_window_idx"] + k, *aggs, r["tier"])
-        for r in out.to_pylist()
+        (d, r["first_window_idx"] + k, *aggs, tier)
+        for d, r in zip(rows.column("doc_id").to_pylist(), rows.column(f"tier{tier}").to_pylist())
         for k, aggs in enumerate(zip(r["agg_count"], r["agg_min"], r["agg_max"], r["agg_sum"]))
     ]
 
 
+def _stored_rows(batch: pa.RecordBatch) -> pa.RecordBatch:
+    """The pipeline's stored rows (``_doc_rows``) of a ``(doc_id, tokens)``
+    batch."""
+    tokens = batch.column(1)
+    n_tok = pa.array([len(t or ()) for t in tokens.to_pylist()], pa.int32())
+    source = pa.array(["s"] * len(batch))
+    return _doc_rows(
+        pa.RecordBatch.from_arrays([batch.column(0), tokens, n_tok, source],
+                                   names=["doc_id", "tokens", "n_tok", "source"]),
+        with_encoded=True,
+    )
+
+
 class TestDocMajorTiers:
-    """The doc-major tier pass (``doc_tier_batches``, stored by the
-    pipeline) against ``rollup_batch``, and its keep-last slice
-    (``retention.keep_last``) against ``retention_sweep``."""
+    """The doc-major tier pass (``rollup.doc_tier_structs``, in the
+    pipeline's stored rows) against ``rollup_batch``, and the one-pass sweep of the
+    stored rows (``retention._sweep_batch``) against ``retention_sweep``."""
 
     @settings(max_examples=80, deadline=None)
     @given(_doc_batches())
     def test_packed_tiers_explode_to_rollup_batch(self, batch):
-        tier1, tier2 = doc_tier_batches(batch)
-        assert tier1.schema == tier2.schema
-        assert tier1.schema.names == [f.split()[0] for f in _DOC_TIER_SCHEMA.split(", ")]
-        # tier 2 is reduced from the tier-1 partials; rollup_batch at
+        rows = _stored_rows(batch)
+        tier1, tier2 = rows.column("tier1"), rows.column("tier2")
+        assert tier1.type == tier2.type
+        assert [f.name for f in tier1.type] == ["first_window_idx", *_AGGS]
+        # one struct per doc, a doc without windows holding empty arrays;
+        # tier 2 is reduced from the tier-1 partials, rollup_batch at
         # stride 64 reduces the tokens directly: every field bit-equal
-        for tier, out in ((1, tier1), (2, tier2)):
+        assert len(tier1) == len(tier2) == len(batch)
+        for tier in (1, 2):
             direct = rollup_batch(batch, TIER_STRIDES[tier], tier)
-            assert _exploded(out) == [tuple(r.values()) for r in direct.to_pylist()], tier
-            assert out.column("doc_id").to_pylist() == sorted(
-                set(direct.column("doc_id").to_pylist()), key=lambda d: int(d[1:])
-            )
+            assert _exploded(rows, tier) == [tuple(r.values()) for r in direct.to_pylist()], tier
+            counts = [len(r["agg_count"]) for r in rows.column(f"tier{tier}").to_pylist()]
+            assert counts == [-(-n // TIER_STRIDES[tier]) for n in rows.column("n_tok").to_pylist()]
 
     @settings(max_examples=8, deadline=None,
               suppress_health_check=[HealthCheck.function_scoped_fixture])
-    @given(_doc_batches(), st.integers(0, 12), st.none() | st.integers(0, 12), st.integers(0, 12))
-    def test_slice_sweep_equals_retention_sweep(self, spark, batch, keep1, keep2, smaller):
+    @given(_doc_batches(), st.integers(0, 12), st.none() | st.integers(0, 12),
+           st.none() | st.integers(0, 70), st.integers(0, 12))
+    def test_slice_sweep_equals_retention_sweep(self, spark, batch, keep1, keep2, keep0, smaller):
         """``keep`` 0, ``keep`` past a doc's window count, a tier the
         policy omits (kept whole), and a second sweep with a smaller
-        ``keep`` over the first one's output."""
-        policy = {1: keep1} if keep2 is None else {1: keep1, 2: keep2}
-        stored = spark.createDataFrame(
-            [r for out in doc_tier_batches(batch) for r in out.to_pylist()], _DOC_TIER_SCHEMA
+        ``keep`` over the first one's output, on every tier."""
+        policy = {1: keep1} | ({} if keep2 is None else {2: keep2}) | (
+            {} if keep0 is None else {0: keep0}
         )
         rows = spark.createDataFrame(
-            [r for t in (1, 2) for r in rollup_batch(batch, TIER_STRIDES[t], t).to_pylist()],
+            [r for t in (0, 1, 2) for r in rollup_batch(batch, TIER_STRIDES[t], t).to_pylist()],
             "doc_id string, window_idx long, agg_count long, agg_min int, agg_max int, "
             "agg_sum long, tier int",
         )
 
+        def swept(stored, pol):
+            out = _sweep_batch(stored, pol)
+            assert out.column("n_before").to_pylist() == (
+                [len(t or ()) for t in decode(stored.column("encoded")).to_pylist()]
+                if 0 in pol else [0] * len(stored)
+            )
+            return out.select(stored.schema.names)
+
+        def windows(stored):
+            return sorted((r for t in (0, 1, 2) for r in _exploded(stored, t)), key=repr)
+
         def collect(df):
             return sorted(map(tuple, df.collect()), key=repr)
 
-        once = keep_last(stored, policy)
-        assert collect(window_rows(once)) == collect(retention_sweep(rows, policy))
+        once = swept(_stored_rows(batch), policy)
+        assert windows(once) == collect(retention_sweep(rows, policy))
         again = {t: max(k - smaller, 0) for t, k in policy.items()}
-        assert collect(window_rows(keep_last(once, again))) == collect(
+        assert windows(swept(once, again)) == collect(
             retention_sweep(retention_sweep(rows, policy), again)
         )

@@ -2,7 +2,7 @@
 
 import pytest
 
-from tsc_spark.sources.tokens import TOKENS_COLUMNS, canonicalize_tokens, read_tokens
+from tsc_spark.sources.tokens import canonicalize_tokens, read_tokens
 
 
 def test_parquet_roundtrip_canonical(spark, tmp_path):
@@ -12,7 +12,7 @@ def test_parquet_roundtrip_canonical(spark, tmp_path):
         "doc_id string, tokens array<int>, n_tok int, source string",
     ).write.parquet(path)
     out = read_tokens(spark, path)
-    assert tuple(out.columns) == TOKENS_COLUMNS
+    assert tuple(out.columns) == ("doc_id", "tokens", "n_tok", "source")
     rows = {r.doc_id: r for r in out.collect()}
     assert rows["d1"].tokens == [1, 2, 3] and rows["d1"].n_tok == 3
 

@@ -1,3 +1,3 @@
-from .deltadelta import decode, decode_dod, encode, encode_dod
+from .deltadelta import decode, decode_dod, encode
 
-__all__ = ["encode", "decode", "encode_dod", "decode_dod"]
+__all__ = ["encode", "decode", "decode_dod"]

@@ -18,8 +18,8 @@ no NULL).
 zigzag and LEB128 pass over the batch's concatenated values (each doc's
 first two positions patched, its ``n`` header and NULL positions
 interleaved), and decode rebuilds the values with two segmented
-cumulative sums. A NULL doc maps to a NULL output. ``encode_dod``/
-``decode_dod`` are the one-doc calls.
+cumulative sums. A NULL doc maps to a NULL output. ``decode_dod`` is the
+one-doc decode.
 """
 
 from __future__ import annotations
@@ -28,7 +28,7 @@ import numpy as np
 import pyarrow as pa
 import pyarrow.compute as pc
 
-__all__ = ["encode", "decode", "encode_dod", "decode_dod"]
+__all__ = ["encode", "decode", "decode_dod"]
 
 CODEC_VERSION = 1
 
@@ -159,12 +159,6 @@ def decode(blobs: pa.Array) -> pa.Array:
     nulls[np.repeat(starts[:-1], n_null) + pos.astype(np.int64)] = True
     values = pa.array(_segmented_cumsum(d, starts), mask=nulls if pos.size else None)
     return pa.ListArray.from_arrays(pa.array(starts.astype(np.int32)), values, mask=mask)
-
-
-def encode_dod(tokens) -> bytes:
-    """int array -> delta-of-delta zigzag-varint bytes."""
-    arr = np.asarray(tokens, dtype=np.int64)
-    return encode(pa.array([arr], type=pa.list_(pa.int64())))[0].as_py()
 
 
 def decode_dod(data: bytes) -> np.ndarray:

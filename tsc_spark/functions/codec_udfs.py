@@ -20,7 +20,6 @@ from ..codecs.deltadelta import CODEC_VERSION
 __all__ = [
     "encode_tokens_udf",
     "decode_tokens_udf",
-    "encode_tokens_table",
     "decode_tokens_table",
 ]
 
@@ -43,29 +42,16 @@ def decode_tokens_udf(col) -> Column:
     return arrow_udf(_decode, ArrayType(IntegerType()))(col)
 
 
-def encode_tokens_table(tokens_df: DataFrame) -> DataFrame:
-    """tokens → (doc_id, encoded binary, codec_version, n_tok, source).
-
-    The compressed-at-rest form of the corpus (FIXTURES.md §2.4)."""
-    return tokens_df.select(
-        "doc_id",
-        encode_tokens_udf("tokens").alias("encoded"),
-        F.lit(CODEC_VERSION).alias("codec_version"),
-        "n_tok",
-        "source",
-    )
-
-
 def decode_tokens_table(encoded_df: DataFrame) -> DataFrame:
-    """Inverse of encode_tokens_table: the ``encoded`` and
+    """Decode a stored bucket table (plans.pipeline): the ``encoded`` and
     ``codec_version`` columns become ``tokens``, the others pass through.
 
     After a retention sweep (operators.retention.apply_retention) a blob
     holds only the retained tail of its doc, so ``tokens`` is that tail
     while ``n_tok`` still counts the whole series.
 
-    Validates ``codec_version`` (the column encode_tokens_table stamps
-    exactly so decoding can be gated): an unknown version raises a clear
+    Validates ``codec_version`` (the column the pipeline stamps exactly
+    so decoding can be gated): an unknown version raises a clear
     error instead of silently mis-decoding with the wrong layout."""
     if "codec_version" in encoded_df.columns:
         version_ok = F.when(

@@ -47,6 +47,10 @@ ABS_MAX = C.MIDI_NOTE_MAX
 BAND_SIZE = C.AREA_BAND_SIZE
 CR_MIN = C.CHORD_RANGE_VALUE_MIN
 CR_MAX = C.CHORD_RANGE_VALUE_MAX
+# the most chords one stream's note window may offer: every chord is
+# built before the register filter, so a request over it is refused
+# (the canonical requests offer at most 8)
+MAX_STREAM_CHORDS = 100_000
 
 # stream-record field order (reference ...:2878-2890), 0-based
 NOTE, VOL, BRIGHT, NOISE, HARM, ATTACK, DSUS, RELEASE, CR, DEN, SUS, LEGATO = range(12)
@@ -251,7 +255,7 @@ def select_best_chord_for_dimension_with_cost(
         if preserve_stream_order:
             ordered = [[float(v)] for v in cand_set]
         else:
-            ordered, _m = pool.resolve_mapping_and_score(cand_set, stream_costs)
+            ordered = pool.resolve_mapping(cand_set, stream_costs)
         ordered_vals = [
             (float(v[0]) if isinstance(v, (list, tuple)) and v else 0.0)
             for v in ordered
@@ -1068,6 +1072,12 @@ def generate_polyphonic(payload: dict) -> dict:
             high = _clamp(band_high + cr_val, ABS_MIN, ABS_MAX)
             slots = max(high - low + 1, 1)
             n_notes = _clamp(int(round(den_val * slots)), 1, slots)
+            n_chords = math.comb(slots, n_notes)
+            if n_chords > MAX_STREAM_CHORDS:
+                raise ValueError(
+                    f"stream {s}: density {den_val} and chord_range {cr_val} offer "
+                    f"C({slots}, {n_notes}) = {n_chords} chords, more than {MAX_STREAM_CHORDS}"
+                )
             chords = [list(c) for c in itertools.combinations(range(low, high + 1), n_notes)]
             if not chords:
                 chords = [[band_low]]

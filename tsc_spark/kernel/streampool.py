@@ -8,7 +8,7 @@ precalculation, and Hungarian stream↔candidate mapping over the
 streams' last values.
 
 Numeric primitives are shared with kernel.multistream
-(set_distance01, generate_centered_targets, INACTIVE_STRENGTH_DECAY)
+(generate_centered_targets, INACTIVE_STRENGTH_DECAY)
 and kernel.dissonance (hungarian_min_assignment); this module owns the
 mutable pool state the reference keeps in ``Manager`` (...:88-113).
 """
@@ -19,11 +19,7 @@ import copy
 import math
 
 from ..config import MAX_SET_SIZE
-from .multistream import (
-    INACTIVE_STRENGTH_DECAY,
-    generate_centered_targets,
-    set_distance01,
-)
+from .multistream import INACTIVE_STRENGTH_DECAY, generate_centered_targets
 from .dissonance import hungarian_min_assignment
 from .polymanager import PolyClusterManager
 
@@ -337,67 +333,28 @@ class StreamPool:
             per_stream[c.id] = per_value
         return per_stream
 
-    # -- mapping + scoring (reference ...:1032-1189) -------------------
-    def resolve_mapping_and_score(self, cand_set_raw, stream_costs):
+    # -- mapping (reference ...:1032-1189) ----------------------------
+    def resolve_mapping(self, cand_set_raw, stream_costs):
+        """The candidate set reordered so value ``assignment[i]`` goes to
+        active stream ``i``: the Hungarian minimum over each pair's
+        complexity cost (0.5 without a precalculated cost) plus the
+        reference's index tie epsilon.  Slots past the active streams
+        stay ``None``."""
         cand_set = [_to_polyset(v) for v in cand_set_raw]
         n = max(len(cand_set), 1)
-
         actives = self.active_stream_containers()
-        dist_m = [[0.0] * n for _ in range(n)]
-        comp_m = [[0.0] * n for _ in range(n)]
         cost_m = [[0.0] * n for _ in range(n)]
-
         for i, stream in enumerate(actives):
-            for j in range(n):
-                v = cand_set[j]
-                last = stream.last_value
-                if (
-                    self.track_presence
-                    and stream_costs is not None
-                    and len(v) == 1
-                    and len(last) == 1
-                ):
-                    dist01 = 0.0
-                elif len(v) == 1 and len(last) == 1:
-                    dist01 = _clamp01(abs(v[0] - last[0]) / self.value_width)
-                else:
-                    dist01 = set_distance01(
-                        v, last, self.value_width, self.max_simultaneous_notes
-                    )
-
-                if stream_costs is None:
-                    comp01 = 0.5
-                else:
-                    d = stream_costs.get(stream.id)
-                    if d is None:
-                        comp01 = 0.5
-                    else:
-                        key = v[0] if v else 0.0
-                        pc = d.get(key)
-                        comp01 = 0.5 if pc is None else pc[1]
-
-                dist_m[i][j] = dist01
-                comp_m[i][j] = comp01
-                # complexity mapping: the cost is comp01 alone, plus the
-                # reference's index tie epsilon; dist01 is only reported
+            d = None if stream_costs is None else stream_costs.get(stream.id)
+            for j, v in enumerate(cand_set):
+                pc = None if d is None else d.get(v[0] if v else 0.0)
+                comp01 = 0.5 if pc is None else pc[1]
                 cost_m[i][j] = comp01 + 1e-9 * (float(j + 1) + float(i + 1) * 1e-3)
-
         assignment = hungarian_min_assignment(cost_m)
         ordered = [None] * n
-        individual = []
-        total_dist = total_comp = 0.0
-        for i, stream in enumerate(actives):
-            j = assignment[i]
-            ordered[i] = cand_set[j]
-            total_dist += dist_m[i][j]
-            total_comp += comp_m[i][j]
-            individual.append((stream.id, dist_m[i][j], comp_m[i][j]))
-        metric = {
-            "individual_scores": individual,
-            "avg_distance01": _clamp01(total_dist / n),
-            "avg_complexity01": _clamp01(total_comp / n),
-        }
-        return ordered, metric
+        for i in range(len(actives)):
+            ordered[i] = cand_set[assignment[i]]
+        return ordered
 
     # -- commit (reference ...:1219-1291) ------------------------------
     def commit_state(self, best_chord_raw):

@@ -11,18 +11,18 @@ scalable engine operator:
 * ``retention_sweep`` → surviving window rows (the logical view);
   finding each doc's newest window takes an Exchange, a Sort and a
   Window over ``(doc_id, tier)`` (PLANS.md ``retention_plan``).  It is
-  the oracle of ``keep_last``;
+  the oracle of the stored sweep, ``apply_retention``;
 * ``retention_plan``  → per-(tier, doc, segment) ``drop`` / ``keep`` /
   ``rewrite`` action: with a date/bucket-partitioned layout, ``drop``
   segments are metadata-only partition drops and only boundary
   segments are rewritten, which is what keeps a 100 TB sweep cheap;
-* ``keep_last`` → the same cut over the doc-major stored tiers: a
-  ``slice`` per row, narrow (no Exchange, Sort or Window);
 * ``apply_retention`` → sweeps the bucketed pipeline layout
-  (plans.pipeline) per bucket — its tier 1/2 directory by ``keep_last``
-  in one uncached pass, tier 0 (the DoD ``encoded`` table) in one narrow
-  decode → tail → encode ``mapInArrow`` pass, row counts from
-  ``Observation``s — and records the sweep in each bucket manifest.
+  (plans.pipeline) per bucket: one scan of the bucket table, one narrow
+  ``mapInArrow`` pass that keeps the tail of every list in each doc row
+  (``_keep_tail`` over the decoded blob of tier 0 and the window arrays
+  of tiers 1/2; no Exchange, Sort or Window), one write and one swap,
+  with window and token counts from one ``Observation`` pair — and
+  records the sweep in each bucket manifest.
 """
 
 from __future__ import annotations
@@ -38,7 +38,7 @@ from pyspark.sql.types import LongType, StructField, StructType
 
 from ..codecs import decode, encode
 from ..plans.pipeline import _commit_manifest, _dir_bytes, _hidden_sibling, _manifest_path
-from ..plans.pipeline import _TIER_STORE_SCHEMA, _write_encoded, swap_in_dir  # layout owner
+from ..plans.pipeline import _write_encoded, swap_in_dir  # layout owner
 from .rollup import _AGGS
 
 __all__ = [
@@ -46,7 +46,6 @@ __all__ = [
     "with_expiry_flags",
     "retention_sweep",
     "retention_plan",
-    "keep_last",
     "apply_retention",
 ]
 
@@ -115,54 +114,46 @@ def retention_plan(
     )
 
 
-def keep_last(tiers_df: DataFrame, policy: dict[int, int]) -> DataFrame:
-    """``retention_sweep`` over doc-major tier rows (``rollup.doc_tiers``
-    with a ``tier`` of the policy): each row's window arrays are cut to
-    their last ``keep`` elements and ``first_window_idx`` moves past the
-    cut; a row left without windows is dropped, and the rows of a tier
-    absent from the policy are kept whole.  Narrow per row."""
-    n = F.size("agg_count")
-    cut = F.greatest(n - F.coalesce(_keep_last_expr(policy), n), F.lit(0))
-    return tiers_df.select(
-        "doc_id",
-        (F.col("first_window_idx") + cut).alias("first_window_idx"),
-        *[F.slice(c, cut + 1, n - cut).alias(c) for c in _AGGS],
-        "tier",
-    ).filter(F.size("agg_count") > 0)
-
-
-def _keep_tail(batch: pa.RecordBatch, keep: int) -> pa.RecordBatch:
-    """An ``encoded`` batch with every blob cut to its last ``keep``
-    tokens, plus each doc's stored token count before and after the cut."""
-    tokens = decode(batch.column("encoded"))
-    offsets = tokens.offsets.to_numpy().astype(np.int64)
-    lens = np.diff(offsets)
-    kept = np.minimum(lens, keep)
-    tail = pa.ListArray.from_arrays(
-        pa.array(np.concatenate(([0], np.cumsum(kept))).astype(np.int32)),
-        tokens.values.take(np.arange(kept.sum()) + np.repeat(offsets[1:] - np.cumsum(kept), kept)),
-        mask=tokens.is_null(),
+def _keep_tail(lists: pa.ListArray, keep: int) -> pa.ListArray:
+    """The last ``keep`` elements of each list (a shorter list whole, a
+    NULL list NULL): one ``take`` over the values."""
+    offsets = lists.offsets.to_numpy().astype(np.int64)
+    kept = np.minimum(np.diff(offsets), keep)
+    ends = np.cumsum(kept)
+    return pa.ListArray.from_arrays(
+        pa.array(np.concatenate(([0], ends)).astype(np.int32)),
+        lists.values.take(np.arange(kept.sum()) + np.repeat(offsets[1:] - ends, kept)),
+        mask=lists.is_null(),
     )
-    names = batch.schema.names
-    columns = [encode(tail) if name == "encoded" else col for name, col in zip(names, batch.columns)]
+
+
+def _sweep_batch(batch: pa.RecordBatch, policy: dict[int, int]) -> pa.RecordBatch:
+    """A batch of stored bucket rows (plans.pipeline ``_STORED_ROW``) cut
+    to the policy: each blob to its last ``policy[0]`` tokens, each tier
+    struct's arrays to their last ``policy[t]`` windows with
+    ``first_window_idx`` moved past the cut; a tier the policy omits
+    stays whole.  ``n_before``/``n_after`` count each blob's stored
+    tokens before and after its cut."""
+    columns = dict(zip(batch.schema.names, batch.columns))
+    lens = kept = np.zeros(len(batch), dtype=np.int64)
+    if 0 in policy and "encoded" in columns:
+        tokens = decode(columns["encoded"])
+        lens = np.diff(tokens.offsets.to_numpy().astype(np.int64))
+        kept = np.minimum(lens, policy[0])
+        columns["encoded"] = encode(_keep_tail(tokens, policy[0]))
+    for tier in (1, 2):
+        if tier in policy:
+            first, *aggs = columns[f"tier{tier}"].flatten()
+            cut = np.maximum(np.diff(aggs[0].offsets.to_numpy()) - policy[tier], 0)
+            columns[f"tier{tier}"] = pa.StructArray.from_arrays(
+                [pa.array(first.to_numpy(zero_copy_only=False) + cut)]
+                + [_keep_tail(a, policy[tier]) for a in aggs],
+                names=["first_window_idx", *_AGGS],
+            )
     return pa.RecordBatch.from_arrays(
-        columns + [pa.array(lens), pa.array(kept)], names=names + ["n_before", "n_after"]
+        [*columns.values(), pa.array(lens), pa.array(kept)],
+        names=[*columns, "n_before", "n_after"],
     )
-
-
-def _trim_encoded(spark, path: str, tmp: str, keep: int) -> dict:
-    """Cut every blob under ``path`` to its last ``keep`` tokens (written
-    to ``tmp``, then swapped in); returns the tier-0 rows before/after."""
-    stored = spark.read.parquet(path)
-    counts = [StructField(name, LongType()) for name in ("n_before", "n_after")]
-    counted = Observation()
-    trimmed = stored.mapInArrow(
-        lambda batches: (_keep_tail(b, keep) for b in batches),
-        StructType(stored.schema.fields + counts),
-    ).observe(counted, F.sum("n_before").alias("rows_before"), F.sum("n_after").alias("rows_after"))
-    _write_encoded(trimmed.drop("n_before", "n_after"), tmp)
-    swap_in_dir(path, tmp)  # crash-recoverable, see swap_in_dir
-    return {k: int(v or 0) for k, v in counted.get.items()}
 
 
 def apply_retention(
@@ -174,14 +165,15 @@ def apply_retention(
     """Execute the sweep over the bucketed pipeline layout, bucket by
     bucket.
 
-    Per bucket: cut each ``encoded`` blob to its last ``policy[0]``
-    tokens (``_trim_encoded``; without tier 0 in the policy the raw
-    archive stays whole); ``keep_last`` the bucket's tier directory in
-    one scan (a tier the policy omits is rewritten unchanged) and swap
-    the survivors in (one file per tier and 128 MiB swept, in doc_id
-    order); and append a ``retention`` record (policy, per-tier windows
-    before/after from ``Observation``s, 0/0 for a tier without rows,
-    on-disk bytes of every swept directory) to the bucket manifest."""
+    Per bucket: one scan of the bucket table, one ``mapInArrow``
+    (``_sweep_batch``) that cuts each row's blob to its last
+    ``policy[0]`` tokens (without tier 0 in the policy, or without
+    blobs, the raw archive stays whole) and its tier-1/2 arrays to their
+    last ``policy[t]`` windows, one write (one file per 128 MiB swept,
+    in doc_id order) and one swap; and a ``retention`` record (policy,
+    per-tier windows before/after from one ``Observation`` pair, 0/0
+    for a tier without windows, on-disk bytes of the swept table)
+    appended to the bucket manifest."""
     pol = DEFAULT_RETENTION_POLICY if policy is None else policy
     with open(os.path.join(base_dir, "_ingest.json")) as f:
         n_buckets = json.load(f)["n_buckets"]
@@ -197,33 +189,34 @@ def apply_retention(
             "policy": {str(k): v for k, v in pol.items()},
             "tiers": {},
         }
-        encoded = os.path.join(base_dir, "encoded", f"bucket={bucket}")
-        if 0 in pol and os.path.isdir(encoded):
-            tmp = _hidden_sibling(encoded, "sweep_tmp")
-            record["tiers"]["0"] = _trim_encoded(spark, encoded, tmp, pol[0])
-        rollup = os.path.join(base_dir, "rollup", f"bucket={bucket}")
-        tiers = [t for t in sorted(pol) if t > 0]
-        if tiers and os.path.isdir(rollup):
-            size = F.size("agg_count")
-            counts = [F.sum(F.when(F.col("tier") == t, size)).alias(str(t)) for t in tiers]
+        path = os.path.join(base_dir, "encoded", f"bucket={bucket}")
+        record["bytes"] = {}
+        if os.path.isdir(path):
+            windows = [F.sum(F.size(f"tier{t}.agg_count")).alias(str(t)) for t in (1, 2)]
+            tokens = [F.sum(c).alias(c) for c in ("n_before", "n_after")]
             before, after = Observation(), Observation()
-            # below rollup/, bucket is no partition (it reads NULL): keep_last drops it
-            stored = spark.read.schema(_TIER_STORE_SCHEMA).parquet(rollup).observe(before, *counts)
-            # one file per tier and 128 MiB swept, its rows in doc_id order
-            # (sorted doc_ids compress ~3x better); coalesce and sort stay
-            # inside the task, so the sweep moves no row between tasks, and
-            # the tier-major order is the one partitionBy("tier") needs
-            n_files = 1 + _dir_bytes(rollup) // (128 << 20)
-            survivors = keep_last(stored, pol).observe(after, *counts)
-            tmp = _hidden_sibling(rollup, "sweep_tmp")
-            survivors = survivors.coalesce(n_files).sortWithinPartitions("tier", "doc_id")
-            survivors.write.partitionBy("tier").mode("overwrite").parquet(tmp)
-            swap_in_dir(rollup, tmp)  # crash-recoverable, see swap_in_dir
-            windows = {k: (n, after.get[k]) for k, n in before.get.items()}
-            record["tiers"].update({k: {"rows_before": int(b or 0), "rows_after": int(a or 0)}
-                                    for k, (b, a) in windows.items()})
-        swept = {"rollup": rollup, "encoded": encoded}
-        record["bytes"] = {k: _dir_bytes(d) for k, d in swept.items() if os.path.isdir(d)}
+            stored = spark.read.parquet(path).observe(before, *windows)
+            counts = [StructField(name, LongType()) for name in ("n_before", "n_after")]
+            swept = stored.mapInArrow(
+                lambda batches: (_sweep_batch(b, pol) for b in batches),
+                StructType(stored.schema.fields + counts),
+            ).observe(after, *windows, *tokens)
+            # one file per 128 MiB swept, its rows in doc_id order (sorted
+            # doc_ids compress ~3x better); coalesce and sort stay inside
+            # the task, so the sweep moves no row between tasks
+            n_files = 1 + _dir_bytes(path) // (128 << 20)
+            tmp = _hidden_sibling(path, "sweep_tmp")
+            _write_encoded(
+                swept.drop("n_before", "n_after").coalesce(n_files).sortWithinPartitions("doc_id"),
+                tmp,
+            )
+            swap_in_dir(path, tmp)  # crash-recoverable, see swap_in_dir
+            b, a = before.get, after.get
+            pairs = {"0": (a["n_before"], a["n_after"])} if 0 in pol and "encoded" in stored.columns else {}
+            pairs.update({str(t): (b[str(t)], a[str(t)]) for t in (1, 2) if t in pol})
+            record["tiers"] = {k: {"rows_before": int(x or 0), "rows_after": int(y or 0)}
+                               for k, (x, y) in pairs.items()}
+            record["bytes"]["encoded"] = _dir_bytes(path)
         with open(mpath) as f:
             manifest = json.load(f)
         manifest.setdefault("retention", []).append(record)

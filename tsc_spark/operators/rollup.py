@@ -13,15 +13,15 @@ Design for 100 TB:
   ``rollup_arrays`` is the one window-row implementation (posexplode
   for tier-0, ``rollup_batch``'s numpy ``reduceat`` over ``mapInArrow``
   for tiers 1/2), run by ``tiered_rollups`` and the streaming tier; the
-  batch pipeline runs ``doc_tiers`` over the same numpy core;
+  batch pipeline runs ``doc_tier_structs`` over the same numpy core;
 * its rows (``_WINDOW_SCHEMA``) are the tier-row form of
   ``tiered_rollups``, the stream sink and ``plans.pipeline.read_tier``,
   and ``point_windows`` builds the one-point windows of tier 0;
-* the batch tier store holds tiers 1/2 doc-major (``_DOC_TIER_SCHEMA``:
-  one row per doc and tier holding its window arrays): ``doc_tiers``
-  emits both in one pass over ``rollup_batch``'s numpy core, tier 2
-  reduced from the tier-1 partials, and ``window_rows`` explodes them
-  back to ``_WINDOW_SCHEMA``;
+* the batch store holds tiers 1/2 doc-major, in the doc's own row of
+  the bucket table (``_TIER_STRUCT``: one struct per doc and tier
+  holding its window arrays): ``doc_tier_structs`` builds both from a
+  batch's token lists, tier 2 reduced from the tier-1 partials, and
+  ``window_rows`` explodes them back to ``_WINDOW_SCHEMA``;
 * ``rollup_points(explode_points(...))`` is the explode+groupBy oracle
   the array path is tested against;
 * gap-fill, for sparse point streams only, generates the expected
@@ -45,8 +45,7 @@ __all__ = [
     "rollup_points",
     "rollup_arrays",
     "rollup_batch",
-    "doc_tier_batches",
-    "doc_tiers",
+    "doc_tier_structs",
     "window_rows",
     "point_windows",
     "tiered_rollups",
@@ -94,11 +93,11 @@ _WINDOW_SCHEMA = (
     "agg_min int, agg_max int, agg_sum long, tier int"
 )
 _AGGS = ("agg_count", "agg_min", "agg_max", "agg_sum")
-# tiers 1/2 at rest: one row per (doc, tier), window k of the row is
-# window ``first_window_idx + k`` of the doc (plans.pipeline.read_tier)
-_DOC_TIER_SCHEMA = (
-    "doc_id string, first_window_idx long, agg_count array<long>, "
-    "agg_min array<int>, agg_max array<int>, agg_sum array<long>, tier int"
+# tiers 1/2 at rest: one struct per doc and tier, element k of its
+# arrays is window ``first_window_idx + k`` of the doc (plans.pipeline)
+_TIER_STRUCT = (
+    "struct<first_window_idx: bigint, agg_count: array<bigint>, "
+    "agg_min: array<int>, agg_max: array<int>, agg_sum: array<bigint>>"
 )
 
 
@@ -174,43 +173,36 @@ def rollup_batch(
     )
 
 
-def doc_tier_batches(batch: pa.RecordBatch):
-    """Tiers 1 and 2 of one ``(doc_id, tokens)`` batch, doc-major: one
-    ``_DOC_TIER_SCHEMA`` row per doc and tier holding ``rollup_batch``'s
-    windows as list elements.  Tier 2 is reduced from the tier-1
-    partials (sum of counts, min of mins, max of maxes, sum of sums); a
-    count-0 partial holds the reducers' identities, so it is exact."""
-    doc, win_idx, count, lo, hi, total, nulls = _windows(batch.column(1), TIER_STRIDES[1])
+def doc_tier_structs(tokens: pa.ListArray) -> tuple[pa.StructArray, pa.StructArray]:
+    """Tiers 1 and 2 of each token list, doc-major: element ``d`` of each
+    ``_TIER_STRUCT`` array holds doc ``d``'s ``rollup_batch`` windows as
+    list elements (empty lists for a doc without windows).  Tier 2 is
+    reduced from the tier-1 partials (sum of counts, min of mins, max of
+    maxes, sum of sums); a count-0 partial holds the reducers'
+    identities, so it is exact."""
+    doc, win_idx, count, lo, hi, total, nulls = _windows(tokens, TIER_STRIDES[1])
+    tiers = []
     for tier in (1, 2):
         if tier == 2:
             first = np.flatnonzero(win_idx % (TIER_STRIDES[2] // TIER_STRIDES[1]) == 0)
             doc = doc[first]
             count, total = (np.add.reduceat(v, first) for v in (count, total))
             lo, hi = np.minimum.reduceat(lo, first), np.maximum.reduceat(hi, first)
-        rows = np.flatnonzero(np.diff(doc, prepend=-1))
-        offsets = pa.array(np.append(rows, doc.size).astype(np.int32))
+        offsets = pa.array(np.searchsorted(doc, np.arange(len(tokens) + 1)).astype(np.int32))
         empty = count == 0 if nulls else None
-        yield pa.RecordBatch.from_arrays(
-            [batch.column(0).take(doc[rows]), np.zeros(rows.size, dtype=np.int64)]
+        tiers.append(pa.StructArray.from_arrays(
+            [pa.array(np.zeros(len(tokens), dtype=np.int64))]
             + [pa.ListArray.from_arrays(offsets, pa.array(count))]
-            + [pa.ListArray.from_arrays(offsets, pa.array(v, mask=empty)) for v in (lo, hi, total)]
-            + [np.full(rows.size, tier, dtype=np.int32)],
-            names=[f.split()[0] for f in _DOC_TIER_SCHEMA.split(", ")],
-        )
-
-
-def doc_tiers(tokens_df: DataFrame) -> DataFrame:
-    """Doc-major tiers 1 and 2 (``doc_tier_batches``) of a tokens table
-    in one ``mapInArrow`` pass: one scan and one Python crossing."""
-    return tokens_df.select("doc_id", "tokens").mapInArrow(
-        lambda batches: (out for b in batches for out in doc_tier_batches(b)),
-        _DOC_TIER_SCHEMA,
-    )
+            + [pa.ListArray.from_arrays(offsets, pa.array(v, mask=empty)) for v in (lo, hi, total)],
+            names=["first_window_idx", *_AGGS],
+        ))
+    return tiers[0], tiers[1]
 
 
 def window_rows(doc_tiers_df: DataFrame, *passthrough: str) -> DataFrame:
     """``_WINDOW_SCHEMA`` rows, then the ``passthrough`` columns, of
-    doc-major tier rows: element ``k`` of a row's arrays is window
+    doc-major tier rows (``doc_id``, ``tier`` and a ``_TIER_STRUCT``'s
+    fields): element ``k`` of a row's arrays is window
     ``first_window_idx + k``."""
     return doc_tiers_df.select(
         "doc_id", "first_window_idx", "tier", *passthrough,

@@ -10,22 +10,24 @@ watermarks) and per-bucket metrics; a resumed run skips every bucket
 with a manifest — the file-level equivalent of
 ``source LEFT ANTI JOIN done_partitions`` (SURVEY §2.3).
 
-Tiers 1/2 are stored doc-major (``operators.rollup.doc_tiers``, both from
-one ``mapInArrow`` pass): one row per (doc, tier) holding
-``first_window_idx`` and the window arrays, so retention is a per-row
-``slice``.  They are stored bucket-major, ``rollup/bucket=b/tier=t``, so
-a bucket's tiers are one directory, written and swept as one unit.
-``read_tier`` explodes them back to ``rollup_arrays``' rows, the rows
-the stream sink (streaming.rollup_stream) appends, so batch and stream
-tier tables read with one schema.  Each raw value is stored once: the
-``encoded`` table, one delta-of-delta blob per doc, is tier 0.
-``read_tier(spark, base, 0)`` rebuilds its rows; retention trims each
-blob to its last ``keep`` tokens while ``n_tok`` keeps the series
-length.  The ``encoded`` column is written
-without parquet column statistics: a min/max over DoD blobs prunes
-nothing, and parquet-mr would store the largest whole blob in every
-file footer.  Each manifest records the on-disk bytes of every output
-directory the bucket wrote.
+A bucket is stored as one table, ``encoded/bucket=b``, with one row per
+doc (``_STORED_ROW``): the doc's delta-of-delta blob, its
+``codec_version``, ``n_tok`` and ``source``, plus a ``tier1`` and a
+``tier2`` struct holding that tier's windows doc-major
+(``operators.rollup.doc_tier_structs``: ``first_window_idx`` and the
+window arrays).  One ``mapInArrow`` over the bucket scan emits the whole
+row and one write stores it; retention cuts the blob and the arrays of
+the same row in one pass (operators.retention).  Each raw value is
+stored once: the blob is tier 0, and ``read_tier(spark, base, 0)``
+rebuilds its rows; retention trims each blob to its last ``keep``
+tokens while ``n_tok`` keeps the series length.  ``read_tier`` of tier
+1 or 2 explodes that tier's struct back to ``rollup_arrays``' rows, the
+rows the stream sink (streaming.rollup_stream) appends, so batch and
+stream tier tables read with one schema.  The ``encoded`` column is
+written without parquet column statistics: a min/max over DoD blobs
+prunes nothing, and parquet-mr would store the largest whole blob in
+every file footer.  Each manifest records the on-disk bytes of every
+output directory the bucket wrote.
 
 At cluster scale, buckets map to independent jobs that can be retried /
 scheduled separately; n_buckets is chosen so one bucket ≈ a few hundred
@@ -39,22 +41,28 @@ import os
 import shutil
 import time
 
+import numpy as np
+import pyarrow as pa
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
+from ..codecs import encode
+from ..codecs.deltadelta import CODEC_VERSION
 from ..config import DEFAULT_MERGE_THRESHOLD_RATIO, TIER_STRIDES
-from ..functions.codec_udfs import decode_tokens_table, encode_tokens_table
+from ..functions.codec_udfs import decode_tokens_table
 from ..operators.clustering import cluster_timeline
-from ..operators.rollup import _DOC_TIER_SCHEMA, doc_tiers, point_windows, window_rows
+from ..operators.rollup import _TIER_STRUCT, doc_tier_structs, point_windows, window_rows
 
 __all__ = [
     "ingest", "run_pipeline", "read_tier", "swap_in_dir", "recover_swapped_dir",
     "pipeline_metrics",
 ]
 
-# what both readers of the tier store pass: with no schema to infer, a
-# bucket or store holding no tier data file reads as an empty table
-_TIER_STORE_SCHEMA = f"{_DOC_TIER_SCHEMA}, bucket int"
+# a bucket's stored row: the encoded columns, then tiers 1/2 doc-major
+_STORED_ROW = (
+    "doc_id string, encoded binary, codec_version int, n_tok int, source string, "
+    f"tier1 {_TIER_STRUCT}, tier2 {_TIER_STRUCT}"
+)
 
 
 def _manifest_dir(base_dir: str) -> str:
@@ -77,11 +85,24 @@ def _dir_bytes(path: str) -> int:
 
 
 def _write_encoded(encoded_df: DataFrame, path: str) -> None:
-    """Write an ``encoded`` table without column statistics on the blobs
+    """Write a bucket table without column statistics on the blobs
     (a per-column parquet-mr setting: ``doc_id`` keeps its own)."""
     encoded_df.write.mode("overwrite").option(
         "parquet.column.statistics.enabled#encoded", "false"
     ).parquet(path)
+
+
+def _doc_rows(batch: pa.RecordBatch, with_encoded: bool) -> pa.RecordBatch:
+    """``_STORED_ROW`` rows of one ``(doc_id, tokens, n_tok, source)``
+    batch; without ``with_encoded`` the blob is NULL (and not stored)."""
+    tokens = batch.column("tokens")
+    n = len(batch)
+    blob = encode(tokens) if with_encoded else pa.nulls(n, pa.binary())
+    return pa.RecordBatch.from_arrays(
+        [batch.column("doc_id"), blob, pa.array(np.full(n, CODEC_VERSION, dtype=np.int32)),
+         batch.column("n_tok"), batch.column("source"), *doc_tier_structs(tokens)],
+        names=["doc_id", "encoded", "codec_version", "n_tok", "source", "tier1", "tier2"],
+    )
 
 
 def _hidden_sibling(path: str, suffix: str) -> str:
@@ -196,18 +217,20 @@ def _process_bucket(
             F.max("doc_id").alias("doc_max"),
             F.max("n_tok").alias("max_n_tok"),
         )
-        # both doc-major tiers from one pass (tier 0 is the encoded table)
-        written["rollup"] = os.path.join(base_dir, "rollup", f"bucket={bucket}")
-        doc_tiers(df).write.partitionBy("tier").mode("overwrite").parquet(written["rollup"])
+        # the whole stored row from one pass: the blob (tier 0) and tiers 1/2
+        rows = df.select("doc_id", "tokens", F.col("n_tok").cast("int"), "source").mapInArrow(
+            lambda batches: (_doc_rows(b, with_encoded) for b in batches), _STORED_ROW
+        )
+        written["encoded"] = os.path.join(base_dir, "encoded", f"bucket={bucket}")
+        _write_encoded(
+            rows if with_encoded else rows.drop("encoded", "codec_version"), written["encoded"]
+        )
         stats = stats_obs.get
         if with_timeline:
             written["timeline"] = os.path.join(base_dir, "timeline", f"bucket={bucket}")
             cluster_timeline(df, merge_threshold_ratio).write.mode("overwrite").parquet(
                 written["timeline"]
             )
-        if with_encoded:
-            written["encoded"] = os.path.join(base_dir, "encoded", f"bucket={bucket}")
-            _write_encoded(encode_tokens_table(df), written["encoded"])
 
     # every doc's windows run 0..ceil(n_tok/s)-1 with no gap, so the
     # per-tier watermark derives from max(n_tok) — no re-read of the
@@ -244,7 +267,8 @@ def run_pipeline(
 ) -> list[dict]:
     """Process every (remaining) bucket; returns the manifests written.
 
-    ``with_encoded=False`` stores no raw tier (no tier 0 at all).
+    ``with_encoded=False`` stores no raw tier (no tier 0 at all): the
+    bucket rows hold tiers 1/2 without the blob columns.
     ``resume=True`` skips buckets whose checkpoint manifest exists, so a
     killed run restarts without duplicate work."""
     with open(os.path.join(base_dir, "_ingest.json")) as f:
@@ -283,15 +307,19 @@ def read_tier(spark: SparkSession, base_dir: str, tier: int) -> DataFrame:
     """All buckets of one tier as ``tiered_rollups`` emits it
     (``rollup_arrays`` rows), plus the ``bucket`` partition column.
 
-    Tiers 1/2 explode each doc-major row (``window_rows``).  Tier 0 is
-    rebuilt from the ``encoded`` table by ``point_windows``: one row per
-    decoded token, whose ``window_idx`` is its position plus
-    ``n_tok - size(tokens)``, so a blob that retention cut to its tail
-    keeps its indices."""
+    Tiers 1/2 explode each doc's ``tier1``/``tier2`` struct
+    (``window_rows``); the stored schema is passed, so the dtypes do not
+    depend on the files, and a tier without windows reads as an empty
+    table.  Tier 0 is rebuilt from the blobs
+    by ``point_windows``: one row per decoded token, whose
+    ``window_idx`` is its position plus ``n_tok - size(tokens)``, so a
+    blob that retention cut to its tail keeps its indices."""
+    path = os.path.join(base_dir, "encoded")
     if tier:
-        stored = spark.read.schema(_TIER_STORE_SCHEMA).parquet(os.path.join(base_dir, "rollup"))
-        return window_rows(stored.filter(F.col("tier") == tier), "bucket")
-    decoded = decode_tokens_table(spark.read.parquet(os.path.join(base_dir, "encoded")))
+        stored = spark.read.schema(f"{_STORED_ROW}, bucket int").parquet(path)
+        tiers = stored.select("doc_id", f"tier{tier}.*", F.lit(tier).alias("tier"), "bucket")
+        return window_rows(tiers, "bucket")
+    decoded = decode_tokens_table(spark.read.parquet(path))
     points = decoded.select(
         "doc_id", "bucket", (F.col("n_tok") - F.size("tokens")).alias("offset"),
         F.posexplode("tokens").alias("pos", "token"),

@@ -5,11 +5,10 @@ from .synth import (
     synth_tokens_skewed,
     synth_tokens_table,
 )
-from .tokens import TOKENS_COLUMNS, canonicalize_tokens, read_tokens
+from .tokens import canonicalize_tokens, read_tokens
 
 __all__ = [
     "EDGE_DOCS",
-    "TOKENS_COLUMNS",
     "canonicalize_tokens",
     "read_tokens",
     "synth_tokens",

@@ -28,9 +28,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-__all__ = ["TOKENS_COLUMNS", "read_tokens", "canonicalize_tokens"]
-
-TOKENS_COLUMNS = ("doc_id", "tokens", "n_tok", "source")
+__all__ = ["read_tokens", "canonicalize_tokens"]
 
 _INTEGRAL_TYPES = (T.ByteType, T.ShortType, T.IntegerType, T.LongType)
 
