@@ -154,6 +154,39 @@ def test_resume_produces_outputs_missing_from_earlier_run(spark, base_dir):
     assert run_pipeline(spark, base_dir, with_timeline=True, with_encoded=False) == []
 
 
+def test_resume_without_encoded_keeps_an_earlier_raw_tier(spark, base_dir, tokens_df):
+    """A with_encoded=False run that reprocesses buckets (for the
+    timeline an earlier run left out) rewrites each bucket's rows but
+    keeps the blobs that earlier run stored, so the manifests still list
+    'encoded' truthfully and a later with_encoded=True run redoes
+    nothing."""
+    tier0 = _tier_rows(tiered_rollups(tokens_df)[0])
+    run_pipeline(spark, base_dir, with_timeline=False, with_encoded=True)
+    redone = run_pipeline(spark, base_dir, with_timeline=True, with_encoded=False)
+    assert len(redone) == 4
+    assert all({"encoded", "timeline"} <= set(m["outputs"]) <= set(m["bytes"]) for m in redone)
+    assert _tier_rows(read_tier(spark, base_dir, 0)) == tier0
+    assert run_pipeline(spark, base_dir, with_timeline=True, with_encoded=True) == []
+    assert _tier_rows(read_tier(spark, base_dir, 0)) == tier0
+
+
+def test_buckets_with_and_without_blobs_read_together(spark, base_dir, tokens_df):
+    """A bucket stored without blobs next to buckets with them: tier 0
+    reads the other buckets' points, whichever footer comes first, and
+    tiers 1/2 read every bucket."""
+    run_pipeline(spark, base_dir, buckets=[0], with_timeline=False, with_encoded=False)
+    run_pipeline(spark, base_dir, buckets=[1, 2, 3], with_timeline=False, with_encoded=True)
+    bucketed = spark.read.parquet(os.path.join(base_dir, "tokens_bucketed"))
+    in_bucket0 = {r.doc_id for r in bucketed.filter("bucket = 0").select("doc_id").collect()}
+    assert in_bucket0
+    tiers = tiered_rollups(tokens_df)
+    assert _tier_rows(read_tier(spark, base_dir, 0)) == _tier_rows(
+        tiers[0].filter(~F.col("doc_id").isin(*in_bucket0))
+    )
+    for tier in (1, 2):
+        assert _tier_rows(read_tier(spark, base_dir, tier)) == _tier_rows(tiers[tier]), tier
+
+
 def test_manifest_watermarks_match_written_files(spark, base_dir):
     """The derived per-tier watermark (from max n_tok) must equal the
     actual max window_idx in the written rollup files."""

@@ -195,9 +195,8 @@ def _process_bucket(
     with_encoded: bool,
 ) -> dict:
     t0 = time.time()
-    outputs = ["rollup"] + (["timeline"] if with_timeline else []) + (
-        ["encoded"] if with_encoded else []
-    )
+    # tiers 1/2 are in every bucket row, so only the optional outputs are named
+    outputs = (["timeline"] if with_timeline else []) + (["encoded"] if with_encoded else [])
     bucket_dir = os.path.join(base_dir, "tokens_bucketed", f"bucket={bucket}")
     # a hash-empty bucket (partitionBy only creates directories for
     # buckets that received docs) commits zero stats and no outputs, so
@@ -268,14 +267,16 @@ def run_pipeline(
     """Process every (remaining) bucket; returns the manifests written.
 
     ``with_encoded=False`` stores no raw tier (no tier 0 at all): the
-    bucket rows hold tiers 1/2 without the blob columns.
+    bucket rows hold tiers 1/2 without the blob columns — except in a
+    bucket whose manifest already lists ``encoded``, whose rewritten rows
+    keep the blob.
     ``resume=True`` skips buckets whose checkpoint manifest exists, so a
     killed run restarts without duplicate work."""
     with open(os.path.join(base_dir, "_ingest.json")) as f:
         n_buckets = json.load(f)["n_buckets"]
     os.makedirs(_manifest_dir(base_dir), exist_ok=True)
 
-    requested = {"rollup"} | ({"timeline"} if with_timeline else set()) | (
+    requested = ({"timeline"} if with_timeline else set()) | (
         {"encoded"} if with_encoded else set()
     )
     todo = buckets if buckets is not None else range(n_buckets)
@@ -292,11 +293,13 @@ def run_pipeline(
                 continue
         else:
             done = set()
+        # the bucket row table is rewritten whole, so a raw tier an
+        # earlier run stored is written again; an earlier timeline is
+        # left on disk as it was — either way the union stays valid
         manifest = _process_bucket(
-            spark, base_dir, bucket, merge_threshold_ratio, with_timeline, with_encoded
+            spark, base_dir, bucket, merge_threshold_ratio, with_timeline,
+            with_encoded or "encoded" in done,
         )
-        # outputs produced by an earlier run over the same bucket data
-        # remain valid on disk — record the union
         manifest["outputs"] = sorted(set(manifest["outputs"]) | done)
         _commit_manifest(mpath, manifest)  # manifest == bucket done
         written.append(manifest)
@@ -313,13 +316,15 @@ def read_tier(spark: SparkSession, base_dir: str, tier: int) -> DataFrame:
     table.  Tier 0 is rebuilt from the blobs
     by ``point_windows``: one row per decoded token, whose
     ``window_idx`` is its position plus ``n_tok - size(tokens)``, so a
-    blob that retention cut to its tail keeps its indices."""
-    path = os.path.join(base_dir, "encoded")
+    blob that retention cut to its tail keeps its indices; a bucket
+    stored without blobs reads as NULL blobs and gives no tier-0 rows."""
+    stored = spark.read.schema(f"{_STORED_ROW}, bucket int").parquet(
+        os.path.join(base_dir, "encoded")
+    )
     if tier:
-        stored = spark.read.schema(f"{_STORED_ROW}, bucket int").parquet(path)
         tiers = stored.select("doc_id", f"tier{tier}.*", F.lit(tier).alias("tier"), "bucket")
         return window_rows(tiers, "bucket")
-    decoded = decode_tokens_table(spark.read.parquet(path))
+    decoded = decode_tokens_table(stored.where(F.col("encoded").isNotNull()))
     points = decoded.select(
         "doc_id", "bucket", (F.col("n_tok") - F.size("tokens")).alias("offset"),
         F.posexplode("tokens").alias("pos", "token"),
