@@ -17,6 +17,7 @@ over identical inputs with no external data.
 from __future__ import annotations
 
 from collections.abc import Callable
+from contextlib import contextmanager
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -43,6 +44,34 @@ def _tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
     return tokenize_documents(_docs(spark, sf_dir))
 
 
+def _session_tmp(prefix: str) -> str:
+    """A fresh temp dir named ``prefix…``, removed at process exit."""
+    import atexit
+    import shutil
+    import tempfile
+
+    root = tempfile.mkdtemp(prefix=prefix)
+    atexit.register(shutil.rmtree, root, ignore_errors=True)
+    return root
+
+
+@contextmanager
+def _shuffle_partitions(spark: SparkSession, n: int):
+    """``spark.sql.shuffle.partitions`` set to ``n`` inside the block and
+    restored after it.  A stream's state-store partition count is the
+    shuffle partition count at its first batch, so a stream over a small
+    evidence slice runs in this block: 32 state partitions would be pure
+    per-micro-batch task overhead there.  Production streams keep the
+    session default so state scales with the cluster."""
+    key = "spark.sql.shuffle.partitions"
+    saved = spark.conf.get(key)
+    spark.conf.set(key, str(n))
+    try:
+        yield
+    finally:
+        spark.conf.set(key, saved)
+
+
 # at-rest file-stream SOURCE directories, one per (sf_dir, variant).
 # Only the source parquet is cached: checkpoints, sinks and the
 # streaming drain are fresh on every invocation, so each call still
@@ -60,10 +89,7 @@ def _stream_src(sf_dir: str, variant: str, build) -> str:
     build time, not just ``_SUCCESS`` or bare existence — a tmp reaper
     that removed OR truncated a part file mid-session would otherwise
     shrink the stream's micro-batch structure (or its data) silently."""
-    import atexit
     import os
-    import shutil
-    import tempfile
 
     def _snapshot(path: str) -> list[tuple[str, int]]:
         return sorted(
@@ -81,9 +107,7 @@ def _stream_src(sf_dir: str, variant: str, build) -> str:
                 return src
         except OSError:
             pass  # dir vanished — rebuild below
-    root = tempfile.mkdtemp(prefix=f"tsc_stream_src_{variant}_")
-    atexit.register(shutil.rmtree, root, ignore_errors=True)
-    src = f"{root}/src"
+    src = f"{_session_tmp(f'tsc_stream_src_{variant}_')}/src"
     build(src)
     _STREAM_SRC_CACHE[key] = (src, _snapshot(src))
     return src
@@ -193,10 +217,6 @@ def q_retention_streamed(spark, sf_dir):
 def _streamed_tier1(spark, sf_dir, prefix: str, policy: dict[int, int]) -> DataFrame:
     """Drain the shared 4-file token source (cache key 'tokens4') through
     the tier-1 stream under ``policy`` into a fresh sink; its rows."""
-    import atexit
-    import shutil
-    import tempfile
-
     from tsc_spark.streaming.rollup_stream import run_rollup_stream_with_retention
 
     src = _stream_src(
@@ -212,8 +232,7 @@ def _streamed_tier1(spark, sf_dir, prefix: str, policy: dict[int, int]) -> DataF
         .repartition(4)
         .write.parquet(p),
     )
-    root = tempfile.mkdtemp(prefix=prefix)
-    atexit.register(shutil.rmtree, root, ignore_errors=True)
+    root = _session_tmp(prefix)
     out, ckpt = f"{root}/out", f"{root}/ckpt"
     run_rollup_stream_with_retention(
         spark, src, out, ckpt, tier=1, policy=policy, max_files=2
@@ -235,10 +254,6 @@ def q_cluster_timeline_streamed(spark, sf_dir):
     state survives between arrivals and each arrival extends the forest
     incrementally.  Docs are the deterministic `doc_id % 25 == 0` slice —
     enough series for real evidence, bounded stream-state cost."""
-    import atexit
-    import shutil
-    import tempfile
-
     from pyspark.sql import Window
 
     from tsc_spark.streaming.stateful import (
@@ -246,8 +261,7 @@ def q_cluster_timeline_streamed(spark, sf_dir):
         incremental_cluster_stream,
     )
 
-    root = tempfile.mkdtemp(prefix="tsc_statestream_q_")
-    atexit.register(shutil.rmtree, root, ignore_errors=True)
+    root = _session_tmp("tsc_statestream_q_")
     out, ckpt = f"{root}/out", f"{root}/ckpt"
 
     n_chunks = 2
@@ -292,13 +306,8 @@ def q_cluster_timeline_streamed(spark, sf_dir):
         .option("maxFilesPerTrigger", 1)
         .parquet(src)
     )
-    # scope the state-store partition count to the 20-doc evidence slice
-    # (state partitions = shuffle partitions at first batch; 32 of them
-    # is pure per-batch overhead here — production streams keep the
-    # session default so state scales with the cluster)
-    saved_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
+    # 8 state partitions for the 20-doc evidence slice
+    with _shuffle_partitions(spark, 8):
         q = (
             incremental_cluster_stream(stream, merge_threshold_ratio=0.3)
             .writeStream.format("parquet")
@@ -309,8 +318,6 @@ def q_cluster_timeline_streamed(spark, sf_dir):
             .start()
         )
         q.awaitTermination()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", saved_parts)
 
     # each micro-batch that applied chunks re-emitted the doc's timeline
     # at its then-current length; the answer is the final one (n_points =
@@ -934,14 +941,8 @@ def q_events_hourly_streamed(spark, sf_dir):
     # returned DataFrame is consumed before any re-invocation.
     name = "tsc_events_hourly_streamed"
     spark.catalog.dropTempView(name)
-    # scope the state-store partition count to the small hourly-window
-    # state (same rationale as q_cluster_timeline_streamed: state
-    # partitions = shuffle partitions at first batch; 32 of them is pure
-    # per-micro-batch task overhead for a few-thousand-row aggregation —
-    # production streams keep the session default so state scales out)
-    saved_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
+    # 8 state partitions for the few-thousand-row hourly-window state
+    with _shuffle_partitions(spark, 8):
         q = (
             windowed_event_counts(stream)
             .writeStream.format("memory")
@@ -951,20 +952,13 @@ def q_events_hourly_streamed(spark, sf_dir):
             .start()
         )
         q.awaitTermination()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", saved_parts)
 
     # materialize the complete-mode result to a per-call parquet dir and
     # return a read of THAT: the memory-sink view is re-created by the
     # next invocation, so a lazy DataFrame bound to it would silently
     # read the newer run's data (e.g. a different sf_dir) if held across
     # calls — the returned frame must be immutable
-    import atexit
-    import shutil
-    import tempfile
-
-    snap = tempfile.mkdtemp(prefix="tsc_events_hourly_snap_")
-    atexit.register(shutil.rmtree, snap, ignore_errors=True)
+    snap = _session_tmp("tsc_events_hourly_snap_")
     spark.table(name).select(
         F.date_format("window_start", "yyyy-MM-dd HH:mm:ss").alias("window_start"),
         "event_type",
@@ -1671,12 +1665,8 @@ def q_bucketed_rollup_join(spark, sf_dir):
     are what the DuckDB oracle checks here).  The joined result is
     materialized to a per-call snapshot so the returned frame cannot
     re-bind to a later invocation's overwrite of the bucketed tables."""
-    import atexit
-    import shutil
-    import tempfile
-
     from tsc_spark.operators.rollup import tiered_rollups
-    from tsc_spark.plans.bucketing import bucketed_join, write_bucketed
+    from tsc_spark.plans.bucketing import write_bucketed
 
     toks = _tokens(spark, sf_dir).select("doc_id", "n_tok", "source")
     per_doc = (
@@ -1688,14 +1678,13 @@ def q_bucketed_rollup_join(spark, sf_dir):
             F.max("agg_max").cast("long").alias("win_max"),
         )
     )
-    root = tempfile.mkdtemp(prefix="tsc_bucketed_q_")
-    atexit.register(shutil.rmtree, root, ignore_errors=True)
+    root = _session_tmp("tsc_bucketed_q_")
     # fixed table names, overwritten per call (a per-call unique name
     # would grow the session catalog across bench repeats); the data
     # lands under the per-call temp path
     write_bucketed(toks, "tsc_bq_tokens", n_buckets=16, path=f"{root}/toks")
     write_bucketed(per_doc, "tsc_bq_rollup", n_buckets=16, path=f"{root}/rollup")
-    joined = bucketed_join(spark, "tsc_bq_tokens", "tsc_bq_rollup").select(
+    joined = spark.table("tsc_bq_tokens").join(spark.table("tsc_bq_rollup"), "doc_id").select(
         "doc_id",
         "source",
         F.col("n_tok").cast("long").alias("n_tok"),

@@ -73,17 +73,15 @@ def main() -> None:
                 # wrote, and that plan is the zero-Exchange evidence.
                 # Broadcast is off for it: at gate scale both sides would
                 # broadcast, which is not the corpus-scale plan
-                from tsc_spark.plans.bucketing import bucketed_join
-
                 key = "spark.sql.autoBroadcastJoinThreshold"
                 prev = spark.conf.get(key)
                 spark.conf.set(key, "-1")
                 buf = io.StringIO()
                 try:
                     with redirect_stdout(buf):
-                        bucketed_join(spark, "tsc_bq_tokens", "tsc_bq_rollup").explain(
-                            "formatted"
-                        )
+                        spark.table("tsc_bq_tokens").join(
+                            spark.table("tsc_bq_rollup"), "doc_id"
+                        ).explain("formatted")
                 finally:
                     spark.conf.set(key, prev)
                 out.append(

@@ -4,7 +4,7 @@
 Usage (cluster):
   spark-submit --py-files tsc_spark.zip scripts/run_pipeline.py \
       --input /data/tokens.parquet --base-dir /data/rollups \
-      --buckets 256 [--resume] [--no-timeline] [--no-encoded]
+      --buckets 256 [--resume] [--no-timeline]
 
 Usage (sandbox smoke):
   python scripts/run_pipeline.py --synth-docs 10000 --base-dir /tmp/rollups
@@ -46,9 +46,6 @@ def main() -> None:
     ap.add_argument("--resume", action="store_true", default=True)
     ap.add_argument("--no-resume", dest="resume", action="store_false")
     ap.add_argument("--no-timeline", dest="timeline", action="store_false", default=True)
-    ap.add_argument("--no-encoded", dest="encoded", action="store_false", default=True,
-                    help="no raw tier: store no DoD blob, the only stored copy of "
-                         "the raw points (tier 0), in the bucket rows")
     ap.add_argument("--retention", default=None, metavar="T0,T1,T2",
                     help="apply a TTL sweep after processing: per-tier keep-last "
                          "window counts, e.g. 64,16,8 (operators.retention)")
@@ -95,7 +92,6 @@ def main() -> None:
             merge_threshold_ratio=args.merge_threshold,
             resume=args.resume,
             with_timeline=args.timeline,
-            with_encoded=args.encoded,
         )
         stages.append({"stage": "rollup",
                        "processing_time": processing_time_s(t0)})

@@ -13,11 +13,7 @@ import pytest
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from tsc_spark.plans.bucketing import (  # noqa: E402
-    bucketed_join,
-    plan_exchanges,
-    write_bucketed,
-)
+from tsc_spark.plans.bucketing import plan_exchanges, write_bucketed  # noqa: E402
 
 
 @pytest.fixture()
@@ -47,7 +43,7 @@ def bucketed_tables(spark, tokens_df, tmp_path_factory):
 
 def test_bucketed_join_has_no_exchange(spark, bucketed_tables, no_broadcast):
     left, right = bucketed_tables
-    joined = bucketed_join(spark, left, right)
+    joined = spark.table(left).join(spark.table(right), "doc_id")
     assert plan_exchanges(joined) == 0, (
         "bucketed doc_id join should be co-located (zero shuffles):\n"
         + joined._jdf.queryExecution().executedPlan().toString()
@@ -65,7 +61,7 @@ def test_unbucketed_join_does_exchange(spark, bucketed_tables, tokens_df, no_bro
 
 def test_bucketed_join_values_match_shuffled_join(spark, bucketed_tables, tokens_df):
     left, right = bucketed_tables
-    got = sorted(tuple(r) for r in bucketed_join(spark, left, right).collect())
+    got = sorted(tuple(r) for r in spark.table(left).join(spark.table(right), "doc_id").collect())
     toks = tokens_df.select("doc_id", "n_tok", "source")
     stats = tokens_df.selectExpr(
         "doc_id", "aggregate(tokens, 0L, (a, t) -> a + t) AS tok_sum"
@@ -83,7 +79,7 @@ def test_driver_bucketed_query_plan(spark, no_broadcast):
 
     out = m.queries()["bucketed_rollup_join"](spark, "/root/testdata/sf0.001")
     assert out.count() > 0
-    joined = bucketed_join(spark, "tsc_bq_tokens", "tsc_bq_rollup")
+    joined = spark.table("tsc_bq_tokens").join(spark.table("tsc_bq_rollup"), "doc_id")
     joined.collect()
     assert plan_exchanges(joined) == 0, (
         joined._jdf.queryExecution().executedPlan().toString()

@@ -1,6 +1,7 @@
 """Resumable pipeline: checkpoint manifests, no duplicate work on
 resume, identical outputs vs a fresh full run (SURVEY §5.5)."""
 
+import json
 import os
 
 import pyarrow.parquet as pq
@@ -128,7 +129,7 @@ def test_empty_buckets_complete_with_empty_manifests(spark, tmp_path):
     )
     d = str(tmp_path / "sparse")
     ingest(spark, few, d, n_buckets=16)
-    manifests = run_pipeline(spark, d, with_timeline=False, with_encoded=False)
+    manifests = run_pipeline(spark, d, with_timeline=False)
     assert len(manifests) == 16
     empties = [m for m in manifests if m["docs"] == 0]
     assert empties, "expected at least one hash-empty bucket"
@@ -139,52 +140,48 @@ def test_empty_buckets_complete_with_empty_manifests(spark, tmp_path):
         assert m.keys() == full.keys() and m["bytes"] == {}
         assert m["doc_id_range"] == [None, None] and set(m["watermarks"].values()) == {-1}
     # second run resumes cleanly past the empty buckets
-    assert run_pipeline(spark, d, with_timeline=False, with_encoded=False) == []
+    assert run_pipeline(spark, d, with_timeline=False) == []
 
 
 def test_resume_produces_outputs_missing_from_earlier_run(spark, base_dir):
     """A run with with_timeline=False must not suppress the timeline a
     later with_timeline=True run asks for (manifests record outputs)."""
-    run_pipeline(spark, base_dir, with_timeline=False, with_encoded=False)
+    run_pipeline(spark, base_dir, with_timeline=False)
     assert not os.path.isdir(os.path.join(base_dir, "timeline"))
-    redone = run_pipeline(spark, base_dir, with_timeline=True, with_encoded=False)
+    redone = run_pipeline(spark, base_dir, with_timeline=True)
     assert len(redone) == 4  # all buckets reprocessed for the new output
     assert os.path.isdir(os.path.join(base_dir, "timeline"))
     # and a third identical run is a full skip
-    assert run_pipeline(spark, base_dir, with_timeline=True, with_encoded=False) == []
+    assert run_pipeline(spark, base_dir, with_timeline=True) == []
 
 
-def test_resume_without_encoded_keeps_an_earlier_raw_tier(spark, base_dir, tokens_df):
-    """A with_encoded=False run that reprocesses buckets (for the
-    timeline an earlier run left out) rewrites each bucket's rows but
-    keeps the blobs that earlier run stored, so the manifests still list
-    'encoded' truthfully and a later with_encoded=True run redoes
-    nothing."""
-    tier0 = _tier_rows(tiered_rollups(tokens_df)[0])
-    run_pipeline(spark, base_dir, with_timeline=False, with_encoded=True)
-    redone = run_pipeline(spark, base_dir, with_timeline=True, with_encoded=False)
-    assert len(redone) == 4
-    assert all({"encoded", "timeline"} <= set(m["outputs"]) <= set(m["bytes"]) for m in redone)
-    assert _tier_rows(read_tier(spark, base_dir, 0)) == tier0
-    assert run_pipeline(spark, base_dir, with_timeline=True, with_encoded=True) == []
-    assert _tier_rows(read_tier(spark, base_dir, 0)) == tier0
+def test_pipeline_refuses_a_run_without_the_raw_tier(spark, base_dir):
+    """The blob is the only stored copy of the raw points, so
+    with_encoded accepts only True and writes nothing otherwise."""
+    with pytest.raises(ValueError, match="with_encoded must be True"):
+        run_pipeline(spark, base_dir, with_encoded=False)
+    assert not os.path.exists(os.path.join(base_dir, "_checkpoints"))
 
 
-def test_buckets_with_and_without_blobs_read_together(spark, base_dir, tokens_df):
-    """A bucket stored without blobs next to buckets with them: tier 0
-    reads the other buckets' points, whichever footer comes first, and
-    tiers 1/2 read every bucket."""
-    run_pipeline(spark, base_dir, buckets=[0], with_timeline=False, with_encoded=False)
-    run_pipeline(spark, base_dir, buckets=[1, 2, 3], with_timeline=False, with_encoded=True)
-    bucketed = spark.read.parquet(os.path.join(base_dir, "tokens_bucketed"))
-    in_bucket0 = {r.doc_id for r in bucketed.filter("bucket = 0").select("doc_id").collect()}
-    assert in_bucket0
-    tiers = tiered_rollups(tokens_df)
-    assert _tier_rows(read_tier(spark, base_dir, 0)) == _tier_rows(
-        tiers[0].filter(~F.col("doc_id").isin(*in_bucket0))
-    )
-    for tier in (1, 2):
-        assert _tier_rows(read_tier(spark, base_dir, tier)) == _tier_rows(tiers[tier]), tier
+def test_older_layout_is_refused(spark, base_dir):
+    """A base dir whose _ingest.json stamps layout version 1 (before
+    bucket rows held tiers 1/2) is refused by every reader of the
+    layout, instead of a resume that skips every bucket and a tier read
+    that returns no rows."""
+    run_pipeline(spark, base_dir, with_timeline=False)
+    meta_path = os.path.join(base_dir, "_ingest.json")
+    with open(meta_path) as f:
+        meta = json.load(f)
+    assert meta == {"n_buckets": 4, "version": 2}
+    with open(meta_path, "w") as f:
+        json.dump({**meta, "version": 1}, f)
+    for read in (
+        lambda: run_pipeline(spark, base_dir, with_timeline=False),
+        lambda: read_tier(spark, base_dir, 1),
+        lambda: apply_retention(spark, base_dir),
+    ):
+        with pytest.raises(ValueError, match="re-run ingest and run_pipeline"):
+            read()
 
 
 def test_manifest_watermarks_match_written_files(spark, base_dir):
@@ -291,17 +288,16 @@ def test_tier_store_reads_back_the_logical_rollups(spark, tmp_path, raw_tokens_d
         assert _max_stored_tokens(spark, base_dir) == DEFAULT_RETENTION_POLICY[0]
 
 
-@pytest.mark.parametrize("with_encoded", [True, False])
-def test_pipeline_writes_one_table_per_bucket(spark, base_dir, with_encoded):
+def test_pipeline_writes_one_table_per_bucket(spark, base_dir):
     """Each bucket is one table, encoded/bucket=b, with one row per doc
-    holding its blob (without with_encoded, none) and its tier-1/2
-    structs; the pipeline writes no rollup/ directory."""
-    run_pipeline(spark, base_dir, with_timeline=False, with_encoded=with_encoded)
+    holding its blob and its tier-1/2 structs; the pipeline writes no
+    rollup/ directory."""
+    run_pipeline(spark, base_dir, with_timeline=False)
     assert sorted(os.listdir(base_dir)) == ["_checkpoints", "_ingest.json", "encoded",
                                             "tokens_bucketed"]
     stored = spark.read.parquet(os.path.join(base_dir, "encoded"))
-    blob = ["encoded", "codec_version"] if with_encoded else []
-    assert stored.columns == ["doc_id", *blob, "n_tok", "source", "tier1", "tier2", "bucket"]
+    assert stored.columns == ["doc_id", "encoded", "codec_version", "n_tok", "source", "tier1",
+                              "tier2", "bucket"]
     assert stored.count() == 56  # every doc, the empty one included
     for tier in (1, 2):
         assert read_tier(spark, base_dir, tier).count() > 0

@@ -374,7 +374,6 @@ def _stored_rows(batch: pa.RecordBatch) -> pa.RecordBatch:
     return _doc_rows(
         pa.RecordBatch.from_arrays([batch.column(0), tokens, n_tok, source],
                                    names=["doc_id", "tokens", "n_tok", "source"]),
-        with_encoded=True,
     )
 
 

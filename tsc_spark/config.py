@@ -96,6 +96,10 @@ def sanitize_bpm(bpm: float) -> float:
 def step_duration_from_bpm(bpm: float) -> float:
     return SECONDS_PER_MINUTE / sanitize_bpm(bpm)
 
+# --- token alphabet of the documents corpus (operators.text.tokenize_documents
+# and its oracle twin oracle_fixtures.tokenize_text): tokens are 0..TOKEN_VOCAB-1 ---
+TOKEN_VOCAB: int = 24
+
 # --- tier layout for the rollup engine (north_rule: 1x / 8x / 64x) ---
 TIER_STRIDES: dict[int, int] = {0: 1, 1: 8, 2: 64}
 

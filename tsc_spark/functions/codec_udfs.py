@@ -4,7 +4,9 @@ Each is a scalar ``arrow_udf``: a column crosses the JVM↔Python boundary
 as one Arrow array per batch (an ``ArrowEvalPython`` plan node) and
 ``tsc_spark.codecs.encode``/``decode`` transform the whole array in one
 vectorized pass — no per-doc Python, no pandas. A NULL doc stays NULL, and
-so does a NULL token element."""
+so does a NULL token element.  ``decode_tokens_table`` reads a stored
+bucket table (plans.pipeline), whose every row holds a blob and its
+``codec_version``."""
 
 from __future__ import annotations
 
@@ -53,20 +55,17 @@ def decode_tokens_table(encoded_df: DataFrame) -> DataFrame:
     Validates ``codec_version`` (the column the pipeline stamps exactly
     so decoding can be gated): an unknown version raises a clear
     error instead of silently mis-decoding with the wrong layout."""
-    if "codec_version" in encoded_df.columns:
-        version_ok = F.when(
-            F.col("codec_version") == CODEC_VERSION, F.col("encoded")
-        ).otherwise(
-            F.raise_error(
-                F.concat(
-                    F.lit("unsupported codec_version "),
-                    F.col("codec_version").cast("string"),
-                    F.lit(f" (decoder supports {CODEC_VERSION})"),
-                )
+    version_ok = F.when(
+        F.col("codec_version") == CODEC_VERSION, F.col("encoded")
+    ).otherwise(
+        F.raise_error(
+            F.concat(
+                F.lit("unsupported codec_version "),
+                F.col("codec_version").cast("string"),
+                F.lit(f" (decoder supports {CODEC_VERSION})"),
             )
         )
-    else:
-        version_ok = F.col("encoded")
+    )
     return encoded_df.withColumn("tokens", decode_tokens_udf(version_ok)).drop(
         "encoded", "codec_version"
     )

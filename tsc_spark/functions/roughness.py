@@ -13,6 +13,8 @@ from pyspark.sql import functions as F
 
 from ..kernel.dissonance import (
     AMP_EPS,
+    AMP_PROFILE_BASE,
+    N_PARTIALS,
     SETHARES_A,
     SETHARES_B,
     SETHARES_D_MAX,
@@ -48,21 +50,17 @@ def pair_roughness_col(f1, f2) -> F.Column:
     return F.exp(-F.lit(SETHARES_A) * x) - F.exp(-F.lit(SETHARES_B) * x)
 
 
-def chord_roughness(
-    chords_df: DataFrame,
-    n_partials: int = 8,
-    amp_base: float = 0.88,
-) -> DataFrame:
+def chord_roughness(chords_df: DataFrame) -> DataFrame:
     """Full harmonic-stack chord roughness, relationally (no UDF).
 
     Input: (doc_id, notes array<int> MIDI, vol double).  Each note
-    contributes ``n_partials`` partials at f0·p with amp (vol/|notes|)·
-    base^p (reference dissonance_stm_manager.jl:114-139); total
+    contributes ``N_PARTIALS`` partials at f0·p with amp (vol/|notes|)·
+    ``AMP_PROFILE_BASE``^p (reference dissonance_stm_manager.jl:114-139); total
     roughness is Σ over partial pairs of the Sethares kernel
     (dissonance.jl:19-64).  One ``select`` over the input (spread by
     ``ensure_min_partitions``), no join: the doc's audible partials
     become an array column, and a nested ``aggregate`` sums every pair
-    ``i < j`` of it — at most ``(4·n_partials choose 2)`` pairs per doc
+    ``i < j`` of it — at most ``(4·N_PARTIALS choose 2)`` pairs per doc
     (chord size ≤ 4), a fixed constant per row at any corpus scale.  Each pair is scored with
     ``pair_roughness_col``'s ``least``/``greatest`` ordering; an
     equal-frequency pair contributes exactly 0 (x = 0), so the sum is
@@ -75,9 +73,9 @@ def chord_roughness(
     def note_partials(midi):
         f0 = F.lit(440.0) * F.pow(F.lit(2.0), (midi.cast("double") - F.lit(69.0)) / F.lit(12.0))
         return F.transform(
-            F.sequence(F.lit(1), F.lit(int(n_partials))),
+            F.sequence(F.lit(1), F.lit(N_PARTIALS)),
             lambda p: F.struct(
-                (f0 * p).alias("f"), (amp * F.pow(F.lit(float(amp_base)), p)).alias("a")
+                (f0 * p).alias("f"), (amp * F.pow(F.lit(AMP_PROFILE_BASE), p)).alias("a")
             ),
         )
 

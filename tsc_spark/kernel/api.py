@@ -44,7 +44,6 @@ def generate_tokens(
     merge_threshold_ratio: float = DEFAULT_MERGE_THRESHOLD_RATIO,
     range_min: int = DEFAULT_RANGE_MIN,
     range_max: int = DEFAULT_RANGE_MAX,
-    contextual_min_width: float = DEFAULT_CONTEXTUAL_MIN_WIDTH,
 ):
     """Complexity-guided sequence generation (reference generate()).
 
@@ -60,7 +59,6 @@ def generate_tokens(
         scale_mode="range_fixed",
         range_min=range_min,
         range_max=range_max,
-        contextual_min_width=contextual_min_width,
         recency=0.0,
     )
     mgr.process_data()

@@ -143,14 +143,12 @@ class StmManager:
         self,
         memory_span: float = STM_MEMORY_SPAN,
         memory_weight: float = STM_MEMORY_WEIGHT,
-        prune_threshold: float = STM_PRUNE_THRESHOLD,
         n_partials: int = N_PARTIALS,
         amp_profile: float = AMP_PROFILE_BASE,
     ):
         self.memory: list[tuple[float, list[int], list[float], float]] = []
         self.memory_span = memory_span
         self.memory_weight = memory_weight
-        self.prune_threshold = prune_threshold
         self.n_partials = n_partials
         self.amp_profile = amp_profile
 
@@ -165,7 +163,7 @@ class StmManager:
             if dt < 0:
                 continue
             w = math.exp(-dt / self.memory_span)
-            if w < self.prune_threshold:
+            if w < STM_PRUNE_THRESHOLD:
                 continue
             d_merged = self._d(list(midi_notes) + ev_notes, list(amps) + ev_amps)
             total += w * self.memory_weight * (d_merged - d_current - ev_d)
@@ -206,7 +204,7 @@ class StmManager:
             dt = float(onset) - ev[0]
             if dt < 0:
                 continue
-            if math.exp(-dt / self.memory_span) >= self.prune_threshold:
+            if math.exp(-dt / self.memory_span) >= STM_PRUNE_THRESHOLD:
                 kept.append(ev)
         self.memory = kept
 

@@ -33,21 +33,17 @@ __all__ = [
 ]
 
 
-def build_query_seed(
-    query_tokens,
-    merge_threshold: float = DEFAULT_MERGE_THRESHOLD_RATIO,
-    range_min: int = DEFAULT_RANGE_MIN,
-    range_max: int = DEFAULT_RANGE_MAX,
-) -> ClusterManager:
-    """Seed manager clustered over the query only (reference ...:123-136)."""
+def build_query_seed(query_tokens) -> ClusterManager:
+    """Seed manager clustered over the query only (reference ...:123-136),
+    with the reference's merge threshold and fixed value range."""
     mgr = ClusterManager(
         [float(int(v)) for v in query_tokens],
-        merge_threshold,
+        DEFAULT_MERGE_THRESHOLD_RATIO,
         SUBSEQUENCE_MIN_WINDOW_SIZE,
         True,
         scale_mode="range_fixed",
-        range_min=range_min,
-        range_max=range_max,
+        range_min=DEFAULT_RANGE_MIN,
+        range_max=DEFAULT_RANGE_MAX,
     )
     mgr.process_data()
     return mgr
@@ -127,7 +123,7 @@ def match_score(matches) -> list[int]:
     return [counts[k] for k in sorted(counts, reverse=True)]
 
 
-def _extract_cross_matches(mgr: ClusterManager, qlen: int, slen: int, min_match_window: int):
+def _extract_cross_matches(mgr: ClusterManager, qlen: int, slen: int):
     """Cross-cluster (q_start, db_start, ws) extraction (reference
     ...:157-201): clusters whose members span both the query prefix and
     the appended DB suffix yield the index cross product.
@@ -144,7 +140,7 @@ def _extract_cross_matches(mgr: ClusterManager, qlen: int, slen: int, min_match_
         for child in node.cc.values():
             stack.append((ws + 1, child))
         inds = node.si
-        if ws < min_match_window or not inds:
+        if ws < DEFAULT_QUERY_MIN_MATCH_WINDOW or not inds:
             continue
         has_q = any(i < qlen for i in inds)
         has_db = any(i >= qlen for i in inds)
@@ -162,7 +158,6 @@ def _extract_cross_matches(mgr: ClusterManager, qlen: int, slen: int, min_match_
 def match_series(
     seed: ClusterManager,
     db_tokens,
-    min_match_window: int = DEFAULT_QUERY_MIN_MATCH_WINDOW,
     copy_seed: bool = True,
 ):
     """Append a DB series to a copy of the query seed and extract
@@ -186,7 +181,7 @@ def match_series(
         mgr.add_data_point(v)
 
     kept = filter_contained_matches(
-        _extract_cross_matches(mgr, qlen, len(db_values), min_match_window)
+        _extract_cross_matches(mgr, qlen, len(db_values))
     )
     return kept, match_score(kept)
 
@@ -194,7 +189,6 @@ def match_series(
 def match_series_rollback(
     seed: ClusterManager,
     db_tokens,
-    min_match_window: int = DEFAULT_QUERY_MIN_MATCH_WINDOW,
 ):
     """``match_series`` against a REUSABLE seed: the whole DB append runs
     inside one journal transaction (the W3 simulate/rollback machinery,
@@ -234,7 +228,7 @@ def match_series_rollback(
             # task = (keys, ws, node); keep only nodes a query window can
             # still extend (see Pruning above)
             seed.tasks = [t for t in seed.tasks if t[2].si[0] + t[1] < qlen]
-        matches = _extract_cross_matches(seed, qlen, len(db_values), min_match_window)
+        matches = _extract_cross_matches(seed, qlen, len(db_values))
     finally:
         seed._rollback()
     kept = filter_contained_matches(matches)

@@ -96,11 +96,12 @@ def _f(x, default=0.0) -> float:
         return float(default)
 
 
-def _i(x, default=0) -> int:
+def _i(x) -> int:
+    """``int(float(x))``, or 0 when ``x`` does not parse."""
     try:
         return int(float(x))
     except (TypeError, ValueError):
-        return int(default)
+        return 0
 
 
 def _b(x, default: bool = False) -> bool:

@@ -15,21 +15,16 @@ from ..config import HEAVY_DOC_TOKEN_THRESHOLD
 __all__ = ["balance_for_kernel", "bucket_pairs", "ensure_min_partitions", "map_rows"]
 
 
-def balance_for_kernel(
-    df: DataFrame,
-    parallelism: int,
-    cost: Column,
-    heavy_threshold: int = HEAVY_DOC_TOKEN_THRESHOLD,
-) -> DataFrame:
+def balance_for_kernel(df: DataFrame, parallelism: int, cost: Column) -> DataFrame:
     """Skew-aware partitioning for a per-doc kernel.
 
     Light rows hash-partition by doc_id (uniform, co-location friendly);
-    heavy rows (``cost`` above the threshold: rare long-tail series whose
-    kernel cost dominates) are spread round-robin so no partition holds
-    two of them — salting the heavy keys (SURVEY §4) while keeping one
-    doc per row."""
-    heavy = df.filter(cost > heavy_threshold).repartition(parallelism)
-    light = df.filter(cost <= heavy_threshold).repartition(parallelism, "doc_id")
+    heavy rows (``cost`` above ``HEAVY_DOC_TOKEN_THRESHOLD``: rare
+    long-tail series whose kernel cost dominates) are spread round-robin
+    so no partition holds two of them — salting the heavy keys (SURVEY
+    §4) while keeping one doc per row."""
+    heavy = df.filter(cost > HEAVY_DOC_TOKEN_THRESHOLD).repartition(parallelism)
+    light = df.filter(cost <= HEAVY_DOC_TOKEN_THRESHOLD).repartition(parallelism, "doc_id")
     return light.unionByName(heavy)
 
 

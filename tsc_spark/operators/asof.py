@@ -27,10 +27,10 @@ def range_join(
     on: list[str] | str,
     time_col: str,
     tolerance_seconds: float,
-    suffix: str = "_r",
 ) -> DataFrame:
     """All (left, right) pairs with |t_left − t_right| ≤ tolerance,
-    per key — the bounded-interval variant of the as-of join.
+    per key — the bounded-interval variant of the as-of join.  Right
+    columns other than the keys appear with an ``_r`` suffix.
 
     Scalable shape: each left row is replicated into its time bucket
     and the two neighbours (bucket = floor(epoch/tolerance)), the join
@@ -49,7 +49,7 @@ def range_join(
         rhs0 = right.select(
             *keys,
             F.col(time_col),
-            *[F.col(c).alias(f"{c}{suffix}") for c in r_payload],
+            *[F.col(c).alias(f"{c}_r") for c in r_payload],
         )
         return left.join(rhs0, keys + [time_col])
     l_epoch = F.col(time_col).cast("timestamp").cast("double")
@@ -71,7 +71,7 @@ def range_join(
         F.floor(
             F.col(time_col).cast("timestamp").cast("double") / tol
         ).alias("_bucket"),
-        *[F.col(c).alias(f"{c}{suffix}") for c in r_payload if c != time_col],
+        *[F.col(c).alias(f"{c}_r") for c in r_payload if c != time_col],
     )
     joined = lhs.join(rhs, keys + ["_bucket"]).filter(
         F.abs(F.col("_l_epoch") - F.col("_r_epoch")) <= tol
@@ -84,14 +84,12 @@ def asof_join(
     right: DataFrame,
     on: list[str] | str,
     time_col: str,
-    payload_cols: list[str] | None = None,
-    suffix: str = "_asof",
 ) -> DataFrame:
     """Left rows + the latest right payload at-or-before their time.
 
-    ``payload_cols`` default to every right column that is neither a
-    key nor the time column; they appear on the output with ``suffix``
-    (plus ``<time_col><suffix>`` for the matched right timestamp).
+    The payload is every right column that is neither a key nor the
+    time column; it appears on the output with an ``_asof`` suffix
+    (plus ``<time_col>_asof`` for the matched right timestamp).
     Left rows with no prior right row carry NULLs (left-outer
     semantics).  The matched right row is carried as ONE struct, so the
     output is always the intact latest row — never a per-column mix of
@@ -101,10 +99,7 @@ def asof_join(
     left rows carry NULLs.  Like DuckDB, right timestamps are assumed
     unique per key — pre-aggregate ties (e.g. max_by) for determinism."""
     keys = [on] if isinstance(on, str) else list(on)
-    if payload_cols is None:
-        payload_cols = [
-            c for c in right.columns if c not in keys and c != time_col
-        ]
+    payload_cols = [c for c in right.columns if c not in keys and c != time_col]
     ldt = dict(left.dtypes)
 
     rhs = right.filter(F.col(time_col).isNotNull()).select(
@@ -137,7 +132,7 @@ def asof_join(
     carried = u.withColumn("_carry", F.last("_r", ignorenulls=True).over(w))
     out = carried.filter(F.col("_asof_side") == 1).select(
         "*",
-        *[F.col(f"_carry.{c}").alias(f"{c}{suffix}") for c in payload_cols],
-        F.col("_carry.ts").alias(f"{time_col}{suffix}"),
+        *[F.col(f"_carry.{c}").alias(f"{c}_asof") for c in payload_cols],
+        F.col("_carry.ts").alias(f"{time_col}_asof"),
     )
     return out.drop("_asof_side", "_r", "_carry")

@@ -29,7 +29,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..config import DEFAULT_CONTEXTUAL_MIN_WIDTH, DEFAULT_MERGE_THRESHOLD_RATIO
+from ..config import DEFAULT_MERGE_THRESHOLD_RATIO
 from ._util import map_rows
 
 __all__ = ["cluster_timeline", "cluster_timeline_poly", "cluster_tree"]
@@ -42,16 +42,16 @@ TREE_SCHEMA = (
 )
 
 
-def _analyse(df: DataFrame, mtr: float, cmw: float, method: str, schema: str):
+def _analyse(df: DataFrame, mtr: float, method: str, schema: str):
     """The scalar kernel over (doc_id, tokens); ``method`` names the
     manager's row method (``timeline`` or ``tree``) whose rows it emits."""
-    mtr, cmw = float(mtr), float(cmw)
+    mtr = float(mtr)
 
     def make():
         from ..kernel.api import analyse_tokens
 
         def fn(doc_id, toks):
-            for row in getattr(analyse_tokens(toks, mtr, cmw), method)():
+            for row in getattr(analyse_tokens(toks, mtr), method)():
                 yield (doc_id, *row)
 
         return fn
@@ -60,25 +60,18 @@ def _analyse(df: DataFrame, mtr: float, cmw: float, method: str, schema: str):
 
 
 def cluster_timeline(
-    df: DataFrame,
-    merge_threshold_ratio: float = DEFAULT_MERGE_THRESHOLD_RATIO,
-    contextual_min_width: float = DEFAULT_CONTEXTUAL_MIN_WIDTH,
+    df: DataFrame, merge_threshold_ratio: float = DEFAULT_MERGE_THRESHOLD_RATIO
 ) -> DataFrame:
     """tokens table → timeline(doc_id, window_size, cluster_id, indices).
 
     The per-row invariant surface (FIXTURES.md §2.1): exact array
     equality against the oracle kernel.
     """
-    return _analyse(
-        df, merge_threshold_ratio, contextual_min_width, "timeline", TIMELINE_SCHEMA
-    )
+    return _analyse(df, merge_threshold_ratio, "timeline", TIMELINE_SCHEMA)
 
 
 def cluster_timeline_poly(
-    df: DataFrame,
-    merge_threshold_ratio: float = DEFAULT_MERGE_THRESHOLD_RATIO,
-    contextual_min_width: float = DEFAULT_CONTEXTUAL_MIN_WIDTH,
-    max_set_size: int = 4,
+    df: DataFrame, merge_threshold_ratio: float = DEFAULT_MERGE_THRESHOLD_RATIO
 ) -> DataFrame:
     """Polyphonic clustering over a chords table
     (doc_id, chords: array<array<double>>) — each timestep is a PolySet
@@ -88,8 +81,6 @@ def cluster_timeline_poly(
     averaging, exact singleton equivalence to the scalar kernel).  An
     empty chords series emits nothing."""
     mtr = float(merge_threshold_ratio)
-    cmw = float(contextual_min_width)
-    mss = int(max_set_size)
 
     def make():
         from ..kernel.polymanager import PolyClusterManager
@@ -103,8 +94,6 @@ def cluster_timeline_poly(
                 2,
                 True,
                 scale_mode="contextual_global_halves",
-                contextual_min_width=cmw,
-                max_set_size=mss,
             )
             mgr.process_data()
             for row in mgr.timeline():
@@ -118,14 +107,10 @@ def cluster_timeline_poly(
 
 
 def cluster_tree(
-    df: DataFrame,
-    merge_threshold_ratio: float = DEFAULT_MERGE_THRESHOLD_RATIO,
-    contextual_min_width: float = DEFAULT_CONTEXTUAL_MIN_WIDTH,
+    df: DataFrame, merge_threshold_ratio: float = DEFAULT_MERGE_THRESHOLD_RATIO
 ) -> DataFrame:
     """tokens table → cluster_tree(doc_id, path, si, rep) (FIXTURES §2.2).
 
     ``rep`` floats are bit-equal to the oracle (same kernel, same
     summation order)."""
-    return _analyse(
-        df, merge_threshold_ratio, contextual_min_width, "tree", TREE_SCHEMA
-    )
+    return _analyse(df, merge_threshold_ratio, "tree", TREE_SCHEMA)

@@ -30,12 +30,6 @@ from typing import Callable
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..config import (
-    DEFAULT_MERGE_THRESHOLD_RATIO,
-    DEFAULT_QUERY_MIN_MATCH_WINDOW,
-    DEFAULT_RANGE_MAX,
-    DEFAULT_RANGE_MIN,
-)
 from ._util import map_rows
 
 __all__ = [
@@ -59,19 +53,15 @@ def query_matches(
     spark: SparkSession,
     tokens_df: DataFrame,
     query_tokens: list[int],
-    merge_threshold: float = DEFAULT_MERGE_THRESHOLD_RATIO,
-    min_match_window: int = DEFAULT_QUERY_MIN_MATCH_WINDOW,
-    range_min: int = DEFAULT_RANGE_MIN,
-    range_max: int = DEFAULT_RANGE_MAX,
 ) -> DataFrame:
     """All (doc_id, q_start, db_start, window_size) matches of the query
     against every corpus series (containment-filtered, per reference
-    semantics ...:2005-2040)."""
+    semantics ...:2005-2040), under the reference's query defaults
+    (``kernel.matching.build_query_seed``)."""
     from ..kernel.matching import build_query_seed, match_series_rollback
 
-    seed = build_query_seed(query_tokens, merge_threshold, range_min, range_max)
+    seed = build_query_seed(query_tokens)
     bc = spark.sparkContext.broadcast(pickle.dumps(seed))
-    mmw = int(min_match_window)
 
     def make():
         # ONE unpickle per task; per-doc state reset is the journal
@@ -79,7 +69,7 @@ def query_matches(
         local_seed = pickle.loads(bc.value)
 
         def fn(doc_id, toks):
-            for qs, ds, ws in match_series_rollback(local_seed, toks, mmw)[0]:
+            for qs, ds, ws in match_series_rollback(local_seed, toks)[0]:
                 yield doc_id, qs, ds, ws
 
         return fn
@@ -262,32 +252,29 @@ def octave_invariant_matches(
     return _expand_position_pairs(keys, window_size, max_positions_per_key)
 
 
-def stm_interference_events(
-    tokens_df: DataFrame,
-    max_events: int = 4,
-    step_seconds: float = 0.25,
-    midi_offset: int = 48,
-) -> DataFrame:
+# the STM trace replays a doc's first _STM_EVENTS dyads, one every
+# _STM_STEP_S seconds, each token lifted by _STM_MIDI_OFFSET to MIDI
+_STM_EVENTS, _STM_STEP_S, _STM_MIDI_OFFSET = 4, 0.25, 48
+
+
+def stm_interference_events(tokens_df: DataFrame) -> DataFrame:
     """Short-term-memory roughness trace per doc (A13/A17 surface).
 
     Derives a deterministic event stream from each token series — event
     k = the dyad (tokens[2k], tokens[2k+1]) lifted to MIDI at onset
-    k·step_seconds — and replays it through the STM manager (reference
+    k·_STM_STEP_S — and replays it through the STM manager (reference
     dissonance_stm_manager.jl:51-64: evaluate = current + exponentially
     decayed interference, then commit).  Shuffle-free shell; per
-    doc the cost is max_events² dissonance evaluations."""
-    me = int(max_events)
-    step = float(step_seconds)
-    off = int(midi_offset)
+    doc the cost is _STM_EVENTS² dissonance evaluations."""
 
     def make():
         from ..kernel.dissonance import StmManager
 
         def fn(doc_id, toks):
             stm = StmManager()
-            for k in range(min(len(toks) // 2, me)):
-                notes = [int(toks[2 * k]) + off, int(toks[2 * k + 1]) + off]
-                d_cur, interf = stm.commit_with_parts(notes, [0.5, 0.5], k * step)
+            for k in range(min(len(toks) // 2, _STM_EVENTS)):
+                notes = [int(t) + _STM_MIDI_OFFSET for t in toks[2 * k : 2 * k + 2]]
+                d_cur, interf = stm.commit_with_parts(notes, [0.5, 0.5], k * _STM_STEP_S)
                 yield doc_id, k, round(d_cur, 6), round(interf, 6)
 
         return fn

@@ -22,7 +22,9 @@ scalable engine operator:
   (``_keep_tail`` over the decoded blob of tier 0 and the window arrays
   of tiers 1/2; no Exchange, Sort or Window), one write and one swap,
   with window and token counts from one ``Observation`` pair — and
-  records the sweep in each bucket manifest.
+  records the sweep in each bucket manifest.  Every bucket row holds
+  its blob, so tier 0 is always there to cut; a base dir of another
+  layout is refused.
 """
 
 from __future__ import annotations
@@ -37,8 +39,8 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import LongType, StructField, StructType
 
 from ..codecs import decode, encode
-from ..plans.pipeline import _commit_manifest, _dir_bytes, _hidden_sibling, _manifest_path
-from ..plans.pipeline import _write_encoded, swap_in_dir  # layout owner
+from ..plans.pipeline import _commit_manifest, _dir_bytes, _hidden_sibling, _ingested_buckets
+from ..plans.pipeline import _manifest_path, _write_encoded, swap_in_dir  # layout owner
 from .rollup import _AGGS
 
 __all__ = [
@@ -136,7 +138,7 @@ def _sweep_batch(batch: pa.RecordBatch, policy: dict[int, int]) -> pa.RecordBatc
     tokens before and after its cut."""
     columns = dict(zip(batch.schema.names, batch.columns))
     lens = kept = np.zeros(len(batch), dtype=np.int64)
-    if 0 in policy and "encoded" in columns:
+    if 0 in policy:
         tokens = decode(columns["encoded"])
         lens = np.diff(tokens.offsets.to_numpy().astype(np.int64))
         kept = np.minimum(lens, policy[0])
@@ -167,16 +169,16 @@ def apply_retention(
 
     Per bucket: one scan of the bucket table, one ``mapInArrow``
     (``_sweep_batch``) that cuts each row's blob to its last
-    ``policy[0]`` tokens (without tier 0 in the policy, or without
-    blobs, the raw archive stays whole) and its tier-1/2 arrays to their
+    ``policy[0]`` tokens (without tier 0 in the policy, the raw archive
+    stays whole) and its tier-1/2 arrays to their
     last ``policy[t]`` windows, one write (one file per 128 MiB swept,
     in doc_id order) and one swap; and a ``retention`` record (policy,
     per-tier windows before/after from one ``Observation`` pair, 0/0
     for a tier without windows, on-disk bytes of the swept table)
-    appended to the bucket manifest."""
+    appended to the bucket manifest.  A base dir of another layout
+    raises ``ValueError`` (plans.pipeline ``_ingested_buckets``)."""
     pol = DEFAULT_RETENTION_POLICY if policy is None else policy
-    with open(os.path.join(base_dir, "_ingest.json")) as f:
-        n_buckets = json.load(f)["n_buckets"]
+    n_buckets = _ingested_buckets(base_dir)
     todo = buckets if buckets is not None else range(n_buckets)
 
     results = []
@@ -212,7 +214,7 @@ def apply_retention(
             )
             swap_in_dir(path, tmp)  # crash-recoverable, see swap_in_dir
             b, a = before.get, after.get
-            pairs = {"0": (a["n_before"], a["n_after"])} if 0 in pol and "encoded" in stored.columns else {}
+            pairs = {"0": (a["n_before"], a["n_after"])} if 0 in pol else {}
             pairs.update({str(t): (b[str(t)], a[str(t)]) for t in (1, 2) if t in pol})
             record["tiers"] = {k: {"rows_before": int(x or 0), "rows_after": int(y or 0)}
                                for k, (x, y) in pairs.items()}

@@ -38,7 +38,7 @@ import pyarrow as pa
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from ..config import TIER_STRIDES
+from ..config import DEFAULT_CONTEXTUAL_MIN_WIDTH, TIER_STRIDES
 
 __all__ = [
     "explode_points",
@@ -338,12 +338,13 @@ def tiered_rollups(tokens_df: DataFrame) -> dict[int, DataFrame]:
     return {tier: rollup_arrays(tokens_df, TIER_STRIDES[tier], tier) for tier in (0, 1, 2)}
 
 
-def contextual_width(tokens_df: DataFrame, min_width: float = 1.0) -> DataFrame:
+def contextual_width(tokens_df: DataFrame) -> DataFrame:
     """Per-doc contextual value width over the full series.
 
     Reference update_value_width! (/root/reference/src/polyphonic/
     polyphonic_cluster_manager.jl:1063-1094): width = |mean(values >=
-    mean) − mean(values <= mean)| clamped below by contextual_min_width;
+    mean) − mean(values <= mean)| clamped below by the reference's
+    contextual_min_width (config.DEFAULT_CONTEXTUAL_MIN_WIDTH);
     degenerate width becomes 1.0.  All-native and per-row; the mean is
     materialized as a column BEFORE the half filters so the filter
     lambdas bind a row attribute — inlining the aggregate expression
@@ -369,7 +370,7 @@ def contextual_width(tokens_df: DataFrame, min_width: float = 1.0) -> DataFrame:
     ).withColumn("upper_half_avg", half_mean(lambda x: x >= F.col("data_mean")))
     delta = F.greatest(
         F.abs(F.col("upper_half_avg") - F.col("lower_half_avg")),
-        F.lit(float(min_width)),
+        F.lit(DEFAULT_CONTEXTUAL_MIN_WIDTH),
     )
     width = F.when(delta <= 0.0, F.lit(1.0)).otherwise(delta)
     return staged.select(

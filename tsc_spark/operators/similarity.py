@@ -76,10 +76,9 @@ def _norm(a) -> F.Column:
     )
 
 
-def cosine_scores(
-    emb: DataFrame, query_vec: list[float], out_col: str = "cosine"
-) -> DataFrame:
-    """Cosine similarity to a literal query vector, Arrow-batched numpy.
+def cosine_scores(emb: DataFrame, query_vec: list[float]) -> DataFrame:
+    """Cosine similarity to a literal query vector, Arrow-batched numpy,
+    as a ``cosine`` column.
 
     Spark's array higher-order functions are interpreted per element
     (measured in BASELINE.md), so the exact scorer is a vectorized
@@ -97,7 +96,7 @@ def cosine_scores(
 
     _score = _matmul_udf(q[None, :], cos, "double")
     return emb.filter(F.col("embedding").isNotNull()).withColumn(
-        out_col, F.round(_score("embedding"), 6)
+        "cosine", F.round(_score("embedding"), 6)
     )
 
 
@@ -109,6 +108,12 @@ def cosine_topk(emb: DataFrame, query_vec: list[float], k: int = 10) -> DataFram
         .orderBy(F.desc("cosine"), "vec_id")
         .limit(k)
     )
+
+
+# LSH planes: the seed and plane count of hyperplane_buckets' default
+# set (the one lsh_probe_set probes), and near_dup_embeddings' table
+# count (its tables use seeds _PLANE_SEED.._PLANE_SEED+_ND_TABLES-1)
+_PLANE_SEED, _LSH_PLANES, _ND_TABLES = 7, 8, 4
 
 
 def _planes(dim: int, n_planes: int, seed: int) -> np.ndarray:
@@ -133,7 +138,7 @@ def _buckets_udf(dim: int, n_planes: int, seeds) -> F.Column:
 
 
 def hyperplane_buckets(
-    emb: DataFrame, dim: int, n_planes: int = 8, seed: int = 7
+    emb: DataFrame, dim: int, n_planes: int = _LSH_PLANES, seed: int = _PLANE_SEED
 ) -> DataFrame:
     """Random-hyperplane (SimHash) bucket id per vector.
 
@@ -145,29 +150,24 @@ def hyperplane_buckets(
     )
 
 
-def lsh_probe_set(
-    query_vec: list[float],
-    dim: int,
-    n_planes: int = 8,
-    probe_radius: int = 2,
-    seed: int = 7,
-) -> list[int]:
-    """Multi-probe bucket set for a query: its own bucket plus every
-    bucket within Hamming distance ``probe_radius`` (radius 2 over 8
-    planes = 37 of 256).  Exposed separately so the bench harness can
-    measure the candidate scan fraction the probe set actually touches
-    next to the recall it buys."""
+def lsh_probe_set(query_vec: list[float], dim: int, probe_radius: int = 2) -> list[int]:
+    """Multi-probe bucket set for a query under ``hyperplane_buckets``'
+    default planes: its own bucket plus every bucket within Hamming
+    distance ``probe_radius`` (radius 2 over 8 planes = 37 of 256).
+    Exposed separately so the bench harness can measure the candidate
+    scan fraction the probe set actually touches next to the recall it
+    buys."""
     from itertools import combinations
 
-    planes = _planes(dim, n_planes, seed=seed)
+    planes = _planes(dim, _LSH_PLANES, _PLANE_SEED)
     qv = np.asarray(query_vec, dtype=np.float64)
     qbucket = 0
-    for j in range(n_planes):
+    for j in range(_LSH_PLANES):
         if float(planes[j] @ qv) > 0:
             qbucket |= 1 << j
     probes = [qbucket]
     for r in range(1, probe_radius + 1):
-        for flips in combinations(range(n_planes), r):
+        for flips in combinations(range(_LSH_PLANES), r):
             b = qbucket
             for j in flips:
                 b ^= 1 << j
@@ -180,53 +180,49 @@ def ann_topk_lsh(
     query_vec: list[float],
     dim: int,
     k: int = 10,
-    n_planes: int = 8,
-    probe_radius: int = 2,
 ) -> DataFrame:
     """Approximate top-k with multi-probe LSH.
 
-    Probes every bucket within Hamming distance ``probe_radius`` of the
-    query's bucket (radius 2 over 8 planes = 37 of 256 buckets), trading
+    Probes every bucket within Hamming distance 2 of the query's bucket
+    (``lsh_probe_set``: 37 of the 256 buckets of 8 planes), trading
     a bounded widening of the scan for recall — single-bucket probing
     misses near neighbors that fall on the far side of one hyperplane.
     At 10^12-vector scale the bucketed table is written partitioned by
     bucket → the probe set is an IN-list partition-pruned scan."""
-    probes = lsh_probe_set(query_vec, dim, n_planes, probe_radius, seed=7)
-    bucketed = hyperplane_buckets(emb, dim, n_planes, seed=7)
+    probes = lsh_probe_set(query_vec, dim)
+    bucketed = hyperplane_buckets(emb, dim)
     cand = bucketed.filter(F.col("bucket").isin(probes))
     return cosine_topk(cand, query_vec, k)
 
 
-def ivf_fit_centroids(
-    emb: DataFrame,
-    dim: int,
-    n_centroids: int = 16,
-    n_iters: int = 5,
-    max_train: int = 65536,
-    seed: int = 11,
-    id_col: str = "vec_id",
-) -> np.ndarray:
+# IVF coarse quantizer: centroid count, Lloyd iterations, training
+# sample size, k-means seed and lists probed per query (the ANN oracle
+# in oracle_fixtures repeats these values)
+_IVF_CENTROIDS, _IVF_ITERS, _IVF_MAX_TRAIN, _IVF_SEED, _IVF_NPROBE = 16, 5, 65536, 11, 4
+
+
+def ivf_fit_centroids(emb: DataFrame, dim: int) -> np.ndarray:
     """Deterministic mini k-means for IVF coarse quantization.
 
     Centroids are fit driver-side on a **bounded, deterministic**
-    training sample — the ``max_train`` lowest ids via a TopK
+    training sample — the ``_IVF_MAX_TRAIN`` lowest ``vec_id``s via a TopK
     (TakeOrderedAndProject — never a full sort, never a full-corpus
-    collect, so the driver footprint is O(max_train·dim) even at 100 TB).
+    collect, so the driver footprint is O(_IVF_MAX_TRAIN·dim) even at 100 TB).
     The standard IVF recipe: the training set is tiny relative to the
     corpus, the expensive part (assignment) stays distributed.  Lloyd
     iterations over unit-normalized vectors ≈ spherical k-means for
-    cosine.  Fully reproducible from SQL (ORDER BY id LIMIT max_train),
+    cosine.  Fully reproducible from SQL (ORDER BY vec_id LIMIT _IVF_MAX_TRAIN),
     which is how the DuckDB oracle re-derives the same centroids."""
     df = (
         emb.filter(F.col("embedding").isNotNull())
-        .select(id_col, "embedding")
-        .orderBy(id_col)
-        .limit(int(max_train))
+        .select("vec_id", "embedding")
+        .orderBy("vec_id")
+        .limit(_IVF_MAX_TRAIN)
     )
     x = np.array([list(r[1]) for r in df.collect()], dtype=np.float64)
     norms = np.linalg.norm(x, axis=1, keepdims=True)
     x = x / np.maximum(norms, 1e-12)
-    return _kmeans_numpy(x, n_centroids, n_iters, seed)
+    return _kmeans_numpy(x, _IVF_CENTROIDS, _IVF_ITERS, _IVF_SEED)
 
 
 def det_sims(x: np.ndarray, cents: np.ndarray) -> np.ndarray:
@@ -278,7 +274,7 @@ def ivf_assign(emb: DataFrame, cents: np.ndarray) -> DataFrame:
     One Arrow-batched matmul-argmax per batch (``np.argmax`` keeps the
     first-occurrence tie rule).  At corpus scale the result is written
     partitioned by ``ivf_list`` so a probe scans only
-    nprobe/n_centroids of the data (partition pruning), the IVF payoff."""
+    _IVF_NPROBE/_IVF_CENTROIDS of the data (partition pruning), the IVF payoff."""
     emb = emb.filter(F.col("embedding").isNotNull())
     assign_udf = _matmul_udf(
         cents, lambda x, sims: sims.argmax(axis=1).astype(np.int32), "int"
@@ -286,17 +282,15 @@ def ivf_assign(emb: DataFrame, cents: np.ndarray) -> DataFrame:
     return emb.withColumn("ivf_list", assign_udf("embedding"))
 
 
-def ivf_probe_lists(
-    query_vec: list[float], cents: np.ndarray, nprobe: int = 4
-) -> list[int]:
-    """The ``nprobe`` inverted lists nearest the query (by cosine against
+def ivf_probe_lists(query_vec: list[float], cents: np.ndarray) -> list[int]:
+    """The ``_IVF_NPROBE`` inverted lists nearest the query (by cosine against
     the coarse centroids).  det_rowdot: probe choice must be bit-stable
     across hosts so the committed oracle's probe set always matches a
     driver-side refit.  Exposed separately so the bench harness can
     measure the scan fraction those lists hold next to measured recall."""
     q = np.asarray(query_vec, dtype=np.float64)
     qn = q / max(float(np.sqrt(np.add.reduce(q * q))), 1e-12)
-    return [int(p) for p in np.argsort(-det_rowdot(cents, qn))[: max(nprobe, 1)]]
+    return [int(p) for p in np.argsort(-det_rowdot(cents, qn))[:_IVF_NPROBE]]
 
 
 def ivf_topk(
@@ -304,65 +298,57 @@ def ivf_topk(
     query_vec: list[float],
     dim: int,
     k: int = 10,
-    n_centroids: int = 16,
-    nprobe: int = 4,
     cents: np.ndarray | None = None,
 ) -> DataFrame:
-    """Approximate top-k via IVF: score only the nprobe nearest lists."""
+    """Approximate top-k via IVF: score only the ``_IVF_NPROBE`` nearest
+    lists.  ``cents`` defaults to ``ivf_fit_centroids`` over ``emb``."""
     if cents is None:
-        cents = ivf_fit_centroids(emb, dim, n_centroids)
-    probe_lists = ivf_probe_lists(query_vec, cents, nprobe)
+        cents = ivf_fit_centroids(emb, dim)
+    probe_lists = ivf_probe_lists(query_vec, cents)
     assigned = ivf_assign(emb, cents)
     cand = assigned.filter(F.col("ivf_list").isin([int(p) for p in probe_lists]))
     return cosine_topk(cand.drop("ivf_list"), query_vec, k)
 
 
-def adaptive_n_planes(
-    n_rows: int, target_bucket_size: int = 64, lo: int = 4, hi: int = 24
-) -> int:
+def adaptive_n_planes(n_rows: int, target_bucket_size: int = 64) -> int:
     """Plane count so the *expected* bucket population N/2^p stays at or
     under ``target_bucket_size`` — within-bucket pair expansion is then
     bounded ~N·target/2 (linear in N) instead of ~N²/2^p with a fixed p.
-    Clamped to [lo, hi]; hi=24 keeps bucket ids in int32."""
+    Clamped to [4, 24]; 24 keeps bucket ids in int32."""
     import math
 
     if n_rows <= 0:
-        return lo
+        return 4
     need = math.ceil(math.log2(max(n_rows / float(target_bucket_size), 2.0)))
-    return min(hi, max(lo, need))
+    return min(24, max(4, need))
 
 
 def near_dup_embeddings(
     emb: DataFrame,
     dim: int,
     threshold: float = 0.95,
-    n_planes: int | None = None,
-    n_tables: int = 4,
-    target_bucket_size: int = 64,
-    seed: int = 7,
 ) -> DataFrame:
     """Embedding-cosine near-dup pairs via banded multi-table LSH + exact
     verify.
 
-    ``n_planes`` defaults to ``adaptive_n_planes(count)`` — derived from
+    The plane count p is ``adaptive_n_planes(count)`` — derived from
     the corpus size so expected bucket population stays constant as N
     grows (a fixed plane count makes within-bucket pairs ~N²/2^p, a
     stage-killer at 10⁹ vectors).  Deeper buckets lose single-table
     recall (each plane keeps a θ/π-angle pair with prob 1-θ/π), so
-    ``n_tables`` independent plane sets (seeds seed..seed+L-1) are
-    unioned — recall = 1-(1-(1-θ/π)^p)^L stays controlled while the
-    candidate volume stays ~L·N·target/2.
+    L = ``_ND_TABLES`` independent plane sets (seeds ``_PLANE_SEED``..
+    ``_PLANE_SEED``+L-1) are unioned — recall = 1-(1-(1-θ/π)^p)^L stays
+    controlled while the candidate volume stays ~L·N·target/2.
 
     One matmul per Arrow batch gives every table's bucket id; the
     (vec_id, table, bucket) rows meet in ONE checkpointed self-join
     (``_util.bucket_pairs``, shared with dedup.lsh_candidate_pairs).
     Embeddings re-attach for the exact-cosine verify (native fold,
     bit-matching the SQL oracle's sequential SUM)."""
-    if n_planes is None:
-        # one count job (parquet scans serve this from footer stats)
-        n_planes = adaptive_n_planes(emb.count(), target_bucket_size)
+    # one count job (parquet scans serve this from footer stats)
+    n_planes = adaptive_n_planes(emb.count())
     emb = emb.filter(F.col("embedding").isNotNull())
-    buckets = _buckets_udf(dim, n_planes, range(seed, seed + int(n_tables)))
+    buckets = _buckets_udf(dim, n_planes, range(_PLANE_SEED, _PLANE_SEED + _ND_TABLES))
     stacked = emb.select("vec_id", F.posexplode(buckets).alias("table", "bucket"))
     cand = bucket_pairs(stacked, "vec_id", "vec_a", "vec_b")
     # norms computed ONCE per vector (same fold expression, so the values

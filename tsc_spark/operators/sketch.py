@@ -27,6 +27,9 @@ from .dedup import _h32
 __all__ = ["kmv_distinct", "stable_sample"]
 
 _HASH_SPACE = float(1 << 32)
+# md5 hash seeds of the two sketches; the driver's DuckDB oracles
+# (__spark_entry__) hash with the same seeds
+_KMV_SEED, _SAMPLE_SEED = 5, 17
 
 
 def kmv_distinct(
@@ -34,7 +37,6 @@ def kmv_distinct(
     group_cols: list[str] | str,
     value_col: str,
     k: int = 64,
-    seed: int = 5,
 ) -> DataFrame:
     """(group, n_in_sketch, estimate) — KMV cardinality per group.
 
@@ -45,7 +47,7 @@ def kmv_distinct(
     hashed = (
         df.select(*groups, value_col)
         .distinct()
-        .select(*groups, _h32(F.col(value_col).cast("string"), seed).alias("h"))
+        .select(*groups, _h32(F.col(value_col).cast("string"), _KMV_SEED).alias("h"))
         # proper KMV tracks distinct HASH values: two distinct inputs
         # whose 32-bit hashes collide count once (matches the SQL twin)
         .distinct()
@@ -69,11 +71,9 @@ def kmv_distinct(
     )
 
 
-def stable_sample(
-    df: DataFrame, id_col: str, fraction: float, seed: int = 17
-) -> DataFrame:
+def stable_sample(df: DataFrame, id_col: str, fraction: float) -> DataFrame:
     """Deterministic ~fraction sample: keep rows whose id hash falls
     under fraction·2^32.  Engine-portable and stable under reruns and
     repartitioning."""
     threshold = int(float(fraction) * _HASH_SPACE)
-    return df.filter(_h32(F.col(id_col).cast("string"), seed) < threshold)
+    return df.filter(_h32(F.col(id_col).cast("string"), _SAMPLE_SEED) < threshold)

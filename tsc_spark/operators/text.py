@@ -11,6 +11,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..config import TOKEN_VOCAB
 from ._util import ensure_min_partitions
 from .dedup import _ngrams, _norm_text
 
@@ -20,18 +21,18 @@ __all__ = ["tokenize_documents", "text_stats"]
 STOPWORDS = ["the", "a", "of", "and", "to", "in", "is", "on", "for", "with"]
 
 
-def tokenize_documents(docs: DataFrame, vocab: int = 24) -> DataFrame:
+def tokenize_documents(docs: DataFrame) -> DataFrame:
     """Derive the north-rule tokens table from `documents` text.
 
     Deterministic, engine-portable word→token map (no external
-    tokenizer): token = (7*len(word) + ascii(first_char)) mod vocab.
+    tokenizer): token = (7*len(word) + ascii(first_char)) mod TOKEN_VOCAB.
     Gives the clustering/rollup operators a real corpus-shaped input
     that a SQL oracle can reproduce exactly.
     """
     words = F.split(F.col("text"), " ")
     tokens = F.transform(
         words,
-        lambda w: ((F.length(w) * 7 + F.ascii(F.substring(w, 1, 1))) % vocab).cast(
+        lambda w: ((F.length(w) * 7 + F.ascii(F.substring(w, 1, 1))) % TOKEN_VOCAB).cast(
             "int"
         ),
     )

@@ -24,6 +24,7 @@ import os
 
 import duckdb
 
+from .config import TOKEN_VOCAB
 from .functions.canon import fmt_double_seq
 
 DEFAULT_ORACLE_SF_DIR = "/root/testdata/sf0.01"
@@ -108,10 +109,10 @@ def oracle_sf_dir() -> str:
 # ----------------------------------------------------------------------
 # deterministic input derivations (pure-Python twins of the Spark exprs)
 # ----------------------------------------------------------------------
-def tokenize_text(text: str, vocab: int = 24) -> list[int]:
+def tokenize_text(text: str) -> list[int]:
     """Twin of operators.text.tokenize_documents / SQL_TOKENS."""
     return [
-        (7 * len(w) + (ord(w[0]) if w else 0)) % vocab for w in text.split(" ")
+        (7 * len(w) + (ord(w[0]) if w else 0)) % TOKEN_VOCAB for w in text.split(" ")
     ]
 
 
@@ -701,7 +702,7 @@ def ann_oracle_sql_cached(sf_dir: str | None = None) -> dict[str, str]:
     return out
 
 
-def all_fixture_sql(sf_dir: str | None = None) -> dict[str, str]:
+def all_fixture_sql() -> dict[str, str]:
     """Every fixture oracle; failures degrade to rows-only — loudly, so a
     weakened correctness gate is visible in driver logs."""
     import sys
@@ -709,7 +710,7 @@ def all_fixture_sql(sf_dir: str | None = None) -> dict[str, str]:
     out = {}
     for name in FIXTURE_BUILDERS:
         try:
-            out[name] = fixture_sql(name, sf_dir)
+            out[name] = fixture_sql(name)
         except Exception as exc:
             print(
                 f"WARNING: fixture oracle for '{name}' failed "
@@ -717,7 +718,7 @@ def all_fixture_sql(sf_dir: str | None = None) -> dict[str, str]:
                 file=sys.stderr,
             )
     try:
-        out.update(ann_oracle_sql_cached(sf_dir))
+        out.update(ann_oracle_sql_cached())
     except Exception as exc:
         print(
             "WARNING: ANN literal oracles failed "

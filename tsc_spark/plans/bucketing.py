@@ -28,57 +28,37 @@ metastore/Iceberg catalog.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 
 __all__ = [
     "write_bucketed",
-    "bucketed_join",
     "plan_nodes",
     "plan_exchanges",
     "plan_file_scans",
 ]
 
 
-def write_bucketed(
-    df: DataFrame,
-    table: str,
-    n_buckets: int = 32,
-    bucket_col: str = "doc_id",
-    path: str | None = None,
-    sort: bool = True,
-) -> None:
-    """Persist ``df`` as a bucketed (and by default sorted) table.
+def write_bucketed(df: DataFrame, table: str, path: str, n_buckets: int = 32) -> None:
+    """Persist ``df`` at ``path`` as table ``table``, bucketed and sorted
+    by ``doc_id``.
 
     ``n_buckets`` should be sized like shuffle partitions at the target
     scale (cores × small multiple); both sides of a co-located join must
     use the SAME bucket count — record it once per layout, not per job.
+    With matching bucket counts Catalyst plans the join of two such
+    tables on ``doc_id`` (``spark.table(l).join(spark.table(r),
+    "doc_id")``) WITHOUT any Exchange: each task reads bucket i of both
+    tables and joins locally.  ``plan_exchanges`` asserts that property
+    in tests.
     """
-    w = (
+    (
         df.write.mode("overwrite")
         .format("parquet")
-        .bucketBy(n_buckets, bucket_col)
+        .bucketBy(n_buckets, "doc_id")
+        .sortBy("doc_id")
+        .option("path", path)
+        .saveAsTable(table)
     )
-    if sort:
-        w = w.sortBy(bucket_col)
-    if path:
-        w = w.option("path", path)
-    w.saveAsTable(table)
-
-
-def bucketed_join(
-    spark: SparkSession,
-    left_table: str,
-    right_table: str,
-    on: str = "doc_id",
-    how: str = "inner",
-) -> DataFrame:
-    """Join two bucketed tables on their bucket column.
-
-    With matching bucket counts Catalyst plans this WITHOUT any
-    Exchange: each task reads bucket i of both tables and joins
-    locally.  ``plan_exchanges`` asserts that property in tests.
-    """
-    return spark.table(left_table).join(spark.table(right_table), on, how)
 
 
 def _walk_plan(node):

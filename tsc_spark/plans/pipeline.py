@@ -11,7 +11,8 @@ with a manifest — the file-level equivalent of
 ``source LEFT ANTI JOIN done_partitions`` (SURVEY §2.3).
 
 A bucket is stored as one table, ``encoded/bucket=b``, with one row per
-doc (``_STORED_ROW``): the doc's delta-of-delta blob, its
+doc (``_STORED_ROW``): the doc's delta-of-delta blob (always: it is the
+only stored copy of the raw points), its
 ``codec_version``, ``n_tok`` and ``source``, plus a ``tier1`` and a
 ``tier2`` struct holding that tier's windows doc-major
 (``operators.rollup.doc_tier_structs``: ``first_window_idx`` and the
@@ -28,6 +29,12 @@ written without parquet column statistics: a min/max over DoD blobs
 prunes nothing, and parquet-mr would store the largest whole blob in
 every file footer.  Each manifest records the on-disk bytes of every
 output directory the bucket wrote.
+
+``_ingest.json`` stamps the layout version (``_LAYOUT_VERSION``);
+``run_pipeline``, ``read_tier`` and ``operators.retention.apply_retention``
+read it through ``_ingested_buckets``, which refuses a base dir of
+another layout instead of misreading it.  No layout is migrated: an
+older base dir is re-run through ``ingest`` and ``run_pipeline``.
 
 At cluster scale, buckets map to independent jobs that can be retried /
 scheduled separately; n_buckets is chosen so one bucket ≈ a few hundred
@@ -58,11 +65,30 @@ __all__ = [
     "pipeline_metrics",
 ]
 
+# the layout ``ingest`` stamps in _ingest.json: one table per bucket
+# whose rows hold the blob and tiers 1/2.  Version 1 was stamped both on
+# base dirs whose tiers sit in other tables, which no reader here reads,
+# and on the first dirs of this layout, so it is refused as a whole
+_LAYOUT_VERSION = 2
+
 # a bucket's stored row: the encoded columns, then tiers 1/2 doc-major
 _STORED_ROW = (
     "doc_id string, encoded binary, codec_version int, n_tok int, source string, "
     f"tier1 {_TIER_STRUCT}, tier2 {_TIER_STRUCT}"
 )
+
+
+def _ingested_buckets(base_dir: str) -> int:
+    """``n_buckets`` of an ingested base dir; raises ``ValueError`` when
+    its ``_ingest.json`` stamps another layout than ``_LAYOUT_VERSION``."""
+    with open(os.path.join(base_dir, "_ingest.json")) as f:
+        meta = json.load(f)
+    if meta.get("version") != _LAYOUT_VERSION:
+        raise ValueError(
+            f"{base_dir} holds layout version {meta.get('version')}, not "
+            f"{_LAYOUT_VERSION}; re-run ingest and run_pipeline into a fresh base dir"
+        )
+    return meta["n_buckets"]
 
 
 def _manifest_dir(base_dir: str) -> str:
@@ -92,14 +118,13 @@ def _write_encoded(encoded_df: DataFrame, path: str) -> None:
     ).parquet(path)
 
 
-def _doc_rows(batch: pa.RecordBatch, with_encoded: bool) -> pa.RecordBatch:
+def _doc_rows(batch: pa.RecordBatch) -> pa.RecordBatch:
     """``_STORED_ROW`` rows of one ``(doc_id, tokens, n_tok, source)``
-    batch; without ``with_encoded`` the blob is NULL (and not stored)."""
+    batch."""
     tokens = batch.column("tokens")
-    n = len(batch)
-    blob = encode(tokens) if with_encoded else pa.nulls(n, pa.binary())
+    version = pa.array(np.full(len(batch), CODEC_VERSION, dtype=np.int32))
     return pa.RecordBatch.from_arrays(
-        [batch.column("doc_id"), blob, pa.array(np.full(n, CODEC_VERSION, dtype=np.int32)),
+        [batch.column("doc_id"), encode(tokens), version,
          batch.column("n_tok"), batch.column("source"), *doc_tier_structs(tokens)],
         names=["doc_id", "encoded", "codec_version", "n_tok", "source", "tier1", "tier2"],
     )
@@ -179,7 +204,7 @@ def ingest(
         .mode("overwrite")
         .parquet(out)
     )
-    meta = {"n_buckets": n_buckets, "format": "parquet", "version": 1}
+    meta = {"n_buckets": n_buckets, "version": _LAYOUT_VERSION}
     os.makedirs(base_dir, exist_ok=True)
     with open(os.path.join(base_dir, "_ingest.json"), "w") as f:
         json.dump(meta, f)
@@ -192,11 +217,11 @@ def _process_bucket(
     bucket: int,
     merge_threshold_ratio: float,
     with_timeline: bool,
-    with_encoded: bool,
 ) -> dict:
     t0 = time.time()
-    # tiers 1/2 are in every bucket row, so only the optional outputs are named
-    outputs = (["timeline"] if with_timeline else []) + (["encoded"] if with_encoded else [])
+    # the blob and tiers 1/2 are in every bucket row, so only the
+    # optional output is named
+    outputs = ["timeline"] if with_timeline else []
     bucket_dir = os.path.join(base_dir, "tokens_bucketed", f"bucket={bucket}")
     # a hash-empty bucket (partitionBy only creates directories for
     # buckets that received docs) commits zero stats and no outputs, so
@@ -218,12 +243,10 @@ def _process_bucket(
         )
         # the whole stored row from one pass: the blob (tier 0) and tiers 1/2
         rows = df.select("doc_id", "tokens", F.col("n_tok").cast("int"), "source").mapInArrow(
-            lambda batches: (_doc_rows(b, with_encoded) for b in batches), _STORED_ROW
+            lambda batches: map(_doc_rows, batches), _STORED_ROW
         )
         written["encoded"] = os.path.join(base_dir, "encoded", f"bucket={bucket}")
-        _write_encoded(
-            rows if with_encoded else rows.drop("encoded", "codec_version"), written["encoded"]
-        )
+        _write_encoded(rows, written["encoded"])
         stats = stats_obs.get
         if with_timeline:
             written["timeline"] = os.path.join(base_dir, "timeline", f"bucket={bucket}")
@@ -266,19 +289,16 @@ def run_pipeline(
 ) -> list[dict]:
     """Process every (remaining) bucket; returns the manifests written.
 
-    ``with_encoded=False`` stores no raw tier (no tier 0 at all): the
-    bucket rows hold tiers 1/2 without the blob columns — except in a
-    bucket whose manifest already lists ``encoded``, whose rewritten rows
-    keep the blob.
+    Every bucket row stores its raw tier: ``with_encoded`` accepts only
+    ``True`` (the benchmark's call passes it) and ``False`` raises.
     ``resume=True`` skips buckets whose checkpoint manifest exists, so a
     killed run restarts without duplicate work."""
-    with open(os.path.join(base_dir, "_ingest.json")) as f:
-        n_buckets = json.load(f)["n_buckets"]
+    if not with_encoded:
+        raise ValueError("every bucket row stores its raw tier: with_encoded must be True")
+    n_buckets = _ingested_buckets(base_dir)
     os.makedirs(_manifest_dir(base_dir), exist_ok=True)
 
-    requested = ({"timeline"} if with_timeline else set()) | (
-        {"encoded"} if with_encoded else set()
-    )
+    requested = {"timeline"} if with_timeline else set()
     todo = buckets if buckets is not None else range(n_buckets)
     written = []
     for bucket in todo:
@@ -293,13 +313,9 @@ def run_pipeline(
                 continue
         else:
             done = set()
-        # the bucket row table is rewritten whole, so a raw tier an
-        # earlier run stored is written again; an earlier timeline is
-        # left on disk as it was — either way the union stays valid
-        manifest = _process_bucket(
-            spark, base_dir, bucket, merge_threshold_ratio, with_timeline,
-            with_encoded or "encoded" in done,
-        )
+        # the bucket row table is rewritten whole; an earlier timeline
+        # is left on disk as it was, so the union stays valid
+        manifest = _process_bucket(spark, base_dir, bucket, merge_threshold_ratio, with_timeline)
         manifest["outputs"] = sorted(set(manifest["outputs"]) | done)
         _commit_manifest(mpath, manifest)  # manifest == bucket done
         written.append(manifest)
@@ -316,15 +332,16 @@ def read_tier(spark: SparkSession, base_dir: str, tier: int) -> DataFrame:
     table.  Tier 0 is rebuilt from the blobs
     by ``point_windows``: one row per decoded token, whose
     ``window_idx`` is its position plus ``n_tok - size(tokens)``, so a
-    blob that retention cut to its tail keeps its indices; a bucket
-    stored without blobs reads as NULL blobs and gives no tier-0 rows."""
+    blob that retention cut to its tail keeps its indices.  A base dir
+    of another layout raises ``ValueError`` (``_ingested_buckets``)."""
+    _ingested_buckets(base_dir)
     stored = spark.read.schema(f"{_STORED_ROW}, bucket int").parquet(
         os.path.join(base_dir, "encoded")
     )
     if tier:
         tiers = stored.select("doc_id", f"tier{tier}.*", F.lit(tier).alias("tier"), "bucket")
         return window_rows(tiers, "bucket")
-    decoded = decode_tokens_table(stored.where(F.col("encoded").isNotNull()))
+    decoded = decode_tokens_table(stored)
     points = decoded.select(
         "doc_id", "bucket", (F.col("n_tok") - F.size("tokens")).alias("offset"),
         F.posexplode("tokens").alias("pos", "token"),

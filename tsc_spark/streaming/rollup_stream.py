@@ -67,19 +67,16 @@ def stream_tokens(spark: SparkSession, src_dir: str, max_files: int = 64) -> Dat
     )
 
 
-def windowed_event_counts(
-    events_stream: DataFrame,
-    window_duration: str = "1 hour",
-    watermark: str = "2 hours",
-) -> DataFrame:
-    """Watermarked tumbling-window counts over an event-time stream.
+def windowed_event_counts(events_stream: DataFrame) -> DataFrame:
+    """Watermarked 1-hour tumbling-window counts over an event-time
+    stream.
 
-    Late events beyond the watermark are dropped and window state is
-    evicted once the watermark passes — bounded state at any scale."""
+    Events later than the 2-hour watermark are dropped and window state
+    is evicted once the watermark passes — bounded state at any scale."""
     return (
         events_stream.withColumn("ts", F.col("ts").cast("timestamp"))
-        .withWatermark("ts", watermark)
-        .groupBy(F.window("ts", window_duration), F.col("event_type"))
+        .withWatermark("ts", "2 hours")
+        .groupBy(F.window("ts", "1 hour"), F.col("event_type"))
         .agg(
             F.count("*").alias("n_events"),
             F.sum("value").alias("total_value"),
